@@ -2,6 +2,8 @@
 metrics with ok-taxonomy counts, and restart-resume — the same
 operational envelope the extraction job has."""
 
+import shutil
+
 from pyspark.sql import functions as F
 
 from unfurl_spark.plans.driver import run_media_job
@@ -93,6 +95,37 @@ def test_media_job_resume_is_op_aware(spark, tmp_path):
                        ops=("decode",), n_buckets=4, buckets_per_job=4,
                        run_id="o4")
     assert s4["processed_buckets"] == []
+
+
+def test_media_job_legacy_metrics_rows(spark, tmp_path):
+    """Rows without op lineage are honored only for decode-only runs;
+    rows without n_buckets are never honored."""
+    corpus = write_corpus(str(tmp_path / "corpus"), 40, seed=13)
+    out = str(tmp_path / "out")
+    metrics = f"{out}/media_metrics"
+
+    def drop(column):
+        tmp = metrics + ".rewrite"
+        spark.read.parquet(metrics).drop(column).write.parquet(tmp)
+        shutil.rmtree(metrics)
+        shutil.move(tmp, metrics)
+
+    def run(ops, run_id):
+        return run_media_job(spark, corpus["media_payloads"], out, ops=ops,
+                             n_buckets=2, buckets_per_job=2, run_id=run_id)
+
+    run(("decode",), "g1")
+    drop("ops")
+    s = run(("decode",), "g2")
+    assert s["processed_buckets"] == []
+    assert sorted(s["resumed_buckets"]) == [0, 1]
+    s = run(("decode", "features"), "g3")
+    assert sorted(s["processed_buckets"]) == [0, 1]
+
+    drop("n_buckets")
+    s = run(("decode",), "g4")
+    assert s["resumed_buckets"] == []
+    assert sorted(s["processed_buckets"]) == [0, 1]
 
 
 def test_media_job_new_containers(spark, tmp_path):

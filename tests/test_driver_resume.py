@@ -1,5 +1,8 @@
 """Batch driver: bucketed checkpointed lineage + idempotent resume."""
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -112,3 +115,40 @@ def test_bucket_count_change_invalidates_done_set(spark, corpus, tmp_path):
     assert spark.read.parquet(out + "/spans") \
                 .select("doc_id").distinct().count() == 200
     assert spark.read.parquet(out + "/spans").count() == 200
+
+
+def _drop_metrics_column(spark, metrics_dir, column):
+    """Rewrite a metrics table without ``column``, as an older writer
+    would have left it."""
+    tmp = metrics_dir + ".rewrite"
+    spark.read.parquet(metrics_dir).drop(column).write.parquet(tmp)
+    shutil.rmtree(metrics_dir)
+    shutil.move(tmp, metrics_dir)
+
+
+def test_legacy_metrics_rows_resume_rules(spark, corpus, tmp_path):
+    """Rows without n_buckets name an unknown modulus → reprocess.  The
+    extraction job has no ops, so its rows (which carry no ops column)
+    are honored."""
+    out = str(tmp_path / "out_legacy")
+    run_job(spark, corpus["documents_raw"], out, n_buckets=4,
+            buckets_per_job=4, run_id="l1")
+    _drop_metrics_column(spark, out + "/metrics", "n_buckets")
+    s = run_job(spark, corpus["documents_raw"], out, n_buckets=4,
+                buckets_per_job=4, run_id="l2")
+    assert s["resumed_buckets"] == []
+    assert sorted(s["processed_buckets"]) == [0, 1, 2, 3]
+    assert spark.read.parquet(out + "/spans").count() == 200
+
+    assert "ops" not in spark.read.parquet(out + "/metrics").columns
+    s = run_job(spark, corpus["documents_raw"], out, n_buckets=4,
+                buckets_per_job=4, run_id="l3")
+    assert s["processed_buckets"] == []
+    assert sorted(s["resumed_buckets"]) == [0, 1, 2, 3]
+
+
+def test_unknown_side_mode_rejected(spark, corpus, tmp_path):
+    out = str(tmp_path / "out_mode")
+    with pytest.raises(ValueError, match="side_mode"):
+        run_job(spark, corpus["documents_raw"], out, side_mode="brodcast")
+    assert not os.path.exists(out)

@@ -2,11 +2,34 @@
 compositing, transforms, viewBox — and the honest boundary for
 everything outside the subset."""
 
+import signal
+from contextlib import contextmanager
+from datetime import timedelta
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from unfurl_spark.functions.codecs import CodecError, CodecUnavailable
-from unfurl_spark.functions.svgraster import rasterize_svg
+from unfurl_spark.functions.svgraster import _path_subpaths, rasterize_svg
+
+
+@contextmanager
+def _time_limit(seconds: float):
+    """SIGALRM guard: a parser that spins fails the test instead of
+    hanging the suite (a hypothesis deadline only fires once the example
+    returns)."""
+    def on_alarm(signum, frame):
+        raise TimeoutError(f"no return within {seconds} s")
+
+    old = signal.signal(signal.SIGALRM, on_alarm)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
 
 
 def test_rect_exact_pixels():
@@ -75,6 +98,43 @@ def test_opacity_compositing_document_order():
     px = rasterize_svg(svg)
     r, g, b, a = px[2, 2].tolist()
     assert a == 255 and b > 100 and r > 100 and g == 0  # blue over red
+
+
+def test_inline_style_beats_presentation_attribute():
+    px = rasterize_svg(b'<svg width="2" height="2"><rect width="2" '
+                       b'height="2" fill="red" style="fill:blue"/></svg>')
+    assert px[1, 1].tolist() == [0, 0, 255, 255]
+
+
+def test_path_numbers_after_close_raise_not_hang():
+    with _time_limit(1.0), pytest.raises(CodecError):
+        _path_subpaths("M0 0 L10 0 L10 10 Z 5 5")
+
+
+def test_path_after_close_starts_at_initial_point():
+    with _time_limit(1.0):
+        subs = _path_subpaths("M0 0 H10 V10 Z L0 10 L-10 10 Z")
+    assert subs == [[(0, 0), (10, 0), (10, 10)],
+                    [(0, 0), (0, 10), (-10, 10)]]
+
+
+_PATH_TOKEN = st.one_of(
+    st.sampled_from(list("MmLlHhVvCcSsQqTtZzAa")),
+    st.integers(-50, 50).map(str),
+    st.floats(-1e3, 1e3, allow_nan=False).map(lambda f: f"{f:g}"))
+
+
+@settings(max_examples=300, deadline=timedelta(seconds=1))
+@given(st.lists(_PATH_TOKEN, max_size=40))
+def test_path_fuzz_total_and_bounded(tokens):
+    """Any token string returns closed polygons or raises a typed codec
+    error, in bounded time."""
+    with _time_limit(2.0):
+        try:
+            subs = _path_subpaths(" ".join(tokens))
+        except (CodecError, CodecUnavailable):
+            return
+    assert all(len(s) >= 3 for s in subs)
 
 
 def test_named_colors_and_hex_alpha():

@@ -183,12 +183,16 @@ def _path_subpaths(d: str) -> list[list[tuple[float, float]]]:
 
     def nums(k):
         nonlocal i
-        v = [float(tokens[i + j]) for j in range(k)]
+        try:
+            v = [float(tokens[i + j]) for j in range(k)]
+        except (IndexError, ValueError):
+            raise CodecError("svg: truncated path segment") from None
         i += k
         return v
 
     cmd = ""
     while i < len(tokens):
+        i0 = i
         tok = tokens[i]
         if re.match(r"^[A-Za-z]$", tok):
             cmd = tok
@@ -196,14 +200,19 @@ def _path_subpaths(d: str) -> list[list[tuple[float, float]]]:
             if cmd in "Zz":
                 if cur:
                     subs.append(cur)
-                cur = []
+                # a closepath followed by a drawing command starts the next
+                # subpath at the closed one's initial point; a number
+                # straight after Z has no command to repeat
                 pos = start
-                prev_cmd, prev_ctrl = "Z", None
+                cur = [pos]
+                cmd, prev_cmd, prev_ctrl = "", "Z", None
                 continue
         elif cmd in ("M",):
             cmd = "L"       # implicit lineto after moveto
         elif cmd in ("m",):
             cmd = "l"
+        if cmd == "":
+            raise CodecError("svg: path data before command")
         if cmd in "Aa":
             raise CodecUnavailable("svg: elliptical arc path segment")
         if cmd in "Mm":
@@ -274,8 +283,10 @@ def _path_subpaths(d: str) -> list[list[tuple[float, float]]]:
             cur.extend(_flatten_quad(pos, (x1, y1), (x, y)))
             prev_ctrl = (x1, y1)
             pos = (x, y)
-        elif cmd == "":
-            raise CodecError("svg: path data before command")
+        if i == i0:
+            # progress invariant: every iteration consumes a token, so no
+            # input can spin this loop
+            raise CodecError(f"svg: unexpected path token {tok!r}")
         prev_cmd = cmd
     if cur:
         subs.append(cur)
@@ -381,24 +392,21 @@ def rasterize_svg(data: bytes, max_dim: int = 2048) -> np.ndarray:
     canvas = np.zeros((h, w, 4), np.uint8)
 
     def style_of(el, inherited):
-        props = dict(inherited)
-        sty = el.get("style") or ""
-        for part in sty.split(";"):
+        # presentation attributes first, then the inline style overlays
+        # them: CSS ranks a style declaration above an attribute
+        own = {name: el.get(name)
+               for name in ("fill", "fill-rule", "fill-opacity", "opacity",
+                            "stroke", "stroke-width", "color")
+               if el.get(name) is not None}
+        for part in (el.get("style") or "").split(";"):
             if ":" in part:
                 k, v = part.split(":", 1)
-                props[k.strip().lower()] = v.strip()
-        for name in ("fill", "fill-rule", "fill-opacity", "opacity",
-                     "stroke", "stroke-width", "color"):
-            v = el.get(name)
-            if v is not None:
-                if name == "opacity":
-                    # group opacity multiplies down the tree
-                    props["opacity"] = str(
-                        float(props.get("opacity", "1")) * float(v))
-                else:
-                    props[name] = v
-        if "style" in (el.attrib or {}) and "opacity" in sty:
-            pass  # handled via props above
+                own[k.strip().lower()] = v.strip()
+        props = {**inherited, **own}
+        if "opacity" in own:
+            # group opacity multiplies down the tree
+            props["opacity"] = str(float(inherited.get("opacity", "1"))
+                                   * float(own["opacity"]))
         return props
 
     def shape_polys(el):

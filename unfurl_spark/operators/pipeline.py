@@ -17,6 +17,12 @@ reference's two HTTP crossings, unfurl-html/src/index.ts:92-122 and
 (`extract_spans`) when the tables fit executors, distributed shuffle
 joins (`extract_spans_twopass`, `extract_spans_media_join`) when at
 10^12 documents they cannot — outputs bit-identical either way.
+
+Every document-level pass of every regime is the same Arrow stage,
+`_map_kernel`: the broadcast path, and pass 1 and pass 2 of the two-pass
+plan differ only in what that one runner hands the kernel (a broadcast
+oembed store, a joined oembed payload, an href out-list), and it reads
+which from its input and output schemas.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schema import EXTRACTED
 
@@ -282,6 +289,76 @@ def narrow_columns(df: DataFrame, assume_sorted: bool = False
     )
 
 
+# pass 1 of the two-pass plan also emits the oembed href each doc discovered
+EXTRACTED_HREF = StructType(
+    [*EXTRACTED.fields, StructField("oembed_href", StringType())])
+
+
+def _map_kernel(narrow: DataFrame, side: SideTables,
+                schema: StructType = EXTRACTED) -> DataFrame:
+    """The fused kernel as one mapInArrow stage over ``narrow_columns``
+    rows (optionally followed by a joined oembed payload) — the single
+    place documents enter ``flat_document_spans``.
+
+    What the kernel gets follows from the two schemas, not from a mode:
+    the broadcast stores in ``side`` always (an absent table is a
+    broadcast ``None``); the per-row (o_status, ctype, body) payload when
+    the input batch carries those columns after the six narrow ones
+    (pass 2 of the two-pass plan); ``href_out`` when ``schema`` has an
+    ``oembed_href`` column (pass 1)."""
+    b_oembed, b_media, b_ctx = side.oembed, side.media, side.contexts
+    want_href = "oembed_href" in schema.names
+
+    def run(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        from ..functions.engine import flat_document_spans
+
+        oe = _bvalue(b_oembed)
+        med = _bvalue(b_media)
+        ctx = _bvalue(b_ctx)
+        spans_t = pa.list_(pa.struct([
+            ("kind", pa.string()), ("text", pa.string()),
+            ("media_ref", pa.string()), ("offset", pa.int32())]))
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns]
+            doc_ids, statuses, urls, htmls, media_refs, media_kinds = cols[:6]
+            o_status, o_ctype, o_body = cols[6:9] or (None, None, None)
+            spans_col, n_bytes_col, ok_col, hrefs = [], [], [], []
+            for i in range(len(doc_ids)):
+                html = htmls[i] or ""
+                n_bytes_col.append(len(html))
+                payload = None
+                if o_body is not None and o_body[i] is not None:
+                    payload = (o_status[i], o_ctype[i], o_body[i])
+                href_out = [] if want_href else None
+                try:
+                    spans_out = flat_document_spans(
+                        urls[i] or str(doc_ids[i]), html,
+                        int(statuses[i]), list(media_refs[i] or ()),
+                        oembed_store=oe, context_store=ctx,
+                        media_store=med, oembed_payload=payload,
+                        href_out=href_out,
+                        media_kinds=list(media_kinds[i] or ()))
+                    ok_col.append("ok")
+                except Exception as e:  # noqa: BLE001 — per-doc isolation
+                    spans_out = []
+                    ok_col.append(type(e).__name__)
+                spans_col.append(spans_out)
+                hrefs.append(href_out[0] if href_out else None)
+            # one C++ conversion of the batch's span dicts — no per-span
+            # Python appends, no pandas/object-row intermediates
+            arrays = [pa.array(doc_ids, pa.string()),
+                      pa.array(spans_col, spans_t),
+                      pa.array(n_bytes_col, pa.int64()),
+                      pa.array(ok_col, pa.string())]
+            if want_href:
+                arrays.append(pa.array(hrefs, pa.string()))
+            yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
+
+    return narrow.mapInArrow(run, schema=schema)
+
+
 def extract_spans(
     df: DataFrame,
     oembed_df: DataFrame | None = None,
@@ -305,8 +382,6 @@ def extract_spans(
     if side is None:
         side = broadcast_side_tables(spark, oembed_df, media_df,
                                      context_store)
-    b_oembed, b_media, b_ctx = side.oembed, side.media, side.contexts
-
     narrow = narrow_columns(df, assume_sorted=assume_sorted)
 
     if salt:
@@ -316,103 +391,11 @@ def extract_spans(
         n = num_partitions or spark.sparkContext.defaultParallelism
         narrow = narrow.repartition(n, F.xxhash64("doc_id"))
 
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        from ..functions.engine import flat_document_spans
-
-        oe = _bvalue(b_oembed)
-        med = _bvalue(b_media)
-        ctx = _bvalue(b_ctx)
-        span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                            ("media_ref", pa.string()),
-                            ("offset", pa.int32())])
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            statuses = batch.column(1).to_pylist()
-            urls = batch.column(2).to_pylist()
-            htmls = batch.column(3).to_pylist()
-            media_refs = batch.column(4).to_pylist()
-            media_kinds = batch.column(5).to_pylist()
-            # columnar accumulators: one flat span table + list offsets —
-            # built once per batch, zero pandas/object-row intermediates
-            kinds: list = []
-            texts: list = []
-            refs: list = []
-            offs: list = []
-            list_offsets = [0]
-            n_bytes_col: list = []
-            ok_col: list = []
-            for i in range(len(doc_ids)):
-                html = htmls[i] or ""
-                n_bytes_col.append(len(html))
-                try:
-                    spans_out = flat_document_spans(
-                        urls[i] or str(doc_ids[i]), html,
-                        int(statuses[i]), list(media_refs[i] or ()),
-                        oembed_store=oe, context_store=ctx,
-                        media_store=med,
-                        media_kinds=list(media_kinds[i] or ()))
-                    ok_col.append("ok")
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    spans_out = []
-                    ok_col.append(type(e).__name__)
-                for s in spans_out:
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    refs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                list_offsets.append(len(kinds))
-            struct = pa.StructArray.from_arrays(
-                [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-                 pa.array(refs, pa.string()), pa.array(offs, pa.int32())],
-                fields=list(span_t))
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(list_offsets, pa.int32()), struct)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()), spans_arr,
-                 pa.array(n_bytes_col, pa.int64()),
-                 pa.array(ok_col, pa.string())],
-                names=["doc_id", "spans", "n_input_bytes", "ok"])
-
-    return narrow.mapInArrow(run, schema=EXTRACTED)
+    return _map_kernel(narrow, side)
 
 
 # --------------------------------------------------------------------------
 # two-pass oembed resolution — the 10^12-doc regime
-
-EXTRACTED_HREF = ("doc_id string, spans array<struct<kind:string,"
-                  "text:string,media_ref:string,offset:int>>, "
-                  "n_input_bytes long, ok string, oembed_href string")
-
-
-def _span_batch(pa, span_t, doc_ids, spans_lists, n_bytes, oks,
-                extra_arrays=(), extra_names=()):
-    """Columnar output assembly shared by the extract runners."""
-    kinds: list = []
-    texts: list = []
-    refs: list = []
-    offs: list = []
-    list_offsets = [0]
-    for spans_out in spans_lists:
-        for s in spans_out:
-            kinds.append(s["kind"])
-            texts.append(s["text"])
-            refs.append(s["media_ref"])
-            offs.append(s["offset"])
-        list_offsets.append(len(kinds))
-    struct = pa.StructArray.from_arrays(
-        [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-         pa.array(refs, pa.string()), pa.array(offs, pa.int32())],
-        fields=list(span_t))
-    spans_arr = pa.ListArray.from_arrays(
-        pa.array(list_offsets, pa.int32()), struct)
-    return pa.RecordBatch.from_arrays(
-        [pa.array(doc_ids, pa.string()), spans_arr,
-         pa.array(n_bytes, pa.int64()), pa.array(oks, pa.string()),
-         *extra_arrays],
-        names=["doc_id", "spans", "n_input_bytes", "ok", *extra_names])
-
 
 def extract_spans_twopass(
     df: DataFrame,
@@ -439,53 +422,12 @@ def extract_spans_twopass(
 
     spark = df.sparkSession
     side = broadcast_side_tables(spark, None, media_df, context_store)
-    b_media, b_ctx = side.media, side.contexts
 
     narrow = narrow_columns(df, assume_sorted=assume_sorted)
     n = num_partitions or spark.sparkContext.defaultParallelism
     salted = narrow.repartition(n, F.xxhash64("doc_id"))
 
-    span_t_def = [("kind", "string"), ("text", "string"),
-                  ("media_ref", "string"), ("offset", "int32")]
-
-    def run_pass1(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        from ..functions.engine import flat_document_spans
-
-        med = _bvalue(b_media)
-        ctx = _bvalue(b_ctx)
-        span_t = pa.struct([(k, getattr(pa, t)()) for k, t in span_t_def])
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            statuses = batch.column(1).to_pylist()
-            urls = batch.column(2).to_pylist()
-            htmls = batch.column(3).to_pylist()
-            media_refs = batch.column(4).to_pylist()
-            media_kinds = batch.column(5).to_pylist()
-            spans_lists, n_bytes, oks, hrefs = [], [], [], []
-            for i in range(len(doc_ids)):
-                html = htmls[i] or ""
-                n_bytes.append(len(html))
-                href_out: list = []
-                try:
-                    spans_out = flat_document_spans(
-                        urls[i] or str(doc_ids[i]), html,
-                        int(statuses[i]), list(media_refs[i] or ()),
-                        context_store=ctx, media_store=med,
-                        href_out=href_out,
-                        media_kinds=list(media_kinds[i] or ()))
-                    oks.append("ok")
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    spans_out = []
-                    oks.append(type(e).__name__)
-                spans_lists.append(spans_out)
-                hrefs.append(href_out[0] if href_out else None)
-            yield _span_batch(pa, span_t, doc_ids, spans_lists, n_bytes,
-                              oks, (pa.array(hrefs, pa.string()),),
-                              ("oembed_href",))
-
-    pass1 = salted.mapInArrow(run_pass1, schema=EXTRACTED_HREF)
+    pass1 = _map_kernel(salted, side, EXTRACTED_HREF)
 
     plain = (pass1.filter(F.col("oembed_href").isNull())
              .drop("oembed_href"))
@@ -506,47 +448,7 @@ def extract_spans_twopass(
               .select("doc_id", "status", "url", "html", "media_refs",
                       "media_kinds", "o_status", "ctype", "body"))
 
-    def run_pass2(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        from ..functions.engine import flat_document_spans
-
-        med = _bvalue(b_media)
-        ctx = _bvalue(b_ctx)
-        span_t = pa.struct([(k, getattr(pa, t)()) for k, t in span_t_def])
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            statuses = batch.column(1).to_pylist()
-            urls = batch.column(2).to_pylist()
-            htmls = batch.column(3).to_pylist()
-            media_refs = batch.column(4).to_pylist()
-            media_kinds = batch.column(5).to_pylist()
-            o_status = batch.column(6).to_pylist()
-            o_ctype = batch.column(7).to_pylist()
-            o_body = batch.column(8).to_pylist()
-            spans_lists, n_bytes, oks = [], [], []
-            for i in range(len(doc_ids)):
-                html = htmls[i] or ""
-                n_bytes.append(len(html))
-                payload = None
-                if o_body[i] is not None:
-                    payload = (o_status[i], o_ctype[i], o_body[i])
-                try:
-                    spans_out = flat_document_spans(
-                        urls[i] or str(doc_ids[i]), html,
-                        int(statuses[i]), list(media_refs[i] or ()),
-                        context_store=ctx, media_store=med,
-                        oembed_payload=payload,
-                        media_kinds=list(media_kinds[i] or ()))
-                    oks.append("ok")
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    spans_out = []
-                    oks.append(type(e).__name__)
-                spans_lists.append(spans_out)
-            yield _span_batch(pa, span_t, doc_ids, spans_lists, n_bytes,
-                              oks)
-
-    second = rejoin.mapInArrow(run_pass2, schema=EXTRACTED)
+    second = _map_kernel(rejoin, side)
     return plain.unionByName(second)
 
 

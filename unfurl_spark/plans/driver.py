@@ -27,57 +27,46 @@ import argparse
 import json
 import os
 import time
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
-def _done_buckets(spark: SparkSession, metrics_dir: str,
-                  n_buckets: int) -> set[int]:
-    """Committed buckets for THIS bucketing scheme.  Rows written under a
-    different --buckets value are ignored: bucket ids from another modulus
-    name different document sets, so honoring them would skip or duplicate
+def _done_buckets(spark: SparkSession, metrics_dir: str, n_buckets: int,
+                  ops, always_ops) -> set[int]:
+    """Committed buckets for THIS bucketing scheme whose recorded op set
+    covers the required one (requested ∪ always-on ops).
+
+    Rows written under a different --buckets value, or before the modulus
+    was recorded, are ignored: bucket ids from another modulus name
+    different document sets, so honoring them would skip or duplicate
     docs.  A full re-run under the new modulus rewrites every partition
-    (dynamic overwrite), which self-heals the layout."""
+    (dynamic overwrite), which self-heals the layout.  The op check keeps
+    a first media run with ops=(decode,) from marking buckets done for a
+    later run that adds features/resize/frames — the extra tables would
+    be silently left missing data.  Legacy rows with no op lineage count
+    only when nothing beyond the always-on ops is required (always so for
+    the extraction job, which has no ops).
+    """
+    required = set(ops) | set(always_ops)
     try:
-        m = spark.read.parquet(metrics_dir)
+        # only the columns the rule reads, by name: a file from an older
+        # writer reads a column it lacks as NULL, so the rule holds per
+        # row (schema inference would pick ONE file's footer and treat a
+        # mixed legacy/current table either way)
+        m = spark.read.schema("bucket int, status string, n_buckets int, "
+                              "ops string").parquet(metrics_dir)
     except Exception:  # noqa: BLE001 — first run, no metrics yet
-        return set()
-    if "n_buckets" not in m.columns:  # pre-versioned metrics: invalidate
-        return set()
-    rows = (m.filter((F.col("status") == "committed")
-                     & (F.col("n_buckets") == n_buckets))
-            .select("bucket").distinct().collect())
-    return {r["bucket"] for r in rows}
-
-
-def _done_media_buckets(spark: SparkSession, metrics_dir: str,
-                        n_buckets: int, ops) -> set[int]:
-    """Committed media buckets whose recorded op set COVERS the requested
-    one.  A first run with ops=(decode,) must not mark buckets done for a
-    later run that adds features/resize/frames — the extra tables would be
-    silently left missing data.  Metrics rows carry the comma-joined op
-    set; a bucket resumes only when every requested op was committed."""
-    required = set(ops) | {"decode"}
-    try:
-        m = spark.read.parquet(metrics_dir)
-    except Exception:  # noqa: BLE001 — first run, no metrics yet
-        return set()
-    if "n_buckets" not in m.columns:  # pre-versioned metrics: invalidate
-        return set()
-    m = m.filter((F.col("status") == "committed")
-                 & (F.col("n_buckets") == n_buckets))
-    if "ops" not in m.columns:
-        # legacy rows with no op lineage: only honorable when nothing
-        # beyond the always-on decode pass is requested
-        if required <= {"decode"}:
-            return {r["bucket"]
-                    for r in m.select("bucket").distinct().collect()}
         return set()
     done_ops: dict[int, set[str]] = {}
-    for r in m.select("bucket", "ops").distinct().collect():
+    for r in (m.filter((F.col("status") == "committed")
+                       & (F.col("n_buckets") == n_buckets))
+              .select("bucket", "ops").distinct().collect()):
+        # a row without op lineage committed the always-on ops only
         done_ops.setdefault(r["bucket"], set()).update(
-            o for o in (r["ops"] or "").split(",") if o)
+            always_ops if r["ops"] is None
+            else (o for o in r["ops"].split(",") if o))
     return {b for b, s in done_ops.items() if required <= s}
 
 
@@ -126,6 +115,64 @@ def run_context_prepass(spark: SparkSession, input_path: str,
     return spark.read.parquet(path).count()
 
 
+def _count_if(cond):
+    return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def _run_bucketed(spark: SparkSession, rows, key: str, stage,
+                  metrics_dir: str, stats: dict, summed: tuple,
+                  const_cols: dict, rates: dict, n_buckets: int,
+                  buckets_per_job: int, run_id: str, ops=(),
+                  always_ops=()) -> dict:
+    """The bucketed, resumable job loop of ``run_job`` and
+    ``run_media_job``.
+
+    Rows are assigned to buckets by ``pmod(xxhash64(key), B)``, and
+    buckets in the done set are skipped.  For each chunk of buckets,
+    ``stage(part, bucket_of)`` writes its tables and returns the one the
+    per-bucket stats are read back from.  One committed metrics row per
+    bucket is then appended: the ``stats`` aggregates ({column: expr},
+    all counts or sums, so an empty bucket reads 0), run_id, status,
+    n_buckets, ``const_cols``, wall_sec and ``rates`` ({column: stat} →
+    stat per wall second).  The ``summed`` stats add up into the summary.
+    """
+    from unfurl_spark.sources.tables import append_metrics
+
+    bucket_of = F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+    rows = rows.withColumn("bucket", bucket_of)
+    done = _done_buckets(spark, metrics_dir, n_buckets, ops, always_ops)
+    todo = [b for b in range(n_buckets) if b not in done]
+    summary = {"run_id": run_id, "resumed_buckets": sorted(done),
+               "processed_buckets": [], **dict.fromkeys(summed, 0)}
+
+    for i in range(0, len(todo), buckets_per_job):
+        chunk = todo[i:i + buckets_per_job]
+        t0 = time.time()
+        stats_dir = stage(rows.filter(F.col("bucket").isin(chunk)),
+                          bucket_of)
+        wall = time.time() - t0
+
+        # lineage metrics, one row per bucket (appended after data commit)
+        out = (_chunk_stats(spark, stats_dir, chunk,
+                            [e.alias(n) for n, e in stats.items()],
+                            dict.fromkeys(stats, 0))
+               .withColumn("run_id", F.lit(run_id))
+               .withColumn("status", F.lit("committed"))
+               .withColumn("n_buckets", F.lit(n_buckets)))
+        for name, value in const_cols.items():
+            out = out.withColumn(name, F.lit(value))
+        out = out.withColumn("wall_sec", F.lit(round(wall, 3)))
+        for name, stat in rates.items():
+            out = out.withColumn(name, F.round(F.col(stat) / F.lit(wall), 1))
+        append_metrics(out, metrics_dir)
+        agg = out.agg(*[F.sum(c) for c in summed]).collect()[0]
+        summary["processed_buckets"].extend(chunk)
+        for j, name in enumerate(summed):
+            summary[name] += agg[j] or 0
+
+    return summary
+
+
 def run_media_job(spark: SparkSession, media_path: str, output_dir: str,
                   ops: tuple = ("decode",), n_buckets: int = 16,
                   buckets_per_job: int = 4,
@@ -143,67 +190,36 @@ def run_media_job(spark: SparkSession, media_path: str, output_dir: str,
                                                    extract_features,
                                                    resize_images,
                                                    sample_frames)
-    from unfurl_spark.sources.tables import (append_metrics, read_table,
-                                             write_bucketed)
+    from unfurl_spark.sources.tables import read_table, write_bucketed
 
-    run_id = run_id or f"media-{int(time.time())}"
-    out_metrics = os.path.join(output_dir, "media_metrics")
-    bucket_of = F.pmod(F.xxhash64("media_ref"),
-                       F.lit(n_buckets)).cast("int")
+    writers = {"decode": ("media_meta", decode_media),
+               "features": ("media_features", extract_features),
+               "resize": ("media_resize", resize_images),
+               "frames": ("media_frames", sample_frames)}
 
-    media = read_table(spark, media_path).withColumn("bucket", bucket_of)
-    done = _done_media_buckets(spark, out_metrics, n_buckets, ops)
-    todo = [b for b in range(n_buckets) if b not in done]
-    summary = {"run_id": run_id, "resumed_buckets": sorted(done),
-               "processed_buckets": [], "n_media": 0, "n_decoded": 0,
-               "n_codec_unavailable": 0, "n_errors": 0}
+    def stage(part, bucket_of):
+        part = part.select("media_ref", "ctype", "payload")
+        for op in dict.fromkeys(("decode", *ops)):
+            if op in writers:
+                table, op_fn = writers[op]
+                write_bucketed(op_fn(part).withColumn("bucket", bucket_of),
+                               os.path.join(output_dir, table))
+        return os.path.join(output_dir, "media_meta")
 
-    extra = {"features": lambda df: extract_features(df),
-             "resize": lambda df: resize_images(df),
-             "frames": lambda df: sample_frames(df)}
-
-    for i in range(0, len(todo), buckets_per_job):
-        chunk = todo[i:i + buckets_per_job]
-        t0 = time.time()
-        part = media.filter(F.col("bucket").isin(chunk)) \
-                    .select("media_ref", "ctype", "payload")
-        meta = decode_media(part).withColumn("bucket", bucket_of)
-        write_bucketed(meta, os.path.join(output_dir, "media_meta"))
-        for op in ops:
-            if op in extra:
-                out = extra[op](part).withColumn("bucket", bucket_of)
-                write_bucketed(out,
-                               os.path.join(output_dir, f"media_{op}"))
-        wall = time.time() - t0
-
-        stats = (_chunk_stats(
-                    spark, os.path.join(output_dir, "media_meta"), chunk,
-                    [F.count("*").alias("n_media"),
-                     F.sum(F.when(F.col("ok") == "ok", 1).otherwise(0))
-                      .alias("n_decoded"),
-                     F.sum(F.when(F.col("ok") == "codec:unavailable", 1)
-                           .otherwise(0)).alias("n_codec_unavailable"),
-                     F.sum(F.when(F.col("ok").startswith("err:"), 1)
-                           .otherwise(0)).alias("n_errors")],
-                    {"n_media": 0, "n_decoded": 0,
-                     "n_codec_unavailable": 0, "n_errors": 0})
-                 .withColumn("run_id", F.lit(run_id))
-                 .withColumn("status", F.lit("committed"))
-                 .withColumn("n_buckets", F.lit(n_buckets))
-                 .withColumn("ops", F.lit(
-                     ",".join(sorted(set(ops) | {"decode"}))))
-                 .withColumn("wall_sec", F.lit(round(wall, 3))))
-        append_metrics(stats, out_metrics)
-        agg = stats.agg(F.sum("n_media"), F.sum("n_decoded"),
-                        F.sum("n_codec_unavailable"),
-                        F.sum("n_errors")).collect()[0]
-        summary["processed_buckets"].extend(chunk)
-        summary["n_media"] += agg[0] or 0
-        summary["n_decoded"] += agg[1] or 0
-        summary["n_codec_unavailable"] += agg[2] or 0
-        summary["n_errors"] += agg[3] or 0
-
-    return summary
+    always = ("decode",)
+    stats = {"n_media": F.count("*"),
+             "n_decoded": _count_if(F.col("ok") == "ok"),
+             "n_codec_unavailable":
+                 _count_if(F.col("ok") == "codec:unavailable"),
+             "n_errors": _count_if(F.col("ok").startswith("err:"))}
+    return _run_bucketed(
+        spark, read_table(spark, media_path), "media_ref", stage,
+        os.path.join(output_dir, "media_metrics"), stats,
+        summed=tuple(stats),
+        const_cols={"ops": ",".join(sorted({*ops, *always}))},
+        rates={}, n_buckets=n_buckets, buckets_per_job=buckets_per_job,
+        run_id=run_id or f"media-{int(time.time())}", ops=ops,
+        always_ops=always)
 
 
 def run_job(spark: SparkSession, input_path: str, output_dir: str,
@@ -211,81 +227,55 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
             n_buckets: int = 16, buckets_per_job: int = 4,
             run_id: str | None = None,
             side_mode: str = "broadcast") -> dict:
+    if side_mode not in ("broadcast", "join"):
+        raise ValueError(f"unknown side_mode {side_mode!r}: "
+                         "expected 'broadcast' or 'join'")
     # absolute import: this file doubles as a spark-submit entry script
     # (no parent package when launched via --py-files + script path)
     from unfurl_spark.operators.pipeline import (extract_spans,
                                                  extract_spans_media_join,
                                                  extract_spans_twopass)
-    from unfurl_spark.sources.tables import (append_metrics, read_table,
-                                             write_bucketed)
+    from unfurl_spark.sources.tables import read_table, write_bucketed
 
-    run_id = run_id or f"run-{int(time.time())}"
     out_data = os.path.join(output_dir, "spans")
-    out_metrics = os.path.join(output_dir, "metrics")
-
-    docs = read_table(spark, input_path).withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+    docs = read_table(spark, input_path)
     oembed_df = read_table(spark, oembed_path) if oembed_path else None
     media_df = read_table(spark, media_path) if media_path else None
 
-    done = _done_buckets(spark, out_metrics, n_buckets)
-    todo = [b for b in range(n_buckets) if b not in done]
-    summary = {"run_id": run_id, "resumed_buckets": sorted(done),
-               "processed_buckets": [], "n_docs": 0, "n_failures": 0}
+    if side_mode == "broadcast":
+        extract = partial(extract_spans, oembed_df=oembed_df,
+                          media_df=media_df)
+    # 10^12-doc regime: side tables too large to broadcast — oembed via
+    # two-pass href join, media payloads via explode + equi-join
+    # (pipeline.py)
+    elif media_df is not None:
+        extract = partial(extract_spans_media_join, media_df=media_df,
+                          oembed_df=oembed_df, join_oembed=True)
+    elif oembed_df is not None:
+        extract = partial(extract_spans_twopass, oembed_df=oembed_df)
+    else:
+        extract = extract_spans
 
-    for i in range(0, len(todo), buckets_per_job):
-        chunk = todo[i:i + buckets_per_job]
-        t0 = time.time()
-        part = docs.filter(F.col("bucket").isin(chunk))
+    def stage(part, bucket_of):
         sel = part.select("doc_id", "spans",
                           *(["status"] if "status" in docs.columns else []))
-        if side_mode == "join":
-            # 10^12-doc regime: side tables too large to broadcast —
-            # oembed via two-pass href join, media payloads via
-            # explode + equi-join (pipeline.py)
-            if media_df is not None:
-                extracted = extract_spans_media_join(
-                    sel, media_df, oembed_df=oembed_df, join_oembed=True)
-            elif oembed_df is not None:
-                extracted = extract_spans_twopass(sel, oembed_df)
-            else:
-                extracted = extract_spans(sel)
-        else:
-            extracted = extract_spans(
-                sel, oembed_df=oembed_df, media_df=media_df)
         # bucket is a pure function of doc_id — recompute instead of
         # joining back against the input table (that join is a full extra
         # shuffle of the span payload at scale)
-        result = extracted.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
-
+        result = extract(sel).withColumn("bucket", bucket_of)
         # idempotent data commit: replace exactly these buckets
         # (Iceberg overwritePartitions / parquet dynamic overwrite)
         write_bucketed(result, out_data)
-        wall = time.time() - t0
+        return out_data
 
-        # lineage metrics, one row per bucket (appended after data commit)
-        stats = (_chunk_stats(
-                    spark, out_data, chunk,
-                    [F.count("*").alias("n_docs"),
-                     F.sum("n_input_bytes").alias("n_bytes"),
-                     F.sum(F.when(F.col("ok") != "ok", 1).otherwise(0))
-                      .alias("n_failures")],
-                    {"n_docs": 0, "n_bytes": 0, "n_failures": 0})
-                 .withColumn("run_id", F.lit(run_id))
-                 .withColumn("status", F.lit("committed"))
-                 .withColumn("n_buckets", F.lit(n_buckets))
-                 .withColumn("wall_sec", F.lit(round(wall, 3)))
-                 .withColumn("docs_per_sec",
-                             F.round(F.col("n_docs") / F.lit(wall), 1)))
-        append_metrics(stats, out_metrics)
-        agg = stats.agg(F.sum("n_docs"), F.sum("n_failures")).collect()[0]
-        summary["processed_buckets"].extend(chunk)
-        summary["n_docs"] += agg[0] or 0
-        summary["n_failures"] += agg[1] or 0
-
-    return summary
+    return _run_bucketed(
+        spark, docs, "doc_id", stage, os.path.join(output_dir, "metrics"),
+        {"n_docs": F.count("*"), "n_bytes": F.sum("n_input_bytes"),
+         "n_failures": _count_if(F.col("ok") != "ok")},
+        summed=("n_docs", "n_failures"), const_cols={},
+        rates={"docs_per_sec": "n_docs"}, n_buckets=n_buckets,
+        buckets_per_job=buckets_per_job,
+        run_id=run_id or f"run-{int(time.time())}")
 
 
 def main() -> None:
@@ -321,24 +311,19 @@ def main() -> None:
                                 n_buckets=args.buckets,
                                 buckets_per_job=args.buckets_per_job,
                                 run_id=args.run_id)
-        print(json.dumps(summary))
-        spark.stop()
-        return
-    if args.context_prepass:
-        n = run_context_prepass(spark, args.input, args.output)
-        print(json.dumps({"unresolved_context_urls": n,
-                          "fetch_list": os.path.join(
-                              args.output, "context_fetch_list")}))
-        spark.stop()
-        return
-    summary = run_job(spark, args.input, args.output,
-                      oembed_path=args.oembed, media_path=args.media,
-                      n_buckets=args.buckets,
-                      buckets_per_job=args.buckets_per_job,
-                      run_id=args.run_id, side_mode=args.side_mode)
+    elif args.context_prepass:
+        summary = {"unresolved_context_urls": run_context_prepass(
+                       spark, args.input, args.output),
+                   "fetch_list": os.path.join(args.output,
+                                              "context_fetch_list")}
+    else:
+        summary = run_job(spark, args.input, args.output,
+                          oembed_path=args.oembed, media_path=args.media,
+                          n_buckets=args.buckets,
+                          buckets_per_job=args.buckets_per_job,
+                          run_id=args.run_id, side_mode=args.side_mode)
     print(json.dumps(summary))
     spark.stop()
-
 
 if __name__ == "__main__":
     main()
