@@ -177,3 +177,44 @@ def test_media_job_new_containers(spark, tmp_path):
         == (10, 20)
     assert meta["logo.svg"]["ok"] == "ok"
     assert meta["grad.svg"]["ok"] == "codec:unavailable"
+
+
+def test_media_metrics_equal_committed_meta(spark, tmp_path):
+    """Every committed media metrics row equals the per-bucket counts of
+    the committed media_meta table — empty buckets (more buckets than
+    payloads) read 0, and a malformed payload counts as an error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    corpus = write_corpus(str(tmp_path / "corpus"), 12, seed=5)
+    t = pq.read_table(corpus["media_payloads"])
+    bad = pa.Table.from_pylist([{
+        "media_ref": "truncated.png", "ctype": "image/png",
+        "payload": b"\x89PNG\r\n\x1a\n\x00\x00\x00\rIHDR\x00"}],
+        schema=t.schema)
+    src = str(tmp_path / "media.parquet")
+    pq.write_table(pa.concat_tables([t, bad]), src)
+    out = str(tmp_path / "out")
+    n_buckets = 4 * (t.num_rows + 1)
+    s = run_media_job(spark, src, out, ops=("decode",), n_buckets=n_buckets,
+                      buckets_per_job=n_buckets // 4, run_id="eq")
+    assert s["n_media"] == t.num_rows + 1
+    assert s["n_errors"] >= 1
+
+    names = ("n_media", "n_decoded", "n_codec_unavailable", "n_errors")
+    want = {b: (0, 0, 0, 0) for b in range(n_buckets)}
+    for r in spark.read.parquet(f"{out}/media_meta").groupBy("bucket").agg(
+            F.count("*"), F.expr("count_if(ok = 'ok')"),
+            F.expr("count_if(ok = 'codec:unavailable')"),
+            F.expr("count_if(startswith(ok, 'err:'))")).collect():
+        want[r[0]] = tuple(r[1:])
+    assert sum(1 for v in want.values() if v[0] == 0) > 0
+
+    metrics = spark.read.parquet(f"{out}/media_metrics")
+    assert {f.name: f.dataType.simpleString() for f in metrics.schema
+            if f.name in names} == dict.fromkeys(names, "bigint")
+    got = {r["bucket"]: tuple(r[n] for n in names)
+           for r in metrics.collect()}
+    assert metrics.count() == n_buckets
+    assert got == want
+    assert s["n_errors"] == sum(v[3] for v in want.values())

@@ -1,8 +1,14 @@
 """Batch driver: bucketed checkpointed lineage + idempotent resume."""
 
+import glob
+import json
 import os
 import shutil
+import time
+import urllib.request
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +21,11 @@ from unfurl_spark.sources.synthetic import write_corpus
 def corpus(tmp_path_factory):
     out = tmp_path_factory.mktemp("drv")
     return write_corpus(str(out), 200, seed=42)
+
+
+def _data_files(table_dir):
+    return glob.glob(os.path.join(table_dir, "**", "part-*"),
+                     recursive=True)
 
 
 def test_run_commits_all_buckets(spark, corpus, tmp_path):
@@ -32,6 +43,8 @@ def test_run_commits_all_buckets(spark, corpus, tmp_path):
     metrics = spark.read.parquet(out + "/metrics")
     assert metrics.filter("status = 'committed'").count() == 4
     assert metrics.agg(F.sum("n_docs")).collect()[0][0] == 200
+    # one metrics file per chunk (2 chunks of 2 buckets), not per bucket
+    assert len(_data_files(out + "/metrics")) == 2
 
     # re-run: everything already committed → pure no-op resume
     s2 = run_job(spark, corpus["documents_raw"], out,
@@ -41,6 +54,7 @@ def test_run_commits_all_buckets(spark, corpus, tmp_path):
     assert s2["processed_buckets"] == []
     assert sorted(s2["resumed_buckets"]) == [0, 1, 2, 3]
     assert spark.read.parquet(out + "/spans").count() == 200
+    assert len(_data_files(out + "/metrics")) == 2
 
 
 def test_crash_midway_then_resume(spark, corpus, tmp_path, monkeypatch):
@@ -152,3 +166,143 @@ def test_unknown_side_mode_rejected(spark, corpus, tmp_path):
     with pytest.raises(ValueError, match="side_mode"):
         run_job(spark, corpus["documents_raw"], out, side_mode="brodcast")
     assert not os.path.exists(out)
+
+
+def test_side_tables_built_once_per_job(spark, corpus, tmp_path,
+                                        monkeypatch):
+    """Broadcast side tables are built once per job, not per chunk, and
+    not at all by a fully resumed run; a worker keeps only the side-table
+    set in current use, not every set it ever loaded."""
+    real = pipeline_mod.broadcast_side_tables
+    calls = {"n": 0}
+
+    def counted(*args, **kwargs):
+        calls["n"] += 1
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "broadcast_side_tables", counted)
+
+    def run(out, run_id):
+        return run_job(spark, corpus["documents_raw"], str(out),
+                       oembed_path=corpus["oembed_docs"],
+                       media_path=corpus["media_payloads"],
+                       n_buckets=4, buckets_per_job=1, run_id=run_id)
+
+    assert len(run(tmp_path / "a", "s1")["processed_buckets"]) == 4
+    assert calls["n"] == 1
+    assert run(tmp_path / "a", "s2")["processed_buckets"] == []
+    assert calls["n"] == 1          # fully resumed: nothing built
+    run(tmp_path / "b", "s3")
+    assert calls["n"] == 2
+
+    def probe(batches):
+        from unfurl_spark.operators import pipeline
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist(
+            [{"sets": len(pipeline._WORKER_BROADCAST_CACHE)}])
+
+    n = spark.sparkContext.defaultParallelism
+    sets = [r["sets"] for r in spark.range(0, n, 1, n)
+            .mapInArrow(probe, "sets long").collect()]
+    assert max(sets) == 1   # the probe reached workers that ran the kernel
+
+
+def _with_failing_doc(spark, corpus, tmp_path, n_docs):
+    """``n_docs`` corpus documents plus one the kernel fails on: an
+    og:image whose netloc is an unterminated IPv6 literal makes URL
+    resolution raise, so that document reads ok='ValueError'."""
+    t = pq.read_table(corpus["documents_raw"]).slice(0, n_docs)
+    bad = pa.Table.from_pylist([{
+        "doc_id": "bad-og-image",
+        "spans": [{"kind": "html", "media_ref": "http://bad.example/",
+                   "offset": 0,
+                   "text": '<html><head><meta property="og:image" '
+                           'content="//[::1"></head><body><p>text</p>'
+                           '</body></html>'}],
+        "status": 200}], schema=t.schema)
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.concat_tables([t, bad]), path)
+    return path
+
+
+@pytest.mark.parametrize("side_mode", ["broadcast", "join"])
+def test_metrics_equal_committed_spans(spark, corpus, tmp_path, side_mode):
+    """Every committed metrics row equals the per-bucket count, byte sum
+    and failure count of the committed spans table — empty buckets (more
+    buckets than documents) read 0, and a failing document counts."""
+    docs = _with_failing_doc(spark, corpus, tmp_path, 8)
+    out = str(tmp_path / "out")
+    n_buckets = 16
+    s = run_job(spark, docs, out, oembed_path=corpus["oembed_docs"],
+                media_path=corpus["media_payloads"], n_buckets=n_buckets,
+                buckets_per_job=4, run_id="eq", side_mode=side_mode)
+    assert s["n_docs"] == 9
+    assert s["n_failures"] >= 1
+
+    spans = spark.read.parquet(out + "/spans")
+    want = {b: (0, 0, 0) for b in range(n_buckets)}
+    for r in spans.groupBy("bucket").agg(
+            F.count("*"), F.sum("n_input_bytes"),
+            F.expr("count_if(ok != 'ok')")).collect():
+        want[r[0]] = (r[1], r[2], r[3])
+    assert sum(1 for v in want.values() if v[0] == 0) > 0   # empty buckets
+    assert sum(v[2] for v in want.values()) >= 1
+
+    metrics = spark.read.parquet(out + "/metrics")
+    assert {f.name: f.dataType.simpleString() for f in metrics.schema
+            if f.name in ("n_docs", "n_bytes", "n_failures")} \
+        == dict.fromkeys(("n_docs", "n_bytes", "n_failures"), "bigint")
+    got = {r["bucket"]: (r["n_docs"], r["n_bytes"], r["n_failures"])
+           for r in metrics.collect()}
+    assert metrics.count() == n_buckets
+    assert got == want
+    assert s["n_failures"] == sum(v[2] for v in want.values())
+
+
+def test_every_driver_job_is_named(spark, corpus, tmp_path):
+    """Every Spark job ``run_job`` starts carries a job description naming
+    its phase (read through the status REST API), and the caller's own
+    description is restored afterwards."""
+    sc = spark.sparkContext
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
+
+    def jobs():
+        with urllib.request.urlopen(base, timeout=30) as r:
+            return json.load(r)
+
+    def marker(text):
+        # one RDD job (no AQE stages); the status store is fed
+        # asynchronously, but once the marker shows up, every job started
+        # before it has too
+        sc.setJobDescription(text)
+        sc.parallelize([1], 1).count()
+        sc.setJobDescription(None)
+        for _ in range(100):
+            found = [j["jobId"] for j in jobs()
+                     if j.get("description") == text]
+            if found:
+                return found[0]
+            time.sleep(0.1)
+        raise AssertionError(f"marker job {text!r} never listed")
+
+    start = marker("named-jobs-start")
+    sc.setJobDescription("caller's description")
+    run_job(spark, corpus["documents_raw"], str(tmp_path / "out"),
+            oembed_path=corpus["oembed_docs"],
+            media_path=corpus["media_payloads"],
+            n_buckets=4, buckets_per_job=2, run_id="named")
+    assert sc.getLocalProperty("spark.job.description") \
+        == "caller's description"
+    sc.setJobDescription(None)
+    end = marker("named-jobs-end")
+
+    started = [j for j in jobs() if start < j["jobId"] < end]
+    assert started
+    unnamed = [j["name"] for j in started
+               if not (j.get("description") or "").startswith("unfurl named:")]
+    assert unnamed == []
+    descs = {j["description"] for j in started}
+    assert "unfurl named: side tables" in descs
+    assert "unfurl named: data commit [0, 1]" in descs

@@ -25,7 +25,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pipeline import _bvalue, narrow_columns
+from .pipeline import _bvalues, narrow_columns
 
 def context_fetch_list(df: DataFrame,
                        context_store: dict | None = None,
@@ -48,7 +48,7 @@ def context_fetch_list(df: DataFrame,
             context_resolvable,
         )
 
-        store = _bvalue(b_ctx)
+        (store,) = _bvalues(b_ctx)
         for batch in batches:
             doc_ids = batch.column(0).to_pylist()
             urls = batch.column(2).to_pylist()

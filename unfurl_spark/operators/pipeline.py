@@ -48,17 +48,23 @@ DEFAULT_ARROW_BATCH = 2048
 # re-reads a broadcast's pickle file on EVERY task (the Broadcast object is
 # recreated with each task's closure); for multi-MB side tables that costs
 # as much as the actual kernel work.  Worker processes are reused across
-# tasks, so a module-level cache keyed by the broadcast file path amortizes
-# the load to once per worker.
+# tasks, so a module-level cache keyed by the broadcast file paths
+# amortizes the load to once per worker.  It holds one entry, the
+# broadcast set in current use: a worker that meets another set (the next
+# job's side tables) drops the old one instead of keeping every store it
+# ever loaded for the rest of its life.
 _WORKER_BROADCAST_CACHE: dict = {}
 
 
-def _bvalue(b):
-    if b is None:
-        return None
-    key = getattr(b, "_path", None) or id(b)
+def _bvalues(*bs) -> tuple:
+    """The values of broadcasts ``bs`` (``None`` reads ``None``), loaded
+    once per worker for as long as this set stays the one in use."""
+    key = tuple(None if b is None else getattr(b, "_path", None) or id(b)
+                for b in bs)
     if key not in _WORKER_BROADCAST_CACHE:
-        _WORKER_BROADCAST_CACHE[key] = b.value
+        _WORKER_BROADCAST_CACHE.clear()
+        _WORKER_BROADCAST_CACHE[key] = tuple(
+            None if b is None else b.value for b in bs)
     return _WORKER_BROADCAST_CACHE[key]
 
 
@@ -314,9 +320,7 @@ def _map_kernel(narrow: DataFrame, side: SideTables,
 
         from ..functions.engine import flat_document_spans
 
-        oe = _bvalue(b_oembed)
-        med = _bvalue(b_media)
-        ctx = _bvalue(b_ctx)
+        oe, med, ctx = _bvalues(b_oembed, b_media, b_ctx)
         spans_t = pa.list_(pa.struct([
             ("kind", pa.string()), ("text", pa.string()),
             ("media_ref", pa.string()), ("offset", pa.int32())]))

@@ -10,10 +10,20 @@ idempotently:
   ``pmod(xxhash64(doc_id), B)``;
 * output is written partitioned by bucket with dynamic partition overwrite
   (a re-run of a bucket replaces, never duplicates);
-* after each chunk of buckets commits, one metrics row per bucket
-  (docs, bytes, failures, wall sec) is appended to the metrics table and a
-  done-marker recorded; a restarted run anti-joins the done set and only
-  processes the remainder.
+* the per-bucket stats (docs, bytes, failures) are observed on the data
+  commit itself — a ``pyspark.sql.Observation`` directly under the write,
+  so they cost no Spark job and the committed data is never read back;
+* after each chunk of buckets commits, its metrics rows (those stats plus
+  wall sec) are appended to the metrics table as one file, which is the
+  chunk's done-marker; a restarted run anti-joins the done set and only
+  processes the remainder;
+* broadcast side tables are built once per job, at the first chunk that
+  has work, so a fully resumed run builds none.
+
+Every Spark job the driver starts carries a job description naming its
+phase (inputs, done set, side tables, data commit with its buckets,
+metrics), so the Spark UI and status API attribute stages without
+wrappers.
 
 Table format goes through ``sources/tables.py``: Iceberg
 (`overwritePartitions` / `append`) when the catalog jars are present,
@@ -27,10 +37,26 @@ import argparse
 import json
 import os
 import time
-from functools import partial
+from contextlib import contextmanager
+from functools import cache, partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Name the Spark jobs started inside the block ``text`` in the UI and
+    status API; the enclosing description comes back afterwards.  (Job
+    groups are left to the caller: a benchmark or scheduler may own them.)
+    """
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
 
 
 def _done_buckets(spark: SparkSession, metrics_dir: str, n_buckets: int,
@@ -50,15 +76,20 @@ def _done_buckets(spark: SparkSession, metrics_dir: str, n_buckets: int,
     the extraction job, which has no ops).
     """
     required = set(ops) | set(always_ops)
-    try:
-        # only the columns the rule reads, by name: a file from an older
-        # writer reads a column it lacks as NULL, so the rule holds per
-        # row (schema inference would pick ONE file's footer and treat a
-        # mixed legacy/current table either way)
-        m = spark.read.schema("bucket int, status string, n_buckets int, "
-                              "ops string").parquet(metrics_dir)
-    except Exception:  # noqa: BLE001 — first run, no metrics yet
+    path = spark._jvm.org.apache.hadoop.fs.Path(metrics_dir)
+    if not path.getFileSystem(
+            spark._jsc.hadoopConfiguration()).exists(path):
+        # first run: no metrics yet.  Checked up front rather than caught,
+        # because a query that fails analysis is still reported to the
+        # session's listeners, and the observation listener logs it as
+        # an error.
         return set()
+    # only the columns the rule reads, by name: a file from an older
+    # writer reads a column it lacks as NULL, so the rule holds per row
+    # (schema inference would pick ONE file's footer and treat a mixed
+    # legacy/current table either way)
+    m = spark.read.schema("bucket int, status string, n_buckets int, "
+                          "ops string").parquet(metrics_dir)
     done_ops: dict[int, set[str]] = {}
     for r in (m.filter((F.col("status") == "committed")
                        & (F.col("n_buckets") == n_buckets))
@@ -68,32 +99,6 @@ def _done_buckets(spark: SparkSession, metrics_dir: str, n_buckets: int,
             always_ops if r["ops"] is None
             else (o for o in r["ops"].split(",") if o))
     return {b for b, s in done_ops.items() if required <= s}
-
-
-def _chunk_stats(spark: SparkSession, data_dir: str, chunk: list[int],
-                 agg_exprs: list, zero_cols: dict):
-    """Per-bucket stats for a committed chunk, read back from the data
-    table.  Total over two edge cases: a bucket with ZERO rows still gets
-    a committed metrics row (else resume would reprocess it forever), and
-    a data dir with no parquet files yet (every bucket in the first chunk
-    empty) must not crash schema inference."""
-    buckets = spark.createDataFrame([(int(b),) for b in chunk],
-                                    "bucket int")
-    try:
-        agg = (spark.read.parquet(data_dir)
-               .filter(F.col("bucket").isin(chunk))
-               .groupBy("bucket").agg(*agg_exprs))
-    except Exception:  # noqa: BLE001 — empty table, no schema
-        agg = None
-    if agg is None:
-        out = buckets
-        for name, zero in zero_cols.items():
-            out = out.withColumn(name, F.lit(zero))
-        return out
-    out = buckets.join(agg, "bucket", "left")
-    for name, zero in zero_cols.items():
-        out = out.withColumn(name, F.coalesce(F.col(name), F.lit(zero)))
-    return out
 
 
 def run_context_prepass(spark: SparkSession, input_path: str,
@@ -115,8 +120,8 @@ def run_context_prepass(spark: SparkSession, input_path: str,
     return spark.read.parquet(path).count()
 
 
-def _count_if(cond):
-    return F.sum(F.when(cond, 1).otherwise(0))
+def _one_if(cond):
+    return F.when(cond, 1).otherwise(0)
 
 
 def _run_bucketed(spark: SparkSession, rows, key: str, stage,
@@ -129,34 +134,53 @@ def _run_bucketed(spark: SparkSession, rows, key: str, stage,
 
     Rows are assigned to buckets by ``pmod(xxhash64(key), B)``, and
     buckets in the done set are skipped.  For each chunk of buckets,
-    ``stage(part, bucket_of)`` writes its tables and returns the one the
-    per-bucket stats are read back from.  One committed metrics row per
-    bucket is then appended: the ``stats`` aggregates ({column: expr},
-    all counts or sums, so an empty bucket reads 0), run_id, status,
+    ``stage(part, bucket_of, observe)`` writes its tables, passing the
+    one the stats describe through ``observe`` right before its write.
+    ``stats`` ({column: per-row value}) are summed per bucket by that
+    observation, so they come from the commit's own pass: no readback,
+    no extra Spark job, and an empty bucket observes 0.  Once the stage
+    returns, one committed metrics row per bucket is appended, the
+    chunk's rows as one file: the stats (``long``), run_id, status,
     n_buckets, ``const_cols``, wall_sec and ``rates`` ({column: stat} →
     stat per wall second).  The ``summed`` stats add up into the summary.
     """
-    from unfurl_spark.sources.tables import append_metrics
+    import pyarrow as pa
+
+    from unfurl_spark.sources import tables
 
     bucket_of = F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
     rows = rows.withColumn("bucket", bucket_of)
-    done = _done_buckets(spark, metrics_dir, n_buckets, ops, always_ops)
+    with _job_description(spark, f"unfurl {run_id}: done set"):
+        done = _done_buckets(spark, metrics_dir, n_buckets, ops, always_ops)
     todo = [b for b in range(n_buckets) if b not in done]
     summary = {"run_id": run_id, "resumed_buckets": sorted(done),
                "processed_buckets": [], **dict.fromkeys(summed, 0)}
 
     for i in range(0, len(todo), buckets_per_job):
         chunk = todo[i:i + buckets_per_job]
+        # one aggregate per (stat, bucket): Observation has no group-by
+        obs = Observation()
+        per_bucket = [
+            F.coalesce(F.sum(F.when(F.col("bucket") == b, value)),
+                       F.lit(0)).cast("long").alias(f"{name}_{b}")
+            for name, value in stats.items() for b in chunk]
         t0 = time.time()
-        stats_dir = stage(rows.filter(F.col("bucket").isin(chunk)),
-                          bucket_of)
+        with _job_description(spark,
+                              f"unfurl {run_id}: data commit {chunk}"):
+            stage(rows.filter(F.col("bucket").isin(chunk)), bucket_of,
+                  lambda df: df.observe(obs, *per_bucket))
         wall = time.time() - t0
+        seen = obs.get
+        per_stat = {n: [seen[f"{n}_{b}"] for b in chunk] for n in stats}
 
         # lineage metrics, one row per bucket (appended after data commit)
-        out = (_chunk_stats(spark, stats_dir, chunk,
-                            [e.alias(n) for n, e in stats.items()],
-                            dict.fromkeys(stats, 0))
-               .withColumn("run_id", F.lit(run_id))
+        # from Arrow: a local relation, so the append starts no Python
+        # worker; one partition, so the chunk's rows land in one file
+        out = spark.createDataFrame(pa.table({
+            "bucket": pa.array(chunk, pa.int32()),
+            **{n: pa.array(v, pa.int64()) for n, v in per_stat.items()}})
+        ).coalesce(1)
+        out = (out.withColumn("run_id", F.lit(run_id))
                .withColumn("status", F.lit("committed"))
                .withColumn("n_buckets", F.lit(n_buckets)))
         for name, value in const_cols.items():
@@ -164,11 +188,11 @@ def _run_bucketed(spark: SparkSession, rows, key: str, stage,
         out = out.withColumn("wall_sec", F.lit(round(wall, 3)))
         for name, stat in rates.items():
             out = out.withColumn(name, F.round(F.col(stat) / F.lit(wall), 1))
-        append_metrics(out, metrics_dir)
-        agg = out.agg(*[F.sum(c) for c in summed]).collect()[0]
+        with _job_description(spark, f"unfurl {run_id}: metrics {chunk}"):
+            tables.append_metrics(out, metrics_dir)
         summary["processed_buckets"].extend(chunk)
-        for j, name in enumerate(summed):
-            summary[name] += agg[j] or 0
+        for name in summed:
+            summary[name] += sum(per_stat[name])
 
     return summary
 
@@ -184,42 +208,46 @@ def run_media_job(spark: SparkSession, media_path: str, output_dir: str,
 
     ``ops`` ⊆ {decode, features, resize, frames}: decode always writes
     ``<out>/media_meta`` (container/dims/ok lineage — the cheap
-    header+codec pass); the others add their own bucketed tables.
+    header+codec pass); the others add their own bucketed tables.  The
+    per-bucket stats are observed on the ``media_meta`` commit.
     """
     from unfurl_spark.functions.multimodal import (decode_media,
                                                    extract_features,
                                                    resize_images,
                                                    sample_frames)
-    from unfurl_spark.sources.tables import read_table, write_bucketed
+    from unfurl_spark.sources import tables
 
+    run_id = run_id or f"media-{int(time.time())}"
     writers = {"decode": ("media_meta", decode_media),
                "features": ("media_features", extract_features),
                "resize": ("media_resize", resize_images),
                "frames": ("media_frames", sample_frames)}
 
-    def stage(part, bucket_of):
+    def stage(part, bucket_of, observe):
         part = part.select("media_ref", "ctype", "payload")
         for op in dict.fromkeys(("decode", *ops)):
             if op in writers:
                 table, op_fn = writers[op]
-                write_bucketed(op_fn(part).withColumn("bucket", bucket_of),
-                               os.path.join(output_dir, table))
-        return os.path.join(output_dir, "media_meta")
+                out = op_fn(part).withColumn("bucket", bucket_of)
+                tables.write_bucketed(
+                    observe(out) if op == "decode" else out,
+                    os.path.join(output_dir, table))
 
     always = ("decode",)
-    stats = {"n_media": F.count("*"),
-             "n_decoded": _count_if(F.col("ok") == "ok"),
+    stats = {"n_media": F.lit(1),
+             "n_decoded": _one_if(F.col("ok") == "ok"),
              "n_codec_unavailable":
-                 _count_if(F.col("ok") == "codec:unavailable"),
-             "n_errors": _count_if(F.col("ok").startswith("err:"))}
+                 _one_if(F.col("ok") == "codec:unavailable"),
+             "n_errors": _one_if(F.col("ok").startswith("err:"))}
+    with _job_description(spark, f"unfurl {run_id}: inputs"):
+        media = tables.read_table(spark, media_path)
     return _run_bucketed(
-        spark, read_table(spark, media_path), "media_ref", stage,
+        spark, media, "media_ref", stage,
         os.path.join(output_dir, "media_metrics"), stats,
         summed=tuple(stats),
         const_cols={"ops": ",".join(sorted({*ops, *always}))},
         rates={}, n_buckets=n_buckets, buckets_per_job=buckets_per_job,
-        run_id=run_id or f"media-{int(time.time())}", ops=ops,
-        always_ops=always)
+        run_id=run_id, ops=ops, always_ops=always)
 
 
 def run_job(spark: SparkSession, input_path: str, output_dir: str,
@@ -231,32 +259,46 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         raise ValueError(f"unknown side_mode {side_mode!r}: "
                          "expected 'broadcast' or 'join'")
     # absolute import: this file doubles as a spark-submit entry script
-    # (no parent package when launched via --py-files + script path)
-    from unfurl_spark.operators.pipeline import (extract_spans,
-                                                 extract_spans_media_join,
-                                                 extract_spans_twopass)
-    from unfurl_spark.sources.tables import read_table, write_bucketed
+    # (no parent package when launched via --py-files + script path).
+    # Module attributes are looked up per call, so a patched
+    # extract_spans / broadcast_side_tables / write_bucketed is honored.
+    from unfurl_spark.operators import pipeline
+    from unfurl_spark.sources import tables
 
+    run_id = run_id or f"run-{int(time.time())}"
     out_data = os.path.join(output_dir, "spans")
-    docs = read_table(spark, input_path)
-    oembed_df = read_table(spark, oembed_path) if oembed_path else None
-    media_df = read_table(spark, media_path) if media_path else None
+    with _job_description(spark, f"unfurl {run_id}: inputs"):
+        docs = tables.read_table(spark, input_path)
+        oembed_df = (tables.read_table(spark, oembed_path)
+                     if oembed_path else None)
+        media_df = (tables.read_table(spark, media_path)
+                    if media_path else None)
 
     if side_mode == "broadcast":
-        extract = partial(extract_spans, oembed_df=oembed_df,
-                          media_df=media_df)
+        # once per job, at the first chunk with work: a fully resumed run
+        # collects and broadcasts nothing
+        @cache
+        def side():
+            with _job_description(spark, f"unfurl {run_id}: side tables"):
+                return pipeline.broadcast_side_tables(spark, oembed_df,
+                                                      media_df)
+
+        def extract(sel):
+            return pipeline.extract_spans(sel, side=side())
     # 10^12-doc regime: side tables too large to broadcast — oembed via
     # two-pass href join, media payloads via explode + equi-join
     # (pipeline.py)
     elif media_df is not None:
-        extract = partial(extract_spans_media_join, media_df=media_df,
-                          oembed_df=oembed_df, join_oembed=True)
+        extract = partial(pipeline.extract_spans_media_join,
+                          media_df=media_df, oembed_df=oembed_df,
+                          join_oembed=True)
     elif oembed_df is not None:
-        extract = partial(extract_spans_twopass, oembed_df=oembed_df)
+        extract = partial(pipeline.extract_spans_twopass,
+                          oembed_df=oembed_df)
     else:
-        extract = extract_spans
+        extract = pipeline.extract_spans
 
-    def stage(part, bucket_of):
+    def stage(part, bucket_of, observe):
         sel = part.select("doc_id", "spans",
                           *(["status"] if "status" in docs.columns else []))
         # bucket is a pure function of doc_id — recompute instead of
@@ -264,18 +306,17 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         # shuffle of the span payload at scale)
         result = extract(sel).withColumn("bucket", bucket_of)
         # idempotent data commit: replace exactly these buckets
-        # (Iceberg overwritePartitions / parquet dynamic overwrite)
-        write_bucketed(result, out_data)
-        return out_data
+        # (Iceberg overwritePartitions / parquet dynamic overwrite); the
+        # stats are observed directly under the write, no exchange between
+        tables.write_bucketed(observe(result), out_data)
 
     return _run_bucketed(
         spark, docs, "doc_id", stage, os.path.join(output_dir, "metrics"),
-        {"n_docs": F.count("*"), "n_bytes": F.sum("n_input_bytes"),
-         "n_failures": _count_if(F.col("ok") != "ok")},
+        {"n_docs": F.lit(1), "n_bytes": F.col("n_input_bytes"),
+         "n_failures": _one_if(F.col("ok") != "ok")},
         summed=("n_docs", "n_failures"), const_cols={},
         rates={"docs_per_sec": "n_docs"}, n_buckets=n_buckets,
-        buckets_per_job=buckets_per_job,
-        run_id=run_id or f"run-{int(time.time())}")
+        buckets_per_job=buckets_per_job, run_id=run_id)
 
 
 def main() -> None:
