@@ -292,6 +292,66 @@ def test_audio_metadata_operator_ogg(spark):
     assert got["bad.ogg"]["ok"].startswith("err:")
 
 
+def _ogg_raw_page(serial, seq, granule, body, lacing, htype=0):
+    """One Ogg page with explicit lacing: a last lace of 255 leaves the
+    packet open for the next page."""
+    import struct as _s
+    return (b"OggS" + bytes([0, htype]) + _s.pack("<q", granule)
+            + _s.pack("<I", serial) + _s.pack("<I", seq) + _s.pack("<I", 0)
+            + bytes([len(lacing)]) + bytes(lacing) + body)
+
+
+def _opus_tags_over_two_pages():
+    """OpusHead page, then an OpusTags packet split after 510 bytes: the
+    second page carries the rest with the continuation flag (0x01)."""
+    import struct as _s
+    head = (b"OpusHead" + bytes([1, 2]) + _s.pack("<H", 0)
+            + _s.pack("<I", 48000) + _s.pack("<h", 0) + bytes([0]))
+    tags = b"OpusTags" + _vorbis_comment_block(
+        {"COMMENT": "x" * 600, "TITLE": "Across", "ARTIST": "Pages",
+         "ALBUM": "Two"})
+    assert len(tags) > 510
+    first, rest = tags[:510], tags[510:]
+    rest_lacing = [255] * (len(rest) // 255) + [len(rest) % 255]
+    return (_ogg_page(5, 0, 0, [head], htype=2)
+            + _ogg_raw_page(5, 1, -1, first, [255, 255])
+            + _ogg_raw_page(5, 2, -1, rest, rest_lacing, htype=1)
+            + _ogg_page(5, 3, 48000 * 4, [b"\x00" * 6], htype=4))
+
+
+def test_ogg_comment_packet_spanning_pages(spark):
+    from pyspark.sql import Row
+
+    from unfurl_spark.functions.media import ogg_metadata
+    from unfurl_spark.functions.multimodal import audio_metadata
+
+    data = _opus_tags_over_two_pages()
+    m = ogg_metadata(data, total_bytes=len(data))
+    assert m["codec"] == "opus" and m["channels"] == 2
+    assert (m["title"], m["artist"], m["album"]) == ("Across", "Pages",
+                                                     "Two")
+    assert m["duration_s"] == 4.0
+    df = spark.createDataFrame(
+        [Row(media_ref="long-tags.opus", ctype="audio/ogg", payload=data)])
+    [r] = audio_metadata(df).collect()
+    assert r["ok"] == "ok"
+    assert (r["title"], r["artist"], r["album"]) == ("Across", "Pages",
+                                                     "Two")
+
+
+def test_ogg_orphan_continuation_is_skipped():
+    """A read that starts on a continuation page has no start for that
+    packet: its tail must not be taken for the identification header."""
+    from unfurl_spark.functions.media import ogg_metadata
+
+    data = _opus_tags_over_two_pages()
+    orphan = _ogg_raw_page(5, 9, -1, b"tail of a lost packet", [21],
+                           htype=1)
+    m = ogg_metadata(orphan + data, total_bytes=len(orphan) + len(data))
+    assert m["codec"] == "opus"
+    assert m["title"] == "Across"
+
+
 def test_pcm_metadata_header_only():
     """WAV/FLAC/AIFF metadata must come from the HEADER prefix alone —
     asserted by truncating each fixture to its first 256 bytes (the

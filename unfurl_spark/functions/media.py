@@ -1459,6 +1459,7 @@ def ogg_metadata(data: bytes, total_bytes: int | None = None) -> dict:
     packets: list[bytes] = []
     max_granule = None
     last_page_seen = False
+    cur = None  # the packet being gathered; None until one starts in view
     while pos + 27 <= len(data):
         if data[pos:pos + 4] != b"OggS":
             break
@@ -1477,14 +1478,20 @@ def ogg_metadata(data: bytes, total_bytes: int | None = None) -> dict:
         if htype & 0x04:
             last_page_seen = True
         if len(packets) < 2 and body_start + body_len <= len(data):
-            # first two packets carry the id + comment headers
+            # first two packets carry the id + comment headers; a packet
+            # may span pages (its last lace is 255, the next page has the
+            # continuation flag), so the partial packet carries over.
+            # Continued data whose start was never seen is skipped.
             seg_pos = body_start
-            cur = b""
+            if not htype & 0x01:
+                cur = b""
             for lace in lacing:
-                cur += data[seg_pos:seg_pos + lace]
+                if cur is not None:
+                    cur += data[seg_pos:seg_pos + lace]
                 seg_pos += lace
                 if lace < 255:
-                    packets.append(cur)
+                    if cur is not None:
+                        packets.append(cur)
                     cur = b""
                     if len(packets) >= 2:
                         break

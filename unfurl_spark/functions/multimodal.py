@@ -29,12 +29,18 @@ environment, visible per-row in the ``ok`` lineage column.
 
 All operators are Arrow-batched via ``mapInArrow`` — no per-row Python
 UDFs, payloads cross as Arrow binary buffers (zero-copy from the JVM).
+The decode, features and resize ops are one kernel (``pixel_pass``)
+that decodes each payload at most once for all requested ops;
+``decode_media``, ``extract_features`` and ``resize_images`` are it
+with one op.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 import struct
+from functools import partial
 from typing import Iterator
 
 from pyspark.sql import DataFrame
@@ -73,11 +79,15 @@ from .vp8l import decode_webp
 # reference caps EXIF reads at 131072, unfurl-exif/src/index.ts:21)
 HEADER_BYTE_CAP = 131072
 
-DECODE_SCHEMA = ("media_ref string, container string, width int, "
-                 "height int, n_bytes long, ok string")
-FEATURE_SCHEMA = "media_ref string, embedding array<float>, ok string"
-RESIZE_SCHEMA = ("media_ref string, width int, height int, "
-                 "payload binary, ok string")
+# the columns each pixel op emits after media_ref
+PIXEL_COLUMNS = {
+    "decode": ("container string", "width int", "height int",
+               "n_bytes long", "ok string"),
+    "features": ("embedding array<float>", "ok string"),
+    "resize": ("width int", "height int", "payload binary", "ok string"),
+}
+DECODE_SCHEMA, FEATURE_SCHEMA, RESIZE_SCHEMA = (
+    ", ".join(("media_ref string", *cols)) for cols in PIXEL_COLUMNS.values())
 FRAME_SCHEMA = ("media_ref string, frame_index int, frame_ts_ms long, "
                 "payload binary, ok string")
 AUDIO_SCHEMA = ("media_ref string, container string, sample_rate int, "
@@ -237,62 +247,165 @@ def _salted(df: DataFrame, num_partitions: int | None):
     return df
 
 
+def _lineage(px) -> str:
+    """``ok`` for a decoded payload, else its failure's lineage value."""
+    if not isinstance(px, Exception):
+        return "ok"
+    return ("codec:unavailable" if isinstance(px, CodecUnavailable)
+            else f"err:{type(px).__name__}")
+
+
+def _guarded(build, px, fallback):
+    """→ (value, ok): ``build(px)``, else ``fallback()`` flagged with the
+    decode's or the build's failure — never another op's."""
+    if not isinstance(px, Exception):
+        try:
+            return build(px), "ok"
+        except Exception as exc:  # malformed payload
+            px = exc
+    return fallback(), _lineage(px)
+
+
+def _meta_row(ref, data, n, container, px):
+    head = data[:HEADER_BYTE_CAP]
+    w, h = _dims(container, head)
+    if (n or 0) > len(head):  # n is None for NULL payloads
+        return container, w, h, n, "capped:header-only"
+    if w is None and hasattr(px, "shape"):
+        h, w = _i32(int(px.shape[0])), _i32(int(px.shape[1]))
+    return container, w, h, n, _lineage(px)
+
+
+def _embedding(px, dim: int) -> list:
+    import numpy as np
+    if isinstance(px, tuple):  # audio (rate, samples)
+        flat = px[1].astype(np.float32) / 32768.0
+        if flat.size == 0:
+            # valid container, zero samples: mean()/std() would emit an
+            # all-NaN embedding
+            raise CodecError("wav: zero samples")
+        head = [float(flat.mean()), float(flat.std()),
+                float(np.abs(flat).mean()),
+                float(np.abs(flat).max(initial=0.0)), 0.0, 0.0]
+        hist, _ = np.histogram(flat, bins=max(1, dim - 6),
+                               range=(-1.0, 1.0))
+    else:  # image HxWxC uint8
+        f = px.astype(np.float32) / 255.0
+        ch = [f[:, :, i % f.shape[2]] for i in range(3)]
+        head = [float(c.mean()) for c in ch] + [float(c.std()) for c in ch]
+        luma = 0.299 * ch[0] + 0.587 * ch[1] + 0.114 * ch[2]
+        hist, _ = np.histogram(luma, bins=max(1, dim - 6), range=(0.0, 1.0))
+    hsum = float(hist.sum()) or 1.0
+    vec = head + [float(v) / hsum for v in hist]
+    return (vec + [0.0] * dim)[:dim]
+
+
+def _features_row(ref, data, n, container, px, dim):
+    def fake():
+        vec = [0.0] * dim
+        for i, b in enumerate(_fake_pixels(ref, data[:4096], dim * 16)):
+            vec[i % dim] += b / 255.0
+        return vec
+
+    vec, ok = _guarded(partial(_embedding, dim=dim), px, fake)
+    norm = math.sqrt(sum(v * v for v in vec)) or 1.0
+    return [v / norm for v in vec], ok
+
+
+def _thumbnail(px, width: int, height: int) -> bytes:
+    import numpy as np
+    if isinstance(px, tuple):
+        raise CodecUnavailable("audio has no thumbnail")
+    if px.shape[2] < 3:
+        # gray (1ch) AND gray+alpha (2ch): repeat the gray plane — the
+        # RGB24 output contract is h*w*3 bytes
+        px = np.repeat(px[:, :, :1], 3, axis=2)
+    return resize_area(px[:, :, :3], width, height).tobytes()
+
+
+def _resize_row(ref, data, n, container, px, width, height):
+    out, ok = _guarded(partial(_thumbnail, width=width, height=height), px,
+                       partial(_fake_pixels, ref, data, width * height * 3))
+    return width, height, out, ok
+
+
+def _pixel_kernel(ops: tuple, schema, dim: int, width: int, height: int):
+    """The Arrow loop of every pixel op: sniff each payload, decode it at
+    most once, and build each op's row from that one decode."""
+    builders = [{"decode": _meta_row,
+                 "features": partial(_features_row, dim=dim),
+                 "resize": partial(_resize_row, width=width, height=height),
+                 }[op] for op in ops]
+    head_only = ops == ("decode",)
+
+    def run(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+        fields = list(schema)[1:]  # the ops' columns, after media_ref
+        types = [pa.struct(fields)] if len(ops) == 1 else \
+            [f.type for f in fields]
+        for batch in batches:
+            refs = batch.column(0).to_pylist()
+            payloads = batch.column(1).to_pylist()
+            sizes = (batch.column(2).to_pylist() if head_only else
+                     [None if p is None else len(p) for p in payloads])
+            rows = [[] for _ in ops]
+            for ref, payload, n in zip(refs, payloads, sizes):
+                data = payload or b""
+                container = _sniff(data)
+                px = None  # the meta of an over-cap prefix needs no pixels
+                if not head_only or (n or 0) <= len(data):
+                    try:
+                        px = decode_pixels(data, container or "unknown")
+                    except Exception as exc:  # malformed payload
+                        px = exc
+                for out, build in zip(rows, builders):
+                    out.append(build(ref, data, n, container, px))
+            cols = [pa.array(out, t) for out, t in zip(rows, types)]
+            if len(ops) == 1:  # the op's own flat schema
+                cols = cols[0].flatten()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(refs, pa.string()), *cols], schema=schema)
+
+    return run
+
+
+def pixel_pass(df: DataFrame, ops: tuple, dim: int = 64, width: int = 64,
+               height: int = 64,
+               num_partitions: int | None = None) -> DataFrame:
+    """(media_ref, payload) → one row per payload: the columns of each
+    pixel op in ``ops`` ⊆ (decode, features, resize), built from ONE
+    decode.  One op yields its flat schema; several yield one struct
+    column per op, named by it.  Only decode alone ships just the
+    JVM-side ``HEADER_BYTE_CAP`` prefix into Python."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if ops == ("decode",):
+        cols = [F.substring("payload", 1, HEADER_BYTE_CAP).alias("head"),
+                F.length("payload").cast("long").alias("n_bytes")]
+    else:
+        cols = ["payload"]
+    schema = DataType.fromDDL(", ".join(("media_ref string", *(
+        PIXEL_COLUMNS[ops[0]] if len(ops) == 1 else
+        (f"{op} struct<{', '.join(PIXEL_COLUMNS[op])}>" for op in ops)))))
+    kernel = _pixel_kernel(ops, to_arrow_schema(schema), dim, width, height)
+    return _salted(df.select("media_ref", *cols), num_partitions) \
+        .mapInArrow(kernel, schema)
+
+
 def decode_media(df: DataFrame,
                  num_partitions: int | None = None) -> DataFrame:
     """(media_ref, ctype, payload) → container + dimensions + lineage.
 
-    Header metadata (sniff + PNG/WebP/JPEG/MP4 header walk) is always
-    read from the capped prefix.  When the full payload fits under the
-    cap, the real codec runs and ``ok`` records the outcome:
-    ``ok`` (decoded), ``codec:unavailable`` (container essence needs an
-    external codec), ``err:*`` (malformed), or ``capped:header-only``
-    (payload larger than the cap — a full-decode pass would re-read it
-    uncapped)."""
-    capped = df.select(
-        "media_ref",
-        F.substring("payload", 1, HEADER_BYTE_CAP).alias("head"),
-        F.length("payload").cast("long").alias("n_bytes"),
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            heads = batch.column(1).to_pylist()
-            sizes = batch.column(2).to_pylist()
-            containers, widths, heights, oks = [], [], [], []
-            for ref, head, n in zip(refs, heads, sizes):
-                data = head or b""
-                c = _sniff(data)
-                w, h = _dims(c, data)
-                if (n or 0) > len(data):  # n is None for NULL payloads
-                    ok = "capped:header-only"
-                else:
-                    try:
-                        px = decode_pixels(data, c or "unknown")
-                        ok = "ok"
-                        if w is None and hasattr(px, "shape"):
-                            h = _i32(int(px.shape[0]))
-                            w = _i32(int(px.shape[1]))
-                    except CodecUnavailable:
-                        ok = "codec:unavailable"
-                    except Exception as exc:  # malformed payload
-                        ok = f"err:{type(exc).__name__}"
-                containers.append(c)
-                widths.append(w)
-                heights.append(h)
-                oks.append(ok)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(containers, pa.string()),
-                 pa.array(widths, pa.int32()),
-                 pa.array(heights, pa.int32()),
-                 pa.array(sizes, pa.int64()),
-                 pa.array(oks, pa.string())],
-                names=["media_ref", "container", "width", "height",
-                       "n_bytes", "ok"])
-
-    return _salted(capped, num_partitions).mapInArrow(run, DECODE_SCHEMA)
+    ``pixel_pass`` with the decode op alone.  Header metadata (sniff +
+    PNG/WebP/JPEG/MP4 header walk) is always read from the capped
+    prefix.  When the full payload fits under the cap, the real codec
+    runs once and ``ok`` records the outcome: ``ok`` (decoded),
+    ``codec:unavailable`` (container essence needs an external codec),
+    ``err:*`` (malformed), or ``capped:header-only`` (payload larger than
+    the cap — the features and resize ops, which get the whole payload,
+    still decode it)."""
+    return pixel_pass(df, ("decode",), num_partitions=num_partitions)
 
 
 def audio_metadata(df: DataFrame,
@@ -395,126 +508,36 @@ def extract_features(df: DataFrame, dim: int = 64,
                      num_partitions: int | None = None) -> DataFrame:
     """(media_ref, payload) → dense float feature vector.
 
-    Decodable payloads get REAL content features: per-channel
-    mean/std + a luminance histogram for images, amplitude stats + a
-    sample histogram for PCM audio — L2-normalized to `dim` floats.
-    Codec-unavailable containers fall back to the deterministic
-    payload-hash fake (stable across runs/workers), so the column is
-    total either way — but the fallback is FLAGGED in ``ok``
-    (``codec:unavailable`` / ``err:*``), mirroring ``resize_images``,
-    so downstream embedding dedup/ANN can filter hash noise out
-    (``WHERE ok = 'ok'``) instead of clustering it as content.
+    ``pixel_pass`` with the features op alone.  Decodable payloads get
+    REAL content features: per-channel mean/std + a luminance histogram
+    for images, amplitude stats + a sample histogram for PCM audio —
+    L2-normalized to `dim` floats.  Codec-unavailable containers fall
+    back to the deterministic payload-hash fake (stable across
+    runs/workers), so the column is total either way — but the fallback
+    is FLAGGED in ``ok`` (``codec:unavailable`` / ``err:*``), mirroring
+    ``resize_images``, so downstream embedding dedup/ANN can filter hash
+    noise out (``WHERE ok = 'ok'``) instead of clustering it as content.
     """
-    full = df.select("media_ref", "payload")
-
-    def run(batches: Iterator) -> Iterator:
-        import math
-
-        import numpy as np
-        import pyarrow as pa
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            vecs, oks = [], []
-            for ref, payload in zip(refs, payloads):
-                data = payload or b""
-                vec = None
-                try:
-                    out = decode_pixels(data, _sniff(data) or "unknown")
-                    if isinstance(out, tuple):  # audio (rate, samples)
-                        _rate, samples = out
-                        flat = samples.astype(np.float32) / 32768.0
-                        if flat.size == 0:
-                            # valid container, zero samples: mean()/std()
-                            # would emit an all-NaN embedding
-                            raise CodecError("wav: zero samples")
-                        head = [float(flat.mean()), float(flat.std()),
-                                float(np.abs(flat).mean()),
-                                float(np.abs(flat).max(initial=0.0)),
-                                0.0, 0.0]
-                        hist, _ = np.histogram(
-                            flat, bins=max(1, dim - 6), range=(-1.0, 1.0))
-                    else:  # image HxWxC uint8
-                        px = out.astype(np.float32) / 255.0
-                        ch = [px[:, :, i % px.shape[2]] for i in range(3)]
-                        head = [float(c.mean()) for c in ch] + \
-                               [float(c.std()) for c in ch]
-                        luma = (0.299 * ch[0] + 0.587 * ch[1]
-                                + 0.114 * ch[2])
-                        hist, _ = np.histogram(
-                            luma, bins=max(1, dim - 6), range=(0.0, 1.0))
-                    hsum = float(hist.sum()) or 1.0
-                    vec = head + [float(v) / hsum for v in hist]
-                    vec = (vec + [0.0] * dim)[:dim]
-                    oks.append("ok")
-                except CodecUnavailable:
-                    oks.append("codec:unavailable")
-                except Exception as exc:  # malformed payload
-                    oks.append(f"err:{type(exc).__name__}")
-                if vec is None:
-                    px = _fake_pixels(ref, data[:4096], dim * 16)
-                    vec = [0.0] * dim
-                    for i, b in enumerate(px):
-                        vec[i % dim] += b / 255.0
-                norm = math.sqrt(sum(v * v for v in vec)) or 1.0
-                vecs.append([v / norm for v in vec])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(vecs, pa.list_(pa.float32())),
-                 pa.array(oks, pa.string())],
-                names=["media_ref", "embedding", "ok"])
-
-    return _salted(full, num_partitions).mapInArrow(run, FEATURE_SCHEMA)
+    return pixel_pass(df, ("features",), dim=dim,
+                      num_partitions=num_partitions)
 
 
 def resize_images(df: DataFrame, width: int = 64, height: int = 64,
                   num_partitions: int | None = None) -> DataFrame:
     """(media_ref, payload) → fixed-size RGB pixel buffer (w*h*3 bytes).
 
-    Decodable containers produce a REAL thumbnail: codec decode →
-    box-filter area resample (`codecs.resize_area`) → packed RGB24.
-    Codec-unavailable/malformed payloads keep the batch total with the
+    ``pixel_pass`` with the resize op alone.  Decodable containers
+    produce a REAL thumbnail: codec decode → box-filter area resample
+    (`codecs.resize_area`) → packed RGB24.  Codec-unavailable/malformed
+    payloads, and audio (no picture), keep the batch total with the
     deterministic fake, flagged in ``ok``.
     """
-    n_out = width * height * 3
+    return pixel_pass(df, ("resize",), width=width, height=height,
+                      num_partitions=num_partitions)
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pyarrow as pa
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            outs, oks = [], []
-            for ref, payload in zip(refs, payloads):
-                data = payload or b""
-                out = None
-                try:
-                    px = decode_pixels(data, _sniff(data) or "unknown")
-                    if isinstance(px, tuple):
-                        raise CodecUnavailable("audio has no thumbnail")
-                    if px.shape[2] < 3:
-                        # gray (1ch) AND gray+alpha (2ch): repeat the gray
-                        # plane — the RGB24 output contract is h*w*3 bytes
-                        px = np.repeat(px[:, :, :1], 3, axis=2)
-                    out = resize_area(px[:, :, :3], width, height).tobytes()
-                    oks.append("ok")
-                except CodecUnavailable:
-                    oks.append("codec:unavailable")
-                except Exception as exc:  # malformed payload
-                    oks.append(f"err:{type(exc).__name__}")
-                if out is None:
-                    out = _fake_pixels(ref, data, n_out)
-                outs.append(out)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array([width] * len(refs), pa.int32()),
-                 pa.array([height] * len(refs), pa.int32()),
-                 pa.array(outs, pa.binary()),
-                 pa.array(oks, pa.string())],
-                names=["media_ref", "width", "height", "payload", "ok"])
 
-    return _salted(df.select("media_ref", "payload"),
-                   num_partitions).mapInArrow(run, RESIZE_SCHEMA)
+def _picks(n: int, n_frames: int) -> list[int]:
+    return [min(n - 1, i * n // n_frames) for i in range(n_frames)]
 
 
 def sample_frames(df: DataFrame, n_frames: int = 4,
@@ -542,53 +565,27 @@ def sample_frames(df: DataFrame, n_frames: int = 4,
             o_refs, o_idx, o_ts, o_payload, o_ok = [], [], [], [], []
             for ref, payload in zip(refs, payloads):
                 data = payload or b""
-                real = None
+                real = None  # [(ts, frame)] of n_frames real frames
                 kind = _sniff(data)
-                if kind == "gif":
-                    try:
-                        decoded = decode_gif_frames(data, max_frames=256)
-                        # n_frames picks spread evenly over the clip
-                        picks = [min(len(decoded) - 1,
-                                     i * len(decoded) // n_frames)
-                                 for i in range(n_frames)]
-                        ts_cum, acc = [], 0
-                        for delay, _f in decoded:
-                            ts_cum.append(acc)
+                try:
+                    if kind == "gif":
+                        real, acc = [], 0
+                        for delay, f in decode_gif_frames(data,
+                                                          max_frames=256):
+                            real.append((f, acc))
                             acc += delay or frame_interval_ms
-                        real = [(ts_cum[j], decoded[j][1].tobytes())
-                                for j in picks]
-                    except (CodecError, CodecUnavailable):
-                        real = None
-                elif kind == "webp" and b"ANMF" in data[:8192]:
-                    try:
+                    elif kind == "webp" and b"ANMF" in data[:8192]:
                         from .vp8l import decode_webp_frames
-                        decoded = decode_webp_frames(data, max_frames=256)
-                        picks = [min(len(decoded) - 1,
-                                     i * len(decoded) // n_frames)
-                                 for i in range(n_frames)]
-                        real = [(decoded[j][1], decoded[j][0].tobytes())
-                                for j in picks]
-                    except (CodecError, CodecUnavailable):
-                        real = None
-                elif kind == "png" and b"acTL" in data[:8192]:
-                    # APNG: frames carry their own timestamps
-                    try:
-                        decoded = decode_apng_frames(data, max_frames=256)
-                        picks = [min(len(decoded) - 1,
-                                     i * len(decoded) // n_frames)
-                                 for i in range(n_frames)]
-                        real = [(decoded[j][1], decoded[j][0].tobytes())
-                                for j in picks]
-                    except (CodecError, CodecUnavailable):
-                        real = None
-                if real is not None:
-                    for i, (ts, px) in enumerate(real):
-                        o_refs.append(ref)
-                        o_idx.append(i)
-                        o_ts.append(ts)
-                        o_payload.append(px)
-                        o_ok.append("ok")
-                    continue
+                        real = decode_webp_frames(data, max_frames=256)
+                    elif kind == "png" and b"acTL" in data[:8192]:
+                        # APNG: frames carry their own timestamps
+                        real = decode_apng_frames(data, max_frames=256)
+                    if real is not None:
+                        # n_frames picks spread evenly over the clip
+                        real = [(real[j][1], real[j][0].tobytes())
+                                for j in _picks(len(real), n_frames)]
+                except (CodecError, CodecUnavailable):
+                    real = None
                 if kind == "mp4":
                     # Motion-JPEG track: every sample is a whole baseline
                     # JPEG — real frames at real timestamps, no external
@@ -598,31 +595,25 @@ def sample_frames(df: DataFrame, n_frames: int = 4,
                         table = mjpeg_samples(data)
                     except Exception:
                         table = None
-                    if table:
-                        usable = [(ts, off, sz) for ts, off, sz in table
-                                  if off + sz <= len(data)]
-                        if usable:
-                            picks = [min(len(usable) - 1,
-                                         i * len(usable) // n_frames)
-                                     for i in range(n_frames)]
-                            decoded_ok = True
-                            frames = []
-                            for j in picks:
+                    usable = [(ts, off, sz) for ts, off, sz in table or ()
+                              if off + sz <= len(data)]
+                    if usable:
+                        try:
+                            real = []
+                            for j in _picks(len(usable), n_frames):
                                 ts, off, sz = usable[j]
-                                try:
-                                    px = decode_jpeg(data[off:off + sz])
-                                    frames.append((ts, px.tobytes()))
-                                except Exception:
-                                    decoded_ok = False
-                                    break
-                            if decoded_ok:
-                                for i, (ts, px) in enumerate(frames):
-                                    o_refs.append(ref)
-                                    o_idx.append(i)
-                                    o_ts.append(ts)
-                                    o_payload.append(px)
-                                    o_ok.append("ok")
-                                continue
+                                px = decode_jpeg(data[off:off + sz])
+                                real.append((ts, px.tobytes()))
+                        except Exception:
+                            real = None
+                if real is not None:
+                    for i, (ts, px) in enumerate(real):
+                        o_refs.append(ref)
+                        o_idx.append(i)
+                        o_ts.append(ts)
+                        o_payload.append(px)
+                        o_ok.append("ok")
+                    continue
                 try:
                     duration_s = (mp4_metadata(data).get("duration_s")
                                   or mkv_metadata(data).get("duration_s"))

@@ -207,31 +207,38 @@ def run_media_job(spark: SparkSession, media_path: str, output_dir: str,
     metrics + done-markers, restart resumes the remainder.
 
     ``ops`` ⊆ {decode, features, resize, frames}: decode always writes
-    ``<out>/media_meta`` (container/dims/ok lineage — the cheap
-    header+codec pass); the others add their own bucketed tables.  The
-    per-bucket stats are observed on the ``media_meta`` commit.
+    ``<out>/media_meta`` (container/dims/ok lineage).  The pixel ops run
+    as ONE kernel, one decode per payload (``multimodal.pixel_pass``);
+    with features or resize, its result is persisted once, written as
+    ``media_meta`` / ``media_features`` / ``media_resize`` projections and
+    unpersisted.  frames is its own stage.  The per-bucket stats are
+    observed on the ``media_meta`` commit.
     """
-    from unfurl_spark.functions.multimodal import (decode_media,
-                                                   extract_features,
-                                                   resize_images,
-                                                   sample_frames)
+    from unfurl_spark.functions.multimodal import pixel_pass, sample_frames
     from unfurl_spark.sources import tables
 
     run_id = run_id or f"media-{int(time.time())}"
-    writers = {"decode": ("media_meta", decode_media),
-               "features": ("media_features", extract_features),
-               "resize": ("media_resize", resize_images),
-               "frames": ("media_frames", sample_frames)}
+    pixel = ("decode", *(op for op in ("features", "resize") if op in ops))
+    table_of = {"decode": "media_meta", "features": "media_features",
+                "resize": "media_resize", "frames": "media_frames"}
 
     def stage(part, bucket_of, observe):
         part = part.select("media_ref", "ctype", "payload")
-        for op in dict.fromkeys(("decode", *ops)):
-            if op in writers:
-                table, op_fn = writers[op]
-                out = op_fn(part).withColumn("bucket", bucket_of)
+        res = pixel_pass(part, pixel)
+        outs = ({"decode": res} if len(pixel) == 1 else
+                {op: res.select("media_ref", f"{op}.*") for op in pixel})
+        if "frames" in ops:
+            outs["frames"] = sample_frames(part)
+        if len(pixel) > 1:
+            res.persist()  # one decode feeds every pixel table
+        try:
+            for op, out in outs.items():
+                out = out.withColumn("bucket", bucket_of)
                 tables.write_bucketed(
                     observe(out) if op == "decode" else out,
-                    os.path.join(output_dir, table))
+                    os.path.join(output_dir, table_of[op]))
+        finally:
+            res.unpersist()  # a no-op when nothing was persisted
 
     always = ("decode",)
     stats = {"n_media": F.lit(1),
