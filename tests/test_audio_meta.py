@@ -410,3 +410,45 @@ def test_flac_picture_block_cover_art():
     assert pcm_metadata(data)["sample_rate"] == 2000
     # plain flac (no picture block) yields no cover
     assert embedded_cover(bytes(flac)) is None
+
+
+def test_rate_beyond_int32_degrades_one_row_not_the_batch(spark):
+    """A WAV ``fmt `` rate or an AIFF ``COMM`` rate of 2^31 or more is
+    corrupt header data: its row keeps a NULL rate, and the batch's
+    other rows come back as they do alone (the int32 column used to
+    raise ArrowInvalid for the whole batch)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from perfbench.kernel_trace import _Capture
+    from unfurl_spark.functions.codecs import encode_wav
+    from unfurl_spark.functions.multimodal import audio_metadata
+
+    good = encode_wav(8000, np.zeros((1600, 2), np.int16))
+    bad_wav = bytearray(good)
+    bad_wav[24:28] = (0xFFFFFFF0).to_bytes(4, "little")  # fmt sample rate
+    # COMM: 1 channel, 100 frames, 16 bits, 80-bit rate 2^63 * 2^-31 = 2^32
+    comm = (struct.pack(">hIh", 1, 100, 16)
+            + struct.pack(">H", 16383 + 32) + (1 << 63).to_bytes(8, "big"))
+    body = b"AIFF" + b"COMM" + struct.pack(">I", len(comm)) + comm
+    bad_aiff = b"FORM" + struct.pack(">I", len(body)) + body
+
+    def run(rows):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([r for r, _ in rows], pa.string()),
+             pa.array([p for _, p in rows], pa.binary()),
+             pa.array([len(p) for _, p in rows], pa.int64())],
+            names=["media_ref", "head", "n_bytes"])
+        kernel = audio_metadata(_Capture())
+        return pa.Table.from_batches(list(kernel(iter([batch])))).to_pylist()
+
+    got = run([("good.wav", good), ("bad.wav", bytes(bad_wav)),
+               ("bad.aiff", bad_aiff)])
+    assert [r["media_ref"] for r in got] == ["good.wav", "bad.wav",
+                                             "bad.aiff"]
+    assert got[0] == run([("good.wav", good)])[0]
+    assert got[0]["sample_rate"] == 8000
+    assert got[1]["container"] == "wav"
+    assert got[2]["container"] == "aiff"
+    assert got[1]["sample_rate"] is None and got[2]["sample_rate"] is None
+    assert got[1]["channels"] == 2 and got[2]["channels"] == 1

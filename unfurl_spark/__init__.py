@@ -11,9 +11,11 @@ Layout:
     functions/   pure-Python batch kernels (HTML meta tokenizer, JSON-LD
                  expansion subset, field extractors, JS-semantics coercions,
                  media header readers, main-content strip) — unit-testable
-                 without Spark, executed Arrow-batched inside mapInPandas.
-    operators/   Spark DataFrame pipelines (the fused extract stage, span
-                 emission, relational building blocks).
+                 without Spark, run as row functions by the one Arrow
+                 runner, operators/pipeline.py ``map_rows``.
+    operators/   Spark DataFrame pipelines (the fused extract stage, the
+                 Arrow row runner, span emission, relational building
+                 blocks).
     sources/     fixture importer (reference test corpus -> span table),
                  deterministic synthetic corpus generator.
     plans/       job driver: salted repartition, checkpointed per-partition

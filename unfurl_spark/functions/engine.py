@@ -90,7 +90,9 @@ def document_spans(doc_id: str, spans: list[dict],
                    media_store: dict | None = None) -> list[dict]:
     """One interleaved input row → the ordered output span sequence
     (SURVEY.md §2.6): title, description, og_image*, jsonld*, body_text*,
-    media*.  Pure function — runs Arrow-batched inside mapInPandas.
+    media*.  Pure function — the Spark stage runs its flat twin,
+    ``flat_document_spans``, through the engine's one Arrow row runner
+    (operators/pipeline.py ``map_rows``).
 
     ``spans`` is the input span list (kind ∈ html|pdf|media); the first
     span's media_ref is the page URL.  ``oembed_store`` maps discovery href
@@ -178,18 +180,11 @@ def flat_document_spans(url: str, html_text: str, status: int,
     kinds = media_kinds if media_kinds is not None \
         else ["media"] * len(media_refs)
     for ref, mkind in zip(media_refs, kinds):
-        extracted = None
-        body_text = None
+        extracted = body_text = None
         if media_store is not None and ref in media_store:
             ctype, payload = media_store[ref]
-            snippet = scrape_document(
-                ref, 200, {"content-type": ctype}, None,
-                body_bytes=payload, plugins=("exif", "exiftool"))
-            extracted = json.dumps(
-                snippet, default=str, sort_keys=True, ensure_ascii=False)
-            if mkind == "pdf":
-                from .pdftext import pdf_text
-                body_text = pdf_text(payload)
+            extracted, body_text = media_span_texts(ref, ctype, payload,
+                                                    mkind)
         emit("media", extracted or "", ref)
         if mkind == "pdf":
             # PDF main content (north-rule "PDF/layout parse"): the span
@@ -199,6 +194,23 @@ def flat_document_spans(url: str, html_text: str, status: int,
             emit("body_text", body_text or "", ref)
 
     return out
+
+
+def media_span_texts(ref: str, ctype: str | None, payload: bytes,
+                     kind: str) -> tuple[str, str | None]:
+    """One media/pdf ref's span texts: its exif/exiftool snippet as
+    sorted JSON, and for a ``pdf``-kind ref its body text (else None).
+    Both extraction regimes call this — the broadcast media store and the
+    media join (operators/pipeline.py)."""
+    snippet = scrape_document(ref, 200, {"content-type": ctype}, None,
+                              body_bytes=payload,
+                              plugins=("exif", "exiftool"))
+    extracted = json.dumps(snippet, default=str, sort_keys=True,
+                           ensure_ascii=False)
+    if kind != "pdf":
+        return extracted, None
+    from .pdftext import pdf_text
+    return extracted, pdf_text(payload)
 
 
 def scrape_document(url: str, status: int, headers: dict,

@@ -3,7 +3,8 @@
 Re-imagines the reference's streaming parse (htmlparser2 ``WritableStream``
 driving the ``htmlmetaparser.Handler``, unfurl-html/src/index.ts:212-225) as
 a columns-in/columns-out pure-Python kernel: one call per document, executed
-over Arrow record batches inside ``mapInPandas`` — no per-row Spark UDFs.
+by the engine's one Arrow row runner (operators/pipeline.py
+``map_rows``) — no per-row Spark UDFs.
 
 Output is the ``Result``-equivalent dict the extractors consume
 (shape recovered from the reference's consumption sites, SURVEY.md §1.3):
@@ -675,26 +676,21 @@ def parse_html(html_text: str, url: str) -> dict | None:
     return result
 
 
-# The single-pass document tokenizer (functions/tokenizer.py) produces the
-# same event stream as HTMLParser.feed+close without the incremental-feed
-# machinery; equivalence is asserted over the full fixture corpus plus
-# hypothesis markup in tests/test_fast_tokenizer.py.  Flip off to fall back
-# to the stdlib driver (UNFURL_SPARK_STDLIB_TOKENIZER=1).
-import os as _os
-
-FAST_TOKENIZER = _os.environ.get("UNFURL_SPARK_STDLIB_TOKENIZER") != "1"
-
-
 def parse_html_full(html_text: str, url: str, collect_content: bool = True,
-                    fast: bool | None = None) -> tuple[dict | None, list]:
+                    fast: bool = True) -> tuple[dict | None, list]:
     """One pass → (Result dict | None, content blocks).  Blocks are
     (text, link_chars, in_boilerplate_container) triples for the
-    body_text classifier (functions/content.py)."""
+    body_text classifier (functions/content.py).
+
+    ``fast`` drives the handler with the single-pass document tokenizer
+    (functions/tokenizer.py), which produces the same event stream as
+    ``HTMLParser.feed`` + ``close`` without the incremental-feed
+    machinery; ``fast=False`` is that stdlib driver, kept as the
+    reference tests/test_fast_tokenizer.py asserts equivalence against."""
     handler = MetaHandler(url, collect_content=collect_content)
     handler._pending_text = []
-    use_fast = FAST_TOKENIZER if fast is None else fast
     try:
-        if use_fast:
+        if fast:
             from .tokenizer import drive
             drive(handler, html_text)
         else:

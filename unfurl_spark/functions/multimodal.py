@@ -27,8 +27,10 @@ audio essence — container metadata for all of these IS parsed, see
 deterministic payload-hash fake — the honest boundary in this
 environment, visible per-row in the ``ok`` lineage column.
 
-All operators are Arrow-batched via ``mapInArrow`` — no per-row Python
-UDFs, payloads cross as Arrow binary buffers (zero-copy from the JVM).
+Every operator is a row function run by the engine's one Arrow stage,
+``operators.pipeline.map_rows`` — no per-row Spark UDFs; payloads cross
+as Arrow binary buffers (zero-copy from the JVM), and each operator's
+output format is written once, as its Spark schema.
 The decode, features and resize ops are one kernel (``pixel_pass``)
 that decodes each payload at most once for all requested ops;
 ``decode_media``, ``extract_features`` and ``resize_images`` are it
@@ -41,11 +43,11 @@ import hashlib
 import math
 import struct
 from functools import partial
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.pipeline import map_rows
 from .codecs import (
     CodecError,
     CodecUnavailable,
@@ -68,10 +70,14 @@ from .media import (
     _png_info,
     _sniff,
     _webp_info,
+    aac_metadata,
     embedded_cover,
     mjpeg_samples,
     mkv_metadata,
+    mp3_metadata,
     mp4_metadata,
+    ogg_metadata,
+    pcm_metadata,
 )
 from .vp8l import decode_webp
 
@@ -329,46 +335,6 @@ def _resize_row(ref, data, n, container, px, width, height):
     return width, height, out, ok
 
 
-def _pixel_kernel(ops: tuple, schema, dim: int, width: int, height: int):
-    """The Arrow loop of every pixel op: sniff each payload, decode it at
-    most once, and build each op's row from that one decode."""
-    builders = [{"decode": _meta_row,
-                 "features": partial(_features_row, dim=dim),
-                 "resize": partial(_resize_row, width=width, height=height),
-                 }[op] for op in ops]
-    head_only = ops == ("decode",)
-
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-        fields = list(schema)[1:]  # the ops' columns, after media_ref
-        types = [pa.struct(fields)] if len(ops) == 1 else \
-            [f.type for f in fields]
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            sizes = (batch.column(2).to_pylist() if head_only else
-                     [None if p is None else len(p) for p in payloads])
-            rows = [[] for _ in ops]
-            for ref, payload, n in zip(refs, payloads, sizes):
-                data = payload or b""
-                container = _sniff(data)
-                px = None  # the meta of an over-cap prefix needs no pixels
-                if not head_only or (n or 0) <= len(data):
-                    try:
-                        px = decode_pixels(data, container or "unknown")
-                    except Exception as exc:  # malformed payload
-                        px = exc
-                for out, build in zip(rows, builders):
-                    out.append(build(ref, data, n, container, px))
-            cols = [pa.array(out, t) for out, t in zip(rows, types)]
-            if len(ops) == 1:  # the op's own flat schema
-                cols = cols[0].flatten()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()), *cols], schema=schema)
-
-    return run
-
-
 def pixel_pass(df: DataFrame, ops: tuple, dim: int = 64, width: int = 64,
                height: int = 64,
                num_partitions: int | None = None) -> DataFrame:
@@ -377,20 +343,38 @@ def pixel_pass(df: DataFrame, ops: tuple, dim: int = 64, width: int = 64,
     decode.  One op yields its flat schema; several yield one struct
     column per op, named by it.  Only decode alone ships just the
     JVM-side ``HEADER_BYTE_CAP`` prefix into Python."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
-
-    if ops == ("decode",):
+    builders = [{"decode": _meta_row,
+                 "features": partial(_features_row, dim=dim),
+                 "resize": partial(_resize_row, width=width, height=height),
+                 }[op] for op in ops]
+    head_only = ops == ("decode",)
+    if head_only:
         cols = [F.substring("payload", 1, HEADER_BYTE_CAP).alias("head"),
                 F.length("payload").cast("long").alias("n_bytes")]
     else:
         cols = ["payload"]
-    schema = DataType.fromDDL(", ".join(("media_ref string", *(
+    schema = ", ".join(("media_ref string", *(
         PIXEL_COLUMNS[ops[0]] if len(ops) == 1 else
-        (f"{op} struct<{', '.join(PIXEL_COLUMNS[op])}>" for op in ops)))))
-    kernel = _pixel_kernel(ops, to_arrow_schema(schema), dim, width, height)
-    return _salted(df.select("media_ref", *cols), num_partitions) \
-        .mapInArrow(kernel, schema)
+        (f"{op} struct<{', '.join(PIXEL_COLUMNS[op])}>" for op in ops))))
+
+    def row(ref, payload, n=None):
+        """Sniff the payload, decode it at most once, and build each op's
+        columns from that one decode."""
+        data = payload or b""
+        if not head_only:
+            n = None if payload is None else len(payload)
+        container = _sniff(data)
+        px = None  # the meta of an over-cap prefix needs no pixels
+        if not head_only or (n or 0) <= len(data):
+            try:
+                px = decode_pixels(data, container or "unknown")
+            except Exception as exc:  # malformed payload
+                px = exc
+        outs = [build(ref, data, n, container, px) for build in builders]
+        return [(ref, *outs[0]) if len(ops) == 1 else (ref, *outs)]
+
+    return map_rows(_salted(df.select("media_ref", *cols), num_partitions),
+                    schema, lambda: row)
 
 
 def decode_media(df: DataFrame,
@@ -429,79 +413,47 @@ def audio_metadata(df: DataFrame,
         F.length("payload").cast("long").alias("n_bytes"),
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-        from .media import (
-            aac_metadata,
-            mp3_metadata,
-            ogg_metadata,
-            pcm_metadata,
-        )
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            heads = batch.column(1).to_pylist()
-            sizes = batch.column(2).to_pylist()
-            cols = {k: [] for k in ("container", "sample_rate", "channels",
-                                    "duration_s", "bitrate_kbps", "title",
-                                    "artist", "album", "ok")}
-            for ref, head, n in zip(refs, heads, sizes):
-                data = head or b""
-                c = _sniff(data)
-                meta: dict = {}
-                ok = "ok"
-                try:
-                    if c == "mp3":
-                        meta = mp3_metadata(data, total_bytes=n)
-                        if "sample_rate" not in meta:
-                            ok = "err:no-frame-sync"
-                    elif c == "aac":
-                        meta = aac_metadata(data, total_bytes=n)
-                        if "sample_rate" not in meta:
-                            ok = "err:bad-adts"
-                    elif c == "ogg":
-                        meta = ogg_metadata(data, total_bytes=n)
-                        if meta.get("codec") not in ("opus", "vorbis"):
-                            ok = "err:ogg-codec"
-                        elif "duration_s" not in meta:
-                            ok = "capped:no-last-page"
-                    elif c in ("wav", "flac", "aiff"):
-                        # header-only walk (fmt/STREAMINFO/COMM) — no
-                        # full sample decode, correct under the byte cap
-                        meta = pcm_metadata(data)
-                        if "sample_rate" not in meta:
-                            ok = "err:bad-header"
-                    else:
-                        ok = "err:not-audio"
-                except CodecUnavailable:
-                    ok = "codec:unavailable"
-                except Exception as exc:
-                    ok = f"err:{type(exc).__name__}"
-                cols["container"].append(c)
-                cols["sample_rate"].append(meta.get("sample_rate"))
-                cols["channels"].append(meta.get("channels"))
-                cols["duration_s"].append(meta.get("duration_s"))
-                cols["bitrate_kbps"].append(meta.get("bitrate_kbps"))
-                cols["title"].append(meta.get("title"))
-                cols["artist"].append(meta.get("artist"))
-                cols["album"].append(meta.get("album"))
-                cols["ok"].append(ok)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(cols["container"], pa.string()),
-                 pa.array(cols["sample_rate"], pa.int32()),
-                 pa.array(cols["channels"], pa.int32()),
-                 pa.array(cols["duration_s"], pa.float64()),
-                 pa.array(cols["bitrate_kbps"], pa.int32()),
-                 pa.array(cols["title"], pa.string()),
-                 pa.array(cols["artist"], pa.string()),
-                 pa.array(cols["album"], pa.string()),
-                 pa.array(sizes, pa.int64()),
-                 pa.array(cols["ok"], pa.string())],
-                names=["media_ref", "container", "sample_rate", "channels",
-                       "duration_s", "bitrate_kbps", "title", "artist",
-                       "album", "n_bytes", "ok"])
+    def row(ref, head, n):
+        data = head or b""
+        c = _sniff(data)
+        meta: dict = {}
+        ok = "ok"
+        try:
+            if c == "mp3":
+                meta = mp3_metadata(data, total_bytes=n)
+                if "sample_rate" not in meta:
+                    ok = "err:no-frame-sync"
+            elif c == "aac":
+                meta = aac_metadata(data, total_bytes=n)
+                if "sample_rate" not in meta:
+                    ok = "err:bad-adts"
+            elif c == "ogg":
+                meta = ogg_metadata(data, total_bytes=n)
+                if meta.get("codec") not in ("opus", "vorbis"):
+                    ok = "err:ogg-codec"
+                elif "duration_s" not in meta:
+                    ok = "capped:no-last-page"
+            elif c in ("wav", "flac", "aiff"):
+                # header-only walk (fmt/STREAMINFO/COMM) — no full sample
+                # decode, correct under the byte cap
+                meta = pcm_metadata(data)
+                if "sample_rate" not in meta:
+                    ok = "err:bad-header"
+            else:
+                ok = "err:not-audio"
+        except CodecUnavailable:
+            ok = "codec:unavailable"
+        except Exception as exc:
+            ok = f"err:{type(exc).__name__}"
+        # header-declared ints: a corrupt 4-byte rate degrades to NULL
+        # for this row instead of failing the batch's Arrow conversion
+        return [(ref, c, _i32(meta.get("sample_rate")),
+                 _i32(meta.get("channels")), meta.get("duration_s"),
+                 _i32(meta.get("bitrate_kbps")), meta.get("title"),
+                 meta.get("artist"), meta.get("album"), n, ok)]
 
-    return _salted(capped, num_partitions).mapInArrow(run, AUDIO_SCHEMA)
+    return map_rows(_salted(capped, num_partitions), AUDIO_SCHEMA,
+                    lambda: row)
 
 
 def extract_features(df: DataFrame, dim: int = 64,
@@ -557,106 +509,76 @@ def sample_frames(df: DataFrame, n_frames: int = 4,
     fixed interval.
     """
 
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            o_refs, o_idx, o_ts, o_payload, o_ok = [], [], [], [], []
-            for ref, payload in zip(refs, payloads):
-                data = payload or b""
-                real = None  # [(ts, frame)] of n_frames real frames
-                kind = _sniff(data)
+    def row(ref, payload):
+        data = payload or b""
+        real = None  # [(ts, frame)] of n_frames real frames
+        kind = _sniff(data)
+        try:
+            if kind == "gif":
+                real, acc = [], 0
+                for delay, f in decode_gif_frames(data, max_frames=256):
+                    real.append((f, acc))
+                    acc += delay or frame_interval_ms
+            elif kind == "webp" and b"ANMF" in data[:8192]:
+                from .vp8l import decode_webp_frames
+                real = decode_webp_frames(data, max_frames=256)
+            elif kind == "png" and b"acTL" in data[:8192]:
+                # APNG: frames carry their own timestamps
+                real = decode_apng_frames(data, max_frames=256)
+            if real is not None:
+                # n_frames picks spread evenly over the clip
+                real = [(real[j][1], real[j][0].tobytes())
+                        for j in _picks(len(real), n_frames)]
+        except (CodecError, CodecUnavailable):
+            real = None
+        if kind == "mp4":
+            # Motion-JPEG track: every sample is a whole baseline JPEG —
+            # real frames at real timestamps, no external codec (the
+            # true `ffmpeg -vf fps=` path for this family)
+            try:
+                table = mjpeg_samples(data)
+            except Exception:
+                table = None
+            usable = [(ts, off, sz) for ts, off, sz in table or ()
+                      if off + sz <= len(data)]
+            if usable:
                 try:
-                    if kind == "gif":
-                        real, acc = [], 0
-                        for delay, f in decode_gif_frames(data,
-                                                          max_frames=256):
-                            real.append((f, acc))
-                            acc += delay or frame_interval_ms
-                    elif kind == "webp" and b"ANMF" in data[:8192]:
-                        from .vp8l import decode_webp_frames
-                        real = decode_webp_frames(data, max_frames=256)
-                    elif kind == "png" and b"acTL" in data[:8192]:
-                        # APNG: frames carry their own timestamps
-                        real = decode_apng_frames(data, max_frames=256)
-                    if real is not None:
-                        # n_frames picks spread evenly over the clip
-                        real = [(real[j][1], real[j][0].tobytes())
-                                for j in _picks(len(real), n_frames)]
-                except (CodecError, CodecUnavailable):
+                    real = []
+                    for j in _picks(len(usable), n_frames):
+                        ts, off, sz = usable[j]
+                        px = decode_jpeg(data[off:off + sz])
+                        real.append((ts, px.tobytes()))
+                except Exception:
                     real = None
-                if kind == "mp4":
-                    # Motion-JPEG track: every sample is a whole baseline
-                    # JPEG — real frames at real timestamps, no external
-                    # codec (the true `ffmpeg -vf fps=` path for this
-                    # family)
-                    try:
-                        table = mjpeg_samples(data)
-                    except Exception:
-                        table = None
-                    usable = [(ts, off, sz) for ts, off, sz in table or ()
-                              if off + sz <= len(data)]
-                    if usable:
-                        try:
-                            real = []
-                            for j in _picks(len(usable), n_frames):
-                                ts, off, sz = usable[j]
-                                px = decode_jpeg(data[off:off + sz])
-                                real.append((ts, px.tobytes()))
-                        except Exception:
-                            real = None
-                if real is not None:
-                    for i, (ts, px) in enumerate(real):
-                        o_refs.append(ref)
-                        o_idx.append(i)
-                        o_ts.append(ts)
-                        o_payload.append(px)
-                        o_ok.append("ok")
-                    continue
-                try:
-                    duration_s = (mp4_metadata(data).get("duration_s")
-                                  or mkv_metadata(data).get("duration_s"))
-                except Exception:  # malformed container → stub timing
-                    duration_s = None
-                if duration_s:
-                    step_ms = max(1, int(duration_s * 1000 / n_frames))
-                    ok = "codec:unavailable"  # real timing, stub pixels
-                else:
-                    step_ms = frame_interval_ms
-                    ok = "codec:unavailable"
-                # ffmpeg exposes MP4 covr / ID3 APIC cover art as an
-                # attached_pic stream — when it decodes, frame 0 is that
-                # REAL thumbnail; motion frames keep the flagged stub
+        if real is not None:
+            return [(ref, i, ts, px, "ok") for i, (ts, px) in enumerate(real)]
+        try:
+            duration_s = (mp4_metadata(data).get("duration_s")
+                          or mkv_metadata(data).get("duration_s"))
+        except Exception:  # malformed container → stub timing
+            duration_s = None
+        # real timing when the container has a duration, stub pixels
+        # either way
+        step_ms = (max(1, int(duration_s * 1000 / n_frames)) if duration_s
+                   else frame_interval_ms)
+        # ffmpeg exposes MP4 covr / ID3 APIC cover art as an attached_pic
+        # stream — when it decodes, frame 0 is that REAL thumbnail;
+        # motion frames keep the flagged stub
+        cover_px = None
+        if kind in ("mp4", "mp3", "webm"):
+            try:
+                cover = embedded_cover(data)
+                if cover is not None:
+                    cdec = _DECODERS.get(_sniff(cover[0]) or "")
+                    if cdec is not None:
+                        cover_px = cdec(cover[0]).tobytes()
+            except Exception:   # malformed cover → stub frame 0
                 cover_px = None
-                if kind in ("mp4", "mp3", "webm"):
-                    try:
-                        cover = embedded_cover(data)
-                        if cover is not None:
-                            cdec = _DECODERS.get(_sniff(cover[0]) or "")
-                            if cdec is not None:
-                                cover_px = cdec(cover[0]).tobytes()
-                    except Exception:   # malformed cover → stub frame 0
-                        cover_px = None
-                for i in range(n_frames):
-                    o_refs.append(ref)
-                    o_idx.append(i)
-                    o_ts.append(i * step_ms)
-                    if i == 0 and cover_px is not None:
-                        o_payload.append(cover_px)
-                        o_ok.append("ok")
-                    else:
-                        o_payload.append(
-                            _fake_pixels(f"{ref}#{i}", data, 256))
-                        o_ok.append(ok)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_refs, pa.string()),
-                 pa.array(o_idx, pa.int32()),
-                 pa.array(o_ts, pa.int64()),
-                 pa.array(o_payload, pa.binary()),
-                 pa.array(o_ok, pa.string())],
-                names=["media_ref", "frame_index", "frame_ts_ms",
-                       "payload", "ok"])
+        frames = [(ref, i, i * step_ms, _fake_pixels(f"{ref}#{i}", data, 256),
+                   "codec:unavailable") for i in range(n_frames)]
+        if frames and cover_px is not None:
+            frames[0] = (ref, 0, 0, cover_px, "ok")
+        return frames
 
-    return _salted(df.select("media_ref", "payload"),
-                   num_partitions).mapInArrow(run, FRAME_SCHEMA)
+    return map_rows(_salted(df.select("media_ref", "payload"),
+                            num_partitions), FRAME_SCHEMA, lambda: row)

@@ -20,12 +20,43 @@ pairs for the unresolved fraction.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pipeline import _bvalues, narrow_columns
+from .pipeline import _bvalues, map_rows, narrow_columns
+
+
+def _unresolved_contexts(narrow: DataFrame, b_ctx) -> DataFrame:
+    """``narrow_columns`` rows → one (doc_id, context_url) row per remote
+    @context a document names that the broadcast store cannot satisfy
+    (none for a document without HTML, JSON-LD or unknown contexts)."""
+
+    def open_rows():
+        from ..functions.htmlmeta import parse_html
+        from ..functions.jsonld_lite import (
+            collect_context_urls,
+            context_resolvable,
+        )
+
+        (store,) = _bvalues(b_ctx)
+
+        def row(doc_id, status, url, html, *media):
+            if not html:
+                return ()
+            try:
+                metadata = parse_html(html, url or str(doc_id))
+            except Exception:  # noqa: BLE001 — per-doc isolation
+                return ()
+            if not metadata:
+                return ()
+            return [(doc_id, u)
+                    for u in collect_context_urls(metadata.get("jsonld"))
+                    if not context_resolvable(u, store)]
+
+        return row
+
+    return map_rows(narrow, "doc_id string, context_url string", open_rows)
+
 
 def context_fetch_list(df: DataFrame,
                        context_store: dict | None = None,
@@ -38,44 +69,7 @@ def context_fetch_list(df: DataFrame,
     narrow = narrow_columns(df)
     n = num_partitions or spark.sparkContext.defaultParallelism
     salted = narrow.repartition(n, F.xxhash64("doc_id"))
-
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        from ..functions.htmlmeta import parse_html
-        from ..functions.jsonld_lite import (
-            collect_context_urls,
-            context_resolvable,
-        )
-
-        (store,) = _bvalues(b_ctx)
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            urls = batch.column(2).to_pylist()
-            htmls = batch.column(3).to_pylist()
-            o_docs, o_urls = [], []
-            for i in range(len(doc_ids)):
-                html = htmls[i]
-                if not html:
-                    continue
-                try:
-                    metadata = parse_html(html, urls[i] or str(doc_ids[i]))
-                except Exception:  # noqa: BLE001 — per-doc isolation
-                    continue
-                if not metadata:
-                    continue
-                found = collect_context_urls(metadata.get("jsonld"))
-                for url in found:
-                    if not context_resolvable(url, store):
-                        o_docs.append(doc_ids[i])
-                        o_urls.append(url)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_docs, pa.string()),
-                 pa.array(o_urls, pa.string())],
-                names=["doc_id", "context_url"])
-
-    pairs = salted.mapInArrow(
-        run, schema="doc_id string, context_url string")
+    pairs = _unresolved_contexts(salted, b_ctx)
     return (pairs.groupBy("context_url")
             .agg(F.count("doc_id").alias("n_docs"),
                  F.min("doc_id").alias("sample_doc_id")))

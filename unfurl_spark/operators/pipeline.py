@@ -6,8 +6,8 @@ Replaces the reference's per-page async middleware chain
     read (doc_id, spans)
       → JVM flatten (nested spans never cross into Python or the shuffle)
       → salted repartition by xxhash64(doc_id)        # giant-doc skew defusal
-      → mapInArrow(fused tokenize+normalize+extract)   # columnar both ways,
-                                                       # no per-row Python
+      → map_rows(fused tokenize+normalize+extract)     # columnar both ways,
+                                                       # no per-row UDFs
       → spans + per-doc lineage columns
 
 Sub-request documents (oembed payloads, JSON-LD remote contexts, media
@@ -18,16 +18,19 @@ reference's two HTTP crossings, unfurl-html/src/index.ts:92-122 and
 joins (`extract_spans_twopass`, `extract_spans_media_join`) when at
 10^12 documents they cannot — outputs bit-identical either way.
 
-Every document-level pass of every regime is the same Arrow stage,
+Every Python stage of the engine — the document passes, the media
+join's header readers (`_media_texts`), the context pre-pass and the
+multimodal operators — is a row function run by one Arrow runner,
+`map_rows`.  Every document-level pass of every regime is the same one,
 `_map_kernel`: the broadcast path, and pass 1 and pass 2 of the two-pass
-plan differ only in what that one runner hands the kernel (a broadcast
-oembed store, a joined oembed payload, an href out-list), and it reads
-which from its input and output schemas.
+plan differ only in what it hands the kernel (a broadcast oembed store,
+a joined oembed payload, an href out-list), and it reads which from its
+input and output schemas.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,7 +133,7 @@ def session_configs(profile: str = "local", master: str | None = None,
             "spark.executor.cores": "16",
             # kernel stage is CPU-bound; default parallelism follows cores
             "spark.executor.memoryOverhead": "4g",
-            # pyspark workers (the mapInArrow kernels) live outside the
+            # pyspark workers (the map_rows kernels) live outside the
             # JVM heap: SCALE.md's ~5 GB/executor steady state
             "spark.executor.pyspark.memory": "6g",
             "spark.shuffle.compress": "true",
@@ -300,67 +303,81 @@ EXTRACTED_HREF = StructType(
     [*EXTRACTED.fields, StructField("oembed_href", StringType())])
 
 
+def map_rows(df: DataFrame, schema: StructType | str,
+             open_rows: Callable[[], Callable[..., Iterable[tuple]]]
+             ) -> DataFrame:
+    """The one Arrow stage every Python kernel of the engine runs in:
+    ``schema`` (a StructType or DDL string) is the stage's output format,
+    written once.
+
+    ``open_rows()`` runs once per task on the worker (broadcast loads,
+    lazy imports) and returns the row function, which maps one input
+    row's column values to that row's output tuples: one for a 1:1
+    stage, 0..N for a fan-out.  A batch's output tuples go to Arrow in
+    ONE ``pa.array(rows, struct)`` conversion against the Arrow form of
+    ``schema``, derived once at plan time.  Nothing but
+    ``df.mapInArrow`` is called on ``df``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    row_type = pa.struct(list(to_arrow_schema(schema)))
+
+    def run(batches: Iterator) -> Iterator:
+        rows_of = open_rows()
+        for batch in batches:
+            out: list = []
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
+                out += rows_of(*values)
+            yield pa.RecordBatch.from_struct_array(pa.array(out, row_type))
+
+    return df.mapInArrow(run, schema)
+
+
 def _map_kernel(narrow: DataFrame, side: SideTables,
                 schema: StructType = EXTRACTED) -> DataFrame:
-    """The fused kernel as one mapInArrow stage over ``narrow_columns``
-    rows (optionally followed by a joined oembed payload) — the single
-    place documents enter ``flat_document_spans``.
+    """The fused kernel over ``narrow_columns`` rows (optionally followed
+    by a joined oembed payload) — the single place documents enter
+    ``flat_document_spans``.
 
     What the kernel gets follows from the two schemas, not from a mode:
     the broadcast stores in ``side`` always (an absent table is a
     broadcast ``None``); the per-row (o_status, ctype, body) payload when
-    the input batch carries those columns after the six narrow ones
-    (pass 2 of the two-pass plan); ``href_out`` when ``schema`` has an
+    the input rows carry those columns after the six narrow ones (pass 2
+    of the two-pass plan); ``href_out`` when ``schema`` has an
     ``oembed_href`` column (pass 1)."""
     b_oembed, b_media, b_ctx = side.oembed, side.media, side.contexts
     want_href = "oembed_href" in schema.names
 
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
+    def open_rows():
         from ..functions.engine import flat_document_spans
 
         oe, med, ctx = _bvalues(b_oembed, b_media, b_ctx)
-        spans_t = pa.list_(pa.struct([
-            ("kind", pa.string()), ("text", pa.string()),
-            ("media_ref", pa.string()), ("offset", pa.int32())]))
-        for batch in batches:
-            cols = [c.to_pylist() for c in batch.columns]
-            doc_ids, statuses, urls, htmls, media_refs, media_kinds = cols[:6]
-            o_status, o_ctype, o_body = cols[6:9] or (None, None, None)
-            spans_col, n_bytes_col, ok_col, hrefs = [], [], [], []
-            for i in range(len(doc_ids)):
-                html = htmls[i] or ""
-                n_bytes_col.append(len(html))
-                payload = None
-                if o_body is not None and o_body[i] is not None:
-                    payload = (o_status[i], o_ctype[i], o_body[i])
-                href_out = [] if want_href else None
-                try:
-                    spans_out = flat_document_spans(
-                        urls[i] or str(doc_ids[i]), html,
-                        int(statuses[i]), list(media_refs[i] or ()),
-                        oembed_store=oe, context_store=ctx,
-                        media_store=med, oembed_payload=payload,
-                        href_out=href_out,
-                        media_kinds=list(media_kinds[i] or ()))
-                    ok_col.append("ok")
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    spans_out = []
-                    ok_col.append(type(e).__name__)
-                spans_col.append(spans_out)
-                hrefs.append(href_out[0] if href_out else None)
-            # one C++ conversion of the batch's span dicts — no per-span
-            # Python appends, no pandas/object-row intermediates
-            arrays = [pa.array(doc_ids, pa.string()),
-                      pa.array(spans_col, spans_t),
-                      pa.array(n_bytes_col, pa.int64()),
-                      pa.array(ok_col, pa.string())]
-            if want_href:
-                arrays.append(pa.array(hrefs, pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
 
-    return narrow.mapInArrow(run, schema=schema)
+        def row(doc_id, status, url, html, media_refs, media_kinds,
+                o_status=None, o_ctype=None, o_body=None):
+            html = html or ""
+            payload = None if o_body is None else (o_status, o_ctype, o_body)
+            href_out = [] if want_href else None
+            try:
+                spans = flat_document_spans(
+                    url or str(doc_id), html, int(status),
+                    list(media_refs or ()), oembed_store=oe,
+                    context_store=ctx, media_store=med,
+                    oembed_payload=payload, href_out=href_out,
+                    media_kinds=list(media_kinds or ()))
+                ok = "ok"
+            except Exception as e:  # noqa: BLE001 — per-doc isolation
+                spans, ok = [], type(e).__name__
+            out = (doc_id, spans, len(html), ok)
+            return [(*out, href_out[0] if href_out else None)
+                    if want_href else out]
+
+        return row
+
+    return map_rows(narrow, schema, open_rows)
 
 
 def extract_spans(
@@ -422,8 +439,6 @@ def extract_spans_twopass(
     Output is bit-identical to the broadcast path
     (tests/test_twopass_oembed.py).
     """
-    import pyarrow as pa  # noqa: F401 — ensure importable at plan time
-
     spark = df.sparkSession
     side = broadcast_side_tables(spark, None, media_df, context_store)
 
@@ -454,6 +469,36 @@ def extract_spans_twopass(
 
     second = _map_kernel(rejoin, side)
     return plain.unionByName(second)
+
+
+MEDIA_TEXT = ("doc_id string, media_ref string, media_text string, "
+              "pdf_text string, media_err string")
+
+
+def _media_texts(pairs: DataFrame) -> DataFrame:
+    """(doc_id, media_ref, media_kind, ctype, payload) → the media span
+    texts of each joined pair, as the broadcast path computes them."""
+
+    def open_rows():
+        from ..functions.engine import media_span_texts
+
+        def row(doc_id, ref, kind, ctype, payload):
+            text, body_text, err = "", ("" if kind == "pdf" else None), None
+            if payload is not None:
+                try:
+                    text, body_text = media_span_texts(ref, ctype, payload,
+                                                       kind)
+                except Exception as e:  # noqa: BLE001 — per-ref record
+                    # the broadcast path runs this scrape inside the
+                    # per-doc try, so a throwing payload fails the whole
+                    # doc — record the error so re-aggregation can
+                    # reproduce that (ok=<ExcName>, spans=[])
+                    err = type(e).__name__
+            return [(doc_id, ref, text, body_text, err)]
+
+        return row
+
+    return map_rows(pairs, MEDIA_TEXT, open_rows)
 
 
 def extract_spans_media_join(
@@ -519,62 +564,7 @@ def extract_spans_media_join(
              .select("doc_id", "media_ref", "media_kind", "ctype",
                      "payload"))
 
-    def run_media(batches: Iterator) -> Iterator:
-        import json as _json
-
-        import pyarrow as pa
-
-        from ..functions.engine import scrape_document
-        from ..functions.pdftext import pdf_text as _pdf_text
-
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            refs = batch.column(1).to_pylist()
-            mkinds = batch.column(2).to_pylist()
-            ctypes = batch.column(3).to_pylist()
-            payloads = batch.column(4).to_pylist()
-            texts = []
-            pdf_texts = []
-            errs = []
-            for ref, mkind, ctype, payload in zip(refs, mkinds, ctypes,
-                                                  payloads):
-                extracted = ""
-                body_text = "" if mkind == "pdf" else None
-                err = None
-                if payload is not None:
-                    try:
-                        snippet = scrape_document(
-                            ref, 200, {"content-type": ctype}, None,
-                            body_bytes=payload,
-                            plugins=("exif", "exiftool"))
-                        extracted = _json.dumps(
-                            snippet, default=str, sort_keys=True,
-                            ensure_ascii=False)
-                        if mkind == "pdf":
-                            body_text = _pdf_text(payload)
-                    except Exception as e:  # noqa: BLE001 — per-ref record
-                        # the broadcast path runs this scrape inside the
-                        # per-doc try, so a throwing payload fails the whole
-                        # doc — record the error so re-aggregation can
-                        # reproduce that (ok=<ExcName>, spans=[])
-                        extracted = ""
-                        err = type(e).__name__
-                texts.append(extracted)
-                pdf_texts.append(body_text)
-                errs.append(err)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(refs, pa.string()),
-                 pa.array(texts, pa.string()),
-                 pa.array(pdf_texts, pa.string()),
-                 pa.array(errs, pa.string())],
-                names=["doc_id", "media_ref", "media_text", "pdf_text",
-                       "media_err"])
-
-    media_text = pairs.mapInArrow(
-        run_media, schema="doc_id string, media_ref string, "
-                          "media_text string, pdf_text string, "
-                          "media_err string")
+    media_text = _media_texts(pairs)
 
     # ordered re-aggregation: explode the placeholder spans, overlay the
     # joined media text onto kind='media' rows, rebuild the array sorted

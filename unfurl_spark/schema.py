@@ -32,16 +32,5 @@ EXTRACTED = StructType([
     StructField("ok", StringType()),  # 'ok' | error class name
 ])
 
-# checkpoint/metrics table: one row per (partition, attempt)
-METRICS = StructType([
-    StructField("run_id", StringType()),
-    StructField("partition_id", IntegerType()),
-    StructField("attempt", IntegerType()),
-    StructField("n_docs", LongType()),
-    StructField("n_bytes", LongType()),
-    StructField("n_failures", LongType()),
-    StructField("wall_sec", StringType()),
-])
-
 OUTPUT_SPAN_KINDS = ("title", "description", "og_image", "jsonld",
                      "body_text", "media")

@@ -3,7 +3,8 @@
 The reference has no streaming semantics (SURVEY §2.5) — this wraps the
 same fused extract stage as an incremental job: new document files landing
 in a directory are picked up by the file source, run through
-``extract_spans`` (mapInPandas composes with streaming DataFrames), and
+``extract_spans`` (its one Arrow stage composes with streaming
+DataFrames), and
 appended to a parquet sink with Spark's own checkpointing providing
 exactly-once per-file processing and restart recovery — the streaming twin
 of the batch driver's bucket checkpoints (plans/driver.py).
