@@ -196,3 +196,61 @@ def test_map_rows_is_the_only_mapInArrow_call():
                       "return df.mapInArrow(run, schema)")]
     assert "df.mapInArrow(run, schema)" in inspect.getsource(
         pipeline.map_rows)
+
+
+TEXT_T = pa.struct([("media_ref", pa.string()), ("media_text", pa.string()),
+                    ("pdf_text", pa.string()), ("media_err", pa.string())])
+
+
+def _texts(*rows):
+    return [dict(zip((f.name for f in TEXT_T), r)) for r in rows]
+
+
+def test_kernel_fills_media_placeholders_from_joined_texts(spark):
+    """The media join's texts, joined after the narrow columns (and after
+    pass 2's oembed payload), fill the kernel's placeholders: media_text
+    into media spans, a non-NULL pdf_text into the pdf's body_text span;
+    the earliest failing ref fails the doc; a NULL ref never matches."""
+    sc = spark.sparkContext
+    side = pipeline.SideTables(sc.broadcast(None), sc.broadcast(None),
+                               sc.broadcast(None))
+    html = "<html><head><title>T</title></head><body></body></html>"
+    rows = [
+        ("d1", 200, "https://ex.com/1", html, ["a.png", "b.pdf", "c.pdf"],
+         ["media", "pdf", "pdf"],
+         _texts(("b.pdf", "B", "pdf body", None), ("a.png", "A", None, None),
+                ("c.pdf", "C", None, None), ("d.png", "D", None, "Boom"))),
+        ("d2", 200, None, None, ["x.png", "y.png"], ["media", "media"],
+         _texts(("y.png", "", None, "KeyError"),
+                ("x.png", "", None, "ValueError"))),
+        ("d3", 200, None, None, [None], ["media"],
+         _texts((None, "N", None, None))),
+        ("d4", 200, None, None, ["a.png"], ["media"], None),
+    ]
+    in_schema = pa.schema([*NARROW, ("media_texts", pa.list_(TEXT_T))])
+    [b] = pipeline._map_kernel(_Stage(), side)(
+        iter([_batch(in_schema, rows)]))
+    got = {r["doc_id"]: ([(s["kind"], s["text"], s["media_ref"])
+                          for s in r["spans"]], r["ok"])
+           for r in b.to_pylist()}
+    assert got == {
+        "d1": ([("title", "T", None), ("media", "A", "a.png"),
+                ("media", "B", "b.pdf"), ("body_text", "pdf body", "b.pdf"),
+                ("media", "C", "c.pdf"), ("body_text", "", "c.pdf")], "ok"),
+        "d2": ([], "ValueError"),
+        "d3": ([("media", "", None)], "ok"),
+        "d4": ([("media", "", "a.png")], "ok"),
+    }
+
+    # pass 2 of the fully joined plan: oembed payload, then the texts
+    rejoined = pa.schema([*REJOINED, ("media_texts", pa.list_(TEXT_T))])
+    row = (*REJOINED_ROWS[0], _texts(("a.png", "A", None, None),
+                                     ("b.pdf", "B", "P", None)))
+    [b] = pipeline._map_kernel(_Stage(), side)(
+        iter([_batch(rejoined, [row])]))
+    [r] = b.to_pylist()
+    assert r["ok"] == "ok"
+    assert [(s["kind"], s["text"]) for s in r["spans"]
+            if s["media_ref"] in ("a.png", "b.pdf")] == [
+        ("media", "A"), ("media", "B"), ("body_text", "P")]
+    assert "From oembed" in {s["text"] for s in r["spans"]}

@@ -131,3 +131,26 @@ def test_same_ref_as_media_and_pdf_no_fanout(spark):
     assert ra == rb
     offsets = [s[3] for s in rb["d1"]]
     assert len(offsets) == len(set(offsets))  # no duplicated span rows
+
+
+def test_repeated_doc_id_rows_keep_their_own_spans(spark):
+    """Two input rows sharing a doc_id: the media join gives each row its
+    own spans, as the broadcast path does — not both rows' spans."""
+    html = ("<html><head><title>T%d</title></head>"
+            "<body><p>hello world body</p></body></html>")
+    docs = _docs(spark, [
+        ("d1", [("html", html % 1, "https://ex.com/a", 0),
+                ("media", None, "https://ex.com/img.png", 1)]),
+        ("d1", [("html", html % 2, "https://ex.com/b", 0),
+                ("media", None, "https://ex.com/other.png", 1)]),
+    ])
+    media = spark.createDataFrame(
+        [("https://ex.com/img.png", "image/png", _PNG),
+         ("https://ex.com/other.png", "image/png", _PNG)],
+        "media_ref string, ctype string, payload binary")
+    a = extract_spans(docs, media_df=media, num_partitions=4)
+    b = extract_spans_media_join(docs, media, num_partitions=4)
+    ra = sorted([tuple(s) for s in r.spans] for r in a.collect())
+    rb = sorted([tuple(s) for s in r.spans] for r in b.collect())
+    assert len(rb) == 2
+    assert ra == rb

@@ -171,6 +171,32 @@ def test_malformed_and_oversize():
         rasterize_svg(b'<svg width="99999" height="2"><rect/></svg>')
 
 
+def test_small_shapes_on_a_large_canvas_stay_small():
+    """Coverage and compositing work over each shape's box, not the
+    canvas: eight 2x2 squares on the largest canvas allowed stay within a
+    few canvases of memory and paint exactly their pixels."""
+    import tracemalloc
+
+    squares = b"".join(b'<rect x="%d" y="%d" width="2" height="2" '
+                       b'fill="#ff000080"/>' % (256 * i, 200 * i + 1)
+                       for i in range(8))
+    svg = b'<svg width="2048" height="2048">' + squares + b"</svg>"
+    tracemalloc.start()
+    try:
+        with _time_limit(5.0):
+            px = rasterize_svg(svg)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 2**20
+    painted = np.argwhere(px[:, :, 3] > 0)
+    assert len(painted) == 8 * 4
+    assert {tuple(p) for p in painted} == {
+        (200 * i + 1 + dy, 256 * i + dx)
+        for i in range(8) for dy in (0, 1) for dx in (0, 1)}
+    assert (px[px[:, :, 3] > 0] == (255, 0, 0, 128)).all()
+
+
 def test_decode_media_rasterizes_simple_svg(spark):
     from pyspark.sql import Row
 

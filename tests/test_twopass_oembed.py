@@ -64,6 +64,39 @@ def test_twopass_plan_no_broadcast_of_oembed(spark, corpus):
     assert "oembed_href" in plan
 
 
+def test_media_join_plan_runs_kernel_once(spark, corpus):
+    """The media join's texts join the document rows before the kernel:
+    the executed plan runs one Arrow stage for the media texts plus the
+    document kernel once (three times in the two-pass oembed plan, whose
+    pass 1 feeds both branches), with no re-aggregation of the kernel's
+    output.  Counted in the final adaptive plan, where a subtree that
+    runs once and feeds several consumers shows once (ReusedExchange)."""
+    from unfurl_spark.operators.pipeline import extract_spans_media_join
+
+    docs = spark.read.parquet(corpus["documents_raw"])
+    oem = spark.read.parquet(corpus["oembed_docs"])
+    med = spark.read.parquet(corpus["media_payloads"])
+
+    def executed(df):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        return plan.split("== Initial Plan ==")[0]
+
+    media = executed(extract_spans_media_join(docs, med, oembed_df=oem,
+                                              num_partitions=8))
+    assert media.count("MapInArrow") == 2
+    assert "Generate posexplode" not in media
+    both = executed(extract_spans_media_join(docs, med, oembed_df=oem,
+                                             join_oembed=True,
+                                             num_partitions=8))
+    assert both.count("MapInArrow") == 4
+    assert "Generate posexplode" not in both
+    assert executed(extract_spans_twopass(
+        docs, oembed_df=oem, media_df=med,
+        num_partitions=8)).count("MapInArrow") == 3
+
+
 def test_media_join_equals_broadcast(spark, corpus):
     from unfurl_spark.operators.pipeline import extract_spans_media_join
 

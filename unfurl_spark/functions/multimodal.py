@@ -126,8 +126,7 @@ def decode_pixels(payload: bytes, container: str):
     attached picture and no MJPEG track (MP4/H.264,
     WebM/VP9, MP3/AAC streams, HEIC/AVIF) raise ``CodecUnavailable`` —
     the explicit boundary a real deployment closes by plugging ffmpeg
-    into ``_DECODERS`` (or ``vp8sys.enable_native_webp()`` for a faster
-    WebP path)."""
+    into ``_DECODERS``."""
     dec = _DECODERS.get(container)
     if dec is not None:
         return dec(payload)

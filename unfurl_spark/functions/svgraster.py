@@ -315,12 +315,30 @@ def _rounded_rect(x, y, w, h, rx, ry):
     return pts
 
 
-def _coverage(subpaths, w, h, evenodd: bool) -> np.ndarray:
-    """Float coverage in [0,1] per pixel: winding number at _SS×_SS
-    sample centers, vectorized one edge at a time."""
-    ys = (np.arange(h * _SS) + 0.5) / _SS
-    xs = (np.arange(w * _SS) + 0.5) / _SS
-    wn = np.zeros((h * _SS, w * _SS), np.int32)
+def _bbox(subpaths, w, h) -> tuple[int, int, int, int]:
+    """(y0, y1, x0, x1): the pixels of the ``w``×``h`` canvas that the
+    closed ``subpaths`` can cover.  Each row crosses a closed subpath up
+    as often as down, so every sample outside its bounding box winds 0.
+    That needs every crossing to land within a sample spacing of its
+    edge: a non-finite vertex drops edges, and past 2^40 the rounding of
+    a crossing can exceed the spacing, so such shapes get the whole
+    canvas."""
+    p = np.concatenate([np.asarray(pts, np.float64) for pts in subpaths])
+    if not (np.abs(p) < 2.0 ** 40).all():
+        return 0, h, 0, w
+    lo, hi = np.floor(p.min(axis=0)), np.ceil(p.max(axis=0))
+    x0, x1 = (int(min(max(v, 0), w)) for v in (lo[0], hi[0]))
+    y0, y1 = (int(min(max(v, 0), h)) for v in (lo[1], hi[1]))
+    return y0, y1, x0, x1
+
+
+def _coverage(subpaths, box, evenodd: bool) -> np.ndarray:
+    """Float coverage in [0,1] per pixel of ``box`` (``_bbox``): winding
+    number at _SS×_SS sample centers, vectorized one edge at a time."""
+    top, bottom, left, right = box
+    ys = (np.arange(top * _SS, bottom * _SS) + 0.5) / _SS
+    xs = (np.arange(left * _SS, right * _SS) + 0.5) / _SS
+    wn = np.zeros((len(ys), len(xs)), np.int32)
     for pts in subpaths:
         p = np.asarray(pts + [pts[0]], np.float64)
         x1, y1 = p[:-1, 0], p[:-1, 1]
@@ -339,14 +357,12 @@ def _coverage(subpaths, w, h, evenodd: bool) -> np.ndarray:
             hit = xs[None, :] < x_at[:, None]
             wn[rows] += np.where(hit, 1 if up else -1, 0)
     inside = (wn & 1).astype(bool) if evenodd else wn != 0
-    cov = inside.reshape(h, _SS, w, _SS).mean(axis=(1, 3))
-    return cov
+    h, w = wn.shape[0] // _SS, wn.shape[1] // _SS
+    return inside.reshape(h, _SS, w, _SS).mean(axis=(1, 3))
 
 
 def _composite(canvas: np.ndarray, cov: np.ndarray, rgba) -> None:
     r, g, b, a = rgba
-    if a == 0:
-        return
     a_s = cov * (a / 255.0)
     a_d = canvas[:, :, 3].astype(np.float64) / 255.0
     a_out = a_s + a_d * (1 - a_s)
@@ -390,6 +406,9 @@ def rasterize_svg(data: bytes, max_dim: int = 2048) -> np.ndarray:
         base = (s, 0.0, 0.0, s, tx, ty)
 
     canvas = np.zeros((h, w, 4), np.uint8)
+    # the box of the last composite: the only pixels that can be fully
+    # transparent with a colour (alpha rounded to 0)
+    last = (0, 0, 0, 0)
 
     def style_of(el, inherited):
         # presentation attributes first, then the inline style overlays
@@ -441,6 +460,7 @@ def rasterize_svg(data: bytes, max_dim: int = 2048) -> np.ndarray:
         return None
 
     def walk(el, m, inherited):
+        nonlocal last
         tag = _strip_ns(el.tag)
         if tag in _UNSUPPORTED_TAGS:
             raise CodecUnavailable(f"svg: <{tag}> unsupported")
@@ -470,12 +490,19 @@ def rasterize_svg(data: bytes, max_dim: int = 2048) -> np.ndarray:
         opacity = float(props.get("opacity", "1")) \
             * float(props.get("fill-opacity", "1"))
         rgba = _parse_color(props.get("fill", "black"), opacity)
-        if rgba is None:
+        if rgba is None or rgba[3] == 0:
             return
         subs = [_apply(m2, p) for p in polys]
-        cov = _coverage(subs, w, h,
+        box = _bbox(subs, w, h)
+        cov = _coverage(subs, box,
                         props.get("fill-rule", "nonzero") == "evenodd")
-        _composite(canvas, cov, rgba)
+        # a zero-coverage pixel keeps its colour unless it is fully
+        # transparent, which turns it black; only the last box holds any
+        y0, y1, x0, x1 = last
+        prev = canvas[y0:y1, x0:x1]
+        prev[prev[:, :, 3] == 0, :3] = 0
+        y0, y1, x0, x1 = last = box
+        _composite(canvas[y0:y1, x0:x1], cov, rgba)
 
     walk(root, base, {})
     return canvas

@@ -1,14 +1,9 @@
 """Optional ctypes binding to a system libwebp shared library.
 
-Two roles, both optional — the engine never requires the library:
-
-* **Test golden**: tests/test_vp8.py encodes real VP8 *lossy* streams
-  with ``webp_encode_rgba`` and requires the from-scratch decoder
-  (functions/vp8.py) to reproduce libwebp's own YUV output bit-exactly.
-* **Deployment fast path**: a cluster image that ships libwebp can call
-  ``enable_native_webp()`` to swap the native decoder into the
-  multimodal ``_DECODERS`` table; without it the pure-Python decoder
-  runs (correct, slower).
+The test golden — the engine never requires the library:
+tests/test_vp8.py encodes real VP8 *lossy* streams with
+``webp_encode_rgba`` and requires the from-scratch decoder
+(functions/vp8.py) to reproduce libwebp's own YUV output bit-exactly.
 
 Everything is gated behind ``available()`` — no import-time failure
 when the library is absent.
@@ -135,17 +130,3 @@ def webp_encode_rgba(img: np.ndarray, quality: float = 75.0) -> bytes:
     finally:
         lib.WebPFree(out)
     return data
-
-
-def enable_native_webp() -> bool:
-    """Swap libwebp in as the multimodal WebP decoder (deployment fast
-    path).  Returns False when the library is absent."""
-    if not available():
-        return False
-    from . import multimodal
-
-    def _decode(payload: bytes) -> np.ndarray:
-        return webp_decode_rgba(payload)
-
-    multimodal._DECODERS["webp"] = _decode
-    return True

@@ -22,10 +22,13 @@ Every Python stage of the engine — the document passes, the media
 join's header readers (`_media_texts`), the context pre-pass and the
 multimodal operators — is a row function run by one Arrow runner,
 `map_rows`.  Every document-level pass of every regime is the same one,
-`_map_kernel`: the broadcast path, and pass 1 and pass 2 of the two-pass
-plan differ only in what it hands the kernel (a broadcast oembed store,
-a joined oembed payload, an href out-list), and it reads which from its
-input and output schemas.
+`_map_kernel`: the broadcast path, the media join and pass 1 and pass 2
+of the two-pass plan differ only in what it hands the kernel (a
+broadcast store, a joined oembed payload, the doc's joined media texts,
+an href out-list), and it reads which from its input and output
+schemas.  Kernel passes per document: one for broadcast and for the
+media join; with oembed joined, pass 1 twice (it feeds both branches of
+the plan and runs for each) plus pass 2 for a doc with an oembed href.
 """
 
 from __future__ import annotations
@@ -336,18 +339,41 @@ def map_rows(df: DataFrame, schema: StructType | str,
     return df.mapInArrow(run, schema)
 
 
+def _fill_media(spans: list[dict], texts: list[dict]) -> str | None:
+    """Fill the media placeholders of ``spans`` in place from the doc's
+    joined ``MEDIA_TEXT`` rows: ``media_text`` into its ``media`` spans,
+    ``pdf_text`` (when not NULL) into the pdf's ``body_text`` span.  →
+    the error of the earliest span whose ref failed, else None: the
+    broadcast path scrapes refs in span order inside the per-doc try, so
+    the first throwing ref is the doc's recorded failure.  A NULL ref
+    never matches, as in the join."""
+    by_ref = {t["media_ref"]: t for t in texts if t["media_ref"] is not None}
+    for s in spans:
+        t = (by_ref.get(s["media_ref"])
+             if s["kind"] in ("media", "body_text") else None)
+        if t is None:
+            continue
+        if t["media_err"] is not None:
+            return t["media_err"]
+        text = t["media_text"] if s["kind"] == "media" else t["pdf_text"]
+        if text is not None:
+            s["text"] = text
+    return None
+
+
 def _map_kernel(narrow: DataFrame, side: SideTables,
                 schema: StructType = EXTRACTED) -> DataFrame:
-    """The fused kernel over ``narrow_columns`` rows (optionally followed
-    by a joined oembed payload) — the single place documents enter
-    ``flat_document_spans``.
+    """The fused kernel over ``narrow_columns`` rows — the single place
+    documents enter ``flat_document_spans``.
 
     What the kernel gets follows from the two schemas, not from a mode:
     the broadcast stores in ``side`` always (an absent table is a
-    broadcast ``None``); the per-row (o_status, ctype, body) payload when
-    the input rows carry those columns after the six narrow ones (pass 2
-    of the two-pass plan); ``href_out`` when ``schema`` has an
-    ``oembed_href`` column (pass 1)."""
+    broadcast ``None``); ``href_out`` when ``schema`` has an
+    ``oembed_href`` column (pass 1 of the two-pass plan).  After the six
+    narrow columns, the row's arity says what was joined onto it: the
+    per-row (o_status, ctype, body) oembed payload (pass 2), then the
+    doc's list of ``MEDIA_TEXT`` rows (media join), which fill the
+    kernel's media placeholders (``_fill_media``)."""
     b_oembed, b_media, b_ctx = side.oembed, side.media, side.contexts
     want_href = "oembed_href" in schema.names
 
@@ -357,9 +383,11 @@ def _map_kernel(narrow: DataFrame, side: SideTables,
         oe, med, ctx = _bvalues(b_oembed, b_media, b_ctx)
 
         def row(doc_id, status, url, html, media_refs, media_kinds,
-                o_status=None, o_ctype=None, o_body=None):
+                *joined):
             html = html or ""
-            payload = None if o_body is None else (o_status, o_ctype, o_body)
+            o_body = joined[2] if len(joined) >= 3 else None
+            payload = None if o_body is None else joined[:3]
+            texts = joined[-1] if len(joined) in (1, 4) else None
             href_out = [] if want_href else None
             try:
                 spans = flat_document_spans(
@@ -371,6 +399,9 @@ def _map_kernel(narrow: DataFrame, side: SideTables,
                 ok = "ok"
             except Exception as e:  # noqa: BLE001 — per-doc isolation
                 spans, ok = [], type(e).__name__
+            err = _fill_media(spans, texts) if texts else None
+            if err is not None:
+                spans, ok = [], err
             out = (doc_id, spans, len(html), ok)
             return [(*out, href_out[0] if href_out else None)
                     if want_href else out]
@@ -378,6 +409,14 @@ def _map_kernel(narrow: DataFrame, side: SideTables,
         return row
 
     return map_rows(narrow, schema, open_rows)
+
+
+def _salted(narrow: DataFrame, num_partitions: int | None) -> DataFrame:
+    """Uniform redistribution by doc hash: a run of giant documents in
+    one input file cannot pin a single Python-stage task (AQE cannot
+    split a skewed UDF stage input on its own — SURVEY.md §4)."""
+    n = num_partitions or narrow.sparkSession.sparkContext.defaultParallelism
+    return narrow.repartition(n, F.xxhash64("doc_id"))
 
 
 def extract_spans(
@@ -398,25 +437,47 @@ def extract_spans(
     prebuilt ``side`` (broadcast_side_tables) to amortize the driver-side
     collect across calls.
     """
-    spark = df.sparkSession
-
     if side is None:
-        side = broadcast_side_tables(spark, oembed_df, media_df,
+        side = broadcast_side_tables(df.sparkSession, oembed_df, media_df,
                                      context_store)
     narrow = narrow_columns(df, assume_sorted=assume_sorted)
-
     if salt:
-        # uniform redistribution by doc hash: a run of giant documents in
-        # one input file cannot pin a single Python-stage task (AQE cannot
-        # split a skewed UDF stage input on its own — SURVEY.md §4)
-        n = num_partitions or spark.sparkContext.defaultParallelism
-        narrow = narrow.repartition(n, F.xxhash64("doc_id"))
-
+        narrow = _salted(narrow, num_partitions)
     return _map_kernel(narrow, side)
 
 
 # --------------------------------------------------------------------------
 # two-pass oembed resolution — the 10^12-doc regime
+
+def _twopass(narrow: DataFrame, oembed_df: DataFrame, side: SideTables,
+             num_partitions: int | None) -> DataFrame:
+    """The two-pass plan over ``narrow`` rows, which may carry the media
+    join's texts column after the six narrow ones."""
+    pass1 = _map_kernel(_salted(narrow, num_partitions), side,
+                        EXTRACTED_HREF)
+
+    plain = (pass1.filter(F.col("oembed_href").isNull())
+             .drop("oembed_href"))
+
+    # docs that DID discover an oembed link: re-derive their flat inputs
+    # and equi-join the oembed corpus on href — both sides shuffle on the
+    # join key; at scale this is the standard sort-merge/AQE path and the
+    # oembed table never touches the driver
+    need = pass1.filter(F.col("oembed_href").isNotNull()) \
+                .select("doc_id", "oembed_href")
+    oembed_side = dedup_on_key(
+        oembed_df.withColumnRenamed("ref", "oembed_href")
+                 .withColumnRenamed("status", "o_status")
+                 .select("oembed_href", "o_status", "ctype", "body"),
+        "oembed_href")
+    rejoin = (narrow.join(need, "doc_id")
+              .join(oembed_side, "oembed_href", "left")
+              .select(*narrow.columns[:6], "o_status", "ctype", "body",
+                      *narrow.columns[6:]))
+
+    second = _map_kernel(rejoin, side)
+    return plain.unionByName(second)
+
 
 def extract_spans_twopass(
     df: DataFrame,
@@ -439,36 +500,10 @@ def extract_spans_twopass(
     Output is bit-identical to the broadcast path
     (tests/test_twopass_oembed.py).
     """
-    spark = df.sparkSession
-    side = broadcast_side_tables(spark, None, media_df, context_store)
-
-    narrow = narrow_columns(df, assume_sorted=assume_sorted)
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    salted = narrow.repartition(n, F.xxhash64("doc_id"))
-
-    pass1 = _map_kernel(salted, side, EXTRACTED_HREF)
-
-    plain = (pass1.filter(F.col("oembed_href").isNull())
-             .drop("oembed_href"))
-
-    # docs that DID discover an oembed link: re-derive their flat inputs
-    # and equi-join the oembed corpus on href — both sides shuffle on the
-    # join key; at scale this is the standard sort-merge/AQE path and the
-    # oembed table never touches the driver
-    need = pass1.filter(F.col("oembed_href").isNotNull()) \
-                .select("doc_id", "oembed_href")
-    oembed_side = dedup_on_key(
-        oembed_df.withColumnRenamed("ref", "oembed_href")
-                 .withColumnRenamed("status", "o_status")
-                 .select("oembed_href", "o_status", "ctype", "body"),
-        "oembed_href")
-    rejoin = (narrow.join(need, "doc_id")
-              .join(oembed_side, "oembed_href", "left")
-              .select("doc_id", "status", "url", "html", "media_refs",
-                      "media_kinds", "o_status", "ctype", "body"))
-
-    second = _map_kernel(rejoin, side)
-    return plain.unionByName(second)
+    side = broadcast_side_tables(df.sparkSession, None, media_df,
+                                 context_store)
+    return _twopass(narrow_columns(df, assume_sorted=assume_sorted),
+                    oembed_df, side, num_partitions)
 
 
 MEDIA_TEXT = ("doc_id string, media_ref string, media_text string, "
@@ -491,8 +526,8 @@ def _media_texts(pairs: DataFrame) -> DataFrame:
                 except Exception as e:  # noqa: BLE001 — per-ref record
                     # the broadcast path runs this scrape inside the
                     # per-doc try, so a throwing payload fails the whole
-                    # doc — record the error so re-aggregation can
-                    # reproduce that (ok=<ExcName>, spans=[])
+                    # doc — record the error so the kernel can reproduce
+                    # that (ok=<ExcName>, spans=[])
                     err = type(e).__name__
             return [(doc_id, ref, text, body_text, err)]
 
@@ -515,28 +550,16 @@ def extract_spans_media_join(
     With ``join_oembed=True`` the oembed side goes through the two-pass
     shuffle join as well — zero broadcast side tables anywhere.
 
-    Plan: the fused kernel runs with NO media store, emitting media
-    spans as empty-text placeholders in their correct positions.  The
-    (doc_id, media_ref) pairs explode out, equi-join the media table on
-    media_ref (both sides shuffle on the key — payload bytes never touch
-    the driver), a second Arrow stage runs the header readers per
-    payload, and the extracted JSON re-aggregates into the placeholder
-    spans by (doc_id, media_ref) — the zip/explode/group/ordered-reagg
-    generic form (SURVEY §2.3).  Output is bit-identical to the
-    broadcast path (tests/test_twopass_oembed.py).
+    Plan: the (doc_id, media_ref) pairs explode out of the narrow rows
+    and equi-join the media table on media_ref (both sides shuffle on
+    the key — payload bytes never touch the driver); a first Arrow stage
+    runs the header readers per payload.  Each doc's media texts group
+    into one list that left-joins its narrow row by doc_id, and the one
+    kernel pass (or the two-pass plan) fills its media placeholders from
+    that list — the kernel runs once per document, as in the broadcast
+    path.  Output is bit-identical to the broadcast path
+    (tests/test_twopass_oembed.py).
     """
-    spark = df.sparkSession
-    if join_oembed and oembed_df is not None:
-        base = extract_spans_twopass(df, oembed_df,
-                                     context_store=context_store,
-                                     num_partitions=num_partitions,
-                                     assume_sorted=assume_sorted)
-    else:
-        base = extract_spans(df, oembed_df=oembed_df,
-                             context_store=context_store,
-                             num_partitions=num_partitions,
-                             assume_sorted=assume_sorted)
-
     narrow = narrow_columns(df, assume_sorted=assume_sorted)
     # distinct BEFORE the join: a doc repeating a media_ref must not fan the
     # payload join out into a cross product (the broadcast dict naturally
@@ -550,11 +573,10 @@ def extract_spans_media_join(
                      F.col("mk.media_refs").alias("media_ref"),
                      F.col("mk.media_kinds").alias("media_kind"))
              # ONE row per (doc, ref) even when the doc uses the ref under
-             # both 'media' and 'pdf' kinds — two rows would double every
-             # overlay match below.  'pdf' wins (max: 'pdf' > 'media') so
-             # pdf_text is computed whenever any use needs it; the overlay
-             # reads media_text/pdf_text by span kind, so a merged row
-             # serves both.
+             # both 'media' and 'pdf' kinds.  'pdf' wins (max: 'pdf' >
+             # 'media') so pdf_text is computed whenever any use needs it;
+             # the kernel reads media_text/pdf_text by span kind, so a
+             # merged row serves both.
              .groupBy("doc_id", "media_ref")
              .agg(F.max("media_kind").alias("media_kind"))
              .join(dedup_on_key(
@@ -564,63 +586,17 @@ def extract_spans_media_join(
              .select("doc_id", "media_ref", "media_kind", "ctype",
                      "payload"))
 
-    media_text = _media_texts(pairs)
+    texts = (_media_texts(pairs)
+             .groupBy("doc_id")
+             .agg(F.collect_list(F.struct(
+                 "media_ref", "media_text", "pdf_text", "media_err"))
+                 .alias("media_texts")))
+    narrow = narrow.join(texts, "doc_id", "left")
 
-    # ordered re-aggregation: explode the placeholder spans, overlay the
-    # joined media text onto kind='media' rows, rebuild the array sorted
-    # by the original offset (the generic zip/explode/group form)
-    exploded = base.select(
-        "doc_id", "n_input_bytes", "ok",
-        F.posexplode_outer("spans").alias("pos", "s"))
-    merged = (exploded
-              .join(media_text,
-                    (exploded["doc_id"] == media_text["doc_id"])
-                    & (exploded["s"]["media_ref"]
-                       == media_text["media_ref"])
-                    & (exploded["s"]["kind"].isin("media", "body_text")),
-                    "left")
-              .select(
-                  exploded["doc_id"],
-                  "n_input_bytes", "ok", "pos",
-                  media_text["media_err"].alias("media_err"),
-                  F.struct(
-                      exploded["s"]["kind"].alias("kind"),
-                      F.when(exploded["s"]["kind"] == "media",
-                             F.coalesce(media_text["media_text"],
-                                        exploded["s"]["text"]))
-                      # pdf body_text placeholders carry the pdf's ref;
-                      # html body_text spans have a NULL ref and never
-                      # match the join, so coalesce keeps their text
-                      .when(exploded["s"]["kind"] == "body_text",
-                            F.coalesce(media_text["pdf_text"],
-                                       exploded["s"]["text"]))
-                      .otherwise(exploded["s"]["text"]).alias("text"),
-                      exploded["s"]["media_ref"].alias("media_ref"),
-                      exploded["s"]["offset"].alias("offset"),
-                  ).alias("s")))
-    # first_err: the error of the EARLIEST failing media span — the
-    # broadcast path processes refs in span order inside the per-doc try,
-    # so the first throwing ref is the doc's recorded failure
-    rebuilt = (merged
-               .filter(F.col("pos").isNotNull())
-               .groupBy("doc_id")
-               .agg(F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "s"))),
-                        lambda x: x["s"]).alias("spans"),
-                    F.min(F.when(F.col("media_err").isNotNull(),
-                                 F.struct("pos", "media_err")))
-                    .alias("_err")))
-    # docs whose span array was empty never explode — restore them with
-    # an empty array via a left join on the pass-1 doc list
-    empty = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,"
-        "offset:int>>")
-    return (base.select("doc_id", "n_input_bytes", "ok")
-            .join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.when(F.col("_err").isNotNull(), empty)
-                    .otherwise(F.coalesce(F.col("spans"), empty))
-                    .alias("spans"),
-                    "n_input_bytes",
-                    F.coalesce(F.col("_err")["media_err"], F.col("ok"))
-                    .alias("ok")))
+    if join_oembed and oembed_df is not None:
+        side = broadcast_side_tables(df.sparkSession, None, None,
+                                     context_store)
+        return _twopass(narrow, oembed_df, side, num_partitions)
+    side = broadcast_side_tables(df.sparkSession, oembed_df, None,
+                                 context_store)
+    return _map_kernel(_salted(narrow, num_partitions), side)

@@ -24,18 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 _ICEBERG_PROBE: dict[str, bool] = {}
 
 
-def iceberg_available(spark: SparkSession | str) -> bool:
-    """True when an Iceberg catalog is importable in this session's JVM.
-
-    Accepts the SparkSession itself (preferred); a bare applicationId string
-    is tolerated for backward compatibility and resolved via the active
-    session without caching a possibly-wrong answer under that key.
-    """
-    if isinstance(spark, str):
-        active = SparkSession.getActiveSession()
-        if active is None:
-            return False
-        spark = active
+def iceberg_available(spark: SparkSession) -> bool:
+    """True when an Iceberg catalog is importable in this session's JVM."""
     key = spark.sparkContext.applicationId
     if key not in _ICEBERG_PROBE:
         try:
