@@ -52,6 +52,36 @@ def test_tied_and_null_offsets_match_kernel_order(spark):
         [ (s["kind"], s["text"]) for s in kernel ]
 
 
+def test_empty_spans_array_is_an_empty_ok_document(spark):
+    """A document with no spans has no url: narrow_columns gives it a
+    NULL url instead of failing the job (element_at on an empty array
+    raises under ANSI mode), and every regime returns it as an empty,
+    ok document."""
+    from unfurl_spark.operators.pipeline import (
+        extract_spans_media_join,
+        extract_spans_twopass,
+    )
+
+    df = spark.createDataFrame(
+        [("e1", [])], "doc_id string, spans array<struct<kind:string,"
+        "text:string,media_ref:string,offset:int>>")
+    oem = spark.createDataFrame(
+        [], "ref string, status int, ctype string, body string")
+    med = spark.createDataFrame(
+        [], "media_ref string, ctype string, payload binary")
+    want = [("e1", [], 0, "ok")]
+    for out in (extract_spans(df, oembed_df=oem, media_df=med,
+                              num_partitions=2),
+                extract_spans_twopass(df, oem, media_df=med,
+                                      num_partitions=2),
+                extract_spans_media_join(df, med, oembed_df=oem,
+                                         num_partitions=2),
+                extract_spans_media_join(df, med, oembed_df=oem,
+                                         join_oembed=True,
+                                         num_partitions=2)):
+        assert [tuple(r) for r in out.collect()] == want
+
+
 def test_oracle_check_canon_is_total():
     """canon() must order rows with None/mixed cells and inf floats
     instead of raising — a nullable output column used to abort the

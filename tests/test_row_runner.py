@@ -50,11 +50,11 @@ NARROW_ROWS = [
     ("d4", 200, "https://ex.com/4", "<html><title>x", ["gone.png"],
      ["media"]),
 ]
-REJOINED = pa.schema([*NARROW, ("o_status", pa.int32()),
-                      ("ctype", pa.string()), ("body", pa.string())])
-REJOINED_ROWS = [(*NARROW_ROWS[0], 200, "application/json+oembed",
-                  '{"title": "From oembed"}'),
-                 (*NARROW_ROWS[2], None, None, None)]
+OEMBED_JOINED = pa.schema([*NARROW, ("o_status", pa.int32()),
+                           ("ctype", pa.string()), ("body", pa.string())])
+OEMBED_JOINED_ROWS = [(*NARROW_ROWS[0], 200, "application/json+oembed",
+                       '{"title": "From oembed"}'),
+                      (*NARROW_ROWS[2], None, None, None)]
 PAIRS = pa.schema([("doc_id", pa.string()), ("media_ref", pa.string()),
                    ("media_kind", pa.string()), ("ctype", pa.string()),
                    ("payload", pa.binary())])
@@ -96,11 +96,10 @@ def _side(spark):
 STAGES = {
     "extract": (lambda df, side: pipeline._map_kernel(df, side), EXTRACTED,
                 NARROW, NARROW_ROWS, 4),
-    "extract_pass1": (lambda df, side: pipeline._map_kernel(
-        df, side, pipeline.EXTRACTED_HREF), pipeline.EXTRACTED_HREF,
-        NARROW, NARROW_ROWS, 4),
-    "extract_pass2": (lambda df, side: pipeline._map_kernel(df, side),
-                      EXTRACTED, REJOINED, REJOINED_ROWS, 2),
+    "oembed_hrefs": (lambda df, side: pipeline._oembed_hrefs(df),
+                     pipeline.NARROW_HREF, NARROW, NARROW_ROWS, 4),
+    "extract_oembed": (lambda df, side: pipeline._map_kernel(df, side),
+                       EXTRACTED, OEMBED_JOINED, OEMBED_JOINED_ROWS, 2),
     "media_texts": (lambda df, side: pipeline._media_texts(df),
                     pipeline.MEDIA_TEXT, PAIRS, PAIR_ROWS, 4),
     "context_prepass": (lambda df, side: context_prepass._unresolved_contexts(
@@ -167,6 +166,20 @@ def test_rows_that_fan_out_to_nothing(spark):
         multimodal.FRAME_SCHEMA))
 
 
+def test_href_pass_passes_rows_through(spark):
+    """The oembed join's href pass returns every row as it came, plus the
+    oembed href of a status-200 document with HTML (NULL otherwise), one
+    row out per row in, a repeated doc_id included."""
+    kernel = pipeline._oembed_hrefs(_Stage())
+    rows = [*NARROW_ROWS, NARROW_ROWS[0],
+            ("d5", 200, None, _page(_KNOWN_CTX), [], [])]
+    [b] = kernel(iter([_batch(NARROW, rows)]))
+    out = b.to_pylist()
+    assert [tuple(r.values())[:6] for r in out] == rows
+    assert [r["oembed_href"] for r in out] == [
+        _OEMBED, None, None, None, _OEMBED, _OEMBED]
+
+
 def test_map_rows_opens_once_per_task_and_fans_out(spark):
     opened = []
 
@@ -208,7 +221,7 @@ def _texts(*rows):
 
 def test_kernel_fills_media_placeholders_from_joined_texts(spark):
     """The media join's texts, joined after the narrow columns (and after
-    pass 2's oembed payload), fill the kernel's placeholders: media_text
+    the oembed join's payload), fill the kernel's placeholders: media_text
     into media spans, a non-NULL pdf_text into the pdf's body_text span;
     the earliest failing ref fails the doc; a NULL ref never matches."""
     sc = spark.sparkContext
@@ -242,12 +255,12 @@ def test_kernel_fills_media_placeholders_from_joined_texts(spark):
         "d4": ([("media", "", "a.png")], "ok"),
     }
 
-    # pass 2 of the fully joined plan: oembed payload, then the texts
-    rejoined = pa.schema([*REJOINED, ("media_texts", pa.list_(TEXT_T))])
-    row = (*REJOINED_ROWS[0], _texts(("a.png", "A", None, None),
+    # the fully joined plan: oembed payload, then the texts
+    joined = pa.schema([*OEMBED_JOINED, ("media_texts", pa.list_(TEXT_T))])
+    row = (*OEMBED_JOINED_ROWS[0], _texts(("a.png", "A", None, None),
                                      ("b.pdf", "B", "P", None)))
     [b] = pipeline._map_kernel(_Stage(), side)(
-        iter([_batch(rejoined, [row])]))
+        iter([_batch(joined, [row])]))
     [r] = b.to_pylist()
     assert r["ok"] == "ok"
     assert [(s["kind"], s["text"]) for s in r["spans"]

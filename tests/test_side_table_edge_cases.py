@@ -154,3 +154,30 @@ def test_repeated_doc_id_rows_keep_their_own_spans(spark):
     rb = sorted([tuple(s) for s in r.spans] for r in b.collect())
     assert len(rb) == 2
     assert ra == rb
+
+
+def test_repeated_doc_id_rows_each_join_their_own_oembed(spark):
+    """Two input rows sharing a doc_id, each naming its own oembed href:
+    the oembed join keeps one output row per input row, each with its
+    own oembed title, as the broadcast path does."""
+    html = ('<html><head><title>T</title>'
+            '<link rel="alternate" type="application/json+oembed" '
+            'href="https://oe.example/%s">'
+            '</head><body><p>content here</p></body></html>')
+    docs = _docs(spark, [
+        ("d1", [("html", html % "x", "https://ex.com/a", 0)]),
+        ("d1", [("html", html % "y", "https://ex.com/b", 0)]),
+    ])
+    oem = spark.createDataFrame(
+        [("https://oe.example/x", 200, "application/json",
+          '{"title": "X"}'),
+         ("https://oe.example/y", 200, "application/json",
+          '{"title": "Y"}')],
+        "ref string, status int, ctype string, body string")
+    a = extract_spans(docs, oembed_df=oem, num_partitions=4)
+    b = extract_spans_twopass(docs, oembed_df=oem, num_partitions=4)
+    ra = sorted([tuple(s) for s in r.spans] for r in a.collect())
+    rb = sorted([tuple(s) for s in r.spans] for r in b.collect())
+    assert len(rb) == 2
+    assert ra == rb
+    assert {s[1] for r in rb for s in r if s[0] == "title"} == {"X", "Y"}

@@ -54,12 +54,12 @@ def test_twopass_exercises_both_branches(spark, corpus):
 def test_twopass_plan_no_broadcast_of_oembed(spark, corpus):
     """The oembed table must enter as a JOIN, not a driver collect: the
     plan shows a join on oembed_href and the only Python stages are the
-    two Arrow kernels."""
+    href pass and the document kernel."""
     docs = spark.read.parquet(corpus["documents_raw"])
     oem = spark.read.parquet(corpus["oembed_docs"])
     out = extract_spans_twopass(docs, oembed_df=oem, num_partitions=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 3  # pass1 feeds both branches
+    assert plan.count("MapInArrow") == 2  # href pass, then the kernel
     assert "BatchEvalPython" not in plan
     assert "oembed_href" in plan
 
@@ -67,9 +67,8 @@ def test_twopass_plan_no_broadcast_of_oembed(spark, corpus):
 def test_media_join_plan_runs_kernel_once(spark, corpus):
     """The media join's texts join the document rows before the kernel:
     the executed plan runs one Arrow stage for the media texts plus the
-    document kernel once (three times in the two-pass oembed plan, whose
-    pass 1 feeds both branches), with no re-aggregation of the kernel's
-    output.  Counted in the final adaptive plan, where a subtree that
+    document kernel once (plus the href pass when oembed is joined too),
+    with no re-aggregation of the kernel's output.  Counted in the final adaptive plan, where a subtree that
     runs once and feeds several consumers shows once (ReusedExchange)."""
     from unfurl_spark.operators.pipeline import extract_spans_media_join
 
@@ -90,11 +89,11 @@ def test_media_join_plan_runs_kernel_once(spark, corpus):
     both = executed(extract_spans_media_join(docs, med, oembed_df=oem,
                                              join_oembed=True,
                                              num_partitions=8))
-    assert both.count("MapInArrow") == 4
+    assert both.count("MapInArrow") == 3
     assert "Generate posexplode" not in both
     assert executed(extract_spans_twopass(
         docs, oembed_df=oem, media_df=med,
-        num_partitions=8)).count("MapInArrow") == 3
+        num_partitions=8)).count("MapInArrow") == 2
 
 
 def test_media_join_equals_broadcast(spark, corpus):

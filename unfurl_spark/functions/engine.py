@@ -119,7 +119,6 @@ def flat_document_spans(url: str, html_text: str, status: int,
                         context_store: dict | None = None,
                         media_store: dict | None = None,
                         oembed_payload: tuple | None = None,
-                        href_out: list | None = None,
                         media_kinds: list | None = None) -> list[dict]:
     """Flat-column kernel: (url, reassembled html, status, media refs) →
     ordered output spans.  This is the shape the Spark stage feeds after
@@ -129,9 +128,9 @@ def flat_document_spans(url: str, html_text: str, status: int,
     broadcast-dictionary path (side table fits executors);
     ``oembed_payload`` is the shuffle-join path — the caller joined the
     oembed document to this row and passes its (status, ctype, body)
-    directly (extract_spans_twopass).  ``href_out``, when a list, has
-    the discovered oembed href appended — pass 1 of the two-pass plan
-    uses it to decide which docs join the oembed table.
+    directly (the oembed join of extract_spans_twopass, whose href pass
+    found the same href with ``find_oembed_href``).  Every regime calls
+    this once per document.
     """
     from .content import classify_blocks
     from .htmlmeta import parse_html_full
@@ -149,12 +148,9 @@ def flat_document_spans(url: str, html_text: str, status: int,
         if metadata is not None:
             jsonld_blocks = metadata.get("jsonld_blocks", [])
             if status == 200 and (oembed_store is not None
-                                  or oembed_payload is not None
-                                  or href_out is not None):
+                                  or oembed_payload is not None):
                 href = find_oembed_href(metadata)
                 if href is not None:
-                    if href_out is not None:
-                        href_out.append(href)
                     if oembed_payload is not None:
                         oembed = parse_oembed(*oembed_payload)
                     elif oembed_store is not None and href in oembed_store:
@@ -189,8 +185,8 @@ def flat_document_spans(url: str, html_text: str, status: int,
         if mkind == "pdf":
             # PDF main content (north-rule "PDF/layout parse"): the span
             # is ALWAYS present for pdf-kind refs — empty text when the
-            # payload is unavailable (pass 1 of the shuffle-join regime
-            # fills it from the joined payload, bit-identically)
+            # payload is unavailable (the media join fills it from the
+            # joined payload's text, bit-identically)
             emit("body_text", body_text or "", ref)
 
     return out

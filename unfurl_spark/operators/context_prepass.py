@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pipeline import _bvalues, map_rows, narrow_columns
+from .pipeline import _bvalues, _salted, map_rows, narrow_columns
 
 
 def _unresolved_contexts(narrow: DataFrame, b_ctx) -> DataFrame:
@@ -63,13 +63,10 @@ def context_fetch_list(df: DataFrame,
                        num_partitions: int | None = None) -> DataFrame:
     """(doc_id, spans) → (context_url, n_docs, sample_doc_id) for every
     remote @context the offline store cannot satisfy."""
-    spark = df.sparkSession
-    b_ctx = spark.sparkContext.broadcast(context_store)
+    b_ctx = df.sparkSession.sparkContext.broadcast(context_store)
 
-    narrow = narrow_columns(df)
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    salted = narrow.repartition(n, F.xxhash64("doc_id"))
-    pairs = _unresolved_contexts(salted, b_ctx)
+    pairs = _unresolved_contexts(
+        _salted(narrow_columns(df), num_partitions), b_ctx)
     return (pairs.groupBy("context_url")
             .agg(F.count("doc_id").alias("n_docs"),
                  F.min("doc_id").alias("sample_doc_id")))

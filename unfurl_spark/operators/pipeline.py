@@ -18,17 +18,16 @@ reference's two HTTP crossings, unfurl-html/src/index.ts:92-122 and
 joins (`extract_spans_twopass`, `extract_spans_media_join`) when at
 10^12 documents they cannot — outputs bit-identical either way.
 
-Every Python stage of the engine — the document passes, the media
-join's header readers (`_media_texts`), the context pre-pass and the
-multimodal operators — is a row function run by one Arrow runner,
-`map_rows`.  Every document-level pass of every regime is the same one,
-`_map_kernel`: the broadcast path, the media join and pass 1 and pass 2
-of the two-pass plan differ only in what it hands the kernel (a
-broadcast store, a joined oembed payload, the doc's joined media texts,
-an href out-list), and it reads which from its input and output
-schemas.  Kernel passes per document: one for broadcast and for the
-media join; with oembed joined, pass 1 twice (it feeds both branches of
-the plan and runs for each) plus pass 2 for a doc with an oembed href.
+Every Python stage of the engine — the document kernel, the oembed
+join's href pass (`_oembed_hrefs`), the media join's header readers
+(`_media_texts`), the context pre-pass and the multimodal operators — is
+a row function run by one Arrow runner, `map_rows`.  Every regime ends
+in the same tail, `_map_kernel(_salted(rows, n), side)`: the broadcast
+path, the media join and the oembed join differ only in what is joined
+onto the narrow rows before it (a joined oembed payload, the doc's
+joined media texts), and the kernel reads which from the row's arity.
+One kernel pass per document in every regime, plus one metadata parse
+per document under the oembed join.
 """
 
 from __future__ import annotations
@@ -37,7 +36,7 @@ from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from ..schema import EXTRACTED
 
@@ -286,7 +285,9 @@ def narrow_columns(df: DataFrame, assume_sorted: bool = False
     return pre.select(
         "doc_id",
         "status",
-        F.element_at(ordered, 1)["media_ref"].alias("url"),
+        # try_: an empty spans array gives a NULL url (the kernel falls
+        # back to doc_id), where element_at raises under ANSI mode
+        F.try_element_at(ordered, F.lit(1))["media_ref"].alias("url"),
         F.array_join(
             F.transform(
                 F.filter(ordered, lambda s: s["kind"] == F.lit("html")),
@@ -299,11 +300,6 @@ def narrow_columns(df: DataFrame, assume_sorted: bool = False
             F.filter(ordered, lambda s: s["kind"].isin("media", "pdf")),
             lambda s: s["kind"]).alias("media_kinds"),
     )
-
-
-# pass 1 of the two-pass plan also emits the oembed href each doc discovered
-EXTRACTED_HREF = StructType(
-    [*EXTRACTED.fields, StructField("oembed_href", StringType())])
 
 
 def map_rows(df: DataFrame, schema: StructType | str,
@@ -361,21 +357,18 @@ def _fill_media(spans: list[dict], texts: list[dict]) -> str | None:
     return None
 
 
-def _map_kernel(narrow: DataFrame, side: SideTables,
-                schema: StructType = EXTRACTED) -> DataFrame:
+def _map_kernel(narrow: DataFrame, side: SideTables) -> DataFrame:
     """The fused kernel over ``narrow_columns`` rows — the single place
-    documents enter ``flat_document_spans``.
+    documents enter ``flat_document_spans``, once per document in every
+    regime.
 
-    What the kernel gets follows from the two schemas, not from a mode:
-    the broadcast stores in ``side`` always (an absent table is a
-    broadcast ``None``); ``href_out`` when ``schema`` has an
-    ``oembed_href`` column (pass 1 of the two-pass plan).  After the six
-    narrow columns, the row's arity says what was joined onto it: the
-    per-row (o_status, ctype, body) oembed payload (pass 2), then the
-    doc's list of ``MEDIA_TEXT`` rows (media join), which fill the
-    kernel's media placeholders (``_fill_media``)."""
+    The kernel always gets the broadcast stores in ``side`` (an absent
+    table is a broadcast ``None``).  After the six narrow columns, the
+    row's arity says what was joined onto it: the per-row (o_status,
+    ctype, body) oembed payload (the oembed join), then the doc's list
+    of ``MEDIA_TEXT`` rows (the media join), which fill the kernel's
+    media placeholders (``_fill_media``)."""
     b_oembed, b_media, b_ctx = side.oembed, side.media, side.contexts
-    want_href = "oembed_href" in schema.names
 
     def open_rows():
         from ..functions.engine import flat_document_spans
@@ -388,13 +381,12 @@ def _map_kernel(narrow: DataFrame, side: SideTables,
             o_body = joined[2] if len(joined) >= 3 else None
             payload = None if o_body is None else joined[:3]
             texts = joined[-1] if len(joined) in (1, 4) else None
-            href_out = [] if want_href else None
             try:
                 spans = flat_document_spans(
                     url or str(doc_id), html, int(status),
                     list(media_refs or ()), oembed_store=oe,
                     context_store=ctx, media_store=med,
-                    oembed_payload=payload, href_out=href_out,
+                    oembed_payload=payload,
                     media_kinds=list(media_kinds or ()))
                 ok = "ok"
             except Exception as e:  # noqa: BLE001 — per-doc isolation
@@ -402,13 +394,11 @@ def _map_kernel(narrow: DataFrame, side: SideTables,
             err = _fill_media(spans, texts) if texts else None
             if err is not None:
                 spans, ok = [], err
-            out = (doc_id, spans, len(html), ok)
-            return [(*out, href_out[0] if href_out else None)
-                    if want_href else out]
+            return [(doc_id, spans, len(html), ok)]
 
         return row
 
-    return map_rows(narrow, schema, open_rows)
+    return map_rows(narrow, EXTRACTED, open_rows)
 
 
 def _salted(narrow: DataFrame, num_partitions: int | None) -> DataFrame:
@@ -447,36 +437,52 @@ def extract_spans(
 
 
 # --------------------------------------------------------------------------
-# two-pass oembed resolution — the 10^12-doc regime
+# oembed join — the 10^12-doc regime
 
-def _twopass(narrow: DataFrame, oembed_df: DataFrame, side: SideTables,
-             num_partitions: int | None) -> DataFrame:
-    """The two-pass plan over ``narrow`` rows, which may carry the media
-    join's texts column after the six narrow ones."""
-    pass1 = _map_kernel(_salted(narrow, num_partitions), side,
-                        EXTRACTED_HREF)
+NARROW_HREF = ("doc_id string, status int, url string, html string, "
+               "media_refs array<string>, media_kinds array<string>, "
+               "oembed_href string")
 
-    plain = (pass1.filter(F.col("oembed_href").isNull())
-             .drop("oembed_href"))
 
-    # docs that DID discover an oembed link: re-derive their flat inputs
-    # and equi-join the oembed corpus on href — both sides shuffle on the
-    # join key; at scale this is the standard sort-merge/AQE path and the
-    # oembed table never touches the driver
-    need = pass1.filter(F.col("oembed_href").isNotNull()) \
-                .select("doc_id", "oembed_href")
+def _oembed_hrefs(narrow: DataFrame) -> DataFrame:
+    """``narrow_columns`` rows → the same rows plus ``oembed_href``, the
+    oembed link the kernel would look up: found in the parsed metadata
+    of a status-200 document with HTML, else NULL."""
+
+    def open_rows():
+        from ..functions.engine import find_oembed_href
+        from ..functions.htmlmeta import parse_html
+
+        def row(doc_id, status, url, html, *media):
+            href = None
+            if status == 200 and html:
+                try:
+                    href = find_oembed_href(
+                        parse_html(html, url or str(doc_id)))
+                except Exception:  # noqa: BLE001 — per-doc isolation
+                    pass
+            return [(doc_id, status, url, html, *media, href)]
+
+        return row
+
+    return map_rows(narrow, NARROW_HREF, open_rows)
+
+
+def _join_oembed(narrow: DataFrame, oembed_df: DataFrame,
+                 num_partitions: int | None) -> DataFrame:
+    """``narrow_columns`` rows with the (o_status, ctype, body) of the
+    oembed document each names left-joined after the six narrow columns
+    (all NULL for a row that names none, or one the table lacks).  Both
+    sides shuffle on the href — the oembed table never touches the
+    driver."""
     oembed_side = dedup_on_key(
-        oembed_df.withColumnRenamed("ref", "oembed_href")
-                 .withColumnRenamed("status", "o_status")
-                 .select("oembed_href", "o_status", "ctype", "body"),
+        oembed_df.select(F.col("ref").alias("oembed_href"),
+                         F.col("status").alias("o_status"),
+                         "ctype", "body"),
         "oembed_href")
-    rejoin = (narrow.join(need, "doc_id")
-              .join(oembed_side, "oembed_href", "left")
-              .select(*narrow.columns[:6], "o_status", "ctype", "body",
-                      *narrow.columns[6:]))
-
-    second = _map_kernel(rejoin, side)
-    return plain.unionByName(second)
+    return (_oembed_hrefs(_salted(narrow, num_partitions))
+            .join(oembed_side, "oembed_href", "left")
+            .select(*narrow.columns, "o_status", "ctype", "body"))
 
 
 def extract_spans_twopass(
@@ -491,19 +497,18 @@ def extract_spans_twopass(
     large to broadcast (at 10^12 documents the sub-request table is
     billions of rows).
 
-    Plan: pass 1 runs the fused kernel with NO oembed store and emits
-    the discovered oembed href per doc.  The small fraction of docs
-    that reference an oembed document (~few %) shuffle-join the oembed
-    table on href — a plain distributed equi-join, no driver-side
-    collect, no broadcast — and re-run the kernel with the joined
-    payload passed per-row.  Everything else ships straight through.
-    Output is bit-identical to the broadcast path
+    Plan: an href pass parses each document's metadata for its oembed
+    link, the oembed table left-joins the rows on that href — a plain
+    distributed equi-join, no driver-side collect, no broadcast — and
+    the kernel runs once per document with the joined payload passed
+    per row.  Output is bit-identical to the broadcast path
     (tests/test_twopass_oembed.py).
     """
     side = broadcast_side_tables(df.sparkSession, None, media_df,
                                  context_store)
-    return _twopass(narrow_columns(df, assume_sorted=assume_sorted),
-                    oembed_df, side, num_partitions)
+    rows = _join_oembed(narrow_columns(df, assume_sorted=assume_sorted),
+                        oembed_df, num_partitions)
+    return _map_kernel(_salted(rows, num_partitions), side)
 
 
 MEDIA_TEXT = ("doc_id string, media_ref string, media_text string, "
@@ -547,18 +552,17 @@ def extract_spans_media_join(
 ) -> DataFrame:
     """``extract_spans`` for the regime where the media-payload corpus
     is too large to broadcast (binary image/pdf payloads at 10^12 docs).
-    With ``join_oembed=True`` the oembed side goes through the two-pass
+    With ``join_oembed=True`` the oembed side goes through the oembed
     shuffle join as well — zero broadcast side tables anywhere.
 
     Plan: the (doc_id, media_ref) pairs explode out of the narrow rows
     and equi-join the media table on media_ref (both sides shuffle on
     the key — payload bytes never touch the driver); a first Arrow stage
     runs the header readers per payload.  Each doc's media texts group
-    into one list that left-joins its narrow row by doc_id, and the one
-    kernel pass (or the two-pass plan) fills its media placeholders from
-    that list — the kernel runs once per document, as in the broadcast
-    path.  Output is bit-identical to the broadcast path
-    (tests/test_twopass_oembed.py).
+    into one list that left-joins its narrow row by doc_id (after the
+    oembed payload, when joined), and the one kernel pass fills its
+    media placeholders from that list.  Output is bit-identical to the
+    broadcast path (tests/test_twopass_oembed.py).
     """
     narrow = narrow_columns(df, assume_sorted=assume_sorted)
     # distinct BEFORE the join: a doc repeating a media_ref must not fan the
@@ -591,12 +595,10 @@ def extract_spans_media_join(
              .agg(F.collect_list(F.struct(
                  "media_ref", "media_text", "pdf_text", "media_err"))
                  .alias("media_texts")))
-    narrow = narrow.join(texts, "doc_id", "left")
-
     if join_oembed and oembed_df is not None:
-        side = broadcast_side_tables(df.sparkSession, None, None,
-                                     context_store)
-        return _twopass(narrow, oembed_df, side, num_partitions)
+        narrow = _join_oembed(narrow, oembed_df, num_partitions)
+        oembed_df = None
     side = broadcast_side_tables(df.sparkSession, oembed_df, None,
                                  context_store)
-    return _map_kernel(_salted(narrow, num_partitions), side)
+    rows = narrow.join(texts, "doc_id", "left")
+    return _map_kernel(_salted(rows, num_partitions), side)

@@ -293,7 +293,7 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         def extract(sel):
             return pipeline.extract_spans(sel, side=side())
     # 10^12-doc regime: side tables too large to broadcast — oembed via
-    # two-pass href join, media payloads via explode + equi-join
+    # href pass + equi-join, media payloads via explode + equi-join
     # (pipeline.py)
     elif media_df is not None:
         extract = partial(pipeline.extract_spans_media_join,
