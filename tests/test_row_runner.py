@@ -258,7 +258,7 @@ def test_kernel_fills_media_placeholders_from_joined_texts(spark):
     # the fully joined plan: oembed payload, then the texts
     joined = pa.schema([*OEMBED_JOINED, ("media_texts", pa.list_(TEXT_T))])
     row = (*OEMBED_JOINED_ROWS[0], _texts(("a.png", "A", None, None),
-                                     ("b.pdf", "B", "P", None)))
+                                          ("b.pdf", "B", "P", None)))
     [b] = pipeline._map_kernel(_Stage(), side)(
         iter([_batch(joined, [row])]))
     [r] = b.to_pylist()
