@@ -68,8 +68,9 @@ def test_media_join_plan_runs_kernel_once(spark, corpus):
     """The media join's texts join the document rows before the kernel:
     the executed plan runs one Arrow stage for the media texts plus the
     document kernel once (plus the href pass when oembed is joined too),
-    with no re-aggregation of the kernel's output.  Counted in the final adaptive plan, where a subtree that
-    runs once and feeds several consumers shows once (ReusedExchange)."""
+    with no re-aggregation of the kernel's output.  Counted in the final
+    adaptive plan, where a subtree that runs once and feeds several
+    consumers shows once (ReusedExchange)."""
     from unfurl_spark.operators.pipeline import extract_spans_media_join
 
     docs = spark.read.parquet(corpus["documents_raw"])
@@ -94,6 +95,41 @@ def test_media_join_plan_runs_kernel_once(spark, corpus):
     assert executed(extract_spans_twopass(
         docs, oembed_df=oem, media_df=med,
         num_partitions=8)).count("MapInArrow") == 2
+
+
+def test_oembed_join_spreads_rows_without_href(spark):
+    """Rows that name no oembed href (most documents) key the oembed
+    join on their doc_id: they spread over the join's partitions instead
+    of meeting in one under a shared NULL key, and never match an oembed
+    row, not even one whose ref equals their doc_id."""
+    from unfurl_spark.operators.pipeline import _join_oembed, narrow_columns
+
+    n = 64
+    docs = spark.createDataFrame(
+        [(f"https://ex.com/{i}",
+          [("html", "<title>T</title>", f"https://ex.com/{i}", 0)])
+         for i in range(n)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>")
+    oem = spark.createDataFrame(
+        [("https://ex.com/0", 200, "application/json", '{"title": "x"}')],
+        "ref string, status int, ctype string, body string")
+    # partition ids read straight off the join: no runtime coalescing,
+    # no broadcast of the one-row oembed side
+    keep = {k: spark.conf.get(k) for k in (
+        "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        rows = (_join_oembed(narrow_columns(docs), oem, 4)
+                .select("o_status", F.spark_partition_id().alias("p"))
+                .collect())
+    finally:
+        for k, v in keep.items():
+            spark.conf.set(k, v)
+    assert len(rows) == n
+    assert all(r.o_status is None for r in rows)
+    assert len({r.p for r in rows}) > 1
 
 
 def test_media_join_equals_broadcast(spark, corpus):

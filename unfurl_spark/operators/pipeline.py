@@ -474,14 +474,18 @@ def _join_oembed(narrow: DataFrame, oembed_df: DataFrame,
     oembed document each names left-joined after the six narrow columns
     (all NULL for a row that names none, or one the table lacks).  Both
     sides shuffle on the href — the oembed table never touches the
-    driver."""
+    driver.  A row that names no href (most documents) shuffles on its
+    doc_id instead, so those rows spread over the join's partitions
+    rather than meeting in one under a shared NULL key; the
+    ``isNotNull`` term keeps them from matching."""
     oembed_side = dedup_on_key(
-        oembed_df.select(F.col("ref").alias("oembed_href"),
-                         F.col("status").alias("o_status"),
+        oembed_df.select("ref", F.col("status").alias("o_status"),
                          "ctype", "body"),
-        "oembed_href")
-    return (_oembed_hrefs(_salted(narrow, num_partitions))
-            .join(oembed_side, "oembed_href", "left")
+        "ref")
+    rows = _oembed_hrefs(_salted(narrow, num_partitions))
+    key = F.coalesce(rows.oembed_href, rows.doc_id)
+    return (rows.join(oembed_side, (key == oembed_side.ref)
+                      & rows.oembed_href.isNotNull(), "left")
             .select(*narrow.columns, "o_status", "ctype", "body"))
 
 
