@@ -4,6 +4,7 @@ each payload at most once, keeps one op's failure out of the others'
 columns, and leaves no cached data behind."""
 
 import math
+import re
 from datetime import timedelta
 
 import numpy as np
@@ -200,6 +201,42 @@ def test_media_job_leaves_no_cache(spark, tmp_path, monkeypatch):
     assert s["resumed_buckets"] == []
     assert sorted(s["processed_buckets"]) == [0, 1, 2, 3]
     assert manager.isEmpty()
+
+
+@pytest.mark.parametrize("ops", [("decode",), OPS])
+def test_media_job_salts_the_pixel_pass(spark, tmp_path, monkeypatch, ops):
+    """The media job's pixel kernel reads defaultParallelism partitions
+    hashed on media_ref, not the scan's file splits."""
+    from unfurl_spark.sources.synthetic import write_corpus
+
+    corpus = write_corpus(str(tmp_path / "corpus"), 40, seed=21)
+    real_write = tables.write_bucketed
+    plans = []
+
+    def capture(df, identifier, *args, **kwargs):
+        if identifier.endswith("media_meta"):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_write(df, identifier, *args, **kwargs)
+
+    monkeypatch.setattr(tables, "write_bucketed", capture)
+    run_media_job(spark, corpus["media_payloads"], str(tmp_path / "out"),
+                  ops=ops, n_buckets=4, buckets_per_job=4, run_id="salt")
+    n = spark.sparkContext.defaultParallelism
+    [plan] = plans
+    # the operator the kernel reads: the first one below its MapInArrow
+    below = plan[plan.index("MapInArrow"):].splitlines()[1]
+    assert re.search(r"Exchange hashpartitioning\(xxhash64\(media_ref#\d+, "
+                     rf"42\), {n}\)", below), plan
+
+
+def test_library_pixel_ops_ask_only_select_and_map(spark):
+    """Unsalted (``num_partitions=None``), the library's pixel ops call
+    nothing on their input but ``select`` and ``mapInArrow``: perfbench's
+    traced pass runs them over ``_Capture``, which has only those two
+    (anything else raises AttributeError)."""
+    for op in (multimodal.decode_media, multimodal.extract_features,
+               multimodal.resize_images):
+        assert callable(op(_Capture())), op.__name__
 
 
 def test_one_op_failure_leaves_the_others_alone(spark, monkeypatch):

@@ -32,6 +32,10 @@ per document under the oembed join.
 
 from __future__ import annotations
 
+import os
+import sys
+import weakref
+import zipimport
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +77,58 @@ def _bvalues(*bs) -> tuple:
     return _WORKER_BROADCAST_CACHE[key]
 
 
+# The per-task fixed cost of a Python worker.  PySpark calls
+# ``importlib.invalidate_caches()`` at the start of every task
+# (``worker_util.setup_spark_files``), and before CPython 3.13 each
+# ``zipimporter`` answers by re-reading its archive's whole central
+# directory: 16 re-reads per task for the importers a worker holds over
+# pyspark.zip, py4j's zip and the spark-core jar, before a single row is
+# read.  An identity ``map_rows`` task cost 0.28-0.30 worker CPU-s with
+# them and 0.03-0.07 without (4-vCPU VM, CPython 3.11).  The re-read only
+# matters when the archive changed, so each importer re-reads only then:
+# when ``os.stat``'s (mtime_ns, size, inode) of its archive differs from
+# the key stat'ed before that importer's last re-read, or the stat fails.
+# Keyed per importer, not per archive: every importer over a rewritten
+# archive must re-read its own ``_files``.
+_ZIP_DIR_KEYS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _archive_key(path: str):
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size, st.st_ino
+
+
+def _install_zip_dir_cache() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed; idempotent.  Every importer
+    alive at install time is keyed on its archive as it is now: in a
+    worker this runs inside a task whose ``setup_spark_files`` has just
+    re-read them all.  An importer made later has no key, so its first
+    invalidation re-reads.  A no-op on CPython >= 3.13, whose
+    ``invalidate_caches`` only drops the archive's cache entry."""
+    if sys.version_info >= (3, 13):
+        return
+    cls = zipimport.zipimporter
+    reread = cls.invalidate_caches
+    if hasattr(reread, "__wrapped__"):
+        return
+
+    def invalidate_caches(self):
+        key = _archive_key(self.archive)
+        if key is None or _ZIP_DIR_KEYS.get(self) != key:
+            reread(self)
+            _ZIP_DIR_KEYS[self] = key
+
+    invalidate_caches.__wrapped__ = reread
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, cls):
+            _ZIP_DIR_KEYS[imp] = _archive_key(imp.archive)
+    cls.invalidate_caches = invalidate_caches
+
+
 def session_configs(profile: str = "local", master: str | None = None,
                     shuffle_partitions: int = 32,
                     checkpoint_dir: str | None = None) -> dict[str, str]:
@@ -103,8 +159,6 @@ def session_configs(profile: str = "local", master: str | None = None,
       16 GB; ~5 GB steady-state per executor leaves 3× headroom for the
       skew tail); local mode has no executors to shape.
     """
-    import os
-
     common = {
         # moderate heap: measured on this box, a 48g heap made G1 regions
         # huge and scan+shuffle stages 3-4× slower/noisier than 16g; 16g
@@ -315,7 +369,12 @@ def map_rows(df: DataFrame, schema: StructType | str,
     stage, 0..N for a fan-out.  A batch's output tuples go to Arrow in
     ONE ``pa.array(rows, struct)`` conversion against the Arrow form of
     ``schema``, derived once at plan time.  Nothing but
-    ``df.mapInArrow`` is called on ``df``."""
+    ``df.mapInArrow`` is called on ``df``.
+
+    Each task first installs ``_install_zip_dir_cache`` in its worker
+    (once per worker), so a reused worker's later tasks skip the zip
+    directory re-reads PySpark's per-task ``invalidate_caches`` costs
+    before CPython 3.13: a task costs its rows, not a fixed 0.25 CPU-s."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
@@ -325,6 +384,7 @@ def map_rows(df: DataFrame, schema: StructType | str,
     row_type = pa.struct(list(to_arrow_schema(schema)))
 
     def run(batches: Iterator) -> Iterator:
+        _install_zip_dir_cache()
         rows_of = open_rows()
         for batch in batches:
             out: list = []

@@ -211,8 +211,10 @@ def run_media_job(spark: SparkSession, media_path: str, output_dir: str,
     as ONE kernel, one decode per payload (``multimodal.pixel_pass``);
     with features or resize, its result is persisted once, written as
     ``media_meta`` / ``media_features`` / ``media_resize`` projections and
-    unpersisted.  frames is its own stage.  The per-bucket stats are
-    observed on the ``media_meta`` commit.
+    unpersisted.  frames is its own stage.  Both read the chunk salted
+    into ``defaultParallelism`` partitions on ``media_ref``, not the
+    scan's file splits.  The per-bucket stats are observed on the
+    ``media_meta`` commit.
     """
     from unfurl_spark.functions.multimodal import pixel_pass, sample_frames
     from unfurl_spark.sources import tables
@@ -222,13 +224,15 @@ def run_media_job(spark: SparkSession, media_path: str, output_dir: str,
     table_of = {"decode": "media_meta", "features": "media_features",
                 "resize": "media_resize", "frames": "media_frames"}
 
+    salt = spark.sparkContext.defaultParallelism
+
     def stage(part, bucket_of, observe):
         part = part.select("media_ref", "ctype", "payload")
-        res = pixel_pass(part, pixel)
+        res = pixel_pass(part, pixel, num_partitions=salt)
         outs = ({"decode": res} if len(pixel) == 1 else
                 {op: res.select("media_ref", f"{op}.*") for op in pixel})
         if "frames" in ops:
-            outs["frames"] = sample_frames(part)
+            outs["frames"] = sample_frames(part, num_partitions=salt)
         if len(pixel) > 1:
             res.persist()  # one decode feeds every pixel table
         try:
