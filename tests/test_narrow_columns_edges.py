@@ -4,7 +4,11 @@ function's ordering and defaults exactly."""
 
 from pyspark.sql import Row
 
-from unfurl_spark.operators.pipeline import extract_spans, narrow_columns
+from unfurl_spark.operators.pipeline import (
+    extract_spans,
+    extract_spans_joined,
+    narrow_columns,
+)
 
 
 def _doc(doc_id, spans, status=None):
@@ -39,7 +43,7 @@ def test_tied_and_null_offsets_match_kernel_order(spark):
              ("html", "A</title>", None, 0),     # tied offset: stays 2nd
              ("html", "<meta>", None, None)]     # null offset: ties as 0
     df = spark.createDataFrame([_doc("d1", spans)])
-    got = narrow_columns(df, assume_sorted=False).collect()[0]
+    got = narrow_columns(df).collect()[0]
     kernel = document_spans(
         "d1", [{"kind": k, "text": t, "media_ref": m, "offset": o}
                for k, t, m, o in spans], 200)
@@ -52,16 +56,20 @@ def test_tied_and_null_offsets_match_kernel_order(spark):
         [ (s["kind"], s["text"]) for s in kernel ]
 
 
+def _regimes(df, oem, med):
+    """``df`` extracted in every regime, in (broadcast, join) pairs over
+    the same side tables: the oembed table, the media table and both."""
+    for tables in ({"oembed_df": oem}, {"media_df": med},
+                   {"oembed_df": oem, "media_df": med}):
+        yield (extract_spans(df, num_partitions=2, **tables),
+               extract_spans_joined(df, num_partitions=2, **tables))
+
+
 def test_empty_spans_array_is_an_empty_ok_document(spark):
     """A document with no spans has no url: narrow_columns gives it a
     NULL url instead of failing the job (element_at on an empty array
     raises under ANSI mode), and every regime returns it as an empty,
     ok document."""
-    from unfurl_spark.operators.pipeline import (
-        extract_spans_media_join,
-        extract_spans_twopass,
-    )
-
     df = spark.createDataFrame(
         [("e1", [])], "doc_id string, spans array<struct<kind:string,"
         "text:string,media_ref:string,offset:int>>")
@@ -70,16 +78,48 @@ def test_empty_spans_array_is_an_empty_ok_document(spark):
     med = spark.createDataFrame(
         [], "media_ref string, ctype string, payload binary")
     want = [("e1", [], 0, "ok")]
-    for out in (extract_spans(df, oembed_df=oem, media_df=med,
-                              num_partitions=2),
-                extract_spans_twopass(df, oem, media_df=med,
-                                      num_partitions=2),
-                extract_spans_media_join(df, med, oembed_df=oem,
-                                         num_partitions=2),
-                extract_spans_media_join(df, med, oembed_df=oem,
-                                         join_oembed=True,
-                                         num_partitions=2)):
-        assert [tuple(r) for r in out.collect()] == want
+    for pair in _regimes(df, oem, med):
+        for out in pair:
+            assert [tuple(r) for r in out.collect()] == want
+
+
+# 1x1 PNG with a real IHDR: its header parse gives a non-empty media text
+_PNG = (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\x0dIHDR"
+        + (1).to_bytes(4, "big") + (1).to_bytes(4, "big")
+        + b"\x08\x06\x00\x00\x00" + b"\x00\x00\x00\x00")
+
+
+def test_null_doc_id_is_one_more_document(spark):
+    """A NULL doc_id is one more lineage row, not a failed kernel stage:
+    every regime returns it ok, with the same spans as broadcast — its
+    media span filled in the media join too (a NULL key never matches
+    in a plain equi-join, so the doc_id join is NULL-safe)."""
+    html = "<html><head><title>T</title></head><body></body></html>"
+    df = spark.createDataFrame(
+        [(None, [("html", html, "https://ex.com/a", 0),
+                 ("media", None, "https://ex.com/img.png", 1)]),
+         ("d1", [("html", html, "https://ex.com/b", 0),
+                 ("media", None, "https://ex.com/img.png", 1)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>")
+    oem = spark.createDataFrame(
+        [], "ref string, status int, ctype string, body string")
+    med = spark.createDataFrame(
+        [("https://ex.com/img.png", "image/png", _PNG)],
+        "media_ref string, ctype string, payload binary")
+
+    def rows(out):
+        return {r.doc_id: ([tuple(s) for s in r.spans], r.ok)
+                for r in out.collect()}
+
+    for broadcast, joined in _regimes(df, oem, med):
+        want = rows(broadcast)
+        assert want[None][1] == "ok"
+        assert rows(joined) == want
+    # with the media table, the NULL-id doc's media span is filled like
+    # d1's (same html and ref)
+    assert want[None] == want["d1"]
+    assert [s[1] for s in want[None][0] if s[0] == "media"] != [""]
 
 
 def test_oracle_check_canon_is_total():

@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 
 from unfurl_spark.operators.pipeline import (
     extract_spans,
-    extract_spans_media_join,
-    extract_spans_twopass,
+    extract_spans_joined,
 )
 
 SPAN_T = ("array<struct<kind:string,text:string,media_ref:string,"
@@ -47,7 +46,7 @@ def test_repeated_media_ref_no_fanout(spark, repeat_ref_docs):
          ("https://ex.com/other.png", "image/png", _PNG)],
         "media_ref string, ctype string, payload binary")
     a = extract_spans(repeat_ref_docs, media_df=media, num_partitions=4)
-    b = extract_spans_media_join(repeat_ref_docs, media, num_partitions=4)
+    b = extract_spans_joined(repeat_ref_docs, media_df=media, num_partitions=4)
     ra = {r.doc_id: [tuple(s) for s in r.spans] for r in a.collect()}
     rb = {r.doc_id: [tuple(s) for s in r.spans] for r in b.collect()}
     assert ra == rb
@@ -64,7 +63,7 @@ def test_duplicate_media_rows_dedupe_identically(spark, repeat_ref_docs):
          ("https://ex.com/other.png", "image/png", _PNG)],
         "media_ref string, ctype string, payload binary")
     a = extract_spans(repeat_ref_docs, media_df=media, num_partitions=4)
-    b = extract_spans_media_join(repeat_ref_docs, media, num_partitions=4)
+    b = extract_spans_joined(repeat_ref_docs, media_df=media, num_partitions=4)
     assert a.count() == 2 and b.count() == 2  # no doc duplication
     ra = {r.doc_id: [tuple(s) for s in r.spans] for r in a.collect()}
     rb = {r.doc_id: [tuple(s) for s in r.spans] for r in b.collect()}
@@ -86,7 +85,7 @@ def test_duplicate_oembed_rows_dedupe_identically(spark):
           '{"title": "B"}')],  # dup key, different payloads
         "ref string, status int, ctype string, body string")
     a = extract_spans(docs, oembed_df=oem, num_partitions=4)
-    b = extract_spans_twopass(docs, oembed_df=oem, num_partitions=4)
+    b = extract_spans_joined(docs, oembed_df=oem, num_partitions=4)
     assert a.count() == 1 and b.count() == 1  # the r1 join fanned to 2
     ra = [tuple(s) for s in a.collect()[0].spans]
     rb = [tuple(s) for s in b.collect()[0].spans]
@@ -103,7 +102,7 @@ def test_ok_column_parity_on_weird_payloads(spark, repeat_ref_docs):
          ("https://ex.com/other.png", "image/png", b"")],
         "media_ref string, ctype string, payload binary")
     a = extract_spans(repeat_ref_docs, media_df=media, num_partitions=4)
-    b = extract_spans_media_join(repeat_ref_docs, media, num_partitions=4)
+    b = extract_spans_joined(repeat_ref_docs, media_df=media, num_partitions=4)
     oa = {r.doc_id: r.ok for r in a.collect()}
     ob = {r.doc_id: r.ok for r in b.collect()}
     assert oa == ob == {"d1": "ok", "d2": "ok"}
@@ -125,7 +124,7 @@ def test_same_ref_as_media_and_pdf_no_fanout(spark):
         [("https://ex.com/f.pdf", "application/pdf", pdf)],
         "media_ref string, ctype string, payload binary")
     a = extract_spans(docs, media_df=media, num_partitions=2)
-    b = extract_spans_media_join(docs, media, num_partitions=2)
+    b = extract_spans_joined(docs, media_df=media, num_partitions=2)
     ra = {r.doc_id: [tuple(s) for s in r.spans] for r in a.collect()}
     rb = {r.doc_id: [tuple(s) for s in r.spans] for r in b.collect()}
     assert ra == rb
@@ -149,7 +148,7 @@ def test_repeated_doc_id_rows_keep_their_own_spans(spark):
          ("https://ex.com/other.png", "image/png", _PNG)],
         "media_ref string, ctype string, payload binary")
     a = extract_spans(docs, media_df=media, num_partitions=4)
-    b = extract_spans_media_join(docs, media, num_partitions=4)
+    b = extract_spans_joined(docs, media_df=media, num_partitions=4)
     ra = sorted([tuple(s) for s in r.spans] for r in a.collect())
     rb = sorted([tuple(s) for s in r.spans] for r in b.collect())
     assert len(rb) == 2
@@ -175,7 +174,7 @@ def test_repeated_doc_id_rows_each_join_their_own_oembed(spark):
           '{"title": "Y"}')],
         "ref string, status int, ctype string, body string")
     a = extract_spans(docs, oembed_df=oem, num_partitions=4)
-    b = extract_spans_twopass(docs, oembed_df=oem, num_partitions=4)
+    b = extract_spans_joined(docs, oembed_df=oem, num_partitions=4)
     ra = sorted([tuple(s) for s in r.spans] for r in a.collect())
     rb = sorted([tuple(s) for s in r.spans] for r in b.collect())
     assert len(rb) == 2

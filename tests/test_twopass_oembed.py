@@ -1,12 +1,13 @@
-"""Shuffle-join oembed resolution (the 10^12-doc regime, no broadcast)
-must produce output identical to the broadcast side-table path."""
+"""Shuffle-join side-table resolution (the 10^12-doc regime, no
+broadcast of the oembed or media tables) must produce output identical
+to the broadcast side-table path."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from unfurl_spark.operators.pipeline import (
     extract_spans,
-    extract_spans_twopass,
+    extract_spans_joined,
 )
 from unfurl_spark.sources.synthetic import write_corpus
 
@@ -17,16 +18,7 @@ def corpus(tmp_path_factory):
     return write_corpus(str(out), 400, seed=42)
 
 
-def test_twopass_equals_broadcast(spark, corpus):
-    docs = spark.read.parquet(corpus["documents_raw"])
-    oem = spark.read.parquet(corpus["oembed_docs"])
-    med = spark.read.parquet(corpus["media_payloads"])
-
-    a = extract_spans(docs, oembed_df=oem, media_df=med,
-                      num_partitions=8)
-    b = extract_spans_twopass(docs, oembed_df=oem, media_df=med,
-                              num_partitions=8)
-
+def _assert_same_spans_and_ok(a, b):
     j = a.alias("a").join(b.alias("b"), "doc_id", "full_outer")
     assert j.count() == 400
     mism = j.filter(
@@ -36,6 +28,16 @@ def test_twopass_equals_broadcast(spark, corpus):
     assert mism == 0
 
 
+def test_twopass_equals_broadcast(spark, corpus):
+    """The oembed join equals the broadcast oembed store."""
+    docs = spark.read.parquet(corpus["documents_raw"])
+    oem = spark.read.parquet(corpus["oembed_docs"])
+
+    a = extract_spans(docs, oembed_df=oem, num_partitions=8)
+    b = extract_spans_joined(docs, oembed_df=oem, num_partitions=8)
+    _assert_same_spans_and_ok(a, b)
+
+
 def test_twopass_exercises_both_branches(spark, corpus):
     """The synthetic corpus must actually have oembed-bearing docs, and
     the join branch must fire — otherwise the test above proves
@@ -43,7 +45,7 @@ def test_twopass_exercises_both_branches(spark, corpus):
     docs = spark.read.parquet(corpus["documents_raw"])
     oem = spark.read.parquet(corpus["oembed_docs"])
 
-    res = extract_spans_twopass(docs, oembed_df=oem, num_partitions=8)
+    res = extract_spans_joined(docs, oembed_df=oem, num_partitions=8)
     n_total = res.count()
     assert n_total == 400
     # the broadcast twin with a store: count docs whose extraction used
@@ -51,50 +53,32 @@ def test_twopass_exercises_both_branches(spark, corpus):
     assert oem.count() > 0
 
 
-def test_twopass_plan_no_broadcast_of_oembed(spark, corpus):
-    """The oembed table must enter as a JOIN, not a driver collect: the
-    plan shows a join on oembed_href and the only Python stages are the
-    href pass and the document kernel."""
-    docs = spark.read.parquet(corpus["documents_raw"])
-    oem = spark.read.parquet(corpus["oembed_docs"])
-    out = extract_spans_twopass(docs, oembed_df=oem, num_partitions=8)
+@pytest.mark.parametrize("tables,n_python", [
+    (("oembed_df",), 2),             # href pass, then the kernel
+    (("media_df",), 2),              # media texts, then the kernel
+    (("oembed_df", "media_df"), 3),  # media texts + href pass + kernel
+], ids=["oembed", "media", "both"])
+def test_join_plan_runs_kernel_once(spark, corpus, tables, n_python):
+    """Every side table enters as a JOIN, not a driver collect, and the
+    joined rows meet the document kernel once: the executed plan runs
+    one Arrow stage per join plus the kernel, with no re-aggregation of
+    the kernel's output, and a join on ``oembed_href`` exactly when the
+    oembed table is given.  Counted in the final adaptive plan, where a
+    subtree that runs once and feeds several consumers shows once
+    (ReusedExchange)."""
+    side = {"oembed_df": spark.read.parquet(corpus["oembed_docs"]),
+            "media_df": spark.read.parquet(corpus["media_payloads"])}
+    out = extract_spans_joined(spark.read.parquet(corpus["documents_raw"]),
+                               num_partitions=8,
+                               **{t: side[t] for t in tables})
+    out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 2  # href pass, then the kernel
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    assert plan.count("MapInArrow") == n_python
+    assert "Generate posexplode" not in plan
     assert "BatchEvalPython" not in plan
-    assert "oembed_href" in plan
-
-
-def test_media_join_plan_runs_kernel_once(spark, corpus):
-    """The media join's texts join the document rows before the kernel:
-    the executed plan runs one Arrow stage for the media texts plus the
-    document kernel once (plus the href pass when oembed is joined too),
-    with no re-aggregation of the kernel's output.  Counted in the final
-    adaptive plan, where a subtree that runs once and feeds several
-    consumers shows once (ReusedExchange)."""
-    from unfurl_spark.operators.pipeline import extract_spans_media_join
-
-    docs = spark.read.parquet(corpus["documents_raw"])
-    oem = spark.read.parquet(corpus["oembed_docs"])
-    med = spark.read.parquet(corpus["media_payloads"])
-
-    def executed(df):
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in plan
-        return plan.split("== Initial Plan ==")[0]
-
-    media = executed(extract_spans_media_join(docs, med, oembed_df=oem,
-                                              num_partitions=8))
-    assert media.count("MapInArrow") == 2
-    assert "Generate posexplode" not in media
-    both = executed(extract_spans_media_join(docs, med, oembed_df=oem,
-                                             join_oembed=True,
-                                             num_partitions=8))
-    assert both.count("MapInArrow") == 3
-    assert "Generate posexplode" not in both
-    assert executed(extract_spans_twopass(
-        docs, oembed_df=oem, media_df=med,
-        num_partitions=8)).count("MapInArrow") == 2
+    assert ("oembed_href" in plan) == ("oembed_df" in tables)
 
 
 def test_oembed_join_spreads_rows_without_href(spark):
@@ -133,62 +117,51 @@ def test_oembed_join_spreads_rows_without_href(spark):
 
 
 def test_media_join_equals_broadcast(spark, corpus):
-    from unfurl_spark.operators.pipeline import extract_spans_media_join
-
+    """The media join equals the broadcast media store."""
     docs = spark.read.parquet(corpus["documents_raw"])
-    oem = spark.read.parquet(corpus["oembed_docs"])
     med = spark.read.parquet(corpus["media_payloads"])
 
-    a = extract_spans(docs, oembed_df=oem, media_df=med,
-                      num_partitions=8)
-    b = extract_spans_media_join(docs, med, oembed_df=oem,
-                                 num_partitions=8)
-    j = a.alias("a").join(b.alias("b"), "doc_id", "full_outer")
-    assert j.count() == 400
-    mism = j.filter(
-        (F.col("a.spans") != F.col("b.spans"))
-        | F.col("a.spans").isNull() | F.col("b.spans").isNull()
-        | (F.col("a.ok") != F.col("b.ok"))).count()
-    assert mism == 0
+    a = extract_spans(docs, media_df=med, num_partitions=8)
+    b = extract_spans_joined(docs, media_df=med, num_partitions=8)
+    _assert_same_spans_and_ok(a, b)
 
 
 def test_fully_joined_equals_broadcast(spark, corpus):
-    """join_oembed + media join: zero broadcast side tables, same output."""
-    from unfurl_spark.operators.pipeline import extract_spans_media_join
-
+    """Both tables joined: zero broadcast side tables, same output."""
     docs = spark.read.parquet(corpus["documents_raw"])
     oem = spark.read.parquet(corpus["oembed_docs"])
     med = spark.read.parquet(corpus["media_payloads"])
 
     a = extract_spans(docs, oembed_df=oem, media_df=med,
                       num_partitions=8)
-    b = extract_spans_media_join(docs, med, oembed_df=oem,
-                                 join_oembed=True, num_partitions=8)
-    j = a.alias("a").join(b.alias("b"), "doc_id", "full_outer")
-    assert j.count() == 400
-    assert j.filter(
-        (F.col("a.spans") != F.col("b.spans"))
-        | F.col("a.spans").isNull() | F.col("b.spans").isNull()).count() == 0
+    b = extract_spans_joined(docs, oembed_df=oem, media_df=med,
+                             num_partitions=8)
+    _assert_same_spans_and_ok(a, b)
 
 
-def test_driver_join_side_mode(spark, corpus, tmp_path):
+@pytest.mark.parametrize("paths", [
+    ("oembed",), ("media",), ("oembed", "media"), ()],
+    ids=["oembed", "media", "both", "neither"])
+def test_driver_join_side_mode(spark, corpus, tmp_path, paths):
+    """``run_job(side_mode="join")`` with any set of side tables commits
+    the spans broadcast ``extract_spans`` gives over the same tables."""
     from unfurl_spark.plans.driver import run_job
 
+    given = {"oembed": corpus["oembed_docs"],
+             "media": corpus["media_payloads"]}
+    given = {k: v for k, v in given.items() if k in paths}
     out = str(tmp_path / "out")
     summary = run_job(spark, corpus["documents_raw"], out,
-                      oembed_path=corpus["oembed_docs"],
-                      media_path=corpus["media_payloads"],
+                      oembed_path=given.get("oembed"),
+                      media_path=given.get("media"),
                       n_buckets=4, buckets_per_job=4,
                       side_mode="join")
     assert summary["n_docs"] == 400
     assert summary["n_failures"] == 0
     # output equals the broadcast-mode pipeline
-    got = spark.read.parquet(out + "/spans").select("doc_id", "spans")
-    oem = spark.read.parquet(corpus["oembed_docs"])
-    med = spark.read.parquet(corpus["media_payloads"])
-    docs = spark.read.parquet(corpus["documents_raw"])
-    exp = extract_spans(docs, oembed_df=oem, media_df=med,
-                        num_partitions=8).select("doc_id", "spans")
-    j = got.alias("g").join(exp.alias("e"), "doc_id", "full_outer")
-    assert j.count() == 400
-    assert j.filter(F.col("g.spans") != F.col("e.spans")).count() == 0
+    got = spark.read.parquet(out + "/spans")
+    exp = extract_spans(
+        spark.read.parquet(corpus["documents_raw"]), num_partitions=8,
+        **{f"{k}_df": spark.read.parquet(v) for k, v in given.items()})
+    _assert_same_spans_and_ok(exp.select("doc_id", "spans", "ok"),
+                              got.select("doc_id", "spans", "ok"))

@@ -47,13 +47,12 @@ side = broadcast_side_tables(spark, oem, med)
 # the interpreted higher-order expressions, page cache fills (steady state
 # is what a long-running production job runs at)
 for _ in range(2):
-    extract_spans(docs, side=side, num_partitions={parts},
-                  assume_sorted=True).count()
+    extract_spans(docs, side=side, num_partitions={parts}).count()
 
 times = []
 for _ in range({trials}):
     t0 = time.time()
-    res = extract_spans(docs, side=side, num_partitions={parts}, assume_sorted=True)
+    res = extract_spans(docs, side=side, num_partitions={parts})
     row = res.agg(F.count("*").alias("n"),
                   F.sum("n_input_bytes").alias("b"),
                   F.sum(F.when(F.col("ok") != "ok", 1).otherwise(0))

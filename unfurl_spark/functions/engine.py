@@ -128,7 +128,7 @@ def flat_document_spans(url: str, html_text: str, status: int,
     broadcast-dictionary path (side table fits executors);
     ``oembed_payload`` is the shuffle-join path — the caller joined the
     oembed document to this row and passes its (status, ctype, body)
-    directly (the oembed join of extract_spans_twopass, whose href pass
+    directly (the oembed join of extract_spans_joined, whose href pass
     found the same href with ``find_oembed_href``).  Every regime calls
     this once per document.
     """

@@ -15,17 +15,17 @@ payloads) are side tables — executors never touch the network (the
 reference's two HTTP crossings, unfurl-html/src/index.ts:92-122 and
 :146-172, become table lookups).  Two scale regimes: broadcast stores
 (`extract_spans`) when the tables fit executors, distributed shuffle
-joins (`extract_spans_twopass`, `extract_spans_media_join`) when at
-10^12 documents they cannot — outputs bit-identical either way.
+joins of every side table given (`extract_spans_joined`) when at 10^12
+documents they cannot — outputs bit-identical either way.
 
 Every Python stage of the engine — the document kernel, the oembed
 join's href pass (`_oembed_hrefs`), the media join's header readers
 (`_media_texts`), the context pre-pass and the multimodal operators — is
 a row function run by one Arrow runner, `map_rows`.  Every regime ends
-in the same tail, `_map_kernel(_salted(rows, n), side)`: the broadcast
-path, the media join and the oembed join differ only in what is joined
-onto the narrow rows before it (a joined oembed payload, the doc's
-joined media texts), and the kernel reads which from the row's arity.
+in the same tail, `_map_kernel(_salted(rows, n), side)`: the two
+regimes differ only in what is joined onto the narrow rows before it
+(a joined oembed payload, the doc's joined media texts), and the kernel
+reads which from the row's arity.
 One kernel pass per document in every regime, plus one metadata parse
 per document under the oembed join.
 """
@@ -297,8 +297,7 @@ def broadcast_side_tables(spark: SparkSession,
                       sc.broadcast(context_store))
 
 
-def narrow_columns(df: DataFrame, assume_sorted: bool = False
-                   ) -> DataFrame:
+def narrow_columns(df: DataFrame) -> DataFrame:
     """JVM-side flattening BEFORE the exchange: the nested spans column
     never crosses into Python (nested array<struct> → Arrow → object
     conversion is the dominant cost otherwise) and never crosses the
@@ -318,24 +317,19 @@ def narrow_columns(df: DataFrame, assume_sorted: bool = False
         .alias("status"),
         "spans",
     )
-    if assume_sorted:
-        # writers that guarantee offset order (our importer/generator/driver)
-        # skip the reshape+sort copy entirely
-        ordered = F.col("spans")
-    else:
-        # native sort_array over an offset-first struct reshape — no lambda
-        # comparator, whole-stage-friendly.  (coalesce(offset,0), pos)
-        # reproduces the library kernel's semantics exactly (engine.
-        # document_spans: stable sort by `offset or 0`): NULL offsets tie
-        # with 0 instead of sorting NULLS FIRST, and equal offsets keep
-        # input order instead of tie-breaking on kind/text.
-        ordered = F.sort_array(F.transform(
-            "spans",
-            lambda s, i: F.struct(
-                F.coalesce(s["offset"], F.lit(0)).alias("offset"),
-                i.alias("pos"), s["kind"].alias("kind"),
-                s["text"].alias("text"), s["media_ref"].alias("media_ref"),
-            )))
+    # native sort_array over an offset-first struct reshape — no lambda
+    # comparator, whole-stage-friendly.  (coalesce(offset,0), pos)
+    # reproduces the library kernel's semantics exactly (engine.
+    # document_spans: stable sort by `offset or 0`): NULL offsets tie
+    # with 0 instead of sorting NULLS FIRST, and equal offsets keep
+    # input order instead of tie-breaking on kind/text.
+    ordered = F.sort_array(F.transform(
+        "spans",
+        lambda s, i: F.struct(
+            F.coalesce(s["offset"], F.lit(0)).alias("offset"),
+            i.alias("pos"), s["kind"].alias("kind"),
+            s["text"].alias("text"), s["media_ref"].alias("media_ref"),
+        )))
     return pre.select(
         "doc_id",
         "status",
@@ -477,7 +471,6 @@ def extract_spans(
     num_partitions: int | None = None,
     salt: bool = True,
     side: SideTables | None = None,
-    assume_sorted: bool = False,
 ) -> DataFrame:
     """(doc_id, spans[, status]) → (doc_id, spans, n_input_bytes, ok).
 
@@ -490,14 +483,14 @@ def extract_spans(
     if side is None:
         side = broadcast_side_tables(df.sparkSession, oembed_df, media_df,
                                      context_store)
-    narrow = narrow_columns(df, assume_sorted=assume_sorted)
+    narrow = narrow_columns(df)
     if salt:
         narrow = _salted(narrow, num_partitions)
     return _map_kernel(narrow, side)
 
 
 # --------------------------------------------------------------------------
-# oembed join — the 10^12-doc regime
+# the join regime — side tables joined, not broadcast (10^12 docs)
 
 NARROW_HREF = ("doc_id string, status int, url string, html string, "
                "media_refs array<string>, media_kinds array<string>, "
@@ -549,32 +542,6 @@ def _join_oembed(narrow: DataFrame, oembed_df: DataFrame,
             .select(*narrow.columns, "o_status", "ctype", "body"))
 
 
-def extract_spans_twopass(
-    df: DataFrame,
-    oembed_df: DataFrame,
-    context_store: dict | None = None,
-    media_df: DataFrame | None = None,
-    num_partitions: int | None = None,
-    assume_sorted: bool = False,
-) -> DataFrame:
-    """``extract_spans`` for the regime where the oembed corpus is too
-    large to broadcast (at 10^12 documents the sub-request table is
-    billions of rows).
-
-    Plan: an href pass parses each document's metadata for its oembed
-    link, the oembed table left-joins the rows on that href — a plain
-    distributed equi-join, no driver-side collect, no broadcast — and
-    the kernel runs once per document with the joined payload passed
-    per row.  Output is bit-identical to the broadcast path
-    (tests/test_twopass_oembed.py).
-    """
-    side = broadcast_side_tables(df.sparkSession, None, media_df,
-                                 context_store)
-    rows = _join_oembed(narrow_columns(df, assume_sorted=assume_sorted),
-                        oembed_df, num_partitions)
-    return _map_kernel(_salted(rows, num_partitions), side)
-
-
 MEDIA_TEXT = ("doc_id string, media_ref string, media_text string, "
               "pdf_text string, media_err string")
 
@@ -605,30 +572,17 @@ def _media_texts(pairs: DataFrame) -> DataFrame:
     return map_rows(pairs, MEDIA_TEXT, open_rows)
 
 
-def extract_spans_media_join(
-    df: DataFrame,
-    media_df: DataFrame,
-    oembed_df: DataFrame | None = None,
-    context_store: dict | None = None,
-    num_partitions: int | None = None,
-    assume_sorted: bool = False,
-    join_oembed: bool = False,
-) -> DataFrame:
-    """``extract_spans`` for the regime where the media-payload corpus
-    is too large to broadcast (binary image/pdf payloads at 10^12 docs).
-    With ``join_oembed=True`` the oembed side goes through the oembed
-    shuffle join as well — zero broadcast side tables anywhere.
+def _join_media(rows: DataFrame, narrow: DataFrame,
+                media_df: DataFrame) -> DataFrame:
+    """``rows`` plus ``media_texts``, left-joined on doc_id: each doc's
+    list of ``MEDIA_TEXT`` rows, its media spans' texts as the broadcast
+    path computes them.
 
-    Plan: the (doc_id, media_ref) pairs explode out of the narrow rows
-    and equi-join the media table on media_ref (both sides shuffle on
-    the key — payload bytes never touch the driver); a first Arrow stage
-    runs the header readers per payload.  Each doc's media texts group
-    into one list that left-joins its narrow row by doc_id (after the
-    oembed payload, when joined), and the one kernel pass fills its
-    media placeholders from that list.  Output is bit-identical to the
-    broadcast path (tests/test_twopass_oembed.py).
-    """
-    narrow = narrow_columns(df, assume_sorted=assume_sorted)
+    The (doc_id, media_ref) pairs explode out of ``narrow``, the
+    ``narrow_columns`` rows ``rows`` was built from, and equi-join the
+    media table on media_ref (both sides shuffle on the key — payload
+    bytes never touch the driver); one Arrow stage runs the header
+    readers per payload, and each doc's texts group into one list."""
     # distinct BEFORE the join: a doc repeating a media_ref must not fan the
     # payload join out into a cross product (the broadcast dict naturally
     # dedupes); the media side gets the same deterministic one-row-per-ref
@@ -653,16 +607,44 @@ def extract_spans_media_join(
                    "media_ref", "left")
              .select("doc_id", "media_ref", "media_kind", "ctype",
                      "payload"))
-
+    # NULL-safe on doc_id, so a NULL-id doc keeps its texts: the keys are
+    # the (coalesce, isnull) pair Spark plans `<=>` as, and the texts
+    # group on that same pair, so they arrive partitioned for the join
+    # (grouped on doc_id, an `eqNullSafe` join shuffles them again)
     texts = (_media_texts(pairs)
-             .groupBy("doc_id")
+             .groupBy(F.coalesce("doc_id", F.lit("")).alias("t_id"),
+                      F.isnull("doc_id").alias("t_null"))
              .agg(F.collect_list(F.struct(
                  "media_ref", "media_text", "pdf_text", "media_err"))
                  .alias("media_texts")))
-    if join_oembed and oembed_df is not None:
-        narrow = _join_oembed(narrow, oembed_df, num_partitions)
-        oembed_df = None
-    side = broadcast_side_tables(df.sparkSession, oembed_df, None,
-                                 context_store)
-    rows = narrow.join(texts, "doc_id", "left")
+    key = F.coalesce(rows.doc_id, F.lit(""))
+    return (rows.join(texts, (key == texts.t_id)
+                      & (rows.doc_id.isNull() == texts.t_null), "left")
+            .select(*rows.columns, "media_texts"))
+
+
+def extract_spans_joined(
+    df: DataFrame,
+    oembed_df: DataFrame | None = None,
+    media_df: DataFrame | None = None,
+    context_store: dict | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """``extract_spans`` for the regime where the side tables are too
+    large to broadcast (at 10^12 documents the oembed corpus is billions
+    of rows and the media payloads most of the input bytes).  Every side
+    table given is joined; only ``context_store`` is broadcast.
+
+    Plan: the oembed table left-joins the rows on each document's oembed
+    href (``_join_oembed``); each doc's media texts (``_join_media``)
+    left-join its row on doc_id, after the oembed payload when both are
+    given; then the one kernel pass.  Output is bit-identical to the
+    broadcast path (tests/test_twopass_oembed.py).
+    """
+    side = broadcast_side_tables(df.sparkSession, None, None, context_store)
+    narrow = rows = narrow_columns(df)
+    if oembed_df is not None:
+        rows = _join_oembed(narrow, oembed_df, num_partitions)
+    if media_df is not None:
+        rows = _join_media(rows, narrow, media_df)
     return _map_kernel(_salted(rows, num_partitions), side)

@@ -296,18 +296,12 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
 
         def extract(sel):
             return pipeline.extract_spans(sel, side=side())
-    # 10^12-doc regime: side tables too large to broadcast — oembed via
-    # href pass + equi-join, media payloads via explode + equi-join
-    # (pipeline.py)
-    elif media_df is not None:
-        extract = partial(pipeline.extract_spans_media_join,
-                          media_df=media_df, oembed_df=oembed_df,
-                          join_oembed=True)
-    elif oembed_df is not None:
-        extract = partial(pipeline.extract_spans_twopass,
-                          oembed_df=oembed_df)
     else:
-        extract = pipeline.extract_spans
+        # 10^12-doc regime: side tables too large to broadcast — oembed
+        # via href pass + equi-join, media payloads via explode +
+        # equi-join (pipeline.py)
+        extract = partial(pipeline.extract_spans_joined,
+                          oembed_df=oembed_df, media_df=media_df)
 
     def stage(part, bucket_of, observe):
         sel = part.select("doc_id", "spans",

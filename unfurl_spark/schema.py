@@ -26,7 +26,8 @@ DOCUMENTS_RAW = StructType([
 
 # output of the extract stage: same shape + per-doc lineage metrics
 EXTRACTED = StructType([
-    StructField("doc_id", StringType(), nullable=False),
+    # nullable: a NULL-id input document is one more lineage row
+    StructField("doc_id", StringType()),
     StructField("spans", ArrayType(SPAN), nullable=False),
     StructField("n_input_bytes", LongType()),
     StructField("ok", StringType()),  # 'ok' | error class name
