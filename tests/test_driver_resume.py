@@ -171,14 +171,15 @@ def test_unknown_side_mode_rejected(spark, corpus, tmp_path):
 def test_side_tables_built_once_per_job(spark, corpus, tmp_path,
                                         monkeypatch):
     """Broadcast side tables are built once per job, not per chunk, and
-    not at all by a fully resumed run; a worker keeps only the side-table
-    set in current use, not every set it ever loaded."""
+    not at all by a fully resumed run; a worker task of a later job holds
+    only that job's side-table set, not every set its worker ever
+    loaded (PySpark's per-worker broadcast registry)."""
     real = pipeline_mod.broadcast_side_tables
-    calls = {"n": 0}
+    built = []
 
     def counted(*args, **kwargs):
-        calls["n"] += 1
-        return real(*args, **kwargs)
+        built.append(real(*args, **kwargs))
+        return built[-1]
 
     monkeypatch.setattr(pipeline_mod, "broadcast_side_tables", counted)
 
@@ -189,24 +190,71 @@ def test_side_tables_built_once_per_job(spark, corpus, tmp_path,
                        n_buckets=4, buckets_per_job=1, run_id=run_id)
 
     assert len(run(tmp_path / "a", "s1")["processed_buckets"]) == 4
-    assert calls["n"] == 1
+    assert len(built) == 1
     assert run(tmp_path / "a", "s2")["processed_buckets"] == []
-    assert calls["n"] == 1          # fully resumed: nothing built
+    assert len(built) == 1          # fully resumed: nothing built
     run(tmp_path / "b", "s3")
-    assert calls["n"] == 2
+    assert len(built) == 2
 
-    def probe(batches):
-        from unfurl_spark.operators import pipeline
+    # the probe's tasks carry the last job's set, as that job's kernel
+    # tasks did, on workers that ran both jobs' kernels
+    last = (built[-1].oembed, built[-1].media, built[-1].contexts)
 
-        for _ in batches:
-            pass
-        yield pa.RecordBatch.from_pylist(
-            [{"sets": len(pipeline._WORKER_BROADCAST_CACHE)}])
+    def open_rows():
+        from pyspark.core.broadcast import _broadcastRegistry
+
+        oe, med, _ = (b.value for b in last)     # read as the kernel does
+        return lambda _id: [(sorted(_broadcastRegistry), bool(oe and med))]
 
     n = spark.sparkContext.defaultParallelism
-    sets = [r["sets"] for r in spark.range(0, n, 1, n)
-            .mapInArrow(probe, "sets long").collect()]
-    assert max(sets) == 1   # the probe reached workers that ran the kernel
+    rows = pipeline_mod.map_rows(spark.range(0, n, 1, n),
+                                 "held array<long>, loaded boolean",
+                                 open_rows).collect()
+    ids = sorted(b._jbroadcast.id() for b in last)
+    assert [tuple(r) for r in rows] == [(ids, True)] * n
+
+
+def test_reused_worker_loads_each_side_table_once(spark):
+    """Over 3 × defaultParallelism one-row tasks that carry the same side
+    tables, every task a worker runs after its first finds each table's
+    value already loaded: loads are counted per worker by a
+    ``Broadcast.load_from_path`` wrapper that each worker's first task
+    installs, and that first task loads each of the 3 tables once."""
+    sc = spark.sparkContext
+    expected = ({"https://ex.com/oembed": (200, "application/json", "{}")},
+                {"a.png": ("image/png", b"\x89PNG")}, None)
+    tables = tuple(sc.broadcast(v) for v in expected)
+
+    def open_rows():
+        from pyspark.core.broadcast import Broadcast
+
+        loads = getattr(Broadcast.load_from_path, "loads", None)
+        first = loads is None
+        if first:
+            real = Broadcast.load_from_path
+
+            def counted(self, path):
+                counted.loads[0] += 1
+                return real(self, path)
+
+            counted.loads = loads = [0]
+            Broadcast.load_from_path = counted
+        oe, med, ctx = (b.value for b in tables)
+        seen, loads[0] = loads[0], 0
+        read = (oe, med, ctx) == expected
+        return lambda _id: [(first, seen, read)]
+
+    n = sc.defaultParallelism
+    rows = pipeline_mod.map_rows(
+        spark.range(0, 3 * n, 1, 3 * n),
+        "first boolean, loads long, read boolean", open_rows).collect()
+    later = [r for r in rows if not r["first"]]
+    assert len(rows) == 3 * n
+    assert all(r["read"] for r in rows)
+    assert [r["loads"] for r in rows if r["first"]] == \
+        [3] * (len(rows) - len(later))
+    assert later                      # some worker ran more than one task
+    assert [r["loads"] for r in later] == [0] * len(later)
 
 
 def _with_failing_doc(spark, corpus, tmp_path, n_docs):

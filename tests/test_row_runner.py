@@ -50,11 +50,12 @@ NARROW_ROWS = [
     ("d4", 200, "https://ex.com/4", "<html><title>x", ["gone.png"],
      ["media"]),
 ]
-OEMBED_JOINED = pa.schema([*NARROW, ("o_status", pa.int32()),
-                           ("ctype", pa.string()), ("body", pa.string())])
-OEMBED_JOINED_ROWS = [(*NARROW_ROWS[0], 200, "application/json+oembed",
-                       '{"title": "From oembed"}'),
-                      (*NARROW_ROWS[2], None, None, None)]
+OEMBED_JOINED = pa.schema([*NARROW, ("oembed_href", pa.string()),
+                           ("o_status", pa.int32()), ("ctype", pa.string()),
+                           ("body", pa.string())])
+OEMBED_JOINED_ROWS = [(*NARROW_ROWS[0], _OEMBED, 200,
+                       "application/json+oembed", '{"title": "From oembed"}'),
+                      (*NARROW_ROWS[2], None, None, None, None)]
 PAIRS = pa.schema([("doc_id", pa.string()), ("media_ref", pa.string()),
                    ("media_kind", pa.string()), ("ctype", pa.string()),
                    ("payload", pa.binary())])

@@ -17,6 +17,7 @@ Usage: python3 tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -30,6 +31,23 @@ def fmt_plan(df) -> str:
     """formatted mode for human display."""
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
+
+
+_IDS = re.compile(r"(#|plan_id=)(\d+)")
+
+
+def stable_ids(plan: str) -> str:
+    """``plan`` with its expression ids (``#123``) and exchange plan ids
+    (``plan_id=45``) renumbered from 1 in order of first appearance: the
+    session-global counters behind them shift with every query run
+    before, so raw ids would make every regenerated plan differ."""
+    ids: dict = {}
+
+    def renumber(m):
+        kind = ids.setdefault(m.group(1), {})
+        return m.group(1) + str(kind.setdefault(m.group(2), len(kind) + 1))
+
+    return _IDS.sub(renumber, plan)
 
 
 def simple_plan(df) -> str:
@@ -221,7 +239,7 @@ def main() -> int:
         "Asserted properties per query; full `explain(formatted)` output "
         "below each.\nRegenerate with `python3 tools/plan_audit.py` "
         "(add `--cluster` for the deployment config profile).\n",
-        f"\nAudited under `session(profile="
+        f"\nAudited under `session(profile=\""
         f"{'cluster' if profile == 'cluster' else 'local'}\")` — r5 "
         "verified the shapes are identical across both profiles at "
         "sf0.01 (only scan split sizing differs).\n",
@@ -254,7 +272,7 @@ def main() -> int:
             f"| {name} | {len(checks) - n_fail}/{len(checks)} | "
             f"{'PASS' if n_fail == 0 else 'FAIL'} |")
         if name in CHECKS:
-            shown = fmt_plan(df)      # one-node-per-line form
+            shown = stable_ids(fmt_plan(df))  # one-node-per-line form
             detail_sections.append(
                 f"\n## {name}\n\n| property | status |\n|---|---|\n"
                 + "\n".join(rows)
@@ -279,7 +297,7 @@ def main() -> int:
         docs = spark.read.parquet(corpus["documents_raw"])
         out = extract_spans(docs)
         plan = simple_plan(out)
-        shown = fmt_plan(out)
+        shown = stable_ids(fmt_plan(out)).replace(td, "<tmp>")
     rows = []
     for label, pred in PIPELINE_CHECKS:
         ok = bool(pred(plan))

@@ -8,6 +8,11 @@ fallback.  It is deliberately free of I/O: sub-request documents (oembed
 payloads, remote JSON-LD contexts) arrive as arguments, so on Spark they
 come from broadcast/joined side tables and the kernel runs Arrow-batched
 with no executor network access.
+
+The HTML plugin after the parse is written once, ``_website``: the
+reference-parity path (``scrape_html``) and the Spark kernel's span path
+(``flat_document_spans``) differ only in the parse they run before it
+and in what they do with the website it returns.
 """
 
 from __future__ import annotations
@@ -53,34 +58,36 @@ def parse_oembed(status: int, ctype: str, body: str | bytes | None) -> dict | No
     return None
 
 
-def scrape_html(url: str, status: int, html_text: str,
-                oembed: dict | None = None,
-                context_store: dict | None = None,
-                oembed_lookup=None) -> dict:
-    """The HTML plugin for one page (unfurl-html/src/index.ts:41-87).
-
-    ``oembed_lookup(href) -> (status, ctype, body) | None`` emulates the
-    record-scoped sub-request from a pre-joined side table.
-    """
-    metadata = parse_html(html_text, url)
-    if metadata is None:
-        return {"type": "website", "url": url}
-
-    docs = (to_array(metadata.get("jsonld"))
-            + to_array(metadata.get("rdfa"))
-            + to_array(metadata.get("microdata")))
-    graph = normalize_jsonld(docs, url, context_store)
-
-    if oembed is None and status == 200 and oembed_lookup is not None:
-        href = find_oembed_href(metadata)
-        if href:
-            sub = oembed_lookup(href)
+def _website(url: str, status: int, metadata: dict | None,
+             context_store: dict | None, oembed_lookup) -> dict:
+    """The HTML plugin after the parse (unfurl-html/src/index.ts:41-87,
+    :92-122): the JSON-LD graph, the oembed sub-request, the field
+    extractors.  ``oembed_lookup(href) -> (status, ctype, body) | None``
+    answers the sub-request from a side table; it is asked only for a
+    status-200 page that names an oembed href.  ``metadata`` None (the
+    parse failed) gives the bare website."""
+    graph = oembed = None
+    if metadata is not None:
+        docs = (to_array(metadata.get("jsonld"))
+                + to_array(metadata.get("rdfa"))
+                + to_array(metadata.get("microdata")))
+        graph = normalize_jsonld(docs, url, context_store)
+        if status == 200 and oembed_lookup is not None:
+            href = find_oembed_href(metadata)
+            sub = None if href is None else oembed_lookup(href)
             if sub is not None:
                 oembed = parse_oembed(*sub)
-    elif status != 200:
-        oembed = None
-
     return extract_website(url, metadata, graph, oembed)
+
+
+def scrape_html(url: str, status: int, html_text: str,
+                context_store: dict | None = None,
+                oembed_lookup=None) -> dict:
+    """The HTML plugin for one page (unfurl-html/src/index.ts:41-87):
+    ``parse_html``, then ``_website``.  ``oembed_lookup`` emulates the
+    record-scoped oembed sub-request (see ``_website``)."""
+    return _website(url, status, parse_html(html_text, url), context_store,
+                    oembed_lookup)
 
 
 def document_spans(doc_id: str, spans: list[dict],
@@ -118,19 +125,17 @@ def flat_document_spans(url: str, html_text: str, status: int,
                         oembed_store: dict | None = None,
                         context_store: dict | None = None,
                         media_store: dict | None = None,
-                        oembed_payload: tuple | None = None,
                         media_kinds: list | None = None) -> list[dict]:
     """Flat-column kernel: (url, reassembled html, status, media refs) →
     ordered output spans.  This is the shape the Spark stage feeds after
     JVM-side span flattening (operators/pipeline.py).
 
-    Oembed resolution has two scale regimes: ``oembed_store`` is the
-    broadcast-dictionary path (side table fits executors);
-    ``oembed_payload`` is the shuffle-join path — the caller joined the
-    oembed document to this row and passes its (status, ctype, body)
-    directly (the oembed join of extract_spans_joined, whose href pass
-    found the same href with ``find_oembed_href``).  Every regime calls
-    this once per document.
+    The page is ``parse_html_full`` (metadata and the body-text blocks in
+    one pass) plus ``_website`` — the same plugin body ``scrape_html``
+    runs — with ``oembed_store`` (discovery href → (status, ctype, body))
+    as its oembed lookup.  Both scale regimes pass a store: the broadcast
+    side table, or under the oembed join the one entry the join matched
+    to this document.  Every regime calls this once per document.
     """
     from .content import classify_blocks
     from .htmlmeta import parse_html_full
@@ -143,32 +148,15 @@ def flat_document_spans(url: str, html_text: str, status: int,
 
     if html_text:
         metadata, raw_blocks = parse_html_full(html_text, url)
-        oembed = None
-        jsonld_blocks: list[str] = []
-        if metadata is not None:
-            jsonld_blocks = metadata.get("jsonld_blocks", [])
-            if status == 200 and (oembed_store is not None
-                                  or oembed_payload is not None):
-                href = find_oembed_href(metadata)
-                if href is not None:
-                    if oembed_payload is not None:
-                        oembed = parse_oembed(*oembed_payload)
-                    elif oembed_store is not None and href in oembed_store:
-                        oembed = parse_oembed(*oembed_store[href])
-            docs = (to_array(metadata.get("jsonld"))
-                    + to_array(metadata.get("rdfa"))
-                    + to_array(metadata.get("microdata")))
-            graph = normalize_jsonld(docs, url, context_store)
-        else:
-            graph = None
-        site = extract_website(url, metadata, graph, oembed)
+        site = _website(url, status, metadata, context_store,
+                        None if oembed_store is None else oembed_store.get)
         if site.get("headline"):
             emit("title", site["headline"])
         if site.get("description"):
             emit("description", site["description"])
         for img in site.get("image") or []:
             emit("og_image", img.get("description") or "", img.get("url"))
-        for block in jsonld_blocks:
+        for block in (metadata or {}).get("jsonld_blocks", []):
             emit("jsonld", block)
         for block in classify_blocks(raw_blocks):
             emit("body_text", block)
@@ -212,7 +200,6 @@ def media_span_texts(ref: str, ctype: str | None, payload: bytes,
 def scrape_document(url: str, status: int, headers: dict,
                     body_text: str | None,
                     body_bytes: bytes | None = None,
-                    oembed: dict | None = None,
                     context_store: dict | None = None,
                     oembed_lookup=None,
                     plugins: tuple = ("html",)) -> dict:
@@ -223,8 +210,8 @@ def scrape_document(url: str, status: int, headers: dict,
 
     for plugin in plugins:
         if plugin == "html" and mime == "text/html":
-            return scrape_html(url, status, body_text or "", oembed,
-                               context_store, oembed_lookup)
+            return scrape_html(url, status, body_text or "", context_store,
+                               oembed_lookup)
         if plugin == "exif" and mime.startswith("image/"):
             from .media import exif_image
             return exif_image(url, body_bytes or b"", mime)

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pipeline import _bvalues, _salted, map_rows, narrow_columns
+from .pipeline import _salted, map_rows, narrow_columns
 
 
 def _unresolved_contexts(narrow: DataFrame, b_ctx) -> DataFrame:
@@ -38,7 +38,7 @@ def _unresolved_contexts(narrow: DataFrame, b_ctx) -> DataFrame:
             context_resolvable,
         )
 
-        (store,) = _bvalues(b_ctx)
+        store = b_ctx.value
 
         def row(doc_id, status, url, html, *media):
             if not html:

@@ -24,8 +24,10 @@ join's href pass (`_oembed_hrefs`), the media join's header readers
 a row function run by one Arrow runner, `map_rows`.  Every regime ends
 in the same tail, `_map_kernel(_salted(rows, n), side)`: the two
 regimes differ only in what is joined onto the narrow rows before it
-(a joined oembed payload, the doc's joined media texts), and the kernel
-reads which from the row's arity.
+(a joined oembed href and payload, the doc's joined media texts), and
+the kernel reads which from the row's arity.  Either way the document
+kernel takes its oembed document through one input, a store: the
+broadcast table, or the one entry the join matched.
 One kernel pass per document in every regime, plus one metadata parse
 per document under the oembed join.
 """
@@ -52,30 +54,6 @@ from ..schema import EXTRACTED
 # batches cost ~1.7× in per-batch crossing overhead.  Truly giant documents
 # are byte-capped upstream (S3 projection) before the Python stage.
 DEFAULT_ARROW_BATCH = 2048
-
-# Per-worker-process cache of deserialized broadcast values.  PySpark
-# re-reads a broadcast's pickle file on EVERY task (the Broadcast object is
-# recreated with each task's closure); for multi-MB side tables that costs
-# as much as the actual kernel work.  Worker processes are reused across
-# tasks, so a module-level cache keyed by the broadcast file paths
-# amortizes the load to once per worker.  It holds one entry, the
-# broadcast set in current use: a worker that meets another set (the next
-# job's side tables) drops the old one instead of keeping every store it
-# ever loaded for the rest of its life.
-_WORKER_BROADCAST_CACHE: dict = {}
-
-
-def _bvalues(*bs) -> tuple:
-    """The values of broadcasts ``bs`` (``None`` reads ``None``), loaded
-    once per worker for as long as this set stays the one in use."""
-    key = tuple(None if b is None else getattr(b, "_path", None) or id(b)
-                for b in bs)
-    if key not in _WORKER_BROADCAST_CACHE:
-        _WORKER_BROADCAST_CACHE.clear()
-        _WORKER_BROADCAST_CACHE[key] = tuple(
-            None if b is None else b.value for b in bs)
-    return _WORKER_BROADCAST_CACHE[key]
-
 
 # The per-task fixed cost of a Python worker.  PySpark calls
 # ``importlib.invalidate_caches()`` at the start of every task
@@ -417,30 +395,37 @@ def _map_kernel(narrow: DataFrame, side: SideTables) -> DataFrame:
     regime.
 
     The kernel always gets the broadcast stores in ``side`` (an absent
-    table is a broadcast ``None``).  After the six narrow columns, the
-    row's arity says what was joined onto it: the per-row (o_status,
-    ctype, body) oembed payload (the oembed join), then the doc's list
-    of ``MEDIA_TEXT`` rows (the media join), which fill the kernel's
-    media placeholders (``_fill_media``)."""
+    table is a broadcast ``None``), read through ``Broadcast.value``:
+    PySpark keeps a reused worker's broadcasts loaded while its tasks
+    carry the same set.  After the six narrow columns, the row's arity
+    says what was joined onto it: (oembed_href, o_status, ctype, body)
+    from the oembed join, then the doc's list of ``MEDIA_TEXT`` rows from
+    the media join, which fill the kernel's media placeholders
+    (``_fill_media``).  A row the oembed join gave a body gets the
+    one-entry store {oembed_href: (o_status, ctype, body)}; any other
+    row gets no store, since the broadcast store would answer it nothing
+    ``parse_oembed`` accepts."""
     b_oembed, b_media, b_ctx = side.oembed, side.media, side.contexts
 
     def open_rows():
         from ..functions.engine import flat_document_spans
 
-        oe, med, ctx = _bvalues(b_oembed, b_media, b_ctx)
+        oe, med, ctx = b_oembed.value, b_media.value, b_ctx.value
 
         def row(doc_id, status, url, html, media_refs, media_kinds,
                 *joined):
             html = html or ""
-            o_body = joined[2] if len(joined) >= 3 else None
-            payload = None if o_body is None else joined[:3]
-            texts = joined[-1] if len(joined) in (1, 4) else None
+            store = oe
+            if len(joined) >= 4:
+                href, o_status, ctype, body = joined[:4]
+                store = None if body is None else {
+                    href: (o_status, ctype, body)}
+            texts = joined[-1] if len(joined) in (1, 5) else None
             try:
                 spans = flat_document_spans(
                     url or str(doc_id), html, int(status),
-                    list(media_refs or ()), oembed_store=oe,
+                    list(media_refs or ()), oembed_store=store,
                     context_store=ctx, media_store=med,
-                    oembed_payload=payload,
                     media_kinds=list(media_kinds or ()))
                 ok = "ok"
             except Exception as e:  # noqa: BLE001 — per-doc isolation
@@ -523,14 +508,14 @@ def _oembed_hrefs(narrow: DataFrame) -> DataFrame:
 
 def _join_oembed(narrow: DataFrame, oembed_df: DataFrame,
                  num_partitions: int | None) -> DataFrame:
-    """``narrow_columns`` rows with the (o_status, ctype, body) of the
-    oembed document each names left-joined after the six narrow columns
-    (all NULL for a row that names none, or one the table lacks).  Both
-    sides shuffle on the href — the oembed table never touches the
-    driver.  A row that names no href (most documents) shuffles on its
-    doc_id instead, so those rows spread over the join's partitions
-    rather than meeting in one under a shared NULL key; the
-    ``isNotNull`` term keeps them from matching."""
+    """``narrow_columns`` rows with the (oembed_href, o_status, ctype,
+    body) of the oembed document each names left-joined after the six
+    narrow columns (the payload all NULL for a row that names none, or
+    one the table lacks).  Both sides shuffle on the href — the oembed
+    table never touches the driver.  A row that names no href (most
+    documents) shuffles on its doc_id instead, so those rows spread over
+    the join's partitions rather than meeting in one under a shared NULL
+    key; the ``isNotNull`` term keeps them from matching."""
     oembed_side = dedup_on_key(
         oembed_df.select("ref", F.col("status").alias("o_status"),
                          "ctype", "body"),
@@ -539,7 +524,8 @@ def _join_oembed(narrow: DataFrame, oembed_df: DataFrame,
     key = F.coalesce(rows.oembed_href, rows.doc_id)
     return (rows.join(oembed_side, (key == oembed_side.ref)
                       & rows.oembed_href.isNotNull(), "left")
-            .select(*narrow.columns, "o_status", "ctype", "body"))
+            .select(*narrow.columns, "oembed_href", "o_status", "ctype",
+                    "body"))
 
 
 MEDIA_TEXT = ("doc_id string, media_ref string, media_text string, "
