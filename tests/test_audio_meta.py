@@ -150,7 +150,7 @@ def test_id3v22_three_char_frames():
 
 
 def test_audio_metadata_operator(spark):
-    from unfurl_spark.functions.codecs import encode_wav
+    from encoders import encode_wav
     import numpy as np
     from unfurl_spark.functions.multimodal import audio_metadata
 
@@ -358,8 +358,8 @@ def test_pcm_metadata_header_only():
     sample data is gone; rate/channels/duration must survive)."""
     import numpy as np
 
-    from unfurl_spark.functions.codecs import encode_wav
-    from unfurl_spark.functions.codecs_ext import encode_aiff, encode_flac
+    from encoders import encode_wav
+    from encoders import encode_aiff, encode_flac
     from unfurl_spark.functions.media import pcm_metadata
 
     sig = (np.sin(np.arange(22050) / 20) * 8000).astype(np.int16)
@@ -386,8 +386,7 @@ def test_flac_picture_block_cover_art():
 
     import numpy as np
 
-    from unfurl_spark.functions.codecs import encode_png
-    from unfurl_spark.functions.codecs_ext import encode_flac
+    from encoders import encode_flac, encode_png
     from unfurl_spark.functions.media import embedded_cover, pcm_metadata
 
     sig = (np.sin(np.arange(2000) / 9) * 5000).astype(np.int16)
@@ -421,7 +420,7 @@ def test_rate_beyond_int32_degrades_one_row_not_the_batch(spark):
     import pyarrow as pa
 
     from perfbench.kernel_trace import _Capture
-    from unfurl_spark.functions.codecs import encode_wav
+    from encoders import encode_wav
     from unfurl_spark.functions.multimodal import audio_metadata
 
     good = encode_wav(8000, np.zeros((1600, 2), np.int16))

@@ -108,10 +108,12 @@ def test_mojibake_without_sniffing():
 def test_decode_never_raises_property():
     """Property: decode_html is total — arbitrary bytes with arbitrary
     content-type strings decode to SOME str, never raise."""
+    from datetime import timedelta
+
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    @settings(max_examples=200, deadline=None)
+    @settings(max_examples=200, deadline=timedelta(seconds=1))
     @given(st.binary(max_size=2048),
            st.one_of(st.none(), st.text(max_size=64)))
     def check(data, ctype):

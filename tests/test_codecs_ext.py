@@ -2,17 +2,14 @@
 
 import numpy as np
 import pytest
+from encoders import encode_apng, encode_flac, encode_ico, encode_png, encode_tiff
 
-from unfurl_spark.functions.codecs import CodecError, encode_png
+from unfurl_spark.functions.codecs import CodecError
 from unfurl_spark.functions.codecs_ext import (
     decode_apng_frames,
     decode_flac,
     decode_ico,
     decode_tiff,
-    encode_apng,
-    encode_flac,
-    encode_ico,
-    encode_tiff,
     svg_info,
 )
 from unfurl_spark.functions.media import _sniff
@@ -367,11 +364,13 @@ def test_exif_entry_points_read_tiff():
 
 # --- property-based round-trips ---------------------------------------------
 
+from datetime import timedelta
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=25, deadline=timedelta(seconds=1))
 @given(st.integers(1, 40), st.integers(1, 40), st.integers(3, 4),
        st.integers(0, 2**32 - 1))
 def test_ico_roundtrip_property(w, h, ch, seed):
@@ -381,7 +380,7 @@ def test_ico_roundtrip_property(w, h, ch, seed):
     assert np.array_equal(out[:, :, :ch], img)
 
 
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=25, deadline=timedelta(seconds=1))
 @given(st.integers(1, 50), st.integers(1, 50),
        st.sampled_from(["none", "packbits", "lzw", "deflate"]),
        st.integers(0, 2**32 - 1))
@@ -392,7 +391,7 @@ def test_tiff_roundtrip_property(w, h, compression, seed):
     assert np.array_equal(out, img)
 
 
-@settings(max_examples=20, deadline=None)
+@settings(max_examples=20, deadline=timedelta(seconds=1))
 @given(st.integers(1, 3000), st.integers(1, 2), st.integers(0, 2**32 - 1),
        st.sampled_from([256, 1024, 4096]))
 def test_flac_roundtrip_property(n, ch, seed, blocksize):
@@ -405,7 +404,7 @@ def test_flac_roundtrip_property(n, ch, seed, blocksize):
     assert np.array_equal(out, sig)
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=15, deadline=timedelta(seconds=1))
 @given(st.integers(1, 16), st.integers(1, 16), st.integers(1, 5),
        st.integers(0, 2**32 - 1))
 def test_apng_roundtrip_property(w, h, nframes, seed):
@@ -421,7 +420,9 @@ def test_apng_roundtrip_property(w, h, nframes, seed):
 # --- AIFF --------------------------------------------------------------------
 
 def test_aiff_roundtrip_mono_stereo():
-    from unfurl_spark.functions.codecs_ext import decode_aiff, encode_aiff
+    from encoders import encode_aiff
+
+    from unfurl_spark.functions.codecs_ext import decode_aiff
     rng = np.random.default_rng(13)
     for rate in (8000, 44100):
         for shape in ((1000, 1), (777, 2)):
@@ -431,7 +432,9 @@ def test_aiff_roundtrip_mono_stereo():
 
 
 def test_aiff_sniff_features_and_garbage():
-    from unfurl_spark.functions.codecs_ext import decode_aiff, encode_aiff
+    from encoders import encode_aiff
+
+    from unfurl_spark.functions.codecs_ext import decode_aiff
     sig = _sig_smooth(2000).reshape(-1, 1)
     data = encode_aiff(22050, sig)
     assert _sniff(data) == "aiff"

@@ -136,8 +136,7 @@ def test_media_job_new_containers(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from unfurl_spark.functions.codecs_ext import (
-        encode_apng, encode_flac, encode_ico, encode_tiff)
+    from encoders import encode_apng, encode_flac, encode_ico, encode_tiff
 
     img = np.arange(24 * 32 * 3, dtype=np.uint8).reshape(24, 32, 3)
     frames = [np.full((8, 8, 4), v, np.uint8) for v in (10, 200)]

@@ -91,6 +91,8 @@ def test_adversarial_snippets(snippet):
 
 
 def test_hypothesis_markup_equivalence():
+    from datetime import timedelta
+
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -102,7 +104,7 @@ def test_hypothesis_markup_equivalence():
         "href", "content", "property", "og:title",
     ])
 
-    @settings(max_examples=300, deadline=None)
+    @settings(max_examples=300, deadline=timedelta(seconds=1))
     @given(st.lists(tokens, max_size=40))
     def check(parts):
         text = "".join(parts)

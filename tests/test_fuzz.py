@@ -7,6 +7,8 @@ test strategy on purpose: task-killing exceptions are the one failure
 mode a 1000-executor run cannot tolerate.)
 """
 
+from datetime import timedelta
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -27,7 +29,7 @@ markupish = st.text(
     max_size=400)
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=300, deadline=timedelta(seconds=1))
 @given(markupish)
 def test_parse_html_full_never_raises(text):
     metadata, blocks = parse_html_full(text, "http://fuzz.test/")
@@ -35,7 +37,7 @@ def test_parse_html_full_never_raises(text):
     assert isinstance(blocks, list)
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=timedelta(seconds=1))
 @given(markupish, st.integers(min_value=100, max_value=599))
 def test_flat_document_spans_never_raises(text, status):
     spans = flat_document_spans("http://fuzz.test/a", text, status, [])
@@ -44,7 +46,7 @@ def test_flat_document_spans_never_raises(text, status):
         assert s["offset"] == i  # order invariant holds on garbage too
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=timedelta(seconds=1))
 @given(st.binary(max_size=600))
 def test_media_readers_never_raise(data):
     for fn in (exiftool_image, exiftool_pdf):
@@ -56,7 +58,7 @@ def test_media_readers_never_raise(data):
 
 
 # seed corrupted-but-plausible containers: real magic bytes, garbage tails
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=timedelta(seconds=1))
 @given(st.sampled_from([b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff\xe1",
                         b"RIFF\x00\x00\x00\x00WEBP", b"%PDF-1.4\n"]),
        st.binary(max_size=300))
@@ -67,7 +69,7 @@ def test_truncated_containers_never_raise(magic, tail):
     assert isinstance(exiftool_pdf("http://f.test/x", data), dict)
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100, deadline=timedelta(seconds=1))
 @given(markupish,
        st.dictionaries(st.sampled_from(["content-type", "Content-Type"]),
                        st.sampled_from(["text/html", "image/png", "",
@@ -81,7 +83,7 @@ def test_scrape_document_never_raises(text, headers):
                                "audio", "link"}
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100, deadline=timedelta(seconds=1))
 @given(st.lists(st.tuples(markupish, st.integers(0, 500),
                           st.booleans()), max_size=20))
 def test_classify_blocks_never_raises(blocks):
@@ -123,7 +125,7 @@ def test_pdf_noop_escapes_and_outline_title():
 # round-5 kernels: metadata walkers return dicts (never raise); the
 # decode-class kernels may raise ONLY the typed codec errors their
 # operators catch per-row
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=timedelta(seconds=1))
 @given(st.binary(max_size=600))
 def test_r5_metadata_walkers_never_raise(data):
     from unfurl_spark.functions.media import (
@@ -140,7 +142,7 @@ def test_r5_metadata_walkers_never_raise(data):
     assert table is None or isinstance(table, list)
 
 
-@settings(max_examples=150, deadline=None)
+@settings(max_examples=150, deadline=timedelta(seconds=1))
 @given(st.sampled_from([b"OggS", b"fLaC", b"RIFF\x10\x00\x00\x00WAVE",
                         b"FORM\x00\x00\x00\x20AIFF", b"ID3\x03\x00\x00",
                         b"\x00\x00\x00\x18ftypisom"]),
@@ -159,7 +161,7 @@ def test_r5_truncated_audio_containers_never_raise(magic, tail):
     mjpeg_samples(data)
 
 
-@settings(max_examples=150, deadline=None)
+@settings(max_examples=150, deadline=timedelta(seconds=1))
 @given(st.binary(max_size=400))
 def test_svg_rasterizer_only_typed_errors(data):
     from unfurl_spark.functions.codecs import CodecError, CodecUnavailable

@@ -11,9 +11,10 @@ import struct
 
 import numpy as np
 import pytest
+from encoders import encode_jpeg_lossless
 
 from unfurl_spark.functions.codecs import CodecUnavailable
-from unfurl_spark.functions.jpegc import decode_jpeg, encode_jpeg_lossless
+from unfurl_spark.functions.jpegc import decode_jpeg
 
 RNG = np.random.default_rng(27)
 

@@ -91,7 +91,7 @@ def test_mkv_attached_cover_art():
     feed embedded_cover → decode_pixels real pixels for webm."""
     import numpy as np
 
-    from unfurl_spark.functions.codecs import encode_png
+    from encoders import encode_png
     from unfurl_spark.functions.media import embedded_cover
     from unfurl_spark.functions.multimodal import decode_pixels
 

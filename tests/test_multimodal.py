@@ -4,17 +4,17 @@ for containers needing external codecs, and the Arrow plumbing."""
 
 import numpy as np
 import pytest
-from pyspark.sql import Row
-
-from unfurl_spark.functions.codecs import (
-    CodecUnavailable,
+from encoders import (
     encode_bmp,
     encode_gif,
+    encode_jpeg,
     encode_png,
     encode_ppm,
     encode_wav,
 )
-from unfurl_spark.functions.jpegc import encode_jpeg
+from pyspark.sql import Row
+
+from unfurl_spark.functions.codecs import CodecUnavailable
 from unfurl_spark.functions.multimodal import (
     decode_media,
     decode_pixels,
@@ -40,7 +40,7 @@ def mixed(spark):
     flat = (rng.integers(0, 4, (24, 32, 3)) * 80).astype(np.uint8)
     wav = encode_wav(8000, rng.integers(-2000, 2000, 500).astype(np.int16))
     # a real (from-scratch encoded) lossy WebP keyframe: 2x2 MBs, DC mode
-    from unfurl_spark.functions.vp8 import encode_vp8, wrap_webp
+    from encoders import encode_vp8, wrap_webp
     mb = {"ymode": 0, "uvmode": 0, "bmodes": [0] * 16, "y2": [0] * 16,
           "y": [[0] * 16 for _ in range(16)],
           "u": [[0] * 16 for _ in range(4)],
@@ -177,7 +177,7 @@ def test_plan_is_arrow_no_per_row_python(spark, media):
 
 
 def test_sample_frames_real_gif_animation(spark):
-    from unfurl_spark.functions.codecs import encode_gif_anim
+    from encoders import encode_gif_anim
 
     f0 = np.full((8, 8, 3), 30, np.uint8)
     f1 = np.full((8, 8, 3), 120, np.uint8)

@@ -11,6 +11,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from encoders import encode_png, encode_wav
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from test_svgraster import _time_limit
@@ -19,7 +20,6 @@ from test_svgraster import _time_limit
 # which then runs in-process (building the kernel still needs a session)
 from perfbench.kernel_trace import _Capture
 from unfurl_spark.functions import multimodal
-from unfurl_spark.functions.codecs import encode_png, encode_wav
 from unfurl_spark.plans.driver import run_media_job
 from unfurl_spark.sources import tables
 

@@ -10,13 +10,13 @@ from pathlib import Path
 import numpy as np
 import pyarrow as pa
 import pytest
+from encoders import encode_gif_anim, encode_png
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 from test_pixel_pass import _mixed
 
 from perfbench.kernel_trace import _Capture
 from unfurl_spark.functions import multimodal
-from unfurl_spark.functions.codecs import encode_gif_anim, encode_png
 from unfurl_spark.operators import context_prepass, pipeline
 from unfurl_spark.schema import EXTRACTED
 

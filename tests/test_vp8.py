@@ -11,11 +11,12 @@ Two-sided verification:
 """
 import random
 
+import encoders as E
 import numpy as np
 import pytest
+import vp8sys
 
 import unfurl_spark.functions.vp8 as V
-from unfurl_spark.functions import vp8sys
 
 needs_libwebp = pytest.mark.skipif(
     not vp8sys.available(), reason="system libwebp not present")
@@ -46,7 +47,7 @@ def test_bool_coder_roundtrip():
     for _ in range(50):
         seq = [(rng.randint(0, 1), rng.randint(1, 255))
                for _ in range(rng.randint(1, 400))]
-        enc = V.BoolEncoder()
+        enc = E.BoolEncoder()
         for v, p in seq:
             enc.bool(v, p)
         data = enc.bytes()
@@ -65,7 +66,7 @@ def test_self_roundtrip_no_libwebp():
             mb["y2"][0] = 8
         mb["y"][5][1] = -20
         mbs.append(mb)
-    data = V.encode_vp8(3, 2, mbs, qi=40, filter_level=12)
+    data = E.encode_vp8(3, 2, mbs, qi=40, filter_level=12)
     y, u, v = V.decode_vp8_yuv(data)
     assert y.shape == (32, 48) and u.shape == (16, 24)
 
@@ -107,9 +108,9 @@ def test_parity_real_encoder_matrix():
 @needs_libwebp
 def test_parity_every_bmode_isolated():
     for b in range(10):
-        data = V.encode_vp8(1, 1, [_empty_mb(ymode=4, bmodes=[b] * 16)],
+        data = E.encode_vp8(1, 1, [_empty_mb(ymode=4, bmodes=[b] * 16)],
                             qi=60)
-        gy, gu, gv = vp8sys.webp_decode_yuv(V.wrap_webp(data))
+        gy, gu, gv = vp8sys.webp_decode_yuv(E.wrap_webp(data))
         my, mu, mv = V.decode_vp8_yuv(data)
         assert np.array_equal(my, gy), ("bmode", b)
         assert np.array_equal(mu, gu) and np.array_equal(mv, gv), b
@@ -144,9 +145,9 @@ def test_parity_adversarial_fuzz():
         fl = rng.choice([0, 5, 30, 63])
         ft = rng.choice([0, 1]) if fl else 0
         sh = rng.choice([0, 0, 3, 7])
-        data = V.encode_vp8(mw, mh, mbs, qi=rng.randint(0, 127),
+        data = E.encode_vp8(mw, mh, mbs, qi=rng.randint(0, 127),
                             filter_level=fl, filter_type=ft, sharpness=sh)
-        gy, gu, gv = vp8sys.webp_decode_yuv(V.wrap_webp(data))
+        gy, gu, gv = vp8sys.webp_decode_yuv(E.wrap_webp(data))
         my, mu, mv = V.decode_vp8_yuv(data)
         assert np.array_equal(my, gy), (trial, fl, ft, sh)
         assert np.array_equal(mu, gu) and np.array_equal(mv, gv), trial
@@ -251,12 +252,12 @@ def test_filter_level_zero_disables_filter_despite_seg_lf():
             for i in rng.sample(range(1, 16), 4):
                 mb["y"][sb][i] = rng.randint(-80, 80)
         mbs.append(mb)
-    plain = V.decode_vp8(V.encode_vp8(2, 2, mbs, qi=30, filter_level=0))
-    seg = V.decode_vp8(V.encode_vp8(2, 2, mbs, qi=30, filter_level=0,
+    plain = V.decode_vp8(E.encode_vp8(2, 2, mbs, qi=30, filter_level=0))
+    seg = V.decode_vp8(E.encode_vp8(2, 2, mbs, qi=30, filter_level=0,
                                     seg_lf_abs=[40, 40, 40, 40]))
     assert np.array_equal(plain, seg)
     # sanity: with a nonzero frame level the filter DOES run and the
     # absolute segment value drives it (different from the plain stream)
-    filt = V.decode_vp8(V.encode_vp8(2, 2, mbs, qi=30, filter_level=1,
+    filt = V.decode_vp8(E.encode_vp8(2, 2, mbs, qi=30, filter_level=1,
                                      seg_lf_abs=[40, 40, 40, 40]))
     assert not np.array_equal(plain, filt)

@@ -12,9 +12,11 @@ stay the honest CodecUnavailable boundary, asserted below.
 
 import glob
 import os
+from datetime import timedelta
 
 import numpy as np
 import pytest
+from encoders import encode_vp8l
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -24,7 +26,6 @@ from unfurl_spark.functions.vp8l import (
     CodecError,
     decode_vp8l,
     decode_webp,
-    encode_vp8l,
 )
 
 RNG = np.random.default_rng(2024)
@@ -266,7 +267,7 @@ def test_mutation_fuzz_total():
                 pass  # typed failure is the contract
 
 
-@settings(max_examples=30, deadline=None)
+@settings(max_examples=30, deadline=timedelta(seconds=1))
 @given(st.integers(1, 24), st.integers(1, 24), st.booleans(),
        st.integers(0, 6), st.randoms(use_true_random=False))
 def test_roundtrip_law(h, w, sg, cache, rnd):
@@ -286,7 +287,8 @@ def test_reference_lossy_fixtures_decode_for_real():
     corpus now decode to pixels (r3 verdict gap #1 closed); when the
     system libwebp is present the YUV reconstruction must be bit-exact
     against it."""
-    from unfurl_spark.functions import vp8sys
+    import vp8sys
+
     from unfurl_spark.functions.vp8 import decode_vp8_yuv
 
     pat = "/root/reference/packages/test/fixtures/*webp*/body"
@@ -348,10 +350,9 @@ def test_spark_decode_media_vp8l(spark):
 
 def test_webp_animation_roundtrip():
     """ANMF compositing: full-canvas frames round-trip with timestamps."""
-    from unfurl_spark.functions.vp8l import (
-        decode_webp_frames,
-        encode_webp_anim,
-    )
+    from encoders import encode_webp_anim
+
+    from unfurl_spark.functions.vp8l import decode_webp_frames
     rng = np.random.default_rng(2)
     frames = [rng.integers(0, 256, (10, 14, 4), dtype=np.uint8)
               for _ in range(4)]
@@ -366,7 +367,7 @@ def test_webp_animation_roundtrip():
 def test_webp_anim_sample_frames(spark):
     from pyspark.sql import Row
     from unfurl_spark.functions.multimodal import sample_frames
-    from unfurl_spark.functions.vp8l import encode_webp_anim
+    from encoders import encode_webp_anim
     rng = np.random.default_rng(5)
     frames = [rng.integers(0, 256, (8, 8, 4), dtype=np.uint8)
               for _ in range(6)]
@@ -384,10 +385,7 @@ def test_webp_anim_alpha_over_partially_transparent_canvas():
     PARTIALLY transparent canvas must weight the destination RGB by the
     destination alpha — a_out = a_s + a_d*(1-a_s), not max(a_d, a_s)."""
     import struct
-    from unfurl_spark.functions.vp8l import (
-        decode_webp_frames,
-        encode_vp8l,
-    )
+    from unfurl_spark.functions.vp8l import decode_webp_frames
 
     def chunk(tag, body):
         pad = b"\x00" if len(body) & 1 else b""

@@ -3,7 +3,7 @@
 The test golden — the engine never requires the library:
 tests/test_vp8.py encodes real VP8 *lossy* streams with
 ``webp_encode_rgba`` and requires the from-scratch decoder
-(functions/vp8.py) to reproduce libwebp's own YUV output bit-exactly.
+(``unfurl_spark/functions/vp8.py``) to reproduce libwebp's own YUV output bit-exactly.
 
 Everything is gated behind ``available()`` — no import-time failure
 when the library is absent.

@@ -65,7 +65,9 @@ def main() -> None:
     # relative to RFC 6386 §11.2 (libwebp: RD=4 VR=5 LD=6; RFC: LD=4
     # RD=5 VR=6) and its copy of the table is laid out in its own order.
     # Re-index both dimensions into RFC mode order (proven by the
-    # encode_vp8->libwebp differential ladder in tests/test_vp8.py).
+    # differential ladder in tests/test_vp8.py, which decodes streams
+    # from the fixture encoder tests/encoders.py::encode_vp8 with
+    # libwebp).
     rfc_to_lw = [0, 1, 2, 3, 6, 4, 5, 7, 8, 9]
     bmode = bytearray()
     for a in range(10):

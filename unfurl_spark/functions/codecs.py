@@ -16,8 +16,8 @@ formats are decodable with nothing beyond the standard library:
 
 All decoders return ``numpy.ndarray`` of shape (H, W, C) uint8 for
 images (C in {1,3,4}) and (n_samples, n_channels) int16 for audio.
-Encoders exist for every format so tests can synthesize round-trip
-fixtures without any external library.
+The package only decodes.  The round-trip tests write their fixtures
+with the encoders in ``tests/encoders.py``, without any external library.
 
 This mirrors the *role* of the reference's media plugins (container
 metadata at packages/unfurl-exif/src/index.ts:16-47 and
@@ -253,22 +253,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return img
 
 
-def encode_png(img: np.ndarray) -> bytes:
-    """Minimal encoder: 8-bit, filter 0, non-interlaced."""
-    img = np.ascontiguousarray(np.atleast_3d(img).astype(np.uint8))
-    h, w, c = img.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (struct.pack(">I", len(body)) + tag + body
-                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
-
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b""))
-
-
 # ---------------------------------------------------------------------------
 # GIF
 
@@ -312,50 +296,6 @@ def _lzw_decode(min_code_size: int, data: bytes,
             prev = entry
             if len(table) == (1 << code_size) and code_size < 12:
                 code_size += 1
-    return bytes(out)
-
-
-def _lzw_encode(min_code_size: int, pixels: bytes) -> bytes:
-    clear = 1 << min_code_size
-    end = clear + 1
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
-    code_size = min_code_size + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    run = b""
-    for px in pixels:
-        cand = run + bytes([px])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run])
-        table[cand] = next_code
-        next_code += 1
-        if next_code > (1 << code_size) and code_size < 12:
-            code_size += 1
-        if next_code >= 4096:
-            emit(clear)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = end + 1
-            code_size = min_code_size + 1
-        run = bytes([px])
-    if run:
-        emit(table[run])
-    emit(end)
-    if nbits:
-        out.append(acc & 0xFF)
     return bytes(out)
 
 
@@ -483,81 +423,6 @@ def decode_gif_frames(data: bytes, max_frames: int | None = None
         elif disposal == 3 and before is not None:
             canvas = before
     return frames
-
-
-def encode_gif(img: np.ndarray) -> bytes:
-    """Encoder for test fixtures: quantizes to a 256-color table built
-    from the image's distinct colors (must be ≤256)."""
-    img = np.atleast_3d(img.astype(np.uint8))
-    if img.shape[2] == 1:
-        img = np.repeat(img, 3, axis=2)
-    h, w, _ = img.shape
-    flat = img[:, :, :3].reshape(-1, 3)
-    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise CodecError("gif encoder: >256 distinct colors")
-    depth = max(1, int(np.ceil(np.log2(max(2, len(colors))))))
-    n = 1 << depth
-    table = np.zeros((n, 3), np.uint8)
-    table[:len(colors)] = colors
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
-    out += table.tobytes()
-    out += b"\x2C" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    min_code = max(2, depth)
-    out.append(min_code)
-    lzw = _lzw_encode(min_code, inverse.astype(np.uint8).tobytes())
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i:i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3B"
-    return bytes(out)
-
-
-def encode_gif_anim(frames: list[np.ndarray],
-                    delay_ms: int = 100) -> bytes:
-    """Animated-GIF encoder for test fixtures: one shared palette built
-    from all frames' distinct colors (≤256 total), one graphic-control
-    extension + full-screen image descriptor per frame, disposal 'leave'."""
-    if not frames:
-        raise CodecError("gif encoder: no frames")
-    norm = []
-    for f in frames:
-        f = np.atleast_3d(f.astype(np.uint8))
-        if f.shape[2] == 1:
-            f = np.repeat(f, 3, axis=2)
-        norm.append(f[:, :, :3])
-    h, w, _ = norm[0].shape
-    if any(f.shape != (h, w, 3) for f in norm):
-        raise CodecError("gif encoder: frames must share one size")
-    allpx = np.concatenate([f.reshape(-1, 3) for f in norm])
-    colors, inverse = np.unique(allpx, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise CodecError("gif encoder: >256 distinct colors")
-    depth = max(1, int(np.ceil(np.log2(max(2, len(colors))))))
-    n = 1 << depth
-    table = np.zeros((n, 3), np.uint8)
-    table[:len(colors)] = colors
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
-    out += table.tobytes()
-    min_code = max(2, depth)
-    per = h * w
-    for fi in range(len(norm)):
-        out += b"\x21\xF9\x04"  # GCE: disposal=1 (leave), no transparency
-        out += bytes([0x04]) + struct.pack("<H", delay_ms // 10) + b"\x00\x00"
-        out += b"\x2C" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out.append(min_code)
-        idx = inverse[fi * per:(fi + 1) * per].astype(np.uint8)
-        lzw = _lzw_encode(min_code, idx.tobytes())
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i:i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00"
-    out += b"\x3B"
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -706,22 +571,6 @@ def decode_bmp(data: bytes) -> np.ndarray:
     raise CodecError(f"bmp: {bpp}-bit/compression {comp} unsupported")
 
 
-def encode_bmp(img: np.ndarray) -> bytes:
-    img = np.atleast_3d(img.astype(np.uint8))
-    if img.shape[2] == 1:
-        img = np.repeat(img, 3, axis=2)
-    h, w, _ = img.shape
-    bgr = img[:, :, [2, 1, 0]][::-1]
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), np.uint8)
-    rows[:, :w * 3] = bgr.reshape(h, -1)
-    body = rows.tobytes()
-    header = (b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-              + struct.pack("<IiihHIIiiII", 40, w, h, 1, 24, 0,
-                            len(body), 2835, 2835, 0, 0))
-    return header + body
-
-
 @total
 def decode_ppm(data: bytes) -> np.ndarray:
     magic = data[:2]
@@ -752,14 +601,6 @@ def decode_ppm(data: bytes) -> np.ndarray:
     if len(px) < w * h * nch:
         raise CodecError("ppm: truncated pixels")
     return px.reshape(h, w, nch)
-
-
-def encode_ppm(img: np.ndarray) -> bytes:
-    img = np.atleast_3d(img.astype(np.uint8))
-    h, w, c = img.shape
-    if c == 1:
-        return b"P5 %d %d 255\n" % (w, h) + img.tobytes()
-    return b"P6 %d %d 255\n" % (w, h) + img[:, :, :3].tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -798,18 +639,6 @@ def decode_wav(data: bytes) -> tuple[int, np.ndarray]:
         raise CodecError("wav: missing fmt/data chunk")
     n = len(samples) // channels * channels
     return rate, samples[:n].reshape(-1, channels)
-
-
-def encode_wav(rate: int, samples: np.ndarray) -> bytes:
-    samples = np.asarray(samples, "<i2")
-    if samples.ndim == 1:  # mono vector → (n, 1); never transpose 2-D
-        samples = samples[:, None]
-    n, ch = samples.shape
-    body = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-    return (b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-            + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(body)) + body)
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,8 @@ image container (its IFD structure is already walked for EXIF in
 Formats implemented from their public specifications: ICO/DIB (MS BMP
 file format docs), APNG (W3C PNG 3rd ed. / Mozilla APNG spec), FLAC
 (RFC 9639), TIFF 6.0 (Adobe spec, incl. PackBits and TIFF-variant LZW).
+Only the decoders ship; the tests' fixture encoders for these formats
+are in ``tests/encoders.py``.
 """
 
 from __future__ import annotations
@@ -29,14 +31,14 @@ import zlib
 
 import numpy as np
 
-from .codecs import CodecError, _check_dims, decode_png, encode_png, total
+from .codecs import CodecError, _check_dims, decode_png, total
 
 __all__ = [
-    "decode_ico", "encode_ico",
-    "decode_apng_frames", "encode_apng",
-    "decode_flac", "encode_flac",
-    "decode_tiff", "encode_tiff",
-    "decode_aiff", "encode_aiff",
+    "decode_ico",
+    "decode_apng_frames",
+    "decode_flac",
+    "decode_tiff",
+    "decode_aiff",
     "svg_info",
 ]
 
@@ -144,30 +146,6 @@ def decode_ico(data: bytes) -> np.ndarray:
                 [img, np.full(img.shape[:2] + (1,), 255, np.uint8)], axis=2)
         return img
     return _decode_dib(body)
-
-
-def encode_ico(img: np.ndarray, png_entry: bool = False) -> bytes:
-    """Single-entry ICO writer for fixtures: PNG-in-ICO or a 32bpp DIB
-    with an all-opaque AND mask."""
-    img = np.atleast_3d(img.astype(np.uint8))
-    if img.shape[2] == 1:
-        img = np.repeat(img, 3, axis=2)
-    if img.shape[2] == 3:
-        img = np.concatenate(
-            [img, np.full(img.shape[:2] + (1,), 255, np.uint8)], axis=2)
-    h, w, _ = img.shape
-    if png_entry:
-        body = encode_png(img)
-    else:
-        bgra = img[:, :, [2, 1, 0, 3]][::-1].reshape(h, -1).tobytes()
-        mask_stride = ((w + 31) // 32) * 4
-        mask = b"\x00" * (mask_stride * h)
-        header = struct.pack("<IiihHIIiiII", 40, w, h * 2, 1, 32, 0,
-                             len(bgra) + len(mask), 0, 0, 0, 0)
-        body = header + bgra + mask
-    entry = struct.pack("<BBBBHHII", w if w < 256 else 0,
-                        h if h < 256 else 0, 0, 0, 1, 32, len(body), 22)
-    return b"\x00\x00\x01\x00\x01\x00" + entry + body
 
 
 # =========================================================================
@@ -342,40 +320,6 @@ def decode_apng_frames(data: bytes, max_frames: int | None = None
         if max_frames is not None and len(out) >= max_frames:
             break
     return out
-
-
-def encode_apng(frames: list[np.ndarray], delays_ms: list[int]
-                ) -> bytes:
-    """Fixture writer: full-canvas RGBA frames, blend=source,
-    dispose=none."""
-    if not frames or len(frames) != len(delays_ms):
-        raise ValueError("frames/delays mismatch")
-    frames = [_to_rgba(np.atleast_3d(f.astype(np.uint8))) for f in frames]
-    h, w, _ = frames[0].shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0)
-    out = [b"\x89PNG\r\n\x1a\n", _chunk(b"IHDR", ihdr),
-           _chunk(b"acTL", struct.pack(">II", len(frames), 0))]
-    seq = 0
-
-    def fctl(delay: int) -> bytes:
-        nonlocal seq
-        body = struct.pack(">IIIIIHHBB", seq, w, h, 0, 0, delay, 1000, 0, 0)
-        seq += 1
-        return _chunk(b"fcTL", body)
-
-    def raw_idat(img: np.ndarray) -> bytes:
-        return zlib.compress(
-            b"".join(b"\x00" + img[y].tobytes() for y in range(h)), 6)
-
-    out.append(fctl(delays_ms[0]))
-    out.append(_chunk(b"IDAT", raw_idat(frames[0])))
-    for img, delay in zip(frames[1:], delays_ms[1:]):
-        out.append(fctl(delay))
-        body = raw_idat(img)
-        out.append(_chunk(b"fdAT", struct.pack(">I", seq) + body))
-        seq += 1
-    out.append(_chunk(b"IEND", b""))
-    return b"".join(out)
 
 
 # =========================================================================
@@ -657,124 +601,6 @@ def decode_flac(data: bytes) -> tuple[int, np.ndarray]:
     return rate, out
 
 
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
-def _rice_write(w: _BitWriter, residuals: list[int], param: int) -> None:
-    for r in residuals:
-        v = (r << 1) if r >= 0 else (((-r) << 1) - 1)
-        q = v >> param
-        w.write(0, q)       # q zero bits
-        w.write(1, 1)       # terminator
-        if param:
-            w.write(v & ((1 << param) - 1), param)
-
-
-def encode_flac(rate: int, samples: np.ndarray,
-                blocksize: int = 4096) -> bytes:
-    """Fixture writer: independent channels; per-subframe CONSTANT when
-    flat, FIXED order-2 + single-partition Rice when it compresses, else
-    VERBATIM — so round-trip tests exercise the constant, fixed-predictor,
-    Rice, and verbatim decode paths."""
-    samples = np.asarray(samples, np.int16)
-    # 2-D input is authoritative (n_samples, n_channels) — matching
-    # encode_wav/decode_flac; only 1-D input is promoted to mono.
-    if samples.ndim == 1:
-        samples = samples.reshape(-1, 1)
-    elif samples.ndim != 2:
-        raise ValueError("samples must be 1-D or (n_samples, n_channels)")
-    n, nch = samples.shape
-    if not 1 <= nch <= 8:
-        raise ValueError("flac: 1-8 channels")
-
-    si = _BitWriter()
-    si.write(blocksize, 16); si.write(blocksize, 16)
-    si.write(0, 24); si.write(0, 24)
-    si.write(rate, 20); si.write(nch - 1, 3); si.write(15, 5)  # 16-bit
-    si.write(n, 36)
-    streaminfo = si.bytes() + b"\x00" * 16  # md5 unknown (all zero = unset)
-    out = [b"fLaC",
-           bytes([0x80]) + struct.pack(">I", len(streaminfo))[1:],
-           streaminfo]
-
-    for fno in range(0, (n + blocksize - 1) // blocksize):
-        lo = fno * blocksize
-        block = samples[lo:lo + blocksize]
-        bs = block.shape[0]
-        w = _BitWriter()
-        w.write(0x3FFE, 14); w.write(0, 1); w.write(0, 1)
-        w.write(7, 4)        # blocksize: 16-bit at end of header
-        w.write(0, 4)        # sample rate: from STREAMINFO
-        w.write(nch - 1, 4)  # independent channels
-        w.write(4, 3)        # 16-bit samples
-        w.write(0, 1)
-        if fno < 0x80:       # UTF-8 coded frame number
-            w.write(fno, 8)
-        else:
-            w.write(0xC0 | (fno >> 6), 8)
-            w.write(0x80 | (fno & 0x3F), 8)
-        w.write(bs - 1, 16)
-        w.align()
-        hdr = w.bytes()
-        w = _BitWriter()
-        for b in hdr:
-            w.write(b, 8)
-        w.write(_crc8(hdr), 8)
-
-        for c in range(nch):
-            col = block[:, c].astype(np.int64)
-            if bs > 2 and (col == col[0]).all():
-                w.write(0, 1); w.write(0, 6); w.write(0, 1)  # CONSTANT
-                w.write(int(col[0]), 16)
-                continue
-            use_fixed = bs > 2
-            if use_fixed:
-                res = (col[2:] - 2 * col[1:-1] + col[:-2]).tolist()
-                mean = sum(abs(r) for r in res) / max(1, len(res))
-                param = 0
-                while (1 << param) < mean + 1 and param < 14:
-                    param += 1
-                fixed_bits = 32 + sum(
-                    ((abs(r) << 1) >> param) + 1 + param for r in res)
-                if fixed_bits >= bs * 16:
-                    use_fixed = False
-            if use_fixed:
-                w.write(0, 1); w.write(10, 6); w.write(0, 1)  # FIXED o2
-                w.write(int(col[0]), 16); w.write(int(col[1]), 16)
-                w.write(0, 2)   # Rice 4-bit params
-                w.write(0, 4)   # partition order 0
-                w.write(param, 4)
-                _rice_write(w, res, param)
-            else:
-                w.write(0, 1); w.write(1, 6); w.write(0, 1)   # VERBATIM
-                for v in col.tolist():
-                    w.write(int(v), 16)
-        w.align()
-        frame = w.bytes()
-        out.append(frame + struct.pack(">H", _crc16(frame)))
-    return b"".join(out)
-
-
 # =========================================================================
 # TIFF 6.0 — strip-based baseline images (uncompressed / PackBits /
 # TIFF-variant LZW, optional horizontal predictor, palette or RGB/gray).
@@ -845,37 +671,6 @@ def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
             if len(out) >= expected:
                 return bytes(out[:expected])
     raise CodecError("tiff: LZW stream ended without EOI")
-
-
-def _tiff_lzw_encode(data: bytes) -> bytes:
-    CLEAR, EOI = 256, 257
-    w = _BitWriter()
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    nxt = 258
-    width = 9
-    w.write(CLEAR, width)
-    cur = b""
-    for byte in data:
-        cand = cur + bytes([byte])
-        if cand in table:
-            cur = cand
-            continue
-        w.write(table[cur], width)
-        table[cand] = nxt
-        nxt += 1
-        if nxt + 1 > (1 << width) and width < 12:
-            width += 1
-        if nxt >= 4094:
-            w.write(CLEAR, width)
-            table = {bytes([i]): i for i in range(256)}
-            nxt = 258
-            width = 9
-        cur = bytes([byte])
-    if cur:
-        w.write(table[cur], width)
-    w.write(EOI, width)
-    w.align()
-    return w.bytes()
 
 
 def _tiff_ifd(data: bytes) -> dict[int, tuple]:
@@ -987,98 +782,6 @@ def decode_tiff(data: bytes) -> np.ndarray:
     return img[:, :, 0] if img.shape[2] == 1 else img
 
 
-def encode_tiff(img: np.ndarray, compression: str = "none",
-                predictor: bool = False) -> bytes:
-    """Fixture writer: little-endian, single strip per 64 rows,
-    compression in {none, packbits, lzw, deflate}."""
-    img = np.atleast_3d(np.asarray(img, np.uint8))
-    h, w, spp = img.shape
-    comp_tag = {"none": 1, "lzw": 5, "packbits": 32773,
-                "deflate": 8}[compression]
-    rows_per = 64
-    body = img
-    if predictor:
-        d = img.astype(np.int16)
-        body = np.concatenate([d[:, :1], np.diff(d, axis=1)], axis=1
-                              ).astype(np.uint8)
-    strips = []
-    for r0 in range(0, h, rows_per):
-        chunk = body[r0:r0 + rows_per].tobytes()
-        if compression == "none":
-            strips.append(chunk)
-        elif compression == "deflate":
-            import zlib
-            strips.append(zlib.compress(chunk))
-        elif compression == "lzw":
-            strips.append(_tiff_lzw_encode(chunk))
-        else:  # packbits: literal-only runs (valid, not minimal)
-            out = bytearray()
-            for i in range(0, len(chunk), 128):
-                part = chunk[i:i + 128]
-                out.append(len(part) - 1)
-                out += part
-            strips.append(bytes(out))
-    nstrips = len(strips)
-
-    entries = []  # (tag, type, count, value-or-bytes)
-    def ent(tag, typ, vals):
-        entries.append((tag, typ, vals))
-    ent(256, 4, [w]); ent(257, 4, [h])
-    ent(258, 3, [8] * spp)
-    ent(259, 3, [comp_tag])
-    ent(262, 3, [2 if spp >= 3 else 1])
-    ent(277, 3, [spp])
-    ent(278, 4, [rows_per])
-    ent(279, 4, [len(s) for s in strips])
-    if predictor:
-        ent(317, 3, [2])
-    # layout: header(8) + IFD + values + strips
-    sizes = {3: 2, 4: 4}
-    ifd_off = 8
-    ifd_len = 2 + 12 * (len(entries) + 1) + 4  # +1 for StripOffsets
-    val_off = ifd_off + ifd_len
-    overflow = b""
-    packed = []
-    for tag, typ, vals in entries:
-        total_sz = sizes[typ] * len(vals)
-        fmt = "<" + ("H" if typ == 3 else "I") * len(vals)
-        blob = struct.pack(fmt, *vals)
-        if total_sz <= 4:
-            packed.append((tag, typ, len(vals), blob.ljust(4, b"\x00")))
-        else:
-            packed.append((tag, typ, len(vals),
-                           struct.pack("<I", val_off + len(overflow))))
-            overflow += blob
-    # strip offsets (tag 273) computed after overflow area
-    strips_off = val_off + len(overflow) + 4 * nstrips
-    offs = []
-    pos = strips_off
-    for s in strips:
-        offs.append(pos)
-        pos += len(s)
-    blob = struct.pack("<" + "I" * nstrips, *offs)
-    if nstrips == 1:
-        packed.append((273, 4, 1, blob.ljust(4, b"\x00")))
-        strip_table = b""
-        # single strip: the reserved table slot stays, harmless zeros
-        strip_table = b"\x00" * 4
-    else:
-        packed.append((273, 4, nstrips,
-                       struct.pack("<I", val_off + len(overflow))))
-        strip_table = blob
-        strip_table += b"" if 4 * nstrips >= 4 else b"\x00" * 4
-    packed.sort(key=lambda x: x[0])
-    out = [b"II*\x00", struct.pack("<I", ifd_off),
-           struct.pack("<H", len(packed))]
-    for tag, typ, cnt, v4 in packed:
-        out.append(struct.pack("<HHI", tag, typ, cnt) + v4)
-    out.append(struct.pack("<I", 0))  # next IFD
-    out.append(overflow)
-    out.append(strip_table if nstrips > 1 else b"\x00" * 4)
-    out.extend(strips)
-    return b"".join(out)
-
-
 # =========================================================================
 # AIFF — PCM big-endian audio (Apple AIFF-C spec).  Completes the audio
 # container set next to WAV (codecs.py) and FLAC (above).
@@ -1145,35 +848,3 @@ def decode_aiff(data: bytes) -> tuple[int, np.ndarray]:
     if n < nframes:
         raise CodecError("aiff: truncated sound data")
     return rate, arr.reshape(n, nch)
-
-
-def encode_aiff(rate: int, samples: np.ndarray) -> bytes:
-    """Fixture writer: 16-bit big-endian PCM AIFF."""
-    samples = np.asarray(samples, np.int16)
-    # 2-D input is authoritative (n_samples, n_channels) — matching
-    # encode_wav/decode_flac; only 1-D input is promoted to mono.
-    if samples.ndim == 1:
-        samples = samples.reshape(-1, 1)
-    elif samples.ndim != 2:
-        raise ValueError("samples must be 1-D or (n_samples, n_channels)")
-    n, nch = samples.shape
-    # 80-bit extended float for the sample rate
-    if rate <= 0:
-        raise ValueError("aiff: rate must be positive")
-    exp = 16383 + 63
-    mant = rate
-    while mant < 1 << 63:
-        mant <<= 1
-        exp -= 1
-    while mant >= 1 << 64:
-        mant >>= 1
-        exp += 1
-    comm = struct.pack(">hIh", nch, n, 16) + struct.pack(">HQ", exp, mant)
-    ssnd = struct.pack(">II", 0, 0) + samples.astype(">i2").tobytes()
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + struct.pack(">I", len(body)) + body \
-            + (b"\x00" if len(body) & 1 else b"")
-
-    body = b"AIFF" + chunk(b"COMM", comm) + chunk(b"SSND", ssnd)
-    return b"FORM" + struct.pack(">I", len(body)) + body

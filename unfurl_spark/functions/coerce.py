@@ -351,13 +351,3 @@ def content_type_of(headers: dict) -> str:
     if isinstance(header, list):
         return extract_mime(header[0] if header else "")
     return extract_mime(header or "")
-
-
-def js_number_or_nan_int(value: object):
-    """JS ``Number(x)`` kept as int when integral (snapshot-compatible)."""
-    n = js_number(value)
-    if math.isnan(n) or math.isinf(n):
-        return n
-    if n == int(n):
-        return int(n)
-    return n

@@ -88,13 +88,6 @@ def to_array(value) -> list:
     return [value] if truthy(value) else []
 
 
-def to_value(value):
-    """``toValue`` (:238-240)."""
-    if isinstance(value, list):
-        return value[0] if value else None
-    return value
-
-
 def to_str(value):
     """``toString`` type guard (:245-247)."""
     return value if isinstance(value, str) else None

@@ -17,12 +17,13 @@ hierarchical modes (SOF5-7/13-15), arithmetic lossless (SOF11), and
 lossless precision above 8 bits (12/16-bit DNG raws exceed the uint8
 pixel contract).
 
-Encoders (test-fixture use): baseline with Annex K tables, and a
-progressive encoder with the conventional multi-scan script.  Encoder
-and decoder are independent walks of the spec, so round-trip tests
-exercise both directions — and progressive-vs-baseline encodes of the
-same image must decode to IDENTICAL pixels (same coefficients,
-different entropy organization), which pins each against the other.
+The fixture encoders (baseline with Annex K tables, progressive with
+the conventional multi-scan script, lossless) are in
+``tests/encoders.py``.  Encoder and decoder are independent walks of
+the spec, so round-trip tests exercise both directions — and
+progressive-vs-baseline encodes of the same image must decode to
+IDENTICAL pixels (same coefficients, different entropy organization),
+which pins each against the other.
 
 The reference never decodes JPEG essence — its exif plugin stops at
 metadata (packages/unfurl-exif/src/index.ts:16-47).  This module exists
@@ -44,57 +45,6 @@ ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63])
 
-# T.81 Annex K.1 — luminance / chrominance quantization tables
-QT_LUMA = np.array([
-    16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99])
-QT_CHROMA = np.array([
-    17, 18, 24, 47, 99, 99, 99, 99, 18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99, 47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99])
-
-# T.81 Annex K.3 — canonical Huffman table specs: (bits[1..16], values)
-HT_DC_LUMA = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-              list(range(12)))
-HT_DC_CHROMA = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
-                list(range(12)))
-HT_AC_LUMA = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    [0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-     0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-     0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-     0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-     0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-     0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-     0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-     0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-     0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-     0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-     0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-     0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA])
-HT_AC_CHROMA = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    [0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-     0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-     0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-     0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-     0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-     0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-     0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-     0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-     0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-     0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-     0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-     0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-     0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-     0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA])
 
 # orthonormal 8-point DCT-II basis: IDCT is  C.T @ X @ C
 _N = np.arange(8)
@@ -1008,522 +958,3 @@ def _reconstruct_progressive(frame, state, qtables) -> np.ndarray:
     g = y - 0.344136 * cb - 0.714136 * cr
     b = y + 1.772 * cb
     return np.clip(np.dstack([r, g, b]), 0, 255).astype(np.uint8)
-
-
-# ---------------------------------------------------------------------------
-# encoder (4:4:4, Annex K tables, quality via linear scale)
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-
-    def flush(self) -> None:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)
-
-
-def _encode_codes(bits, values) -> dict[int, tuple[int, int]]:
-    """symbol → (code, length) — inverse of the decoder's table."""
-    inv = {}
-    for (length, code), sym in _canonical_codes(bits, values).items():
-        inv[sym] = (code, length)
-    return inv
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """→ (category t, t-bit encoding of v) per T.81 F.1.2.1."""
-    t = int(v != 0 and int(abs(v)).bit_length())
-    return t, (v if v >= 0 else v + (1 << t) - 1)
-
-
-def _prepare_planes(img: np.ndarray, quality: int, subsample: bool):
-    """Shared encoder front half: color convert + quality-scaled quant
-    tables + optional 4:2:0 chroma downsample + MCU-padded planes.
-    Returns (h, w, nc, factors, qts, padded, mcux, mcuy)."""
-    img = np.atleast_3d(img.astype(np.uint8))
-    h, w, c = img.shape
-    if c == 4:
-        img = img[:, :, :3]
-        c = 3
-    scale = (5000 // quality if quality < 50 else 200 - 2 * quality) or 1
-    qts = []
-    for base in ((QT_LUMA,) if c == 1 else (QT_LUMA, QT_CHROMA)):
-        qts.append(np.clip((base * scale + 50) // 100, 1, 255))
-
-    if c == 1:
-        planes = [img[:, :, 0].astype(np.float32) - 128.0]
-    else:
-        rf = img.astype(np.float32)
-        r, g, b = rf[:, :, 0], rf[:, :, 1], rf[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b - 128.0
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b
-        planes = [y, cb, cr]
-    nc = len(planes)
-    sub = subsample and nc == 3
-    # per-component (h_factor, v_factor)
-    factors = [(2, 2), (1, 1), (1, 1)] if sub else [(1, 1)] * nc
-    if sub:
-        # box-filter chroma 2× (pad odd dims by edge replication first)
-        def down2(p: np.ndarray) -> np.ndarray:
-            ph = p if p.shape[0] % 2 == 0 else np.vstack([p, p[-1:]])
-            ph = ph if ph.shape[1] % 2 == 0 else np.hstack([ph, ph[:, -1:]])
-            return (ph[0::2, 0::2] + ph[1::2, 0::2]
-                    + ph[0::2, 1::2] + ph[1::2, 1::2]) / 4.0
-        planes = [planes[0], down2(planes[1]), down2(planes[2])]
-
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    padded = []
-    for ci, p in enumerate(planes):
-        hi, vi = factors[ci]
-        pw, ph = mcux * hi * 8, mcuy * vi * 8
-        pp = np.zeros((ph, pw), np.float32)
-        sh, sw = p.shape
-        pp[:sh, :sw] = p
-        pp[sh:, :sw] = p[-1:, :]
-        pp[:, sw:] = pp[:, sw - 1:sw]
-        padded.append(pp)
-    return h, w, nc, factors, qts, padded, mcux, mcuy
-
-
-def encode_jpeg(img: np.ndarray, quality: int = 85,
-                subsample: bool = False,
-                restart_interval: int = 0) -> bytes:
-    """Baseline encoder.  ``subsample=True`` emits 4:2:0 (luma 2×2 per
-    MCU, chroma box-filtered 2×); ``restart_interval`` emits DRI + RSTn
-    markers every N MCUs — both exist chiefly so the decoder's
-    upsample/restart paths have independent fixtures."""
-    h, w, nc, factors, qts, padded, mcux, mcuy = _prepare_planes(
-        img, quality, subsample)
-
-    out = bytearray(b"\xFF\xD8")
-    for tid, qt in enumerate(qts):
-        out += (b"\xFF\xDB" + struct.pack(">HB", 67, tid)
-                + qt[ZIGZAG].astype(np.uint8).tobytes())
-    if restart_interval:
-        out += b"\xFF\xDD" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xFF\xC0" + struct.pack(">HBHHB", 8 + 3 * nc, 8, h, w, nc)
-    for ci in range(nc):
-        hi, vi = factors[ci]
-        out += bytes([ci + 1, (hi << 4) | vi,
-                      min(ci, 1) if nc > 1 else 0])
-    specs = [HT_DC_LUMA, HT_AC_LUMA] + (
-        [HT_DC_CHROMA, HT_AC_CHROMA] if nc > 1 else [])
-    classes = [(0, 0), (1, 0)] + ([(0, 1), (1, 1)] if nc > 1 else [])
-    for (tclass, tid), (bits, values) in zip(classes, specs):
-        out += b"\xFF\xC4" + struct.pack(
-            ">HB", 19 + len(values), (tclass << 4) | tid)
-        out += bytes(bits) + bytes(values)
-    out += b"\xFF\xDA" + struct.pack(">HB", 6 + 2 * nc, nc)
-    for ci in range(nc):
-        tid = min(ci, 1) if nc > 1 else 0
-        out += bytes([ci + 1, (tid << 4) | tid])
-    out += b"\x00\x3F\x00"
-
-    dc_tabs = [_encode_codes(*HT_DC_LUMA)]
-    ac_tabs = [_encode_codes(*HT_AC_LUMA)]
-    if nc > 1:
-        dc_tabs.append(_encode_codes(*HT_DC_CHROMA))
-        ac_tabs.append(_encode_codes(*HT_AC_CHROMA))
-
-    ct = _DCT_C.astype(np.float32)
-    bw = _BitWriter()
-    preds = [0] * nc
-    rst = 0
-    mcu_count = 0
-
-    def encode_block(ti: int, block: np.ndarray, ci: int) -> None:
-        coeffs = ct.T @ block @ ct  # FDCT: X = M x M.T
-        q = np.round(coeffs.reshape(64)[ZIGZAG]
-                     / qts[ti][ZIGZAG]).astype(np.int64)
-        diff = int(q[0]) - preds[ci]
-        preds[ci] = int(q[0])
-        t, enc = _magnitude(diff)
-        code, ln = dc_tabs[ti][t]
-        bw.write(code, ln)
-        if t:
-            bw.write(enc, t)
-        run = 0
-        for k in range(1, 64):
-            v = int(q[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                zcode, zln = ac_tabs[ti][0xF0]
-                bw.write(zcode, zln)
-                run -= 16
-            t, enc = _magnitude(v)
-            code, ln = ac_tabs[ti][(run << 4) | t]
-            bw.write(code, ln)
-            bw.write(enc, t)
-            run = 0
-        if run:
-            code, ln = ac_tabs[ti][0x00]
-            bw.write(code, ln)
-
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if (restart_interval and mcu_count
-                    and mcu_count % restart_interval == 0):
-                bw.flush()
-                bw.out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) & 7
-                preds = [0] * nc
-            for ci in range(nc):
-                hi, vi = factors[ci]
-                ti = min(ci, 1) if nc > 1 else 0
-                for bv in range(vi):
-                    for bh_ in range(hi):
-                        y0 = (my * vi + bv) * 8
-                        x0 = (mx * hi + bh_) * 8
-                        encode_block(
-                            ti, padded[ci][y0:y0 + 8, x0:x0 + 8], ci)
-            mcu_count += 1
-    bw.flush()
-    return bytes(out) + bytes(bw.out) + b"\xFF\xD9"
-
-
-# ---------------------------------------------------------------------------
-# progressive (SOF2) encoder — fixture generator for the progressive
-# decoder paths: spectral selection bands, successive approximation
-# (DC + AC first/refine scans), EOB runs with correction bits.  Scan
-# script mirrors the conventional default (DC Al=1 → luma low band →
-# chroma → luma refinements → DC refine → AC refines to Al=0).
-
-# flat Huffman tables covering every (run, size) symbol incl. the EOBn
-# codes (r<<4) the Annex K tables lack: all 176 symbols at 9 bits
-_HT_PROG_AC_SYMS = [(r << 4) | s for r in range(16) for s in range(11)]
-_HT_PROG_AC = ([0] * 8 + [len(_HT_PROG_AC_SYMS)] + [0] * 7,
-               _HT_PROG_AC_SYMS)
-_HT_PROG_DC = ([0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0],
-               list(range(12)))
-
-
-def _pt_ac(v: int, al: int) -> int:
-    """T.81 G.1.2.2 AC point transform: magnitude shift, sign kept."""
-    return (abs(v) >> al) * (1 if v >= 0 else -1)
-
-
-def _enc_ac_first_scan(bw, blocks, ss, se, al, ac_tab):
-    eobrun = 0
-
-    def flush_eob():
-        nonlocal eobrun
-        while eobrun > 0:
-            r = min(14, eobrun.bit_length() - 1)
-            take = min(eobrun, (1 << r) + (1 << r) - 1)
-            code, ln = ac_tab[r << 4]
-            bw.write(code, ln)
-            if r:
-                bw.write(take - (1 << r), r)
-            eobrun -= take
-
-    for q in blocks:
-        vals = [_pt_ac(int(q[k]), al) for k in range(ss, se + 1)]
-        if not any(vals):
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                flush_eob()
-            continue
-        flush_eob()
-        run = 0
-        for v in vals:
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_tab[0xF0]
-                bw.write(code, ln)
-                run -= 16
-            t, enc = _magnitude(v)
-            code, ln = ac_tab[(run << 4) | t]
-            bw.write(code, ln)
-            bw.write(enc, t)
-            run = 0
-        if run:
-            eobrun += 1  # trailing zeros fold into an EOB run
-    flush_eob()
-
-
-def _enc_ac_refine_scan(bw, blocks, ss, se, al, ac_tab):
-    """AC refinement (Ah = Al+1 → Al), the inverse of
-    ``_ac_refine_block``: newly-nonzero coefficients get (run,1)+sign
-    codes, already-nonzero ones ride as interleaved correction bits,
-    EOB runs buffer their correction bits until flushed."""
-    eobrun = 0
-    be: list[int] = []  # correction bits buffered across the EOB region
-
-    def flush_eob():
-        nonlocal eobrun, be
-        if eobrun:
-            r = eobrun.bit_length() - 1
-            code, ln = ac_tab[r << 4]
-            bw.write(code, ln)
-            if r:
-                bw.write(eobrun - (1 << r), r)
-            eobrun = 0
-        for b in be:
-            bw.write(b, 1)
-        be = []
-
-    for q in blocks:
-        band = [int(q[k]) for k in range(ss, se + 1)]
-        mags = [abs(v) >> al for v in band]
-        # events since the last emitted code: zeros and correction bits
-        events: list = []
-        emitted_any = False
-        for v, m in zip(band, mags):
-            if m == 0:
-                events.append("z")
-            elif m > 1:  # history coefficient → correction bit
-                events.append(m & 1)
-            else:  # newly nonzero at this precision
-                if not emitted_any:
-                    flush_eob()
-                    emitted_any = True
-                while sum(1 for e in events if e == "z") > 15:
-                    code, ln = ac_tab[0xF0]
-                    bw.write(code, ln)
-                    z = 0
-                    while z < 16:
-                        ev = events.pop(0)
-                        if ev == "z":
-                            z += 1
-                        else:
-                            bw.write(ev, 1)
-                r = sum(1 for e in events if e == "z")
-                code, ln = ac_tab[(r << 4) | 1]
-                bw.write(code, ln)
-                bw.write(1 if v >= 0 else 0, 1)
-                for ev in events:
-                    if ev != "z":
-                        bw.write(ev, 1)
-                events = []
-        trailing_bits = [e for e in events if e != "z"]
-        if events:
-            eobrun += 1
-            be.extend(trailing_bits)
-            if eobrun == 0x7FFF:
-                flush_eob()
-    flush_eob()
-
-
-def encode_jpeg_progressive(img: np.ndarray, quality: int = 85,
-                            subsample: bool = False) -> bytes:
-    h, w, nc, factors, qts, padded, mcux, mcuy = _prepare_planes(
-        img, quality, subsample)
-    ct = _DCT_C.astype(np.float32)
-
-    # quantized zigzag coefficients for every padded block per component
-    qz = []
-    for ci, pp in enumerate(padded):
-        ti = min(ci, 1) if nc > 1 else 0
-        nby, nbx = pp.shape[0] // 8, pp.shape[1] // 8
-        blocks = (pp.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3))
-        coeffs = np.einsum("ji,abjk,kl->abil", ct, blocks, ct,
-                           optimize=True)  # FDCT: X = M x M.T
-        q = np.round(coeffs.reshape(nby, nbx, 64)[:, :, ZIGZAG]
-                     / qts[ti][ZIGZAG]).astype(np.int64)
-        qz.append(q)
-
-    out = bytearray(b"\xFF\xD8")
-    for tid, qt in enumerate(qts):
-        out += (b"\xFF\xDB" + struct.pack(">HB", 67, tid)
-                + qt[ZIGZAG].astype(np.uint8).tobytes())
-    out += b"\xFF\xC2" + struct.pack(">HBHHB", 8 + 3 * nc, 8, h, w, nc)
-    for ci in range(nc):
-        hi, vi = factors[ci]
-        out += bytes([ci + 1, (hi << 4) | vi,
-                      min(ci, 1) if nc > 1 else 0])
-    for (tclass, tid), (bits, values) in (((0, 0), _HT_PROG_DC),
-                                          ((1, 0), _HT_PROG_AC)):
-        out += b"\xFF\xC4" + struct.pack(
-            ">HB", 19 + len(values), (tclass << 4) | tid)
-        out += bytes(bits) + bytes(values)
-    dc_tab = _encode_codes(*_HT_PROG_DC)
-    ac_tab = _encode_codes(*_HT_PROG_AC)
-
-    def comp_grid(ci):
-        """Non-interleaved block grid (excludes interleave-only dummies)."""
-        hi, vi = factors[ci]
-        hmax = max(f[0] for f in factors)
-        vmax = max(f[1] for f in factors)
-        nbx = ((w * hi + hmax - 1) // hmax + 7) // 8
-        nby = ((h * vi + vmax - 1) // vmax + 7) // 8
-        return nbx, nby
-
-    def sos(comp_ids, ss, se, ah, al, payload: bytes) -> None:
-        ns = len(comp_ids)
-        out.extend(b"\xFF\xDA" + struct.pack(">HB", 6 + 2 * ns, ns))
-        for ci in comp_ids:
-            out.extend(bytes([ci + 1, 0x00]))  # DC/AC table 0
-        out.extend(bytes([ss, se, (ah << 4) | al]))
-        out.extend(payload)
-
-    def dc_scan(al, first):
-        bw = _BitWriter()
-        preds = [0] * nc
-        if nc > 1:  # interleaved over the full MCU grid
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci in range(nc):
-                        hi, vi = factors[ci]
-                        for bv in range(vi):
-                            for bh in range(hi):
-                                v = int(qz[ci][my * vi + bv,
-                                               mx * hi + bh, 0]) >> al
-                                if first:
-                                    t, enc = _magnitude(v - preds[ci])
-                                    preds[ci] = v
-                                    code, ln = dc_tab[t]
-                                    bw.write(code, ln)
-                                    if t:
-                                        bw.write(enc, t)
-                                else:
-                                    bw.write(v & 1, 1)
-        else:
-            nbx, nby = comp_grid(0)
-            for by in range(nby):
-                for bx in range(nbx):
-                    v = int(qz[0][by, bx, 0]) >> al
-                    if first:
-                        t, enc = _magnitude(v - preds[0])
-                        preds[0] = v
-                        code, ln = dc_tab[t]
-                        bw.write(code, ln)
-                        if t:
-                            bw.write(enc, t)
-                    else:
-                        bw.write(v & 1, 1)
-        bw.flush()
-        sos(list(range(nc)), 0, 0, 0 if first else al + 1, al,
-            bytes(bw.out))
-
-    def ac_scan(ci, ss, se, ah, al):
-        nbx, nby = comp_grid(ci)
-        blocks = [qz[ci][by, bx] for by in range(nby)
-                  for bx in range(nbx)]
-        bw = _BitWriter()
-        if ah == 0:
-            _enc_ac_first_scan(bw, blocks, ss, se, al, ac_tab)
-        else:
-            _enc_ac_refine_scan(bw, blocks, ss, se, al, ac_tab)
-        bw.flush()
-        sos([ci], ss, se, ah, al, bytes(bw.out))
-
-    # scan script (conventional default shape)
-    dc_scan(1, first=True)
-    if nc == 3:
-        ac_scan(0, 1, 5, 0, 2)
-        ac_scan(2, 1, 63, 0, 1)
-        ac_scan(1, 1, 63, 0, 1)
-        ac_scan(0, 6, 63, 0, 2)
-        ac_scan(0, 1, 63, 2, 1)
-        dc_scan(0, first=False)
-        ac_scan(2, 1, 63, 1, 0)
-        ac_scan(1, 1, 63, 1, 0)
-        ac_scan(0, 1, 63, 1, 0)
-    else:
-        ac_scan(0, 1, 5, 0, 2)
-        ac_scan(0, 6, 63, 0, 2)
-        ac_scan(0, 1, 63, 2, 1)
-        dc_scan(0, first=False)
-        ac_scan(0, 1, 63, 1, 0)
-    out += b"\xFF\xD9"
-    return bytes(out)
-
-
-def encode_jpeg_lossless(img: np.ndarray, psv: int = 1, pt: int = 0,
-                         restart_interval: int = 0) -> bytes:
-    """Fixture writer: T.81 Annex H lossless process (SOF3), 8-bit,
-    1×1 sampling, single interleaved scan, predictor ``psv`` (1-7),
-    point transform ``pt``.  Independent walk of the spec so the
-    round-trip tests pin the decoder (no system lossless codec exists
-    to golden against — libjpeg-turbo < 3.0)."""
-    img = np.atleast_3d(np.asarray(img, np.uint8))
-    h, w, nc = img.shape
-    if nc == 4:
-        img = img[:, :, :3]
-        nc = 3
-    if not 1 <= psv <= 7:
-        raise ValueError(f"psv {psv}")
-    samples = (img.astype(np.int32) >> pt)
-    prec = 8
-
-    out = bytearray(b"\xFF\xD8")
-    if restart_interval:
-        out += b"\xFF\xDD" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xFF\xC3" + struct.pack(">HBHHB", 8 + 3 * nc, prec, h, w, nc)
-    for ci in range(nc):
-        out += bytes([ci + 1, 0x11, 0])
-    bits, values = HT_DC_LUMA
-    out += (b"\xFF\xC4" + struct.pack(">HB", 19 + len(values), 0)
-            + bytes(bits) + bytes(values))
-    out += b"\xFF\xDA" + struct.pack(">HB", 6 + 2 * nc, nc)
-    for ci in range(nc):
-        out += bytes([ci + 1, 0x00])
-    out += bytes([psv, 0, pt])
-
-    tab = _encode_codes(*HT_DC_LUMA)
-    bw = _BitWriter()
-    default = 1 << (prec - pt - 1)
-    mcu = 0
-    reset = False
-    rst = 0
-    for y in range(h):
-        for x in range(w):
-            if (restart_interval and mcu
-                    and mcu % restart_interval == 0):
-                bw.flush()
-                out += bw.out
-                bw = _BitWriter()
-                out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) & 7
-                reset = True
-            for ci in range(nc):
-                p = samples[:, :, ci]
-                if reset or (y == 0 and x == 0):
-                    px = default
-                elif y == 0:
-                    px = int(p[0, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    ra, rb, rc = (int(p[y, x - 1]), int(p[y - 1, x]),
-                                  int(p[y - 1, x - 1]))
-                    px = {1: ra, 2: rb, 3: rc, 4: ra + rb - rc,
-                          5: ra + ((rb - rc) >> 1),
-                          6: rb + ((ra - rc) >> 1),
-                          7: (ra + rb) >> 1}[psv]
-                diff = (int(p[y, x]) - px) & 0xFFFF
-                if diff >= 0x8000:
-                    diff -= 0x10000     # signed mod-65536 difference
-                t, enc = _magnitude(diff)
-                code, length = tab[t]
-                bw.write(code, length)
-                if t:
-                    bw.write(enc, t)
-            reset = False
-            mcu += 1
-    bw.flush()
-    out += bw.out
-    out += b"\xFF\xD9"
-    return bytes(out)

@@ -25,7 +25,10 @@ out-of-container codec (MP4/H.264, WebM/VP9 video essence, MP3/AAC
 audio essence — container metadata for all of these IS parsed, see
 ``media.py``) raise ``CodecUnavailable`` and fall back to a
 deterministic payload-hash fake — the honest boundary in this
-environment, visible per-row in the ``ok`` lineage column.
+environment, visible per-row in the ``ok`` lineage column.  The package
+only decodes: the tests write their round-trip fixtures with
+``tests/encoders.py`` and hold the VP8 decoder to libwebp through
+``tests/vp8sys.py``, and neither ships to the executors.
 
 Every operator is a row function run by the engine's one Arrow stage,
 ``operators.pipeline.map_rows`` — no per-row Spark UDFs; payloads cross

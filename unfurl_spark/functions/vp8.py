@@ -993,289 +993,3 @@ def yuv420_to_rgb(y: np.ndarray, u: np.ndarray, v: np.ndarray) -> np.ndarray:
 def decode_vp8(data: bytes) -> np.ndarray:
     """VP8 keyframe essence → HxWx3 uint8 RGB."""
     return yuv420_to_rgb(*decode_vp8_yuv(data))
-
-
-# --- minimal keyframe encoder (fixture writer + semantics probe) -------------
-
-class BoolEncoder:
-    """RFC 6386 §7.8 boolean encoder with carry propagation —
-    bit-compatible with BoolDecoder (round-trip fuzz-tested)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.range = 255
-        self.bottom = 0
-        self.bit_count = 24
-
-    def _carry(self) -> None:
-        i = len(self.out) - 1
-        while i >= 0 and self.out[i] == 255:
-            self.out[i] = 0
-            i -= 1
-        if i >= 0:
-            self.out[i] += 1
-
-    def bool(self, value: int, prob: int) -> None:
-        split = 1 + (((self.range - 1) * prob) >> 8)
-        if value:
-            self.bottom += split
-            self.range -= split
-        else:
-            self.range = split
-        while self.range < 128:
-            self.range <<= 1
-            if self.bottom & (1 << 31):
-                self._carry()
-            self.bottom = (self.bottom << 1) & 0xFFFFFFFF
-            self.bit_count -= 1
-            if self.bit_count == 0:
-                self.out.append((self.bottom >> 24) & 0xFF)
-                self.bottom &= (1 << 24) - 1
-                self.bit_count = 8
-
-    def literal(self, value: int, bits: int) -> None:
-        for b in range(bits - 1, -1, -1):
-            self.bool((value >> b) & 1, 128)
-
-    def tree(self, tree, probs, leaf: int) -> None:
-        # find path to the leaf (= -value in the tree arrays)
-        path = []
-
-        def walk(i, acc):
-            for b in (0, 1):
-                t = tree[i + b]
-                if t <= 0:
-                    if -t == leaf and t <= 0 and (t != 0 or leaf == 0):
-                        path.append(acc + [(i >> 1, b)])
-                else:
-                    walk(t, acc + [(i >> 1, b)])
-
-        walk(0, [])
-        for prob_idx, bit in path[0]:
-            self.bool(bit, probs[prob_idx])
-
-    def bytes(self) -> bytes:
-        e = self  # RFC stop_encode: push 32 zero bits through
-        import copy
-        e2 = copy.deepcopy(e)
-        for _ in range(32):
-            e2.bool(0, 128)
-        return bytes(e2.out)
-
-
-def _put_tokens(be: BoolEncoder, probs: bytes, plane: int, ctx: int,
-                first: int, levels) -> int:
-    """Emit one block's quantized levels (raster order, pre-dequant) as
-    a token string, mirroring _decode_coeffs exactly.  Returns the
-    block nz flag."""
-    zz = [levels[ZIGZAG[n]] for n in range(16)]
-    last = -1
-    for n in range(first, 16):
-        if zz[n]:
-            last = n
-    n = first
-    base = plane * 264
-    skip_eob = False
-    while n < 16:
-        boff = base + COEFF_BANDS[n] * 33 + ctx * 11
-        if n > last:
-            # EOB: walk tree to leaf DCT_EOB (bit 0 at node 0)
-            be.bool(0, probs[boff + 0])
-            return 1 if last >= first else 0
-        v = zz[n]
-        a = abs(v)
-        if not skip_eob:
-            be.bool(1, probs[boff + 0])     # not EOB
-        if a == 0:
-            be.bool(0, probs[boff + 1])     # zero
-            skip_eob = True
-            ctx = 0
-            n += 1
-            continue
-        be.bool(1, probs[boff + 1])         # nonzero
-        skip_eob = False
-        if a == 1:
-            be.bool(0, probs[boff + 2])
-            ctx = 1
-        else:
-            be.bool(1, probs[boff + 2])
-            if a <= 4:
-                be.bool(0, probs[boff + 3])
-                if a == 2:
-                    be.bool(0, probs[boff + 4])
-                else:
-                    be.bool(1, probs[boff + 4])
-                    be.bool(a - 3, probs[boff + 5])
-            else:
-                be.bool(1, probs[boff + 3])
-                if a <= 10:
-                    be.bool(0, probs[boff + 6])
-                    if a <= 6:
-                        be.bool(0, probs[boff + 7])
-                        be.bool(a - 5, PCAT[0][0])
-                    else:
-                        be.bool(1, probs[boff + 7])
-                        e = a - 7
-                        be.bool((e >> 1) & 1, PCAT[1][0])
-                        be.bool(e & 1, PCAT[1][1])
-                else:
-                    be.bool(1, probs[boff + 6])
-                    if a <= 34:
-                        be.bool(0, probs[boff + 8])
-                        if a <= 18:
-                            be.bool(0, probs[boff + 9])
-                            cat, base_v = 2, 11
-                        else:
-                            be.bool(1, probs[boff + 9])
-                            cat, base_v = 3, 19
-                    else:
-                        be.bool(1, probs[boff + 8])
-                        if a <= 66:
-                            be.bool(0, probs[boff + 10])
-                            cat, base_v = 4, 35
-                        else:
-                            be.bool(1, probs[boff + 10])
-                            cat, base_v = 5, 67
-                    e = a - base_v
-                    nb = len(PCAT[cat])
-                    for b in range(nb - 1, -1, -1):
-                        be.bool((e >> b) & 1, PCAT[cat][nb - 1 - b])
-            ctx = 2
-        be.bool(1 if v < 0 else 0, 128)
-        n += 1
-    return 1 if last >= first else 0
-
-
-def encode_vp8(mb_w: int, mb_h: int, mbs: list, qi: int = 20,
-               filter_level: int = 0, filter_type: int = 0,
-               sharpness: int = 0,
-               seg_lf_abs: list | None = None) -> bytes:
-    """Fixture writer: legal VP8 keyframe from explicit per-MB mode and
-    quantized-coefficient records — no RD search, default probabilities.
-    Each record: {ymode, bmodes[16], uvmode, y2[16], y[16][16],
-    u[4][16], v[4][16]} (levels in raster order, pre-dequant).  Exists
-    to differential-test decode semantics against libwebp and to give
-    the test suite deterministic lossy streams."""
-    be = BoolEncoder()
-    be.literal(0, 1)            # color space
-    be.literal(0, 1)            # clamping
-    if seg_lf_abs is None:
-        be.literal(0, 1)        # segmentation off
-    else:
-        # segmentation on, no map update, ABSOLUTE per-segment loop
-        # filter values — the adversarial corner for the libwebp
-        # filter_level==0 gate (all MBs land in segment 0)
-        be.literal(1, 1)        # segmentation on
-        be.literal(0, 1)        # update_map = 0
-        be.literal(1, 1)        # update_data = 1
-        be.literal(1, 1)        # seg_abs = 1
-        for _ in range(4):
-            # absolute mode absolutes the quantizer too — pin every
-            # segment's quant to the frame qi so only the LF differs
-            be.literal(1, 1)
-            be.literal(qi, 7)
-            be.literal(0, 1)    # sign +
-        for v in seg_lf_abs:
-            be.literal(1, 1)    # lf value present
-            be.literal(abs(v), 6)
-            be.literal(1 if v < 0 else 0, 1)
-    be.literal(filter_type, 1)
-    be.literal(filter_level, 6)
-    be.literal(sharpness, 3)
-    be.literal(0, 1)            # lf deltas off
-    be.literal(0, 2)            # 1 token partition
-    be.literal(qi, 7)           # yac_qi
-    for _ in range(5):          # no quantizer deltas
-        be.literal(0, 1)
-    be.literal(1, 1)            # refresh entropy probs
-    for i in range(1056):       # no coefficient prob updates
-        be.bool(0, COEFF_UPDATE_PROBS[i])
-    be.literal(0, 1)            # mb_no_skip_coeff = 0
-
-    # per-MB prediction records
-    above_b = [[B_DC_PRED] * 4 for _ in range(mb_w)]
-    for mb_y in range(mb_h):
-        left_b = [B_DC_PRED] * 4
-        for mb_x in range(mb_w):
-            mb = mbs[mb_y * mb_w + mb_x]
-            ymode = mb["ymode"]
-            be.tree(KF_YMODE_TREE, KF_YMODE_PROB, ymode)
-            if ymode == B_PRED:
-                bmodes = mb["bmodes"]
-                for sb in range(16):
-                    r, c = sb >> 2, sb & 3
-                    a = above_b[mb_x][c] if r == 0 else bmodes[sb - 4]
-                    lm = left_b[r] if c == 0 else bmodes[sb - 1]
-                    probs = KF_BMODE_PROBS[(a * 10 + lm) * 9:
-                                           (a * 10 + lm) * 9 + 9]
-                    be.tree(BMODE_TREE, probs, bmodes[sb])
-                above_b[mb_x] = bmodes[12:16]
-                left_b = [bmodes[3], bmodes[7], bmodes[11], bmodes[15]]
-            else:
-                im = _MB_TO_B[ymode]
-                above_b[mb_x] = [im] * 4
-                left_b = [im] * 4
-            be.tree(UV_MODE_TREE, KF_UV_MODE_PROB, mb["uvmode"])
-    part1 = be.bytes()
-
-    te = BoolEncoder()
-    ay = [0] * (mb_w * 4)
-    au = [0] * (mb_w * 2)
-    av = [0] * (mb_w * 2)
-    ay2 = [0] * mb_w
-    for mb_y in range(mb_h):
-        ly = [0] * 4
-        lu = [0] * 2
-        lv = [0] * 2
-        ly2 = 0
-        for mb_x in range(mb_w):
-            mb = mbs[mb_y * mb_w + mb_x]
-            i4x4 = mb["ymode"] == B_PRED
-            if not i4x4:
-                nz = _put_tokens(te, COEFF_PROBS, 1, ay2[mb_x] + ly2, 0,
-                                 mb.get("y2", [0] * 16))
-                ay2[mb_x] = ly2 = nz
-                plane, first = 0, 1
-            else:
-                plane, first = 3, 0
-            ynz = [[0] * 5 for _ in range(5)]
-            for i in range(4):
-                ynz[0][i + 1] = ay[mb_x * 4 + i]
-                ynz[i + 1][0] = ly[i]
-            for sb in range(16):
-                r, c = sb >> 2, sb & 3
-                ctx = ynz[r][c + 1] + ynz[r + 1][c]
-                ynz[r + 1][c + 1] = _put_tokens(
-                    te, COEFF_PROBS, plane, ctx, first, mb["y"][sb])
-            for i in range(4):
-                ay[mb_x * 4 + i] = ynz[4][i + 1]
-                ly[i] = ynz[i + 1][4]
-            for key, anz, lnz in (("u", au, lu), ("v", av, lv)):
-                cnz = [[0] * 3 for _ in range(3)]
-                for i in range(2):
-                    cnz[0][i + 1] = anz[mb_x * 2 + i]
-                    cnz[i + 1][0] = lnz[i]
-                for sb in range(4):
-                    r, c = sb >> 1, sb & 1
-                    ctx = cnz[r][c + 1] + cnz[r + 1][c]
-                    cnz[r + 1][c + 1] = _put_tokens(
-                        te, COEFF_PROBS, 2, ctx, 0, mb[key][sb])
-                for i in range(2):
-                    anz[mb_x * 2 + i] = cnz[2][i + 1]
-                    lnz[i] = cnz[i + 1][2]
-    part2 = te.bytes()
-
-    w, hgt = mb_w * 16, mb_h * 16
-    tag = (len(part1) << 5) | (1 << 4) | 0   # keyframe, show, version 0
-    header = bytes([tag & 0xFF, (tag >> 8) & 0xFF, (tag >> 16) & 0xFF])
-    header += b"\x9d\x01\x2a"
-    header += struct.pack("<HH", w, hgt)
-    return header + part1 + part2
-
-
-def wrap_webp(vp8_payload: bytes) -> bytes:
-    """RIFF WebP container around a raw VP8 frame."""
-    chunk = b"VP8 " + struct.pack("<I", len(vp8_payload)) + vp8_payload
-    if len(vp8_payload) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk

@@ -7,12 +7,13 @@ code-length-coded), color cache, LZ77 backward references with the
 transforms — PREDICTOR (14 modes), COLOR, SUBTRACT_GREEN,
 COLOR_INDEXING (palette with sub-byte packing) — applied in reverse.
 
-Encoder (test-fixture use) emits legal VP8L streams: literal pixels
+The fixture encoder the tests round-trip through is in
+``tests/encoders.py``: it emits legal VP8L streams (literal pixels
 under real per-channel Huffman codes, optional SUBTRACT_GREEN /
-COLOR_INDEXING transforms, optional color cache, and an RLE LZ77 mode
-— enough to round-trip arbitrary images and exercise every decoder
-path.  The PREDICTOR/COLOR inverse transforms are pinned by tests that
-forward-apply the spec's definitions independently.
+COLOR_INDEXING transforms, optional color cache, and an RLE LZ77 mode)
+— enough to exercise every decoder path.  The PREDICTOR/COLOR inverse
+transforms are pinned by tests that forward-apply the spec's
+definitions independently.
 
 VP8 (lossy) essence decodes for real too, via the from-scratch
 RFC 6386 intra-frame decoder in ``vp8.py`` (bit-exact against libwebp's
@@ -25,7 +26,6 @@ exists for the training-data side (features/thumbnails at scale).
 
 from __future__ import annotations
 
-import heapq
 import struct
 
 import numpy as np
@@ -516,405 +516,6 @@ def decode_webp(data: bytes) -> np.ndarray:
     raise CodecError("webp: no image chunk")
 
 
-# ---------------------------------------------------------------------------
-# fixture encoder
-
-
-class _BitsW:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc |= (v & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-
-
-def _huff_lengths(freqs: dict[int, int], max_len: int = 15) -> dict:
-    """Symbol → code length via heap Huffman; falls back to flat codes
-    if the tree exceeds ``max_len`` (fixture streams, not ratios)."""
-    if not freqs:
-        return {}
-    if len(freqs) == 1:
-        return {next(iter(freqs)): 1}
-    heap = [(f, i, (s,)) for i, (s, f) in enumerate(sorted(freqs.items()))]
-    heapq.heapify(heap)
-    depth = {s: 0 for s in freqs}
-    tick = len(heap)
-    while len(heap) > 1:
-        f1, _, s1 = heapq.heappop(heap)
-        f2, _, s2 = heapq.heappop(heap)
-        for s in s1 + s2:
-            depth[s] += 1
-        heapq.heappush(heap, (f1 + f2, tick, s1 + s2))
-        tick += 1
-    if max(depth.values()) > max_len:
-        flat = max(1, (len(freqs) - 1).bit_length())
-        return {s: flat for s in freqs}
-    return depth
-
-
-def _canonical_codes_w(lengths: dict[int, int]) -> dict:
-    """Symbol → (code, len) matching the decoder's canonical order."""
-    by_len: dict[int, list[int]] = {}
-    for s, length in lengths.items():
-        by_len.setdefault(length, []).append(s)
-    out = {}
-    code = 0
-    for length in range(1, 17):
-        for s in sorted(by_len.get(length, [])):
-            out[s] = (code, length)
-            code += 1
-        code <<= 1
-    return out
-
-
-def _write_prefix_code(bw: _BitsW, lengths: dict[int, int],
-                       alphabet_size: int) -> dict:
-    """Emit one prefix code (simple when possible) and return the
-    symbol → (code, len) encode table."""
-    syms = sorted(lengths)
-    if len(syms) <= 2 and all(s < 256 for s in syms):
-        bw.write(1, 1)  # simple
-        bw.write(len(syms) - 1, 1)
-        if syms[0] < 2 and len(syms) == 1:
-            bw.write(0, 1)
-            bw.write(syms[0], 1)
-        else:
-            bw.write(1, 1)
-            bw.write(syms[0], 8)
-        if len(syms) == 2:
-            bw.write(syms[1], 8)
-        if len(syms) == 1:
-            return {syms[0]: (0, 0)}
-        return {syms[0]: (0, 1), syms[1]: (1, 1)}
-    bw.write(0, 1)  # code-length-coded
-    full = [lengths.get(s, 0) for s in range(alphabet_size)]
-    # trim trailing zeros via the max_symbol field
-    last = max(s for s, length in enumerate(full) if length)
-    cl_freqs: dict[int, int] = {}
-    for length in full[:last + 1]:
-        cl_freqs[length] = cl_freqs.get(length, 0) + 1
-    cl_lengths = _huff_lengths(cl_freqs, max_len=7)
-    bw.write(19 - 4, 4)  # all 19 code-length slots
-    for s in _CL_ORDER:
-        bw.write(cl_lengths.get(s, 0), 3)
-    n_emit = last + 1
-    bw.write(1, 1)  # use max_symbol
-    nbits_slot = 0
-    while (1 << (2 + 2 * nbits_slot)) - 1 + 2 < n_emit:
-        nbits_slot += 1
-    bw.write(nbits_slot, 3)
-    bw.write(n_emit - 2, 2 + 2 * nbits_slot)
-    if len(cl_lengths) == 1:
-        # single-symbol code: the decoder consumes ZERO bits per symbol
-        cl_codes = {next(iter(cl_lengths)): (0, 0)}
-    else:
-        cl_codes = _canonical_codes_w(cl_lengths)
-    for length in full[:last + 1]:
-        c, ln = cl_codes[length]
-        _write_code(bw, c, ln)
-    if len(lengths) == 1:
-        return {next(iter(lengths)): (0, 0)}
-    return _canonical_codes_w(lengths)
-
-
-def _write_code(bw: _BitsW, code: int, length: int) -> None:
-    """Prefix-code bits go MSB-first into the LSB-first stream."""
-    for i in range(length - 1, -1, -1):
-        bw.write((code >> i) & 1, 1)
-
-
-def _rev(code: int, length: int) -> int:
-    out = 0
-    for _ in range(length):
-        out = (out << 1) | (code & 1)
-        code >>= 1
-    return out
-
-
-def _prefix_slot(v: int):
-    """value → (slot, extra_bits_value, extra_bits_count); inverse of
-    ``_prefix_value``."""
-    x = v - 1
-    if x < 4:
-        return x, 0, 0
-    eb = x.bit_length() - 2
-    top = x >> eb
-    slot = 2 * eb + (top - 2) + 2
-    offset = top << eb
-    return slot, x - offset, eb
-
-
-def _forward_predictor(px: np.ndarray, mode: int) -> np.ndarray:
-    """Forward PREDICTOR transform (constant mode): residual = pixel -
-    prediction, mod 256, in scan order over the spec's neighbor rules.
-    Exact inverse of `_apply_inverse_transforms` type 0."""
-    h, w, _ = px.shape
-    res = np.empty_like(px)
-    for y in range(h):
-        for x in range(w):
-            if x == 0 and y == 0:
-                pred = np.array([255, 0, 0, 0], np.uint8)
-            elif y == 0:
-                pred = px[0, x - 1]
-            elif x == 0:
-                pred = px[y - 1, 0]
-            else:
-                tr = px[y - 1, x + 1] if x + 1 < w else px[y, 0]
-                pred = _predict(mode, px[y, x - 1], px[y - 1, x],
-                                px[y - 1, x - 1], tr)
-            res[y, x] = px[y, x] - pred  # uint8 wraps mod 256
-    return res
-
-
-def _forward_color(argb: np.ndarray, g2r: int, g2b: int,
-                   r2b: int) -> np.ndarray:
-    """Forward COLOR transform (constant element): subtract the same
-    shifted cross-channel terms the decoder adds back."""
-    green_s = ((argb >> 8) & 0xFF).astype(np.int8).astype(np.int32)
-    red = ((argb >> 16) & 0xFF).astype(np.int32)
-    blue = (argb & 0xFF).astype(np.int32)
-    red_t = (red - ((g2r * green_s) >> 5)) & 0xFF
-    # the decoder's red_s is the *reconstructed* (= original) red, signed
-    red_s = red.astype(np.uint8).view(np.int8).astype(np.int32)
-    blue_t = (blue - ((g2b * green_s) >> 5) - ((r2b * red_s) >> 5)) & 0xFF
-    return ((argb & 0xFF00FF00)
-            | (red_t.astype(np.uint32) << 16)
-            | blue_t.astype(np.uint32))
-
-
-def encode_vp8l(img: np.ndarray, subtract_green: bool = False,
-                palette: bool = False, use_lz77: bool = False,
-                cache_bits: int = 0,
-                predictor_mode: int | None = None,
-                predictor_bits: int = 4,
-                color_elt: tuple[int, int, int] | None = None,
-                color_bits: int = 4,
-                meta_bits: int = 0) -> bytes:
-    """Legal VP8L stream for an HxWx{3,4} uint8 image.  Options select
-    decoder paths: SUBTRACT_GREEN transform, COLOR_INDEXING palette,
-    PREDICTOR (constant mode over `predictor_bits` tiles), COLOR
-    (constant `(g2r, g2b, r2b)` element), a meta-prefix entropy image
-    (`meta_bits`, single group), RLE LZ77 back-references, color
-    cache."""
-    img = np.atleast_3d(img.astype(np.uint8))
-    h, w, c = img.shape
-    if c == 1:
-        img = np.repeat(img, 3, axis=2)
-        c = 3
-    alpha = (img[:, :, 3] if c >= 4
-             else np.full((h, w), 255, np.uint8))
-    argb = (alpha.astype(np.uint32) << 24
-            | img[:, :, 0].astype(np.uint32) << 16
-            | img[:, :, 1].astype(np.uint32) << 8
-            | img[:, :, 2].astype(np.uint32))
-
-    bw = _BitsW()
-    out = bytearray([0x2F])
-    hdr = (w - 1) | ((h - 1) << 14) | ((1 if c >= 4 else 0) << 28)
-    out += hdr.to_bytes(4, "little")
-
-    coded = argb
-    if palette:
-        colors, inverse = np.unique(argb.reshape(-1), return_inverse=True)
-        if len(colors) > 256:
-            raise CodecError("vp8l: too many colors for palette")
-        bw.write(1, 1)
-        bw.write(3, 2)  # COLOR_INDEXING
-        bw.write(len(colors) - 1, 8)
-        # delta-coded palette written as a 1×n literal image
-        pal_px = colors.view(np.uint8).reshape(-1, 4).astype(np.int32)
-        deltas = pal_px.copy()
-        deltas[1:] -= pal_px[:-1]
-        deltas &= 0xFF
-        pal_argb = (deltas[:, 3].astype(np.uint32) << 24
-                    | deltas[:, 2].astype(np.uint32) << 16
-                    | deltas[:, 1].astype(np.uint32) << 8
-                    | deltas[:, 0].astype(np.uint32))
-        _encode_literal_image(bw, pal_argb.reshape(1, -1), level0=False)
-        idx = inverse.reshape(h, w).astype(np.uint32)
-        pal_size = len(colors)
-        ib = (3 if pal_size <= 2 else 2 if pal_size <= 4
-              else 1 if pal_size <= 16 else 0)
-        if ib:
-            per = 1 << ib
-            bits = 8 >> ib
-            packed = np.zeros((h, _sub_size(w, ib)), np.uint32)
-            for i in range(per):
-                cols = idx[:, i::per]
-                packed[:, :cols.shape[1]] |= cols << (i * bits)
-            idx = packed
-        coded = idx << 8  # indices ride in the green channel
-    else:
-        if subtract_green:
-            bw.write(1, 1)
-            bw.write(2, 2)  # SUBTRACT_GREEN
-            green = (coded >> 8) & 0xFF
-            red = (((coded >> 16) & 0xFF) - green) & 0xFF
-            blue = ((coded & 0xFF) - green) & 0xFF
-            coded = (coded & 0xFF00FF00) | (red << 16) | blue
-        if color_elt is not None:
-            g2r, g2b, r2b = color_elt
-            bw.write(1, 1)
-            bw.write(1, 2)  # COLOR
-            bw.write(color_bits - 2, 3)
-            elt_px = (np.uint32(0xFF) << 24
-                      | np.uint32(r2b & 0xFF) << 16
-                      | np.uint32(g2b & 0xFF) << 8
-                      | np.uint32(g2r & 0xFF))
-            sub = np.full((_sub_size(h, color_bits),
-                           _sub_size(w, color_bits)), elt_px, np.uint32)
-            _encode_literal_image(bw, sub, level0=False)
-            coded = _forward_color(coded, g2r, g2b, r2b)
-        if predictor_mode is not None:
-            bw.write(1, 1)
-            bw.write(0, 2)  # PREDICTOR
-            bw.write(predictor_bits - 2, 3)  # stored as bits-2
-            mode_px = np.uint32(0xFF000000 | (predictor_mode << 8))
-            sub = np.full((_sub_size(h, predictor_bits),
-                           _sub_size(w, predictor_bits)), mode_px,
-                          np.uint32)
-            _encode_literal_image(bw, sub, level0=False)
-            px = np.stack([(coded >> 24) & 0xFF, (coded >> 16) & 0xFF,
-                           (coded >> 8) & 0xFF, coded & 0xFF],
-                          axis=-1).astype(np.uint8)
-            res = _forward_predictor(px, predictor_mode)
-            coded = (res[:, :, 0].astype(np.uint32) << 24
-                     | res[:, :, 1].astype(np.uint32) << 16
-                     | res[:, :, 2].astype(np.uint32) << 8
-                     | res[:, :, 3].astype(np.uint32))
-    bw.write(0, 1)  # no more transforms
-    _encode_literal_image(bw, coded, use_lz77=use_lz77,
-                          cache_bits=cache_bits, meta_bits=meta_bits)
-    bw.flush()
-    payload = bytes(out) + bytes(bw.out)
-    riff = (b"WEBPVP8L" + struct.pack("<I", len(payload)) + payload
-            + (b"\x00" if len(payload) & 1 else b""))
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
-def _encode_literal_image(bw: _BitsW, argb: np.ndarray,
-                          use_lz77: bool = False,
-                          cache_bits: int = 0,
-                          level0: bool = True,
-                          meta_bits: int = 0) -> None:
-    """Entropy-coded image body: cache bit, no meta, per-channel codes,
-    then literal / RLE / cache-coded pixels.  Transform sub-images
-    (``level0=False``) carry no meta-prefix bit (RFC 9649 §5).
-    ``meta_bits`` emits a constant group-0 meta-prefix image (single
-    entropy group) to exercise the decoder's meta path."""
-    flat = [int(v) for v in argb.reshape(-1)]
-    if cache_bits:
-        bw.write(1, 1)
-        bw.write(cache_bits, 4)
-    else:
-        bw.write(0, 1)
-    if level0:
-        if meta_bits:
-            bw.write(1, 1)
-            bw.write(meta_bits - 2, 3)
-            mh, mw = argb.shape
-            meta = np.full((_sub_size(mh, meta_bits),
-                            _sub_size(mw, meta_bits)),
-                           np.uint32(0xFF000000), np.uint32)
-            _encode_literal_image(bw, meta, level0=False)
-        else:
-            bw.write(0, 1)  # no meta-prefix image
-
-    # token stream: ("lit", px) | ("copy", length) | ("cache", idx)
-    tokens = []
-    cache = [None] * ((1 << cache_bits) if cache_bits else 0)
-    i, n = 0, len(flat)
-    while i < n:
-        px = flat[i]
-        if use_lz77 and i > 0 and flat[i - 1] == px:
-            run = 1
-            while (i + run < n and flat[i + run] == px
-                   and run < 4096):
-                run += 1
-            tokens.append(("copy", run))
-            if cache_bits:
-                for j in range(run):
-                    cache[(0x1E35A7BD * flat[i + j] & 0xFFFFFFFF)
-                          >> (32 - cache_bits)] = flat[i + j]
-            i += run
-            continue
-        if cache_bits:
-            key = (0x1E35A7BD * px & 0xFFFFFFFF) >> (32 - cache_bits)
-            if cache[key] == px:
-                tokens.append(("cache", key))
-                i += 1
-                continue
-            cache[key] = px
-        tokens.append(("lit", px))
-        i += 1
-
-    gf: dict[int, int] = {}
-    rf: dict[int, int] = {}
-    bf: dict[int, int] = {}
-    af: dict[int, int] = {}
-    df: dict[int, int] = {}
-    for kind, v in tokens:
-        if kind == "lit":
-            gf[(v >> 8) & 0xFF] = gf.get((v >> 8) & 0xFF, 0) + 1
-            rf[(v >> 16) & 0xFF] = rf.get((v >> 16) & 0xFF, 0) + 1
-            bf[v & 0xFF] = bf.get(v & 0xFF, 0) + 1
-            af[(v >> 24) & 0xFF] = af.get((v >> 24) & 0xFF, 0) + 1
-        elif kind == "copy":
-            slot, _, _ = _prefix_slot(v)
-            gf[256 + slot] = gf.get(256 + slot, 0) + 1
-            dslot, _, _ = _prefix_slot(121)  # distance 1 → code 121
-            df[dslot] = df.get(dslot, 0) + 1
-        else:
-            gf[280 + v] = gf.get(280 + v, 0) + 1
-    for f in (rf, bf, af, df):
-        if not f:
-            f[0] = 1  # every group carries all five codes
-    cache_size = (1 << cache_bits) if cache_bits else 0
-    gt = _write_prefix_code(bw, _huff_lengths(gf), 256 + 24 + cache_size)
-    rt = _write_prefix_code(bw, _huff_lengths(rf), 256)
-    bt = _write_prefix_code(bw, _huff_lengths(bf), 256)
-    at = _write_prefix_code(bw, _huff_lengths(af), 256)
-    dt = _write_prefix_code(bw, _huff_lengths(df), 40)
-
-    for kind, v in tokens:
-        if kind == "lit":
-            c, ln = gt[(v >> 8) & 0xFF]
-            _write_code(bw, c, ln)
-            c, ln = rt[(v >> 16) & 0xFF]
-            _write_code(bw, c, ln)
-            c, ln = bt[v & 0xFF]
-            _write_code(bw, c, ln)
-            c, ln = at[(v >> 24) & 0xFF]
-            _write_code(bw, c, ln)
-        elif kind == "copy":
-            slot, extra, eb = _prefix_slot(v)
-            c, ln = gt[256 + slot]
-            _write_code(bw, c, ln)
-            bw.write(extra, eb)
-            dslot, dextra, deb = _prefix_slot(121)
-            c, ln = dt[dslot]
-            _write_code(bw, c, ln)
-            bw.write(dextra, deb)
-        else:
-            c, ln = gt[280 + v]
-            _write_code(bw, c, ln)
-
-
 def decode_webp_frames(data: bytes, max_frames: int | None = None
                        ) -> list[tuple[np.ndarray, int]]:
     """Animated WebP (VP8X + ANIM/ANMF) → [(RGBA canvas snapshot,
@@ -1026,35 +627,3 @@ def _rgba(px: np.ndarray) -> np.ndarray:
         return px
     return np.concatenate(
         [px, np.full(px.shape[:2] + (1,), 255, np.uint8)], axis=2)
-
-
-def encode_webp_anim(frames: list, delays_ms: list,
-                     lossless: bool = True) -> bytes:
-    """Fixture writer: full-canvas RGBA frames → animated WebP
-    (VP8X + ANIM + per-frame ANMF wrapping VP8L essence)."""
-    if not frames or len(frames) != len(delays_ms):
-        raise ValueError("frames/delays mismatch")
-    h, w = frames[0].shape[:2]
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    vp8x = chunk(b"VP8X", bytes([0x02]) + b"\x00" * 3
-                 + (w - 1).to_bytes(3, "little")
-                 + (h - 1).to_bytes(3, "little"))
-    anim = chunk(b"ANIM", struct.pack("<IH", 0, 0))
-    body = vp8x + anim
-    for img, dur in zip(frames, delays_ms):
-        riff = encode_vp8l(np.ascontiguousarray(img))
-        # strip the still-image RIFF wrapper down to the VP8L payload
-        essence_len = struct.unpack("<I", riff[16:20])[0]
-        essence = riff[20:20 + essence_len]
-        payload = (b"\x00" * 6            # x=y=0
-                   + (w - 1).to_bytes(3, "little")
-                   + (h - 1).to_bytes(3, "little")
-                   + int(dur).to_bytes(3, "little")
-                   + bytes([0x02])        # no-blend (full-canvas frames)
-                   + chunk(b"VP8L", essence))
-        body += chunk(b"ANMF", payload)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body

@@ -134,8 +134,9 @@ def session_configs(profile: str = "local", master: str | None = None,
       the driver's resumable bucket loop (plans/driver.py) and any
       truncated lineage survive executor loss; meaningless on one box.
     * executor shape — cluster pins the SCALE.md arithmetic (16 cores ×
-      16 GB; ~5 GB steady-state per executor leaves 3× headroom for the
-      skew tail); local mode has no executors to shape.
+      16 GB heap; the Python workers' ~5 GB steady state and one
+      broadcast store copy each live in the 10 GB memoryOverhead); local
+      mode has no executors to shape.
     """
     common = {
         # moderate heap: measured on this box, a 48g heap made G1 regions
@@ -164,12 +165,15 @@ def session_configs(profile: str = "local", master: str | None = None,
             # 100 TB, not the ~10^8 a 1 MB split size would produce
             "spark.sql.files.maxPartitionBytes": "256m",
             "spark.executor.memory": "16g",
-            "spark.executor.cores": "16",
             # kernel stage is CPU-bound; default parallelism follows cores
-            "spark.executor.memoryOverhead": "4g",
-            # pyspark workers (the map_rows kernels) live outside the
-            # JVM heap: SCALE.md's ~5 GB/executor steady state
-            "spark.executor.pyspark.memory": "6g",
+            "spark.executor.cores": "16",
+            # the Python workers (the map_rows kernels, one per core) live
+            # here, outside the JVM heap, beside the JVM's own off-heap
+            # share.  No spark.executor.pyspark.memory: it would cap each
+            # worker's address space at 1/16 of it, and the imports alone
+            # map ~340 MB.  The size is checked by the session-profile
+            # tests (SCALE.md "Side tables").
+            "spark.executor.memoryOverhead": "10g",
             "spark.shuffle.compress": "true",
             "spark.shuffle.spill.compress": "true",
             # large shuffles: fewer, bigger fetch requests

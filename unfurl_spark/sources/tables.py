@@ -88,31 +88,3 @@ def append_metrics(df: DataFrame, identifier: str) -> None:
             return
         identifier = _fallback_path(spark, identifier)
     df.write.mode("append").parquet(identifier)
-
-
-def save_cobucketed(df: DataFrame, table: str, key: str,
-                    n_buckets: int = 64) -> None:
-    """Persist a table hash-bucketed AND sorted by the join key
-    (`bucketBy` + `sortBy` via saveAsTable — Hive-style bucketing).
-
-    Two tables co-bucketed on the same key with the same bucket count
-    join with ZERO exchanges — the scan itself satisfies the join's
-    distribution requirement.  At 10^12 docs this is how the documents
-    table joins its per-doc side products (spans, signatures, scores)
-    repeatedly without re-shuffling 100 TB each time: pay the shuffle
-    once at write, amortize over every downstream join.  (With Iceberg
-    the same contract comes from a `bucket(N, key)` partition transform
-    + storage-partitioned joins.)
-    """
-    (df.write.mode("overwrite")
-       .bucketBy(n_buckets, key).sortBy(key)
-       .format("parquet")
-       .saveAsTable(table))
-
-
-def cobucketed_join(spark: SparkSession, left_table: str,
-                    right_table: str, key: str) -> DataFrame:
-    """Join two co-bucketed tables on their bucket key.  The physical
-    plan contains no Exchange (asserted in tests/test_bucketed_join.py);
-    with sortBy metadata the sort may elide too."""
-    return spark.table(left_table).join(spark.table(right_table), key)
