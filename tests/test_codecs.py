@@ -379,6 +379,26 @@ def test_jpeg_progressive_subsampled_matches_baseline():
         assert (base == prog).all(), shape
 
 
+def test_jpeg_bit_reader_accumulator_stays_bounded():
+    """A bit read costs the same at any offset of an entropy segment:
+    the Huffman reader's accumulator never holds more than 32 bits.  It
+    used to keep every consumed bit, so each read shifted a bigint as
+    long as the segment read so far (quadratic in the scan's size)."""
+    seg = bytes(np.random.default_rng(3).integers(
+        0, 0xFF, 64 * 1024, dtype=np.uint8))       # no 0xFF: no markers
+    r = J._BitReader(seg, 0)
+    out = bytearray()
+    for _ in range(len(seg)):
+        byte = 0
+        for _ in range(8):
+            byte = (byte << 1) | r.read_bit()
+            assert r.acc.bit_length() <= 32
+        out.append(byte)
+    assert bytes(out) == seg
+    with pytest.raises(C.CodecError):
+        r.read_bit()
+
+
 def test_jpeg_progressive_truncation_total():
     """Truncated progressive streams raise CodecError or decode a
     partial refinement — never crash, never hang."""

@@ -75,7 +75,8 @@ class _BitReader:
         self.acc = 0
         self.nbits = 0
 
-    def _fill(self) -> None:
+    def _byte(self) -> int:
+        """The next data byte; 0xFF (1-bit padding) at a marker."""
         d, p = self.data, self.pos
         if p >= len(d):
             raise CodecError("jpeg: truncated entropy data")
@@ -92,18 +93,17 @@ class _BitReader:
                 self.pos = p + 2
             elif 0xD0 <= nxt <= 0xD7:
                 raise CodecError("jpeg: unconsumed restart marker")
-            else:  # EOI/next segment: pad with 1-bits per spec
-                self.acc = (self.acc << 8) | 0xFF
-                self.nbits += 8
-                return
-        else:
-            self.pos = p + 1
-        self.acc = (self.acc << 8) | byte
-        self.nbits += 8
+            # else EOI/next segment: pad with 1-bits per spec
+            return 0xFF
+        self.pos = p + 1
+        return byte
 
     def read_bit(self) -> int:
         if self.nbits == 0:
-            self._fill()
+            # every bit of the previous byte is consumed: the accumulator
+            # holds one byte, so a bit read costs the same at any offset
+            self.acc = self._byte()
+            self.nbits = 8
         self.nbits -= 1
         return (self.acc >> self.nbits) & 1
 
