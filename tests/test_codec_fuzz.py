@@ -30,6 +30,8 @@ def _seed_payloads():
         ("jpeg", E.encode_jpeg(img, quality=80)),
         ("jpeg", E.encode_jpeg(img, quality=80, subsample=True,
                              restart_interval=2)),
+        ("jpeg", E.encode_jpeg_progressive(img, quality=80, subsample=True)),
+        ("jpeg", E.encode_jpeg_lossless(img, restart_interval=2)),
         ("gif", E.encode_gif(flat)),
         ("bmp", E.encode_bmp(img)),
         ("ppm", E.encode_ppm(img)),

@@ -399,6 +399,20 @@ def test_jpeg_bit_reader_accumulator_stays_bounded():
         r.read_bit()
 
 
+def test_jpeg_progressive_undefined_huffman_table_is_codec_error():
+    """A progressive scan that names an undefined Huffman table is a typed
+    CodecError (it escaped as an AttributeError from a None table)."""
+    rng = np.random.default_rng(11)
+    img = rng.integers(0, 256, (16, 24, 3), dtype=np.uint8)
+    data = bytearray(E.encode_jpeg_progressive(img, quality=80))
+    sos = data.index(b"\xff\xda", data.index(b"\xff\xda") + 2)
+    # FF DA len(2) Ns Cs Td<<4|Ta Ss Se Ah<<4|Al: the first AC scan
+    assert data[sos + 4] == 1 and data[sos + 7:sos + 9] == b"\x01\x05"
+    data[sos + 6] = 0x33
+    with pytest.raises(C.CodecError):
+        J.decode_jpeg(bytes(data))
+
+
 def test_jpeg_progressive_truncation_total():
     """Truncated progressive streams raise CodecError or decode a
     partial refinement — never crash, never hang."""

@@ -114,8 +114,9 @@ def _enc_prog(helper, img, arith, q, gray):
 
 def test_progressive_arith_identity(helper):
     """SOF10: arithmetic progressive must decode byte-identically to
-    the arithmetic sequential AND Huffman encodings of the same image
-    (entropy + scan-script are both lossless)."""
+    the arithmetic sequential AND Huffman (sequential and progressive)
+    encodings of the same image (entropy + scan-script are both
+    lossless)."""
     rng = np.random.default_rng(31)
     for t in range(6):
         gray = t % 2 == 0
@@ -129,10 +130,13 @@ def test_progressive_arith_identity(helper):
         prog = _enc_prog(helper, g, 1, q, int(gray))
         seq = _enc(helper, g, 1, q, int(gray))
         huff = _enc(helper, g, 0, q, int(gray))
+        huff_prog = _enc_prog(helper, g, 0, q, int(gray))
         assert b"\xff\xca" in prog                # SOF10
+        assert b"\xff\xc2" in huff_prog           # SOF2
         p_prog = decode_jpeg(prog)
         assert np.array_equal(p_prog, decode_jpeg(seq)), (t, q)
         assert np.array_equal(p_prog, decode_jpeg(huff)), (t, q)
+        assert np.array_equal(p_prog, decode_jpeg(huff_prog)), (t, q)
 
 
 def test_hierarchical_still_boundary(helper):
@@ -148,25 +152,26 @@ def test_hierarchical_still_boundary(helper):
 
 def test_arith_restart_intervals(helper):
     """Restart markers inside arithmetic scans: decoder + statistics
-    re-initialize at every RSTn, sequential and progressive."""
+    re-initialize at every RSTn, sequential and progressive; and inside
+    Huffman progressive scans (EOB runs end at every RSTn)."""
     rng = np.random.default_rng(12)
     for gray in (0, 1):
         shape = (40, 56) if gray else (40, 56, 3)
         g = rng.integers(0, 256, shape, dtype=np.uint8)
-        for prog in (0, 1):
+        for coder, prog in ((1, 0), (1, 1), (0, 1)):
             for dri in (1, 3):
                 r = subprocess.run(
-                    [helper, "encode", "56", "40", "75", "1",
+                    [helper, "encode", "56", "40", "75", str(coder),
                      str(gray), str(prog), str(dri)],
                     input=g.tobytes(), capture_output=True)
-                arith = r.stdout
-                assert b"\xff\xdd" in arith           # DRI present
+                enc = r.stdout
+                assert b"\xff\xdd" in enc             # DRI present
                 huff = subprocess.run(
                     [helper, "encode", "56", "40", "75", "0",
                      str(gray), "0", str(dri)],
                     input=g.tobytes(), capture_output=True).stdout
-                assert np.array_equal(decode_jpeg(arith),
-                                      decode_jpeg(huff)), (gray, prog, dri)
+                assert np.array_equal(decode_jpeg(enc), decode_jpeg(huff)), \
+                    (gray, coder, prog, dri)
 
 
 def test_non_interleaved_sequential_multiscan(helper):

@@ -1,4 +1,5 @@
-"""Every top-level def in ``unfurl_spark/`` is reached from code that runs it.
+"""Every top-level def and module-level constant in ``unfurl_spark/`` is
+reached from code that runs it.
 
 The package ships to every executor (``--py-files``) and is imported by
 every Python worker, so it should hold only what a job, the query
@@ -92,15 +93,20 @@ class _Module:
         tree = ast.parse(path.read_text(encoding="utf-8"))
         self.nodes: dict[str, list] = {}
         self.defs: set[str] = set()
+        self.constants: set[str] = set()  # bound by module-level assignment
         self.init: list = []  # statements that run on import and bind nothing
         self.aliases: dict[str, tuple] = {}
         for st in _flatten(tree.body):
             if isinstance(st, (ast.Import, ast.ImportFrom)):
                 self.aliases.update(self.imports(st))
                 continue
+            names = _bound_names(st)
             if isinstance(st, _DEFS):
                 self.defs.add(st.name)
-            names = _bound_names(st)
+            else:  # dunder names (``__version__``) are read by tooling
+                self.constants.update(
+                    n for n in names
+                    if not (n.startswith("__") and n.endswith("__")))
             if not names:
                 self.init.append(st)
             for n in names:
@@ -231,7 +237,9 @@ def _perfbench_identifiers() -> set[str]:
     return names
 
 
-def unreached_defs() -> list[str]:
+def _unreached(kind: str) -> list[str]:
+    """``module.name`` of every package def (``kind="defs"``) or
+    constant (``kind="constants"``) that no root reaches."""
     mods = _load_modules()
     reach = _Reach(mods)
     roots = ["__spark_entry__", f"{PKG}.plans.driver"]
@@ -250,11 +258,15 @@ def unreached_defs() -> list[str]:
     return sorted(
         f"{m.name}.{d}"
         for m in mods.values() if m.name.startswith(PKG)
-        for d in m.defs if (m.name, d) not in reach.seen_nodes)
+        for d in getattr(m, kind) if (m.name, d) not in reach.seen_nodes)
 
 
 def test_every_package_def_is_reached_from_a_root():
-    assert unreached_defs() == []
+    assert _unreached("defs") == []
+
+
+def test_every_package_constant_is_reached_from_a_root():
+    assert _unreached("constants") == []
 
 
 def test_package_imports_nothing_from_tests():

@@ -1,4 +1,4 @@
-"""Arithmetic-coded JPEG entropy decoding (ITU T.81 §D, §F.2.4).
+"""Arithmetic-coded JPEG entropy decoding (ITU T.81 §D, §F.2.4, §G.2).
 
 The QM-coder state machine below is ITU T.81 Table D.3 (113 adaptive
 states + the non-adapting "fixed" 0.5 state used for AC signs), checked
@@ -11,6 +11,12 @@ stuffed 0xFF data byte).
 Statistics binding per §F.2.4.1-3: DC contexts conditioned on the
 previous diff's classification against the DAC L/U thresholds; AC
 contexts indexed 3*(k-1) with the magnitude-category areas split at Kx.
+
+``ArithDecoder`` decodes one scan: it supplies the four block
+operations (DC first, DC refine, AC first, AC refine) and the restart
+reset that ``jpegc``'s scan walk calls, in the same form as the Huffman
+reader there.
+
 Verified end to end in tests/test_jpeg_arith.py: the same image encoded
 by libjpeg with Huffman and with arithmetic coding must decode to
 byte-identical pixels through this pipeline (entropy coding is
@@ -144,25 +150,54 @@ ARITH_TAB = (
 
 
 class ArithDecoder:
-    """T.81 §D.2 arithmetic decoding procedure over one entropy
-    segment, in the deployed register formulation: C accumulates code
-    bytes, CT counts bits until the next byte is due, A is the interval
-    (renormalized lazily at the START of each decision, which also
-    performs the two-byte seeding from the initial CT = -16).  State
-    bytes store (MPS << 7) | state_index; the Switch_MPS bit travels in
-    the table's next-LPS byte so the conditional exchange is a single
-    XOR."""
+    """T.81 §D.2 arithmetic decoding procedure over one scan, in the
+    deployed register formulation: C accumulates code bytes, CT counts
+    bits until the next byte is due, A is the interval (renormalized
+    lazily at the START of each decision, which also performs the
+    two-byte seeding from the initial CT = -16).  State bytes store
+    (MPS << 7) | state_index; the Switch_MPS bit travels in the table's
+    next-LPS byte so the conditional exchange is a single XOR.
 
-    __slots__ = ("data", "pos", "end", "c", "a", "ct", "marker_seen")
+    ``scan`` lists (component id, DC table id, AC table id); the block
+    operations take a component's index in it.  ``conditioning`` holds
+    the DAC values by (class, id): (0, id) → (L, U), (1, id) → Kx."""
 
-    def __init__(self, data: bytes, pos: int):
+    __slots__ = ("data", "pos", "end", "c", "a", "ct", "marker_seen",
+                 "dc_ids", "ac_ids", "bounds", "kx",
+                 "dc_stats", "ac_stats", "dc_ctx")
+
+    def __init__(self, data: bytes, pos: int, scan, conditioning):
         self.data = data
-        self.pos = pos
         self.end = len(data)
+        self.dc_ids = [d for _c, d, _a in scan]
+        self.ac_ids = [a for _c, _d, a in scan]
+        self.bounds = [conditioning.get((0, d), (0, 1)) for d in self.dc_ids]
+        self.kx = [conditioning.get((1, a), 5) for a in self.ac_ids]
+        self._start(pos)
+
+    def _start(self, pos: int) -> None:
+        """Begin an entropy-coded segment (a scan, or the data after an
+        RSTn): fresh registers, statistics areas and DC contexts.  One
+        area per table the scan names; components naming the same table
+        share it, and tables the scan does not name stay untouched."""
+        self.pos = pos
         self.marker_seen = False
         self.c = 0
         self.a = 0
         self.ct = -16
+        dc = {d: bytearray(64) for d in self.dc_ids}
+        ac = {a: bytearray(256) for a in self.ac_ids}
+        self.dc_stats = [dc[d] for d in self.dc_ids]
+        self.ac_stats = [ac[a] for a in self.ac_ids]
+        self.dc_ctx = [0] * len(self.dc_ids)
+
+    def restart(self) -> None:
+        """Resume after the next RSTn marker with everything re-initialized."""
+        d, p = self.data, self.pos
+        while p + 1 < self.end and not (d[p] == 0xFF
+                                        and 0xD0 <= d[p + 1] <= 0xD7):
+            p += 1
+        self._start(p + 2)
 
     def _byte(self) -> int:
         if self.marker_seen or self.pos >= self.end:
@@ -220,114 +255,110 @@ class ArithDecoder:
         self.ct = ct
         return sv >> 7
 
+    def _magnitude(self, stats: bytearray, st: int, m: int) -> int:
+        """|value| from its magnitude category ``m``: the bits below m's
+        top bit, decoded at ``st + 14`` (§F.2.4.1 Figure F.23), plus 1."""
+        v = m
+        st += 14
+        while m := m >> 1:
+            if self.decode(stats, st):
+                v |= m
+        return v + 1
 
-FIXED_BIN = bytearray([113])
-
-
-def decode_dc_arith(dec: ArithDecoder, stats: bytearray, ctx_state: list,
-                    ci: int, cond_l: int, cond_u: int) -> int:
-    """One DC difference per §F.2.4.1 (decoder mirror of the encoder's
-    Figures F.4-F.9)."""
-    base = ctx_state[ci]
-    if dec.decode(stats, base) == 0:
-        ctx_state[ci] = 0
-        return 0
-    sign = dec.decode(stats, base + 1)
-    st = base + 2 + sign
-    m = dec.decode(stats, st)
-    if m:
-        st = 20
-        while dec.decode(stats, st):
-            m <<= 1
-            if m == 0x8000:
-                raise CodecError("jpeg: arith DC magnitude overflow")
-            st += 1
-    # next-block conditioning category from this diff's magnitude
-    if m < ((1 << cond_l) >> 1):
-        ctx_state[ci] = 0
-    elif m > ((1 << cond_u) >> 1):
-        ctx_state[ci] = 12 + sign * 4
-    else:
-        ctx_state[ci] = 4 + sign * 4
-    v = m
-    st += 14
-    mm = m
-    while mm := mm >> 1:
-        if dec.decode(stats, st):
-            v |= mm
-    v += 1
-    return -v if sign else v
-
-
-def decode_ac_arith(dec: ArithDecoder, stats: bytearray, k: int,
-                    kx: int, se: int):
-    """One AC coefficient (or EOB) per §F.2.4.3.  Returns (k, value)
-    with value None signalling EOB."""
-    st = 3 * (k - 1)
-    if dec.decode(stats, st):
-        return k, None
-    while dec.decode(stats, st + 1) == 0:
-        st += 3
-        k += 1
-        if k > se:
-            raise CodecError("jpeg: arith AC index overflow")
-    sign = dec.decode(FIXED_BIN, 0)
-    st += 2
-    m = dec.decode(stats, st)
-    if m:
-        if dec.decode(stats, st):
-            m = 2
-            st = 189 if k <= kx else 217
-            while dec.decode(stats, st):
+    # -- block operations (§F.2.4, §G.2) ---------------------------------
+    def dc_diff(self, si: int) -> int:
+        """DC first: the next DC difference of scan component ``si``; the
+        next block's context comes from this diff's magnitude against the
+        DAC bounds L, U."""
+        stats, ctx = self.dc_stats[si], self.dc_ctx
+        base = ctx[si]
+        if self.decode(stats, base) == 0:
+            ctx[si] = 0
+            return 0
+        sign = self.decode(stats, base + 1)
+        st = base + 2 + sign
+        m = self.decode(stats, st)
+        if m:
+            st = 20
+            while self.decode(stats, st):
                 m <<= 1
                 if m == 0x8000:
-                    raise CodecError("jpeg: arith AC magnitude overflow")
+                    raise CodecError("jpeg: arith DC magnitude overflow")
                 st += 1
-    v = m
-    st += 14
-    mm = m
-    while mm := mm >> 1:
-        if dec.decode(stats, st):
-            v |= mm
-    v += 1
-    return k, (-v if sign else v)
+        cond_l, cond_u = self.bounds[si]
+        if m < ((1 << cond_l) >> 1):
+            ctx[si] = 0
+        elif m > ((1 << cond_u) >> 1):
+            ctx[si] = 12 + sign * 4
+        else:
+            ctx[si] = 4 + sign * 4
+        v = self._magnitude(stats, st, m)
+        return -v if sign else v
 
+    def dc_bit(self) -> int:
+        """DC refine: one fixed-probability bit per block."""
+        return self.decode(FIXED_BIN, 0)
 
-def decode_dc_refine_arith(dec: ArithDecoder, coef, al: int) -> None:
-    """DC successive-approximation refinement: one fixed-probability
-    bit per block (§G.2 arithmetic variant)."""
-    if dec.decode(FIXED_BIN, 0):
-        coef[0] |= 1 << al
-
-
-def decode_ac_refine_arith(dec: ArithDecoder, stats: bytearray, coef,
-                           zigzag, ss: int, se: int, al: int) -> None:
-    """AC successive-approximation refinement for one block: correction
-    bits for previously-nonzero coefficients, newly-significant bits at
-    the current level, EOB decision gated past the previous stage's
-    end-of-block index."""
-    p1 = 1 << al
-    m1 = -p1
-    kex = se
-    while kex > 0 and coef[int(zigzag[kex])] == 0:
-        kex -= 1
-    k = ss
-    while k <= se:
-        st = 3 * (k - 1)
-        if k > kex:
-            if dec.decode(stats, st):
-                break
-        while True:
-            z = int(zigzag[k])
-            if coef[z]:
-                if dec.decode(stats, st + 2):
-                    coef[z] += m1 if coef[z] < 0 else p1
-                break
-            if dec.decode(stats, st + 1):
-                coef[z] = m1 if dec.decode(FIXED_BIN, 0) else p1
-                break
-            st += 3
+    def ac_first(self, si: int, coef, ss: int, se: int, al: int) -> None:
+        """AC first over the band ``ss..se`` (zigzag indices into
+        ``coef``), point transform ``al``."""
+        stats, kx = self.ac_stats[si], self.kx[si]
+        k = ss
+        while k <= se:
+            st = 3 * (k - 1)
+            if self.decode(stats, st):  # EOB
+                return
+            while self.decode(stats, st + 1) == 0:
+                st += 3
+                k += 1
+                if k > se:
+                    raise CodecError("jpeg: arith AC index overflow")
+            sign = self.decode(FIXED_BIN, 0)
+            st += 2
+            m = self.decode(stats, st)
+            if m:
+                if self.decode(stats, st):
+                    m = 2
+                    st = 189 if k <= kx else 217
+                    while self.decode(stats, st):
+                        m <<= 1
+                        if m == 0x8000:
+                            raise CodecError(
+                                "jpeg: arith AC magnitude overflow")
+                        st += 1
+            v = self._magnitude(stats, st, m)
+            coef[k] = (-v if sign else v) << al
             k += 1
-            if k > se:
-                raise CodecError("jpeg: arith AC refine overflow")
-        k += 1
+
+    def ac_refine(self, si: int, coef, ss: int, se: int, al: int) -> None:
+        """AC refine: correction bits for previously-nonzero
+        coefficients, newly-significant bits at the current level, the
+        EOB decision gated past the previous stage's end-of-block index."""
+        stats = self.ac_stats[si]
+        p1 = 1 << al
+        m1 = -p1
+        kex = se
+        while kex > 0 and coef[kex] == 0:
+            kex -= 1
+        k = ss
+        while k <= se:
+            st = 3 * (k - 1)
+            if k > kex:
+                if self.decode(stats, st):
+                    break
+            while True:
+                if coef[k]:
+                    if self.decode(stats, st + 2):
+                        coef[k] += m1 if coef[k] < 0 else p1
+                    break
+                if self.decode(stats, st + 1):
+                    coef[k] = m1 if self.decode(FIXED_BIN, 0) else p1
+                    break
+                st += 3
+                k += 1
+                if k > se:
+                    raise CodecError("jpeg: arith AC refine overflow")
+            k += 1
+
+
+FIXED_BIN = bytearray([113])

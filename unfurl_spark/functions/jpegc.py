@@ -1,21 +1,33 @@
-"""JPEG codec (ITU-T T.81) in stdlib + numpy: baseline sequential DCT
-AND progressive (SOF2).
+"""JPEG decoder (ITU-T T.81) in stdlib + numpy.
 
-Decoder: marker parse → Huffman entropy decode (with byte stuffing and
-restart markers) → dequantize → vectorized numpy IDCT → chroma
-upsample → YCbCr→RGB.  Handles SOF0/SOF1 and SOF2 (spectral selection
-+ successive approximation per T.81 G.1.2, incl. EOB runs and AC
-refinement correction bits), 4:4:4 / 4:2:2 / 4:2:0 sampling, DRI
-restarts, and multi-SOS NON-INTERLEAVED sequential files (one scan per
-component subset, T.81 A.2.2 — scans accumulate into per-component
-planes and assemble once every component is coded).  Arithmetic coding
-decodes too — sequential (SOF9, incl. non-interleaved multi-scan) and
-progressive (SOF10) via the T.81 QM-coder in ``jpegarith`` — and so
-does the LOSSLESS process (SOF3, Annex H: spatial DPCM, predictors
-1-7, point transform, modulo-65536).  The remaining boundaries are the
-hierarchical modes (SOF5-7/13-15), arithmetic lossless (SOF11), and
-lossless precision above 8 bits (12/16-bit DNG raws exceed the uint8
-pixel contract).
+Every DCT process takes one coefficient path: sequential (SOF0/SOF1)
+and progressive (SOF2) Huffman coding, and sequential (SOF9) and
+progressive (SOF10) arithmetic coding.
+
+- The SOF parse allocates one coefficient grid per component,
+  ``(mcuy·v, mcux·h, 64)`` int32 in zigzag order.
+- One scan walk fills the grids: MCU order when the scan codes several
+  components (T.81 A.2.3), the component's own block raster otherwise
+  (A.2.2), with a restart every ``restart_interval`` units.
+- The entropy coder is the only thing that varies.  The Huffman reader
+  below or the QM decoder of ``jpegarith`` supplies the four block
+  operations of G.1.2 (DC first, DC refine, AC first, AC refine) and
+  its own restart reset.  A sequential scan is DC first plus AC first
+  over the full band; a progressive scan codes DC or one AC band, by
+  spectral selection and successive approximation.
+- One reconstruction dequantizes, runs the IDCT over every block of a
+  component in one batched matmul, upsamples chroma (4:4:4, 4:2:2,
+  4:2:0) and converts YCbCr → RGB.  It runs as soon as a sequential
+  frame has coded every component (so multi-scan, non-interleaved
+  sequential files work too), or at the end of data for a progressive
+  frame.
+
+The lossless process (SOF3, Annex H: spatial DPCM, predictors 1-7,
+point transform, modulo-65536) shares the SOF parse and the marker skip
+but keeps its own sample-domain scan.  The remaining boundaries are the
+hierarchical modes (SOF5-7/13-15), arithmetic lossless (SOF11),
+4-component frames, and lossless precision above 8 bits (12/16-bit DNG
+raws exceed the uint8 pixel contract).
 
 The fixture encoders (baseline with Annex K tables, progressive with
 the conventional multi-scan script, lossless) are in
@@ -37,6 +49,7 @@ import struct
 import numpy as np
 
 from .codecs import CodecError, CodecUnavailable, _check_dims, total
+from .jpegarith import ArithDecoder
 
 # zigzag order: index i holds the raster position of the i-th scanned coeff
 ZIGZAG = np.array([
@@ -66,14 +79,20 @@ def _canonical_codes(bits: list[int], values: list[int]
 
 
 class _BitReader:
-    """MSB-first reader over entropy-coded data with 0xFF00 de-stuffing;
-    stops at any non-RST marker."""
+    """Huffman decoding of one scan: an MSB-first reader over entropy-coded
+    data with 0xFF00 de-stuffing that stops at any non-RST marker, and the
+    block operations over the code tables of the scan's components (in
+    scan order; empty where the scan reads none)."""
 
-    def __init__(self, data: bytes, pos: int):
+    def __init__(self, data: bytes, pos: int, dc=(), ac=(),
+                 progressive: bool = False):
         self.data = data
         self.pos = pos
         self.acc = 0
         self.nbits = 0
+        self.dc, self.ac = dc, ac
+        self.progressive = progressive
+        self.eobrun = 0
 
     def _byte(self) -> int:
         """The next data byte; 0xFF (1-bit padding) at a marker."""
@@ -113,10 +132,12 @@ class _BitReader:
             v = (v << 1) | self.read_bit()
         return v
 
-    def align_restart(self) -> None:
-        """Discard partial byte and consume an RSTn marker."""
+    def restart(self) -> None:
+        """Discard the partial byte, consume an RSTn marker and end any
+        EOB run."""
         self.acc = 0
         self.nbits = 0
+        self.eobrun = 0
         d, p = self.data, self.pos
         while p + 1 < len(d) and not (d[p] == 0xFF
                                       and 0xD0 <= d[p + 1] <= 0xD7):
@@ -134,10 +155,125 @@ class _BitReader:
                 return sym
         raise CodecError("jpeg: bad Huffman code")
 
+    # -- block operations (T.81 F.2.2, G.1.2) -----------------------------
+    def dc_diff(self, si: int) -> int:
+        """DC first: the next DC difference of scan component ``si``."""
+        t = self.decode_huff(self.dc[si])
+        return _extend(self.read_bits(t), t)
+
+    def dc_bit(self) -> int:
+        """DC refine: one bit per block."""
+        return self.read_bit()
+
+    def ac_first(self, si: int, coef, ss: int, se: int, al: int) -> None:
+        """AC first over the band ``ss..se``, point transform ``al``.  An
+        EOBn symbol (r<15, s=0) ends this block; only a progressive scan
+        reads its run bits and skips the next (1<<r)+bits-1 blocks too
+        (EOBRUN, G.1.2.2)."""
+        if self.eobrun:
+            self.eobrun -= 1
+            return
+        k = ss
+        while k <= se:
+            rs = self.decode_huff(self.ac[si])
+            r, s = rs >> 4, rs & 15
+            if s == 0:
+                if r < 15:
+                    if self.progressive:
+                        self.eobrun = (1 << r) + self.read_bits(r) - 1
+                    return
+                k += 16  # ZRL
+                continue
+            k += r
+            if k > se:
+                raise CodecError("jpeg: AC index overflow")
+            coef[k] = _extend(self.read_bits(s), s) << al
+            k += 1
+
+    def ac_refine(self, si: int, coef, ss: int, se: int, al: int) -> None:
+        """AC refine (G.1.2.3): correction bits ride along for every
+        already-nonzero coefficient the band passes over."""
+        bit = 1 << al
+
+        def correct(k):
+            if self.read_bit() and not (abs(coef[k]) & bit):
+                coef[k] += bit if coef[k] > 0 else -bit
+
+        k = ss
+        if self.eobrun == 0:
+            while k <= se:
+                rs = self.decode_huff(self.ac[si])
+                r, s = rs >> 4, rs & 15
+                if s == 0:
+                    if r < 15:
+                        self.eobrun = (1 << r) + self.read_bits(r)
+                        break
+                    val = 0  # ZRL: skip 16 zero-history coeffs
+                elif s == 1:
+                    val = bit if self.read_bit() else -bit
+                else:
+                    raise CodecError("jpeg: bad AC refine magnitude")
+                while k <= se:
+                    if coef[k] != 0:
+                        correct(k)
+                        k += 1
+                        continue
+                    if r == 0:
+                        if val:
+                            coef[k] = val
+                        k += 1
+                        break
+                    r -= 1
+                    k += 1
+        if self.eobrun > 0:
+            # EOB region covers the rest of this block's band
+            while k <= se:
+                if coef[k] != 0:
+                    correct(k)
+                k += 1
+            self.eobrun -= 1
+
 
 def _extend(v: int, t: int) -> int:
     """T.81 F.12 sign extension of a t-bit magnitude."""
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
+
+
+class _Frame:
+    """One SOF segment (T.81 B.2.2): size, components and coding process.
+    A DCT frame also holds the coefficient grid of each component id,
+    which its scans fill."""
+
+    def __init__(self, marker: int, body: bytes):
+        prec, self.h, self.w, nc = struct.unpack(">BHHB", body[:6])
+        if nc not in (1, 3):
+            # 4-component Adobe CMYK/YCCK (and exotic 2-component)
+            # frames would silently decode the first 3 planes as
+            # YCbCr — garbage pixels flagged ok.  Out of scope.
+            raise CodecUnavailable(f"jpeg: {nc}-component frame")
+        self.lossless = prec if marker == 0xC3 else 0  # sample precision
+        if marker == 0xC3 and not 2 <= prec <= 8:
+            # 12/16-bit lossless (DNG raws) exceeds the uint8 pixel
+            # contract of this pipeline
+            raise CodecUnavailable(f"jpeg: {prec}-bit lossless precision")
+        self.progressive = marker in (0xC2, 0xCA)
+        self.arithmetic = marker in (0xC9, 0xCA)
+        self.comps = []
+        for ci in range(nc):
+            cid, sampling, qid = body[6 + 3 * ci:9 + 3 * ci]
+            self.comps.append({"id": cid, "h": sampling >> 4,
+                               "v": sampling & 15, "q": qid})
+        _check_dims(self.w, self.h, "jpeg")
+        if self.lossless:
+            return
+        self.hmax = max(c["h"] for c in self.comps)
+        self.vmax = max(c["v"] for c in self.comps)
+        self.mcux = (self.w + 8 * self.hmax - 1) // (8 * self.hmax)
+        self.mcuy = (self.h + 8 * self.vmax - 1) // (8 * self.vmax)
+        self.coefs = {
+            c["id"]: np.zeros((self.mcuy * c["v"], self.mcux * c["h"], 64),
+                              np.int32)
+            for c in self.comps}
 
 
 @total
@@ -147,15 +283,11 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     pos = 2
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], dict] = {}  # (class, id) → code table
-    frame = None  # (w, h, comps)
+    # DAC arithmetic conditioning: (0, id) → (L, U), (1, id) → Kx
+    conditioning: dict[tuple[int, int], object] = {}
+    frame = None
     restart_interval = 0
-    progressive = False
-    arithmetic = False
-    arith_dc: dict[int, tuple] = {}   # table id → (L, U)
-    arith_ac: dict[int, int] = {}     # table id → Kx
-    prog_state: dict[int, dict] = {}  # comp id → {"coefs": ndarray}
-    seq_covered: set[int] = set()     # comp ids coded by sequential scans
-    lossless = 0                      # SOF3: sample precision, else 0
+    coded: set[int] = set()  # component ids a scan has coded
     while pos + 4 <= len(data):
         if data[pos] != 0xFF:
             raise CodecError("jpeg: marker expected")
@@ -186,87 +318,20 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 values = list(body[i + 17:i + 17 + nval])
                 htables[(tclass, tid)] = _canonical_codes(bits, values)
                 i += 17 + nval
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 seq, SOF2 progressive
-            _prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if nc not in (1, 3):
-                # 4-component Adobe CMYK/YCCK (and exotic 2-component)
-                # frames would silently decode the first 3 planes as
-                # YCbCr — garbage pixels flagged ok.  Out of scope.
-                raise CodecUnavailable(f"jpeg: {nc}-component frame")
-            comps = []
-            for ci in range(nc):
-                cid, sampling, qid = body[6 + 3 * ci:9 + 3 * ci]
-                comps.append({"id": cid, "h": sampling >> 4,
-                              "v": sampling & 15, "q": qid})
-            frame = (w, h, comps)
-            if marker == 0xC2:
-                progressive = True
-                _check_dims(w, h, "jpeg")
-                hmax = max(c["h"] for c in comps)
-                vmax = max(c["v"] for c in comps)
-                mcux = (w + 8 * hmax - 1) // (8 * hmax)
-                mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-                for c in comps:
-                    prog_state[c["id"]] = {
-                        "coefs": np.zeros(
-                            (mcuy * c["v"], mcux * c["h"], 64), np.int32)}
-        elif marker == 0xC9:  # SOF9: arithmetic-coded sequential
-            _prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if nc not in (1, 3):
-                raise CodecUnavailable(f"jpeg: {nc}-component frame")
-            comps = []
-            for ci in range(nc):
-                cid, sampling, qid = body[6 + 3 * ci:9 + 3 * ci]
-                comps.append({"id": cid, "h": sampling >> 4,
-                              "v": sampling & 15, "q": qid})
-            frame = (w, h, comps)
-            arithmetic = True
         elif marker == 0xCC:  # DAC: arithmetic conditioning
             i = 0
             while i + 1 < len(body):
                 tclass, tid = body[i] >> 4, body[i] & 15
                 if tclass == 0:
-                    arith_dc[tid] = (body[i + 1] & 15, body[i + 1] >> 4)
+                    conditioning[(0, tid)] = (body[i + 1] & 15,
+                                              body[i + 1] >> 4)
                 else:
-                    arith_ac[tid] = body[i + 1]
+                    conditioning[(1, tid)] = body[i + 1]
                 i += 2
-        elif marker == 0xCA:  # SOF10: arithmetic-coded progressive
-            _prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if nc not in (1, 3):
-                raise CodecUnavailable(f"jpeg: {nc}-component frame")
-            comps = []
-            for ci in range(nc):
-                cid, sampling, qid = body[6 + 3 * ci:9 + 3 * ci]
-                comps.append({"id": cid, "h": sampling >> 4,
-                              "v": sampling & 15, "q": qid})
-            frame = (w, h, comps)
-            arithmetic = True
-            progressive = True
-            _check_dims(w, h, "jpeg")
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcux = (w + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            for c in comps:
-                prog_state[c["id"]] = {
-                    "coefs": np.zeros(
-                        (mcuy * c["v"], mcux * c["h"], 64), np.int32)}
-        elif marker == 0xC3:  # SOF3: Huffman lossless (T.81 Annex H)
-            prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if nc not in (1, 3):
-                raise CodecUnavailable(f"jpeg: {nc}-component frame")
-            if not 2 <= prec <= 8:
-                # 12/16-bit lossless (DNG raws) exceeds the uint8 pixel
-                # contract of this pipeline
-                raise CodecUnavailable(
-                    f"jpeg: {prec}-bit lossless precision")
-            comps = []
-            for ci in range(nc):
-                cid, sampling, qid = body[6 + 3 * ci:9 + 3 * ci]
-                comps.append({"id": cid, "h": sampling >> 4,
-                              "v": sampling & 15, "q": qid})
-            frame = (w, h, comps)
-            lossless = prec
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA):
+            # SOF0/1 sequential, SOF2 progressive, SOF3 lossless (Huffman);
+            # SOF9 sequential, SOF10 progressive (arithmetic)
+            frame = _Frame(marker, body)
         elif marker in (0xC5, 0xC6, 0xC7, 0xCB,
                         0xCD, 0xCE, 0xCF):
             raise CodecUnavailable(f"jpeg: SOF{marker - 0xC0} unsupported")
@@ -280,98 +345,138 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             for si in range(ns):
                 cid, tids = body[1 + 2 * si], body[2 + 2 * si]
                 scan.append((cid, tids >> 4, tids & 15))
-            if lossless:
-                ss, _se, ahal = body[1 + 2 * ns:4 + 2 * ns]
-                _decode_scan_lossless(
-                    data, pos + 2 + seg_len, frame, scan, htables,
-                    restart_interval, ss, ahal & 15, lossless)
-                seq_covered.update(cid for cid, _d, _a in scan)
-                if len(seq_covered) == len(frame[2]):
-                    return _assemble_lossless(frame, ahal & 15, lossless)
-                pos = _next_marker(data, pos + 2 + seg_len)
-                continue
-            if not progressive:
-                # sequential scans accumulate into per-component planes
-                # (T.81 allows multi-SOS non-interleaved baseline/SOF9
-                # files: each scan covers a component subset); assemble
-                # once every frame component has been coded
-                if arithmetic:
-                    _decode_scan_arith(
-                        data, pos + 2 + seg_len, frame, scan, qtables,
-                        arith_dc, arith_ac, restart_interval)
-                else:
-                    _decode_scan(data, pos + 2 + seg_len, frame, scan,
-                                 qtables, htables, restart_interval)
-                seq_covered.update(cid for cid, _d, _a in scan)
-                if len(seq_covered) == len(frame[2]):
-                    return _assemble(frame)
-                pos = _next_marker(data, pos + 2 + seg_len)
-                continue
-            if arithmetic:
-                ss, se, ahal = body[1 + 2 * ns:4 + 2 * ns]
-                pos = _decode_prog_scan_arith(
-                    data, pos + 2 + seg_len, frame, scan, ss, se,
-                    ahal >> 4, ahal & 15, arith_dc, arith_ac,
-                    restart_interval, prog_state)
-                continue
-            ss, se, ahal = body[1 + 2 * ns:4 + 2 * ns]
-            pos = _decode_prog_scan(
-                data, pos + 2 + seg_len, frame, scan, ss, se,
-                ahal >> 4, ahal & 15, htables, restart_interval,
-                prog_state)
+            start = pos + 2 + seg_len
+            spectral = body[1 + 2 * ns:4 + 2 * ns]  # Ss, Se, Ah<<4|Al
+            if frame.lossless:
+                psv, _se, ahal = spectral
+                end = _decode_scan_lossless(data, start, frame, scan, htables,
+                                            restart_interval, psv, ahal & 15)
+            else:
+                end = _decode_scan(
+                    data, start, frame, scan, spectral,
+                    conditioning if frame.arithmetic else htables,
+                    restart_interval)
+            coded.update(cid for cid, _d, _a in scan)
+            if not frame.progressive and len(coded) == len(frame.comps):
+                if frame.lossless:
+                    return _assemble_lossless(frame, ahal & 15)
+                return _reconstruct(frame, qtables)
+            pos = _next_marker(data, end)
             continue
         pos += 2 + seg_len
-    if progressive and frame is not None:
-        return _reconstruct_progressive(frame, prog_state, qtables)
+    if frame is not None and frame.progressive:
+        return _reconstruct(frame, qtables)
     raise CodecError("jpeg: no scan data")
 
 
-def _scan_geometry(frame):
-    """(hmax, vmax, mcux, mcuy) for the frame's interleaved MCU grid."""
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    return hmax, vmax, mcux, mcuy
+def _next_marker(data, pos) -> int:
+    """The offset of the first marker other than RSTn at or after
+    ``pos``, where a scan's entropy coder stopped (the end of data if
+    there is none).  Both coders stuff 0x00 after a data 0xFF and stop
+    at any other 0xFF pair (T.81 B.1.1.5, D.1.6), so that is where the
+    scan's data ends; 0xFF fill bytes and stray RSTn are skipped."""
+    p = pos
+    while p + 1 < len(data):
+        if data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF):
+            if 0xD0 <= data[p + 1] <= 0xD7:
+                p += 2
+                continue
+            return p
+        p += 1
+    return len(data)
 
 
-def _prep_scan_comp(c, frame):
-    """Allocate the component's frame-aligned coefficient/pixel plane
-    once (it persists across the scans of a multi-scan sequential file)
-    and reset the DC predictor (per-scan state, T.81 E.2.4)."""
-    _, _, mcux, mcuy = _scan_geometry(frame)
-    if "plane" not in c:
-        c["pw"] = mcux * c["h"] * 8
-        c["ph"] = mcuy * c["v"] * 8
-        c["plane"] = np.zeros((c["ph"], c["pw"]), np.float32)
-    c["pred"] = 0
+def _decode_scan(data, pos, frame, scan, spectral, tables,
+                 restart_interval) -> int:
+    """One scan of a DCT frame into its components' coefficient grids.
+
+    A sequential scan codes DC first plus AC first over the full band
+    (its Ss, Se, Ah, Al are not read).  A progressive scan codes either
+    the DC coefficient (Ss=0) or one AC band of one component (T.81
+    G.1.1.1.1), as a first or a refine pass by Ah.  A scan of several
+    components walks the MCU grid, each MCU holding v×h blocks of every
+    component in scan order; one component walks its own block raster.
+    Every ``restart_interval`` units the DC predictors and the entropy
+    coder reset.  ``tables`` holds the frame's DHT code tables or DAC
+    conditioning, by (class, id).  Returns the offset where the entropy
+    coder stopped."""
+    if not frame.progressive:
+        ss, se, ah, al = 0, 63, 0, 0
+    else:
+        ss, se, ahal = spectral
+        ah, al = ahal >> 4, ahal & 15
+        if ss:
+            scan = scan[:1]  # an AC scan codes one component
+        else:
+            se = 0  # a DC scan codes no AC band
+    lo = max(ss, 1)  # the AC band is lo..se, coded when se > 0
+    if frame.arithmetic:
+        coder = ArithDecoder(data, pos, scan, tables)
+    else:
+        # look up only the tables this scan's block operations read
+        coder = _BitReader(
+            data, pos,
+            [tables[(0, d)] for _c, d, _a in scan] if ss == ah == 0 else (),
+            [tables[(1, a)] for _c, _d, a in scan] if lo <= se else (),
+            frame.progressive)
+
+    cids = [cid for cid, _d, _a in scan]
+    grids = [frame.coefs[cid] for cid in cids]
+    by_id = {c["id"]: c for c in frame.comps}
+    if len(scan) > 1:
+        layout = [(si, g, by_id[cid]["v"], by_id[cid]["h"])
+                  for si, (cid, g) in enumerate(zip(cids, grids))]
+        units = ([(si, g[my * v + bv, mx * h + bh])
+                  for si, g, v, h in layout
+                  for bv in range(v) for bh in range(h)]
+                 for my in range(frame.mcuy) for mx in range(frame.mcux))
+    else:
+        c, g = by_id[cids[0]], grids[0]
+        nbx = (frame.w * c["h"] + 8 * frame.hmax - 1) // (8 * frame.hmax)
+        nby = (frame.h * c["v"] + 8 * frame.vmax - 1) // (8 * frame.vmax)
+        units = ([(0, g[by, bx])] for by in range(nby) for bx in range(nbx))
+
+    preds = dict.fromkeys(cids, 0)
+    for n, unit in enumerate(units):
+        if restart_interval and n and n % restart_interval == 0:
+            coder.restart()
+            preds = dict.fromkeys(cids, 0)
+        for si, coef in unit:
+            if ss == 0:
+                if ah:
+                    coef[0] |= coder.dc_bit() << al
+                else:
+                    preds[cids[si]] += coder.dc_diff(si)
+                    coef[0] = preds[cids[si]] << al
+            if se:
+                if ah:
+                    coder.ac_refine(si, coef, lo, se, al)
+                else:
+                    coder.ac_first(si, coef, lo, se, al)
+    return coder.pos
 
 
-def _noninterleaved_blocks(c, frame):
-    """Block walk of one component's own sampling grid (T.81 A.2.2:
-    a single-component scan is NOT MCU-interleaved; its 'MCU' is one
-    block and the walk covers ceil(comp_w/8) x ceil(comp_h/8))."""
-    w, h, _ = frame
-    hmax, vmax, _, _ = _scan_geometry(frame)
-    bw = (w * c["h"] + 8 * hmax - 1) // (8 * hmax)
-    bh = (h * c["v"] + 8 * vmax - 1) // (8 * vmax)
-    for by in range(bh):
-        for bx in range(bw):
-            yield by * 8, bx * 8
-
-
-def _assemble(frame) -> np.ndarray:
-    """Upsample + color-convert the accumulated component planes."""
-    w, h, comps = frame
-    hmax, vmax, _, _ = _scan_geometry(frame)
+def _reconstruct(frame, qtables) -> np.ndarray:
+    """Pixels of a DCT frame: dequantize every block, run the IDCT over
+    all blocks of a component at once (x = C X Cᵀ, one broadcast
+    matmul), then upsample chroma and convert YCbCr → RGB."""
+    ct = _DCT_C.astype(np.float32)
     planes = []
-    for c in comps:
-        p = c["plane"] + 128.0
-        if c["h"] != hmax or c["v"] != vmax:
-            p = np.repeat(np.repeat(p, vmax // c["v"], axis=0),
-                          hmax // c["h"], axis=1)
-        planes.append(p[:h, :w])
+    for c in frame.comps:
+        if c["q"] not in qtables:
+            raise CodecError("jpeg: missing quantization table")
+        coefs = frame.coefs[c["id"]]
+        nby, nbx = coefs.shape[:2]
+        blocks = np.empty(coefs.shape, np.float32)
+        # grid and DQT are both in zigzag order; IDCT wants raster order
+        blocks[..., ZIGZAG] = (coefs.astype(np.float32)
+                               * qtables[c["q"]].astype(np.float32))
+        px = ct @ blocks.reshape(nby, nbx, 8, 8) @ ct.T
+        plane = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8) + 128.0
+        if c["h"] != frame.hmax or c["v"] != frame.vmax:
+            plane = np.repeat(np.repeat(plane, frame.vmax // c["v"], axis=0),
+                              frame.hmax // c["h"], axis=1)
+        planes.append(plane[:frame.h, :frame.w])
     if len(planes) == 1:
         return np.clip(planes[0], 0, 255).astype(np.uint8)[:, :, None]
     y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
@@ -381,34 +486,18 @@ def _assemble(frame) -> np.ndarray:
     return np.clip(np.dstack([r, g, b]), 0, 255).astype(np.uint8)
 
 
-def _next_marker(data, pos) -> int:
-    """Skip one scan's entropy-coded data: first non-RST marker at or
-    after ``pos``.  Valid for both entropy coders — Huffman stuffs 0x00
-    after a data 0xFF; the QM coder bit-stuffs so the byte after a data
-    0xFF is < 0x80 — so an 0xFF followed by 0xC0..0xFE (excluding RSTn)
-    can only be a real marker."""
-    i, n = pos, len(data)
-    while i + 1 < n:
-        if data[i] == 0xFF:
-            b = data[i + 1]
-            if 0xC0 <= b < 0xFF and not (0xD0 <= b <= 0xD7):
-                return i
-        i += 1
-    return n
-
-
 def _decode_scan_lossless(data, pos, frame, scan, htables,
-                          restart_interval, psv, pt, prec) -> None:
+                          restart_interval, psv, pt) -> int:
     """One lossless-process scan (T.81 Annex H): spatial DPCM with the
     scan-selected predictor, Huffman-coded difference magnitudes (the
     DC table code, plus the SSSS=16 → 32768 special), modulo-65536
     reconstruction.  Interleaved MCU = one sample per component;
     sampling factors other than 1×1 are out of scope.  Fills integer
     sample planes; ``_assemble_lossless`` stacks them (no color
-    transform — the lossless process is colorspace-agnostic)."""
-    w, h, comps = frame
-    _check_dims(w, h, "jpeg")
-    by_id = {c["id"]: c for c in comps}
+    transform — the lossless process is colorspace-agnostic).  Returns
+    the offset where the reader stopped."""
+    w, h = frame.w, frame.h
+    by_id = {c["id"]: c for c in frame.comps}
     scomps = []
     for cid, dc_id, _ac in scan:
         c = by_id[cid]
@@ -420,7 +509,7 @@ def _decode_scan_lossless(data, pos, frame, scan, htables,
         scomps.append(c)
 
     reader = _BitReader(data, pos)
-    default = 1 << (prec - pt - 1)
+    default = 1 << (frame.lossless - pt - 1)
     mcu = 0
     reset = False   # sample after RSTn predicts from the default
 
@@ -434,7 +523,7 @@ def _decode_scan_lossless(data, pos, frame, scan, htables,
         for x in range(w):
             if (restart_interval and mcu
                     and mcu % restart_interval == 0):
-                reader.align_restart()
+                reader.restart()
                 reset = True
             for c in scomps:
                 p = c["plane"]
@@ -466,495 +555,15 @@ def _decode_scan_lossless(data, pos, frame, scan, htables,
                 p[y, x] = (px + diff_of(c)) & 0xFFFF
             reset = False
             mcu += 1
+    return reader.pos
 
 
-def _assemble_lossless(frame, pt, prec) -> np.ndarray:
+def _assemble_lossless(frame, pt) -> np.ndarray:
     """Stack the DPCM sample planes: output = Rx << Pt, masked to the
     declared precision.  No upsampling (1×1 enforced) and no YCbCr
     transform — T.81's lossless process codes input samples directly."""
-    w, h, comps = frame
-    planes = [((c["plane"] << pt) & ((1 << prec) - 1)).astype(np.uint8)
-              for c in comps]
+    planes = [((c["plane"] << pt) & ((1 << frame.lossless) - 1))
+              .astype(np.uint8) for c in frame.comps]
     if len(planes) == 1:
         return planes[0][:, :, None]
     return np.dstack(planes)
-
-
-def _decode_scan(data, pos, frame, scan, qtables, htables,
-                 restart_interval) -> None:
-    """One sequential Huffman scan → the scan components' planes.
-    Handles both the interleaved (multi-component MCU) and the
-    non-interleaved (single-component block) walks; the dispatcher
-    assembles pixels once every frame component has been covered."""
-    w, h, comps = frame
-    _check_dims(w, h, "jpeg")
-    by_id = {c["id"]: c for c in comps}
-    scomps = []
-    for cid, dc_id, ac_id in scan:
-        c = by_id[cid]
-        c["dc_t"] = htables[(0, dc_id)]
-        c["ac_t"] = htables[(1, ac_id)]
-        c["qt"] = qtables[c["q"]]
-        _prep_scan_comp(c, frame)
-        scomps.append(c)
-
-    reader = _BitReader(data, pos)
-    ct = _DCT_C.astype(np.float32)
-
-    def decode_block(c, y0, x0):
-        coeffs = np.zeros(64, np.int32)
-        t = reader.decode_huff(c["dc_t"])
-        diff = _extend(reader.read_bits(t), t)
-        c["pred"] += diff
-        coeffs[0] = c["pred"]
-        k = 1
-        while k < 64:
-            rs = reader.decode_huff(c["ac_t"])
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                break  # EOB
-            k += r
-            if k > 63:
-                raise CodecError("jpeg: AC index overflow")
-            coeffs[k] = _extend(reader.read_bits(s), s)
-            k += 1
-        block = np.zeros(64, np.float32)
-        block[ZIGZAG] = coeffs * c["qt"][np.arange(64)]
-        # IDCT: x = M.T X M with M the orthonormal DCT basis;
-        # _DCT_C == M.T
-        px = ct @ block.reshape(8, 8) @ ct.T
-        c["plane"][y0:y0 + 8, x0:x0 + 8] = px
-
-    mcu_count = 0
-    if len(scomps) == 1:
-        c = scomps[0]
-        for y0, x0 in _noninterleaved_blocks(c, frame):
-            if (restart_interval and mcu_count
-                    and mcu_count % restart_interval == 0):
-                reader.align_restart()
-                c["pred"] = 0
-            decode_block(c, y0, x0)
-            mcu_count += 1
-        return
-    _, _, mcux, mcuy = _scan_geometry(frame)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if (restart_interval and mcu_count
-                    and mcu_count % restart_interval == 0):
-                reader.align_restart()
-                for c in scomps:
-                    c["pred"] = 0
-            for c in scomps:
-                for bv in range(c["v"]):
-                    for bh in range(c["h"]):
-                        decode_block(c, (my * c["v"] + bv) * 8,
-                                     (mx * c["h"] + bh) * 8)
-            mcu_count += 1
-
-
-def _decode_scan_arith(data, pos, frame, scan, qtables, arith_dc,
-                       arith_ac, restart_interval) -> None:
-    """One sequential arithmetic-coded scan (SOF9): same walks as
-    _decode_scan with the QM entropy decoder from jpegarith (T.81
-    §F.2.4) in place of Huffman — interleaved MCU grid for
-    multi-component scans, per-component block grid for
-    single-component scans (non-interleaved multi-SOS files).  Fills
-    the scan components' planes; the dispatcher assembles."""
-    from .jpegarith import ArithDecoder, decode_ac_arith, decode_dc_arith
-
-    w, h, comps = frame
-    _check_dims(w, h, "jpeg")
-    by_id = {c["id"]: c for c in comps}
-    scomps = []
-    for ci, (cid, dc_id, ac_id) in enumerate(scan):
-        c = by_id[cid]
-        c["dc_l"], c["dc_u"] = arith_dc.get(dc_id, (0, 1))
-        c["kx"] = arith_ac.get(ac_id, 5)
-        c["dc_tid"], c["ac_tid"] = dc_id, ac_id
-        c["qt"] = qtables[c["q"]]
-        _prep_scan_comp(c, frame)
-        c["idx"] = ci
-        scomps.append(c)
-
-    def fresh_stats():
-        # statistics areas are per-scan state (E.2.4 / F.2.4), keyed by
-        # the tables the SCAN components name — a subset scan must not
-        # touch tables it does not use
-        dc = {tid: bytearray(64) for tid in {c["dc_tid"] for c in scomps}}
-        ac = {tid: bytearray(256) for tid in {c["ac_tid"] for c in scomps}}
-        return dc, ac
-
-    dec = ArithDecoder(data, pos)
-    dc_stats, ac_stats = fresh_stats()
-    dc_ctx = [0] * len(scomps)
-    ct = _DCT_C.astype(np.float32)
-
-    def decode_block(c, y0, x0):
-        coeffs = np.zeros(64, np.int32)
-        diff = decode_dc_arith(
-            dec, dc_stats[c["dc_tid"]], dc_ctx,
-            c["idx"], c["dc_l"], c["dc_u"])
-        c["pred"] += diff
-        coeffs[0] = c["pred"]
-        k = 1
-        stats = ac_stats[c["ac_tid"]]
-        while k <= 63:
-            k, v = decode_ac_arith(dec, stats, k, c["kx"], 63)
-            if v is None:
-                break
-            coeffs[k] = v
-            k += 1
-        block = np.zeros(64, np.float32)
-        block[ZIGZAG] = coeffs * c["qt"][np.arange(64)]
-        px = ct @ block.reshape(8, 8) @ ct.T
-        c["plane"][y0:y0 + 8, x0:x0 + 8] = px
-
-    def restart():
-        nonlocal dec, dc_stats, ac_stats, dc_ctx
-        # skip to just past the RSTn marker, reinit everything
-        p2 = dec.pos
-        while p2 + 1 < len(data) and not (
-                data[p2] == 0xFF
-                and 0xD0 <= data[p2 + 1] <= 0xD7):
-            p2 += 1
-        dec = ArithDecoder(data, p2 + 2)
-        dc_stats, ac_stats = fresh_stats()
-        dc_ctx = [0] * len(scomps)
-        for c in scomps:
-            c["pred"] = 0
-
-    mcu_count = 0
-    if len(scomps) == 1:
-        c = scomps[0]
-        for y0, x0 in _noninterleaved_blocks(c, frame):
-            if (restart_interval and mcu_count
-                    and mcu_count % restart_interval == 0):
-                restart()
-            decode_block(c, y0, x0)
-            mcu_count += 1
-        return
-    _, _, mcux, mcuy = _scan_geometry(frame)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if (restart_interval and mcu_count
-                    and mcu_count % restart_interval == 0):
-                restart()
-            for c in scomps:
-                for bv in range(c["v"]):
-                    for bh in range(c["h"]):
-                        decode_block(c, (my * c["v"] + bv) * 8,
-                                     (mx * c["h"] + bh) * 8)
-            mcu_count += 1
-
-
-# ---------------------------------------------------------------------------
-# progressive (SOF2) scan decoding — T.81 G.1.2: spectral selection bands
-# plus successive approximation.  Coefficients accumulate across scans in
-# natural (raster) order; the final IDCT runs once over all blocks.
-
-
-def _ac_first_block(reader, ac_t, coef, ss, se, al, eobrun):
-    """One block of an AC first scan (Ah=0).  Returns the new EOB run."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = reader.decode_huff(ac_t)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r < 15:  # EOBn: run of (1<<r)+bits blocks incl. this one
-                return (1 << r) + (reader.read_bits(r) if r else 0) - 1
-            k += 16  # ZRL
-            continue
-        k += r
-        if k > se:
-            raise CodecError("jpeg: AC index overflow")
-        coef[int(ZIGZAG[k])] = _extend(reader.read_bits(s), s) << al
-        k += 1
-    return 0
-
-
-def _ac_refine_block(reader, ac_t, coef, ss, se, al, eobrun):
-    """One block of an AC refinement scan (Ah>0), per T.81 G.1.2.3:
-    correction bits ride along for every already-nonzero coefficient the
-    scan passes over.  Returns the new EOB run."""
-    bit = 1 << al
-
-    def correct(z):
-        if reader.read_bit() and not (abs(coef[z]) & bit):
-            coef[z] += bit if coef[z] > 0 else -bit
-
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = reader.decode_huff(ac_t)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r < 15:
-                    eobrun = (1 << r) + (reader.read_bits(r) if r else 0)
-                    break
-                val = 0  # ZRL: skip 16 zero-history coeffs
-            elif s == 1:
-                val = bit if reader.read_bit() else -bit
-            else:
-                raise CodecError("jpeg: bad AC refine magnitude")
-            while k <= se:
-                z = int(ZIGZAG[k])
-                if coef[z] != 0:
-                    correct(z)
-                    k += 1
-                    continue
-                if r == 0:
-                    if val:
-                        coef[z] = val
-                    k += 1
-                    break
-                r -= 1
-                k += 1
-    if eobrun > 0:
-        # EOB region covers the rest of this block's band
-        while k <= se:
-            z = int(ZIGZAG[k])
-            if coef[z] != 0:
-                correct(z)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _decode_prog_scan(data, pos, frame, scan, ss, se, ah, al,
-                      htables, restart_interval, state) -> int:
-    """Decode one progressive SOS; returns the file offset of the next
-    marker.  DC scans (ss=0) may interleave components in MCU order; AC
-    scans are single-component in block raster order (T.81 G.1)."""
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    by_id = {c["id"]: c for c in comps}
-    reader = _BitReader(data, pos)
-    eobrun = 0
-    preds = {cid: 0 for cid, _, _ in scan}
-
-    def dc_block(coef, cid, dc_t):
-        if ah == 0:  # DC first (with point transform)
-            t = reader.decode_huff(dc_t)
-            preds[cid] += _extend(reader.read_bits(t), t)
-            coef[0] = preds[cid] << al
-        else:  # DC refinement: one bit per block
-            coef[0] |= reader.read_bit() << al
-
-    n_units = 0
-
-    def maybe_restart():
-        nonlocal eobrun
-        if (restart_interval and n_units
-                and n_units % restart_interval == 0):
-            reader.align_restart()
-            eobrun = 0
-            for cid in preds:
-                preds[cid] = 0
-
-    if ss == 0 and len(scan) > 1:
-        # interleaved DC scan: MCU order over the full grid
-        tabs = {}
-        for cid, dc_id, _ac in scan:
-            tabs[cid] = htables[(0, dc_id)] if ah == 0 else None
-        for my in range(mcuy):
-            for mx in range(mcux):
-                maybe_restart()
-                for cid, _dc, _ac in scan:
-                    c = by_id[cid]
-                    coefs = state[cid]["coefs"]
-                    for bv in range(c["v"]):
-                        for bh in range(c["h"]):
-                            dc_block(coefs[my * c["v"] + bv,
-                                           mx * c["h"] + bh],
-                                     cid, tabs[cid])
-                n_units += 1
-    else:
-        # single-component scan: the component's own block raster
-        cid, dc_id, ac_id = scan[0]
-        c = by_id[cid]
-        coefs = state[cid]["coefs"]
-        cw = (w * c["h"] + hmax - 1) // hmax
-        ch = (h * c["v"] + vmax - 1) // vmax
-        nbx = (cw + 7) // 8
-        nby = (ch + 7) // 8
-        dc_t = htables.get((0, dc_id)) if ss == 0 and ah == 0 else None
-        ac_t = htables.get((1, ac_id)) if ss > 0 else None
-        for by in range(nby):
-            for bx in range(nbx):
-                maybe_restart()
-                coef = coefs[by, bx]
-                if ss == 0:
-                    dc_block(coef, cid, dc_t)
-                elif ah == 0:
-                    eobrun = _ac_first_block(
-                        reader, ac_t, coef, ss, se, al, eobrun)
-                else:
-                    eobrun = _ac_refine_block(
-                        reader, ac_t, coef, ss, se, al, eobrun)
-                n_units += 1
-
-    # skip to the next marker (entropy padding / stray RSTs in between)
-    p = reader.pos
-    while p + 1 < len(data):
-        if data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF):
-            if 0xD0 <= data[p + 1] <= 0xD7:
-                p += 2
-                continue
-            return p
-        p += 1
-    return len(data)
-
-
-def _decode_prog_scan_arith(data, pos, frame, scan, ss, se, ah, al,
-                            arith_dc, arith_ac, restart_interval,
-                            state) -> int:
-    """One arithmetic-coded progressive SOS (SOF10).  Mirrors
-    _decode_prog_scan's grid walk with the §G.2 arithmetic block
-    primitives; statistics and the QM decoder re-initialize per scan
-    (and per restart)."""
-    from .jpegarith import (
-        ArithDecoder,
-        decode_ac_arith,
-        decode_ac_refine_arith,
-        decode_dc_arith,
-        decode_dc_refine_arith,
-    )
-
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    by_id = {c["id"]: c for c in comps}
-
-    def fresh():
-        return (ArithDecoder(data, pos_holder[0]),
-                {tid: bytearray(64) for tid in dc_tids},
-                {tid: bytearray(256) for tid in ac_tids},
-                [0] * len(scan), {cid: 0 for cid, _, _ in scan})
-
-    pos_holder = [pos]
-    dc_tids = {dc_id for _, dc_id, _ in scan}
-    ac_tids = {ac_id for _, _, ac_id in scan}
-    dec, dc_stats, ac_stats, dc_ctx, last_dc = fresh()
-    n_units = 0
-
-    def maybe_restart():
-        nonlocal dec, dc_stats, ac_stats, dc_ctx, last_dc
-        if (restart_interval and n_units
-                and n_units % restart_interval == 0):
-            p2 = dec.pos
-            while p2 + 1 < len(data) and not (
-                    data[p2] == 0xFF and 0xD0 <= data[p2 + 1] <= 0xD7):
-                p2 += 1
-            pos_holder[0] = p2 + 2
-            dec, dc_stats, ac_stats, dc_ctx, last_dc = fresh()
-
-    if ss == 0 and len(scan) > 1:
-        # interleaved DC scan in MCU order
-        for my in range(mcuy):
-            for mx in range(mcux):
-                maybe_restart()
-                for si, (cid, dc_id, _ac) in enumerate(scan):
-                    c = by_id[cid]
-                    cl, cu = arith_dc.get(dc_id, (0, 1))
-                    coefs = state[cid]["coefs"]
-                    for bv in range(c["v"]):
-                        for bh in range(c["h"]):
-                            coef = coefs[my * c["v"] + bv,
-                                         mx * c["h"] + bh]
-                            if ah == 0:
-                                diff = decode_dc_arith(
-                                    dec, dc_stats[dc_id], dc_ctx, si,
-                                    cl, cu)
-                                last_dc[cid] += diff
-                                coef[0] = last_dc[cid] << al
-                            else:
-                                decode_dc_refine_arith(dec, coef, al)
-                n_units += 1
-    else:
-        cid, dc_id, ac_id = scan[0]
-        c = by_id[cid]
-        coefs = state[cid]["coefs"]
-        cw = (w * c["h"] + hmax - 1) // hmax
-        chh = (h * c["v"] + vmax - 1) // vmax
-        nbx = (cw + 7) // 8
-        nby = (chh + 7) // 8
-        cl, cu = arith_dc.get(dc_id, (0, 1))
-        kx = arith_ac.get(ac_id, 5)
-        for by in range(nby):
-            for bx in range(nbx):
-                maybe_restart()
-                coef = coefs[by, bx]
-                if ss == 0:
-                    if ah == 0:
-                        diff = decode_dc_arith(
-                            dec, dc_stats[dc_id], dc_ctx, 0, cl, cu)
-                        last_dc[cid] += diff
-                        coef[0] = last_dc[cid] << al
-                    else:
-                        decode_dc_refine_arith(dec, coef, al)
-                elif ah == 0:
-                    stats = ac_stats[ac_id]
-                    k = ss
-                    while k <= se:
-                        k, v = decode_ac_arith(dec, stats, k, kx, se)
-                        if v is None:
-                            break
-                        coef[int(ZIGZAG[k])] = v << al
-                        k += 1
-                else:
-                    decode_ac_refine_arith(
-                        dec, ac_stats[ac_id], coef, ZIGZAG, ss, se, al)
-                n_units += 1
-
-    p = dec.pos
-    while p + 1 < len(data):
-        if data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF):
-            if 0xD0 <= data[p + 1] <= 0xD7:
-                p += 2
-                continue
-            return p
-        p += 1
-    return len(data)
-
-
-def _reconstruct_progressive(frame, state, qtables) -> np.ndarray:
-    """Dequantize + IDCT every accumulated block, assemble planes, and
-    run the shared upsample/color tail."""
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    ct = _DCT_C.astype(np.float32)
-    planes = []
-    for c in comps:
-        if c["q"] not in qtables:
-            raise CodecError("jpeg: missing quantization table")
-        qt_nat = np.empty(64, np.float32)
-        qt_nat[ZIGZAG] = qtables[c["q"]].astype(np.float32)
-        coefs = state[c["id"]]["coefs"].astype(np.float32) * qt_nat
-        nby, nbx = coefs.shape[:2]
-        blocks = coefs.reshape(nby, nbx, 8, 8)
-        # IDCT all blocks at once: x = C X C.T per block
-        px = np.einsum("ij,abjk,lk->abil", ct, blocks, ct,
-                       optimize=True)
-        plane = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8) + 128.0
-        if c["h"] != hmax or c["v"] != vmax:
-            plane = np.repeat(np.repeat(plane, vmax // c["v"], axis=0),
-                              hmax // c["h"], axis=1)
-        planes.append(plane[:h, :w])
-    if len(planes) == 1:
-        return np.clip(planes[0], 0, 255).astype(np.uint8)[:, :, None]
-    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    return np.clip(np.dstack([r, g, b]), 0, 255).astype(np.uint8)

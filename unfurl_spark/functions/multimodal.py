@@ -11,7 +11,8 @@ Spark-side plumbing (schemas, salt partitioning, Arrow batch shape,
 byte caps) is real and tested, and so is the pixel path for the
 formats the pure-stdlib codecs in ``codecs.py``/``jpegc.py``/
 ``vp8l.py``/``vp8.py``/``codecs_ext.py`` cover: PNG (+APNG frames), JPEG
-(baseline + progressive + arithmetic-coded SOF9/SOF10), GIF, BMP, PPM,
+(every DCT process — sequential and progressive, Huffman and arithmetic
+— through one coefficient path, plus lossless SOF3), GIF, BMP, PPM,
 WebP both flavors — VP8L lossless AND VP8 lossy key frames (RFC 6386
 from scratch, bit-exact vs libwebp) with ALPH alpha and ANMF animation
 frames — ICO favicons, baseline TIFF images, and PCM WAV + FLAC + AIFF

@@ -30,7 +30,7 @@ import struct
 
 import numpy as np
 
-from .codecs import CodecError, CodecUnavailable, _check_dims
+from .codecs import CodecError, _check_dims
 
 # RFC 9649: code-length-code read order
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13,

@@ -32,6 +32,3 @@ EXTRACTED = StructType([
     StructField("n_input_bytes", LongType()),
     StructField("ok", StringType()),  # 'ok' | error class name
 ])
-
-OUTPUT_SPAN_KINDS = ("title", "description", "og_image", "jsonld",
-                     "body_text", "media")
