@@ -381,9 +381,9 @@ def test_jpeg_progressive_subsampled_matches_baseline():
 
 def test_jpeg_bit_reader_accumulator_stays_bounded():
     """A bit read costs the same at any offset of an entropy segment:
-    the Huffman reader's accumulator never holds more than 32 bits.  It
-    used to keep every consumed bit, so each read shifted a bigint as
-    long as the segment read so far (quadratic in the scan's size)."""
+    the Huffman reader's accumulator never holds more than 32 bits, so
+    no read shifts a bigint as long as the segment read so far (which
+    makes decoding quadratic in the scan's size)."""
     seg = bytes(np.random.default_rng(3).integers(
         0, 0xFF, 64 * 1024, dtype=np.uint8))       # no 0xFF: no markers
     r = J._BitReader(seg, 0)
@@ -401,7 +401,7 @@ def test_jpeg_bit_reader_accumulator_stays_bounded():
 
 def test_jpeg_progressive_undefined_huffman_table_is_codec_error():
     """A progressive scan that names an undefined Huffman table is a typed
-    CodecError (it escaped as an AttributeError from a None table)."""
+    CodecError, not an AttributeError from a missing table."""
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, (16, 24, 3), dtype=np.uint8)
     data = bytearray(E.encode_jpeg_progressive(img, quality=80))

@@ -257,7 +257,7 @@ class ArithDecoder:
 
     def _magnitude(self, stats: bytearray, st: int, m: int) -> int:
         """|value| from its magnitude category ``m``: the bits below m's
-        top bit, decoded at ``st + 14`` (§F.2.4.1 Figure F.23), plus 1."""
+        top bit, decoded at ``st + 14`` (§F.2.4.3), plus 1."""
         v = m
         st += 14
         while m := m >> 1:

@@ -352,7 +352,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 end = _decode_scan_lossless(data, start, frame, scan, htables,
                                             restart_interval, psv, ahal & 15)
             else:
-                end = _decode_scan(
+                end = _walk_scan(
                     data, start, frame, scan, spectral,
                     conditioning if frame.arithmetic else htables,
                     restart_interval)
@@ -386,8 +386,8 @@ def _next_marker(data, pos) -> int:
     return len(data)
 
 
-def _decode_scan(data, pos, frame, scan, spectral, tables,
-                 restart_interval) -> int:
+def _walk_scan(data, pos, frame, scan, spectral, tables,
+               restart_interval) -> int:
     """One scan of a DCT frame into its components' coefficient grids.
 
     A sequential scan codes DC first plus AC first over the full band
