@@ -713,11 +713,14 @@ def _prepare_planes(img: np.ndarray, quality: int, subsample: bool):
 
 def encode_jpeg(img: np.ndarray, quality: int = 85,
                 subsample: bool = False,
-                restart_interval: int = 0) -> bytes:
+                restart_interval: int = 0, multi_scan: bool = False) -> bytes:
     """Baseline encoder.  ``subsample=True`` emits 4:2:0 (luma 2×2 per
     MCU, chroma box-filtered 2×); ``restart_interval`` emits DRI + RSTn
-    markers every N MCUs — both exist chiefly so the decoder's
-    upsample/restart paths have independent fixtures."""
+    markers every N MCUs; ``multi_scan=True`` (without subsampling)
+    codes each component in its own scan instead of one interleaved
+    scan — all exist chiefly so the decoder's upsample/restart/scan
+    paths have independent fixtures."""
+    assert not (multi_scan and subsample)
     h, w, nc, factors, qts, padded, mcux, mcuy = _prepare_planes(
         img, quality, subsample)
 
@@ -739,12 +742,6 @@ def encode_jpeg(img: np.ndarray, quality: int = 85,
         out += b"\xFF\xC4" + struct.pack(
             ">HB", 19 + len(values), (tclass << 4) | tid)
         out += bytes(bits) + bytes(values)
-    out += b"\xFF\xDA" + struct.pack(">HB", 6 + 2 * nc, nc)
-    for ci in range(nc):
-        tid = min(ci, 1) if nc > 1 else 0
-        out += bytes([ci + 1, (tid << 4) | tid])
-    out += b"\x00\x3F\x00"
-
     dc_tabs = [_encode_codes(*HT_DC_LUMA)]
     ac_tabs = [_encode_codes(*HT_AC_LUMA)]
     if nc > 1:
@@ -752,10 +749,6 @@ def encode_jpeg(img: np.ndarray, quality: int = 85,
         ac_tabs.append(_encode_codes(*HT_AC_CHROMA))
 
     ct = _DCT_C.astype(np.float32)
-    bw = _JpegBitWriter()
-    preds = [0] * nc
-    rst = 0
-    mcu_count = 0
 
     def encode_block(ti: int, block: np.ndarray, ci: int) -> None:
         coeffs = ct.T @ block @ ct  # FDCT: X = M x M.T
@@ -787,26 +780,39 @@ def encode_jpeg(img: np.ndarray, quality: int = 85,
             code, ln = ac_tabs[ti][0x00]
             bw.write(code, ln)
 
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if (restart_interval and mcu_count
-                    and mcu_count % restart_interval == 0):
-                bw.flush()
-                bw.out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) & 7
-                preds = [0] * nc
-            for ci in range(nc):
-                hi, vi = factors[ci]
-                ti = min(ci, 1) if nc > 1 else 0
-                for bv in range(vi):
-                    for bh_ in range(hi):
-                        y0 = (my * vi + bv) * 8
-                        x0 = (mx * hi + bh_) * 8
-                        encode_block(
-                            ti, padded[ci][y0:y0 + 8, x0:x0 + 8], ci)
-            mcu_count += 1
-    bw.flush()
-    return bytes(out) + bytes(bw.out) + b"\xFF\xD9"
+    for comps in ([[ci] for ci in range(nc)] if multi_scan
+                  else [list(range(nc))]):
+        out += b"\xFF\xDA" + struct.pack(">HB", 6 + 2 * len(comps),
+                                          len(comps))
+        for ci in comps:
+            tid = min(ci, 1) if nc > 1 else 0
+            out += bytes([ci + 1, (tid << 4) | tid])
+        out += b"\x00\x3F\x00"
+        bw = _JpegBitWriter()
+        preds = [0] * nc
+        rst = 0
+        mcu_count = 0
+        for my in range(mcuy):
+            for mx in range(mcux):
+                if (restart_interval and mcu_count
+                        and mcu_count % restart_interval == 0):
+                    bw.flush()
+                    bw.out += bytes([0xFF, 0xD0 + rst])
+                    rst = (rst + 1) & 7
+                    preds = [0] * nc
+                for ci in comps:
+                    hi, vi = factors[ci]
+                    ti = min(ci, 1) if nc > 1 else 0
+                    for bv in range(vi):
+                        for bh_ in range(hi):
+                            y0 = (my * vi + bv) * 8
+                            x0 = (mx * hi + bh_) * 8
+                            encode_block(
+                                ti, padded[ci][y0:y0 + 8, x0:x0 + 8], ci)
+                mcu_count += 1
+        bw.flush()
+        out += bw.out
+    return bytes(out) + b"\xFF\xD9"
 
 
 # ---------------------------------------------------------------------------

@@ -377,6 +377,13 @@ def test_pcm_metadata_header_only():
         # the data-chunk SIZE field sits in the header, so even wav
         # reports duration from the capped prefix
         assert abs(capped.get("duration_s", 0) - 1.0) < 0.01, name
+    # a COMM rate far below 1 Hz (80-bit exponent 1, which underflows to
+    # 0.0 as a double) is no rate: audio_metadata's err:bad-header, not
+    # a ZeroDivisionError
+    at = aiff.index(b"COMM") + 16
+    tiny = aiff[:at] + b"\x00\x01" + (1 << 63).to_bytes(8, "big") \
+        + aiff[at + 10:]
+    assert "sample_rate" not in pcm_metadata(tiny)
 
 
 def test_flac_picture_block_cover_art():

@@ -196,7 +196,8 @@ def test_wav_8bit_and_16bit():
 
 @pytest.mark.parametrize("kw", [{}, {"subsample": True},
                                 {"restart_interval": 2},
-                                {"subsample": True, "restart_interval": 3}])
+                                {"subsample": True, "restart_interval": 3},
+                                {"multi_scan": True, "restart_interval": 2}])
 def test_jpeg_roundtrip_variants(kw):
     yy, xx = np.mgrid[0:37, 0:53]
     img = np.dstack([(xx * 4) % 256, (yy * 5) % 256,
@@ -205,6 +206,24 @@ def test_jpeg_roundtrip_variants(kw):
     assert dec.shape == img.shape
     err = np.abs(dec.astype(int) - img.astype(int)).mean()
     assert err < (8 if kw.get("subsample") else 4), (kw, err)
+
+
+def test_jpeg_lost_restart_marker_raises():
+    """A restart interval whose RSTn is damaged fails the frame: the
+    decoder stops at the first other marker instead of searching on
+    past the scan (here into a second image appended after EOI, as in
+    a multi-picture file) and decoding those bytes as this scan's."""
+    yy, xx = np.mgrid[0:37, 0:53]
+    img = np.dstack([(xx * 4) % 256, (yy * 5) % 256,
+                     ((xx + yy) * 3) % 256]).astype(np.uint8)
+    enc = bytearray(E.encode_jpeg(img, quality=92, restart_interval=2,
+                                  multi_scan=True))
+    assert J.decode_jpeg(bytes(enc)).shape == img.shape
+    last_rst = max(enc.rfind(bytes([0xFF, m])) for m in range(0xD0, 0xD8))
+    enc[last_rst + 1] = 0xFE  # now a COM marker
+    enc += E.encode_jpeg(img, quality=92, restart_interval=2)
+    with pytest.raises(C.CodecError):
+        J.decode_jpeg(bytes(enc))
 
 
 def test_jpeg_grayscale_and_high_detail():

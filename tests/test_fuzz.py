@@ -8,10 +8,19 @@ mode a 1000-executor run cannot tolerate.)
 """
 
 from datetime import timedelta
+from itertools import islice
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from unfurl_spark.functions.codecs import (
+    flac_blocks,
+    ico_entries,
+    id3_frames,
+    jpeg_segments,
+    png_chunks,
+    riff_chunks,
+)
 from unfurl_spark.functions.content import classify_blocks
 from unfurl_spark.functions.engine import flat_document_spans, scrape_document
 from unfurl_spark.functions.htmlmeta import parse_html_full
@@ -172,3 +181,101 @@ def test_svg_rasterizer_only_typed_errors(data):
         assert out.ndim == 3 and out.shape[2] == 4
     except (CodecError, CodecUnavailable):
         pass   # per-row lineage errors, never task killers
+
+
+# container framing (ROADMAP item 4): each of the six walkers in
+# codecs.py must end on any input.  The inputs are a valid signature,
+# then units whose size field holds 0, an odd value, all-ones or the
+# body's true length, then arbitrary bytes.
+_SIZES = st.one_of(st.sampled_from([0, 1, 3, 0xFFFFFFFF]),
+                   st.integers(0, 80))
+
+
+@st.composite
+def _framed(draw, head, unit):
+    """``head`` + units built by ``unit(size, body)`` + a garbage tail."""
+    out = head
+    for size, body in draw(st.lists(st.tuples(_SIZES, st.binary(max_size=40)),
+                                     max_size=8)):
+        out += unit(size, body)
+    return out + draw(st.binary(max_size=60))
+
+
+def _riff_unit(order):
+    return lambda size, body: (b"LIST" + size.to_bytes(4, order) + body)
+
+
+def _spans_advance(data, spans, header):
+    """Each (tag, start, end) has its header inside ``data``, starts
+    after the previous one and declares no negative length; the walk
+    stops within one step per byte."""
+    assert len(spans) <= len(data)
+    last = -1
+    for _tag, start, end in spans:
+        assert header <= start <= len(data) and end >= start
+        assert start > last
+        last = start
+
+
+def _take(walk, data):
+    return list(islice(walk, len(data) + 1))
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(st.data())
+def test_riff_chunks_advance(draw):
+    for head, order in ((b"RIFF\xff\xff\xff\xffWAVE", "little"),
+                        (b"FORM\x00\x00\x00\x00AIFF", "big")):
+        data = draw.draw(_framed(head, _riff_unit(order)))
+        _spans_advance(data, _take(riff_chunks(data, 12, order), data), 20)
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(_framed(b"\x89PNG\r\n\x1a\n",
+               lambda size, body: (size.to_bytes(4, "big") + b"tEXt" + body
+                                   + b"\x00" * 4)))
+def test_png_chunks_advance(data):
+    _spans_advance(data, _take(png_chunks(data), data), 16)
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(_framed(b"fLaC", lambda size, body: (
+    bytes([4]) + (size & 0xFFFFFF).to_bytes(3, "big") + body)))
+def test_flac_blocks_advance(data):
+    _spans_advance(data, _take(flac_blocks(data), data), 8)
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(st.sampled_from([2, 3, 4]), st.sampled_from([0, 0x40, 0x80, 0xD0]),
+       _SIZES, st.data())
+def test_id3_frames_advance(major, flags, tag_size, draw):
+    idw = 3 if major == 2 else 4
+    frame_id = b"TIT2"[:idw]
+
+    def unit(size, body):
+        return (frame_id + (size % (1 << 8 * idw)).to_bytes(idw, "big")
+                + (b"" if major == 2 else b"\x00\x00") + body)
+
+    head = (b"ID3" + bytes([major, 0, flags])
+            + bytes((tag_size >> s) & 0x7F for s in (21, 14, 7, 0)))
+    data = draw.draw(_framed(head, unit))
+    frames = _take(id3_frames(data), data)
+    # bodies are non-empty slices of the tag, each behind its own header
+    assert all(body for _fid, body in frames)
+    assert sum(len(b) + 2 * idw for _fid, b in frames) <= len(data)
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(_framed(b"\xff\xd8", lambda size, body: (
+    b"\xff\xe1" + (size & 0xFFFF).to_bytes(2, "big") + body)))
+def test_jpeg_segments_advance(data):
+    _spans_advance(data, _take(jpeg_segments(data), data), 6)
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(st.integers(0, 0xFFFF), st.binary(max_size=600))
+def test_ico_entries_advance(count, tail):
+    data = b"\x00\x00\x01\x00" + count.to_bytes(2, "little") + tail
+    entries = _take(ico_entries(data), data)
+    assert len(entries) <= min(count, 64, len(tail) // 16)
+    assert all(1 <= w <= 256 and 1 <= h <= 256 for w, h, _o, _s in entries)

@@ -343,7 +343,7 @@ def _mp4_with_covr(png: bytes) -> bytes:
     return ftyp + moov
 
 
-def _mp3_with_apic(png: bytes) -> bytes:
+def _mp3_with_apic(png: bytes, ext_header: bool = False) -> bytes:
     import struct as _s
     body = (b"\x00"                    # encoding: latin-1
             + b"image/png\x00"         # MIME
@@ -351,13 +351,17 @@ def _mp3_with_apic(png: bytes) -> bytes:
             + b"cover\x00"             # description
             + png)
     frame = b"APIC" + _s.pack(">I", len(body)) + b"\x00\x00" + body
-    tag_body = frame
+    # v2.3 extended header: its size (excluding these 4 bytes), 2 flag
+    # bytes, then the 4-byte padding size
+    ext = _s.pack(">IHI", 6, 0, 0) if ext_header else b""
+    tag_body = ext + frame
 
     def syncsafe(n):
         return bytes([(n >> 21) & 0x7F, (n >> 14) & 0x7F,
                       (n >> 7) & 0x7F, n & 0x7F])
 
-    id3 = b"ID3" + bytes([3, 0, 0]) + syncsafe(len(tag_body)) + tag_body
+    id3 = (b"ID3" + bytes([3, 0, 0x40 if ext_header else 0])
+           + syncsafe(len(tag_body)) + tag_body)
     # one valid MPEG1 Layer3 frame header so the sniffer keeps "mp3"
     return id3 + b"\xff\xfb\x90\x00" + b"\x00" * 100
 
@@ -397,6 +401,9 @@ def test_cover_art_thumbnails_mp4_covr_and_id3_apic(spark):
     from unfurl_spark.functions.media import embedded_cover
     assert embedded_cover(_mp4_with_covr(png)) == (png, "mp4:covr")
     assert embedded_cover(_mp3_with_apic(png)) == (png, "id3:apic")
+    # an ID3v2.3 extended header precedes the frames, the APIC as well
+    assert embedded_cover(_mp3_with_apic(png, ext_header=True)) == (
+        png, "id3:apic")
     assert embedded_cover(b"\x00" * 32) is None
 
 
@@ -438,22 +445,11 @@ def _mjpeg_mp4(jpegs: list, fps: int = 2) -> bytes:
     return build(data_off) + box(b"mdat", mdat_payload)
 
 
-def test_mjpeg_mp4_real_frames(spark):
+def test_mjpeg_mp4_real_frames(spark, jpeghelper):
     """Motion-JPEG MP4: sample_frames decodes REAL frames at REAL
     timestamps (each sample is a whole baseline JPEG); decode_pixels
     returns the first frame; decode_media reports ok."""
     import subprocess
-    import shutil
-    if shutil.which("gcc") is None:
-        import pytest as _pytest
-        _pytest.skip("gcc/libjpeg helper unavailable for JPEG encoding")
-    helper = "/tmp/unfurl_jpeghelper"
-    r = subprocess.run(
-        ["gcc", "-O2", "-o", helper, "tools/jpeghelper.c", "-ljpeg"],
-        capture_output=True)
-    if r.returncode != 0:
-        import pytest as _pytest
-        _pytest.skip("libjpeg dev headers not available")
 
     from unfurl_spark.functions.jpegc import decode_jpeg
     from unfurl_spark.functions.media import mjpeg_samples
@@ -463,7 +459,7 @@ def test_mjpeg_mp4_real_frames(spark):
     for shade in (0, 120, 250):
         img = np.full((16, 16, 3), shade, np.uint8)
         enc = subprocess.run(
-            [helper, "encode", "16", "16", "95", "0", "0"],
+            [jpeghelper, "encode", "16", "16", "95", "0", "0"],
             input=img.tobytes(), capture_output=True).stdout
         jpegs.append(enc)
         frames_px.append(decode_jpeg(enc))

@@ -16,6 +16,9 @@ formats are decodable with nothing beyond the standard library:
 
 All decoders return ``numpy.ndarray`` of shape (H, W, C) uint8 for
 images (C in {1,3,4}) and (n_samples, n_channels) int16 for audio.
+The container framing walks (RIFF/IFF chunks, PNG chunks, FLAC blocks,
+ID3v2 frames, JPEG header segments, ICO entries) live here too, one per
+family, shared by every decoder and by ``media``'s header readers.
 The package only decodes.  The round-trip tests write their fixtures
 with the encoders in ``tests/encoders.py``, without any external library.
 
@@ -80,6 +83,169 @@ MAX_PIXELS = 1 << 26  # 64 Mpx ≈ 256 MB RGBA — generous for real corpora
 def _check_dims(w: int, h: int, what: str) -> None:
     if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         raise CodecError(f"{what}: implausible dimensions {w}x{h}")
+
+
+# ---------------------------------------------------------------------------
+# container framing: one walk per family, shared by the decoders here and
+# in codecs_ext/vp8l and by the header readers in media.  A walker only
+# frames; each caller keeps its own tag handling and decides whether a
+# short or missing part is an error (decoders) or a capped prefix
+# (header readers).  Spans are (start, end) as the header declares them:
+# ``end`` may pass the end of ``data``, and slicing clips it.  Every walk
+# advances at least one byte per step, so it ends on any input.
+
+
+def riff_chunks(data: bytes, pos: int, byteorder: str = "little"):
+    """Yield (fourcc, start, end) for the chunks from ``pos`` on: RIFF
+    (WAV, WebP, an ANMF frame body) is little-endian, IFF (AIFF's
+    ``FORM``) big-endian.  An odd-sized chunk is followed by one pad
+    byte."""
+    while pos + 8 <= len(data):
+        size = int.from_bytes(data[pos + 4:pos + 8], byteorder)
+        yield data[pos:pos + 4], pos + 8, pos + 8 + size
+        pos += 8 + size + (size & 1)
+
+
+def png_chunks(data: bytes):
+    """Yield (type, start, end) for the chunks after the PNG signature,
+    through IEND."""
+    pos = 8
+    while pos + 8 <= len(data):
+        size = int.from_bytes(data[pos:pos + 4], "big")
+        tag = data[pos + 4:pos + 8]
+        yield tag, pos + 8, pos + 8 + size
+        if tag == b"IEND":
+            return
+        pos += 12 + size  # length, type, data, CRC
+
+
+def flac_blocks(data: bytes):
+    """Yield (block type, start, end) for the metadata blocks after the
+    ``fLaC`` marker, through the one flagged last.  Audio frames start
+    at the ``end`` of the last block yielded."""
+    pos = 4
+    while pos + 4 <= len(data):
+        head = data[pos]
+        end = pos + 4 + int.from_bytes(data[pos + 1:pos + 4], "big")
+        yield head & 0x7F, pos + 4, end
+        if head & 0x80:
+            return
+        pos = end
+
+
+def _syncsafe(raw: bytes) -> int:
+    v = 0
+    for b in raw:
+        v = (v << 7) | (b & 0x7F)
+    return v
+
+
+def id3_size(data: bytes) -> int:
+    """Bytes the ID3v2 tag at the start of ``data`` declares: the
+    10-byte header, the frames and a v2.4 footer."""
+    return _syncsafe(data[6:10]) + (20 if data[5] & 0x10 else 10)
+
+
+def id3_frames(data: bytes):
+    """Yield (frame id, body) for the frames of the ID3v2 tag (v2.2-v2.4)
+    at the start of ``data``.  Unsynchronisation (FF 00 stuffing) is
+    reversed over the whole tag, which covers v2.2/2.3 and the v2.4
+    per-frame flag on the frames read; a v2.3/2.4 extended header is
+    skipped.  The walk stops at padding or at a frame that does not fit
+    the tag."""
+    if data[:3] != b"ID3" or len(data) < 10:
+        return
+    major, flags = data[3], data[5]
+    end = min(id3_size(data), len(data))
+    if flags & 0x80:
+        data = data[:10] + data[10:end].replace(b"\xff\x00", b"\xff")
+        end = len(data)
+    pos = 10
+    if flags & 0x40 and major >= 3:  # extended header
+        if pos + 4 > len(data):
+            return
+        pos += (_syncsafe(data[pos:pos + 4]) if major == 4
+                else int.from_bytes(data[pos:pos + 4], "big") + 4)
+    idw = 3 if major == 2 else 4  # id and size widths
+    while pos + 2 * idw <= end:
+        fid = data[pos:pos + idw]
+        if fid.strip(b"\x00") == b"":
+            return  # padding
+        raw = data[pos + idw:pos + 2 * idw]
+        size = _syncsafe(raw) if major == 4 else int.from_bytes(raw, "big")
+        pos += 2 * idw + (0 if major == 2 else 2)  # v2.3+: 2 flag bytes
+        if size <= 0 or pos + size > end:
+            return
+        yield fid, data[pos:pos + size]
+        pos += size
+
+
+def jpeg_segments(data: bytes):
+    """Yield (marker, start, end) for the JPEG header segments before the
+    first SOS.  Bytes between segments are skipped one at a time, the
+    standalone markers (SOI, TEM, RSTn) take no length, and a length
+    below 2 gives an empty span."""
+    i = 2
+    while i + 4 <= len(data):
+        if data[i] != 0xFF:
+            i += 1
+            continue
+        marker = data[i + 1]
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            i += 2
+            continue
+        if marker == 0xDA:
+            return
+        seglen = int.from_bytes(data[i + 2:i + 4], "big")
+        yield marker, i + 4, max(i + 4, i + 2 + seglen)
+        i += 2 + seglen
+
+
+def _restart_marker(data, pos) -> int:
+    """The offset after the RSTn marker that ends a restart interval: the
+    first marker at or after ``pos`` (0xFF not followed by 0x00 stuffing
+    or 0xFF fill).  Any other marker, or none, means the interval's
+    marker is lost, and decoding on would read the next segment's bytes
+    as this scan's."""
+    p = pos
+    while p + 1 < len(data):
+        if data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF):
+            if 0xD0 <= data[p + 1] <= 0xD7:
+                return p + 2
+            raise CodecError(
+                f"jpeg: marker 0xFF{data[p + 1]:02X} where RSTn expected")
+        p += 1
+    raise CodecError("jpeg: missing restart marker")
+
+
+def ico_entries(data: bytes):
+    """Yield (width, height, payload offset, payload size) for the ICONDIR
+    entries (at most 64), up to the first one cut short.  A width or
+    height byte of 0 means 256."""
+    count = min(int.from_bytes(data[4:6], "little"), 64)
+    for pos in range(6, 6 + 16 * count, 16):
+        e = data[pos:pos + 16]
+        if len(e) < 16:
+            return
+        yield (e[0] or 256, e[1] or 256, int.from_bytes(e[12:16], "little"),
+               int.from_bytes(e[8:12], "little"))
+
+
+def _read_f80(b: bytes) -> int:
+    """80-bit IEEE 754 extended float (the AIFF sample rate) → int Hz;
+    a rate that is not finite or rounds below 1 Hz is a ``CodecError``."""
+    if len(b) < 10:
+        raise CodecError("aiff: short extended float")
+    se, mant = struct.unpack(">HQ", b[:10])
+    if se & 0x7FFF == 0x7FFF:
+        raise CodecError("aiff: non-finite sample rate")
+    try:
+        rate = round(mant * 2.0 ** ((se & 0x7FFF) - 16383 - 63))
+    except OverflowError:
+        rate = 0
+    if se & 0x8000 or rate < 1:
+        raise CodecError("aiff: implausible sample rate")
+    return rate
 
 
 # ---------------------------------------------------------------------------
@@ -159,13 +325,11 @@ _ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
 def decode_png(data: bytes) -> np.ndarray:
     if data[:8] != b"\x89PNG\r\n\x1a\n":
         raise CodecError("png: bad signature")
-    pos, width = 8, None
+    width = None
     idat, palette, trns = [], None, None
     height = depth = ctype = interlace = 0
-    while pos + 8 <= len(data):
-        (clen,) = struct.unpack(">I", data[pos:pos + 4])
-        ctag = data[pos + 4:pos + 8]
-        body = data[pos + 8:pos + 8 + clen]
+    for ctag, start, end in png_chunks(data):
+        body = data[start:end]
         if ctag == b"IHDR":
             width, height, depth, ctype, comp, filt, interlace = \
                 struct.unpack(">IIBBBBB", body)
@@ -177,9 +341,6 @@ def decode_png(data: bytes) -> np.ndarray:
             trns = np.frombuffer(body, np.uint8)
         elif ctag == b"IDAT":
             idat.append(body)
-        elif ctag == b"IEND":
-            break
-        pos += 12 + clen
     if width is None:
         raise CodecError("png: missing IHDR")
     if not idat:
@@ -612,12 +773,10 @@ def decode_wav(data: bytes) -> tuple[int, np.ndarray]:
     """→ (sample_rate, samples[n, channels] int16)."""
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise CodecError("wav: bad signature")
-    pos, rate, channels, bits = 12, None, None, None
+    rate, channels, bits = None, None, None
     samples = None
-    while pos + 8 <= len(data):
-        tag = data[pos:pos + 4]
-        (clen,) = struct.unpack("<I", data[pos + 4:pos + 8])
-        body = data[pos + 8:pos + 8 + clen]
+    for tag, start, end in riff_chunks(data, 12):
+        body = data[start:end]
         if tag == b"fmt ":
             fmt, channels, rate = struct.unpack("<HHI", body[:8])
             bits = struct.unpack("<H", body[14:16])[0]
@@ -634,7 +793,6 @@ def decode_wav(data: bytes) -> tuple[int, np.ndarray]:
                             - 128) << 8)
             else:
                 raise CodecError(f"wav: {bits}-bit unsupported")
-        pos += 8 + clen + (clen & 1)
     if rate is None or samples is None:
         raise CodecError("wav: missing fmt/data chunk")
     n = len(samples) // channels * channels

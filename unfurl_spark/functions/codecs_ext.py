@@ -31,7 +31,17 @@ import zlib
 
 import numpy as np
 
-from .codecs import CodecError, _check_dims, decode_png, total
+from .codecs import (
+    CodecError,
+    _check_dims,
+    _read_f80,
+    decode_png,
+    flac_blocks,
+    ico_entries,
+    png_chunks,
+    riff_chunks,
+    total,
+)
 
 __all__ = [
     "decode_ico",
@@ -124,16 +134,10 @@ def decode_ico(data: bytes) -> np.ndarray:
     (count,) = struct.unpack("<H", data[4:6])
     if not 0 < count <= 64:
         raise CodecError(f"ico: implausible entry count {count}")
-    best = None  # (area, offset, size)
-    for i in range(count):
-        e = data[6 + 16 * i: 6 + 16 * (i + 1)]
-        if len(e) < 16:
-            raise CodecError("ico: truncated ICONDIR entries")
-        w, h = e[0] or 256, e[1] or 256
-        size, off = struct.unpack("<II", e[8:16])
-        if best is None or w * h > best[0]:
-            best = (w * h, off, size)
-    _, off, size = best
+    entries = list(ico_entries(data))
+    if len(entries) < count:
+        raise CodecError("ico: truncated ICONDIR entries")
+    _w, _h, off, size = max(entries, key=lambda e: e[0] * e[1])
     body = data[off:off + size]
     if len(body) < size:
         raise CodecError("ico: truncated entry payload")
@@ -196,22 +200,6 @@ def svg_info(data: bytes) -> tuple[int | None, int | None]:
 # APNG — animated PNG (acTL/fcTL/fdAT chunks over the PNG core decoder)
 # =========================================================================
 
-def _png_chunks(data: bytes):
-    if data[:8] != b"\x89PNG\r\n\x1a\n":
-        raise CodecError("apng: bad signature")
-    pos = 8
-    while pos + 8 <= len(data):
-        (clen,) = struct.unpack(">I", data[pos:pos + 4])
-        tag = data[pos + 4:pos + 8]
-        body = data[pos + 8:pos + 8 + clen]
-        if len(body) < clen:
-            raise CodecError("apng: truncated chunk")
-        yield tag, body
-        if tag == b"IEND":
-            return
-        pos += 12 + clen
-
-
 def _chunk(tag: bytes, body: bytes) -> bytes:
     return (struct.pack(">I", len(body)) + tag + body
             + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
@@ -237,13 +225,18 @@ def decode_apng_frames(data: bytes, max_frames: int | None = None
     Compositing follows the APNG spec: per-frame regions placed at
     (x,y) with blend_op source/over and dispose_op none/background/
     previous.  A plain PNG yields its single frame at ts 0."""
+    if data[:8] != b"\x89PNG\r\n\x1a\n":
+        raise CodecError("apng: bad signature")
     ihdr = None
     shared = []          # PLTE / tRNS to replay into per-frame PNGs
     frames_meta = []     # (fctl dict | None, [payload bytes])
     default_idat = []
     default_is_frame = False
     seen_fctl = None
-    for tag, body in _png_chunks(data):
+    for tag, start, end in png_chunks(data):
+        if end > len(data):
+            raise CodecError("apng: truncated chunk")
+        body = data[start:end]
         if tag == b"IHDR":
             ihdr = body
         elif tag in (b"PLTE", b"tRNS"):
@@ -494,15 +487,12 @@ def decode_flac(data: bytes) -> tuple[int, np.ndarray]:
     channel assignments (independent, left/side, right/side, mid/side)."""
     if data[:4] != b"fLaC":
         raise CodecError("flac: bad signature")
-    pos = 4
+    pos = 4  # where the audio frames start
     rate = nch = bps = None
     total_samples = 0
-    while pos + 4 <= len(data):
-        hdr = data[pos]
-        last, btype = hdr & 0x80, hdr & 0x7F
-        (blen,) = struct.unpack(">I", b"\x00" + data[pos + 1:pos + 4])
-        body = data[pos + 4:pos + 4 + blen]
+    for btype, start, pos in flac_blocks(data):
         if btype == 0:  # STREAMINFO
+            body = data[start:pos]
             if len(body) < 34:
                 raise CodecError("flac: short STREAMINFO")
             b = _Bits(body)
@@ -511,9 +501,6 @@ def decode_flac(data: bytes) -> tuple[int, np.ndarray]:
             nch = b.read(3) + 1
             bps = b.read(5) + 1
             total_samples = b.read(36)
-        pos += 4 + blen
-        if last:
-            break
     if rate is None or not rate:
         raise CodecError("flac: missing STREAMINFO")
     if bps > 16:
@@ -787,42 +774,22 @@ def decode_tiff(data: bytes) -> np.ndarray:
 # container set next to WAV (codecs.py) and FLAC (above).
 # =========================================================================
 
-def _read_f80(b: bytes) -> int:
-    """80-bit IEEE 754 extended float (AIFF sample rate) → int Hz."""
-    if len(b) < 10:
-        raise CodecError("aiff: short extended float")
-    (se,) = struct.unpack(">H", b[:2])
-    exp = se & 0x7FFF
-    (mant,) = struct.unpack(">Q", b[2:10])
-    if exp == 0 and mant == 0:
-        return 0
-    if exp == 0x7FFF:
-        raise CodecError("aiff: non-finite sample rate")
-    val = mant * 2.0 ** (exp - 16383 - 63)
-    if se & 0x8000:
-        val = -val
-    if not 0 < val < 2**31:
-        raise CodecError("aiff: implausible sample rate")
-    return int(round(val))
-
-
 @total
 def decode_aiff(data: bytes) -> tuple[int, np.ndarray]:
     """AIFF / AIFF-C PCM → (sample_rate, int16 samples [n, channels])."""
     if data[:4] != b"FORM" or data[8:12] not in (b"AIFF", b"AIFC"):
         raise CodecError("aiff: bad FORM header")
-    pos = 12
     nch = nframes = bits = rate = None
     sound = None
-    while pos + 8 <= len(data):
-        tag = data[pos:pos + 4]
-        (clen,) = struct.unpack(">I", data[pos + 4:pos + 8])
-        body = data[pos + 8:pos + 8 + clen]
+    for tag, start, end in riff_chunks(data, 12, "big"):
+        body = data[start:end]
         if tag == b"COMM":
             if len(body) < 18:
                 raise CodecError("aiff: short COMM chunk")
             nch, nframes, bits = struct.unpack(">hIh", body[:8])
             rate = _read_f80(body[8:18])
+            if rate >= 2**31:
+                raise CodecError("aiff: implausible sample rate")
             if len(body) >= 22 and body[18:22] not in (b"NONE", b"sowt"):
                 raise CodecError(
                     f"aiff: compression {body[18:22]!r} unsupported")
@@ -832,7 +799,6 @@ def decode_aiff(data: bytes) -> tuple[int, np.ndarray]:
                 raise CodecError("aiff: short SSND chunk")
             (off, _blk) = struct.unpack(">II", body[:8])
             sound = body[8 + off:]
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
     if rate is None or sound is None:
         raise CodecError("aiff: missing COMM/SSND chunk")
     if not 1 <= nch <= 64 or bits not in (8, 16):

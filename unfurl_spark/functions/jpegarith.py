@@ -25,7 +25,7 @@ golden pixel comparison against libjpeg's own decode.
 """
 from __future__ import annotations
 
-from .codecs import CodecError
+from .codecs import CodecError, _restart_marker
 
 # (Qe, NextMPS, (Switch<<7)|NextLPS) — T.81 Table D.3; index 113 is
 # the fixed (non-adapting) state.  Folding Switch into the next-LPS
@@ -192,12 +192,9 @@ class ArithDecoder:
         self.dc_ctx = [0] * len(self.dc_ids)
 
     def restart(self) -> None:
-        """Resume after the next RSTn marker with everything re-initialized."""
-        d, p = self.data, self.pos
-        while p + 1 < self.end and not (d[p] == 0xFF
-                                        and 0xD0 <= d[p + 1] <= 0xD7):
-            p += 1
-        self._start(p + 2)
+        """Resume after the RSTn marker that ends the interval with
+        everything re-initialized."""
+        self._start(_restart_marker(self.data, self.pos))
 
     def _byte(self) -> int:
         if self.marker_seen or self.pos >= self.end:

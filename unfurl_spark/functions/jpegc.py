@@ -48,7 +48,13 @@ import struct
 
 import numpy as np
 
-from .codecs import CodecError, CodecUnavailable, _check_dims, total
+from .codecs import (
+    CodecError,
+    CodecUnavailable,
+    _check_dims,
+    _restart_marker,
+    total,
+)
 from .jpegarith import ArithDecoder
 
 # zigzag order: index i holds the raster position of the i-th scanned coeff
@@ -138,13 +144,7 @@ class _BitReader:
         self.acc = 0
         self.nbits = 0
         self.eobrun = 0
-        d, p = self.data, self.pos
-        while p + 1 < len(d) and not (d[p] == 0xFF
-                                      and 0xD0 <= d[p + 1] <= 0xD7):
-            p += 1
-        if p + 1 >= len(d):
-            raise CodecError("jpeg: missing restart marker")
-        self.pos = p + 2
+        self.pos = _restart_marker(self.data, self.pos)
 
     def decode_huff(self, table: dict[tuple[int, int], int]) -> int:
         code = 0

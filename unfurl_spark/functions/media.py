@@ -12,7 +12,11 @@ Pure-Python (stdlib ``struct``) readers over capped byte prefixes:
 
 The container libraries (PIL etc.) are not available; these parse JPEG /
 PNG / WebP headers, embedded EXIF TIFF directories, XMP packets and PDF
-Info dictionaries directly.
+Info dictionaries directly.  The container framing (RIFF/IFF chunks,
+PNG chunks, FLAC blocks, ID3v2 frames, JPEG header segments) is the
+one walk per family in ``codecs.py`` that the decoders share; the
+readers here keep their own tag handling and stay tolerant of a capped
+prefix where a decoder raises.
 """
 
 from __future__ import annotations
@@ -21,6 +25,16 @@ import re
 import struct
 import zlib
 
+from .codecs import (
+    CodecError,
+    _read_f80,
+    flac_blocks,
+    id3_frames,
+    id3_size,
+    jpeg_segments,
+    png_chunks,
+    riff_chunks,
+)
 from .coerce import exif_date, parse_exif_date
 
 EXIF_BYTE_CAP = 131072  # unfurl-exif/src/index.ts:21
@@ -120,20 +134,8 @@ def _find_exif_jpeg(data: bytes) -> tuple[dict, int | None, int | None, dict]:
     tags: dict = {}
     xmp: dict = {}
     width = height = None
-    i = 2
-    n = len(data)
-    while i + 4 <= n:
-        if data[i] != 0xFF:
-            i += 1
-            continue
-        marker = data[i + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if i + 4 > n:
-            break
-        seglen = struct.unpack_from(">H", data, i + 2)[0]
-        seg = data[i + 4: i + 2 + seglen]
+    for marker, start, end in jpeg_segments(data):
+        seg = data[start:end]
         if marker == 0xE1:
             if seg.startswith(b"Exif\x00\x00"):
                 tags.update(_parse_tiff(seg[6:]))
@@ -143,9 +145,6 @@ def _find_exif_jpeg(data: bytes) -> tuple[dict, int | None, int | None, dict]:
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             if len(seg) >= 5:
                 height, width = struct.unpack_from(">HH", seg, 1)
-        elif marker == 0xDA:
-            break
-        i += 2 + seglen
     return tags, width, height, xmp
 
 
@@ -176,12 +175,8 @@ def _png_info(data: bytes) -> tuple[int | None, int | None, dict, dict]:
     tags: dict = {}
     if not data.startswith(b"\x89PNG\r\n\x1a\n"):
         return None, None, {}, {}
-    i = 8
-    n = len(data)
-    while i + 8 <= n:
-        length = struct.unpack_from(">I", data, i)[0]
-        ctype = data[i + 4: i + 8]
-        chunk = data[i + 8: i + 8 + length]
+    for ctype, start, end in png_chunks(data):
+        chunk = data[start:end]
         if ctype == b"IHDR" and len(chunk) >= 8:
             width, height = struct.unpack_from(">II", chunk, 0)
         elif ctype == b"eXIf":
@@ -194,8 +189,7 @@ def _png_info(data: bytes) -> tuple[int | None, int | None, dict, dict]:
                 except zlib.error:
                     pass
             xmp.update(_parse_xmp(payload))
-        i += 12 + length
-        if ctype == b"IDAT":
+        elif ctype == b"IDAT":
             break
     return width, height, xmp, tags
 
@@ -206,12 +200,8 @@ def _webp_info(data: bytes) -> tuple[int | None, int | None, dict, dict]:
     width = height = None
     xmp: dict = {}
     tags: dict = {}
-    i = 12
-    n = len(data)
-    while i + 8 <= n:
-        fourcc = data[i: i + 4]
-        size = struct.unpack_from("<I", data, i + 4)[0]
-        chunk = data[i + 8: i + 8 + size]
+    for fourcc, start, end in riff_chunks(data, 12):
+        chunk = data[start:end]
         if fourcc == b"VP8X" and len(chunk) >= 10:
             width = 1 + int.from_bytes(chunk[4:7], "little")
             height = 1 + int.from_bytes(chunk[7:10], "little")
@@ -229,7 +219,6 @@ def _webp_info(data: bytes) -> tuple[int | None, int | None, dict, dict]:
             tags.update(_parse_tiff(payload))
         elif fourcc == b"XMP ":
             xmp.update(_parse_xmp(chunk))
-        i += 8 + size + (size & 1)
     return width, height, xmp, tags
 
 
@@ -311,8 +300,9 @@ def _sniff(data: bytes) -> str | None:
     return None
 
 
-def _read_image(data: bytes):
-    kind = _sniff(data)
+def _read_image(data: bytes, kind: str | None):
+    """(kind, tags, width, height, xmp) from the header of an image of the
+    sniffed ``kind``; kind None for any other payload."""
     if kind == "jpeg":
         tags, w, h, xmp = _find_exif_jpeg(data)
         return kind, tags, w, h, xmp
@@ -352,7 +342,7 @@ _EXIFREADER_ORIENTATIONS = {
 def exif_image(url: str, data: bytes, encoding_format: str) -> dict:
     """unfurl-exif parity (unfurl-exif/src/index.ts:16-47)."""
     data = data[:EXIF_BYTE_CAP]
-    kind, tags, width, height, xmp = _read_image(data)
+    kind, tags, width, height, xmp = _read_image(data, _sniff(data))
     if kind is None or kind in ("webp", "heif", "avif"):
         # ExifReader 3.x (the reference pins ^3.14.1) has no WebP or
         # HEIC/AVIF support — load() throws -> bare image
@@ -391,7 +381,7 @@ _HEIF_MIMES = {"heic": "image/heic", "heix": "image/heic",
 
 def exiftool_image(url: str, data: bytes) -> dict:
     """unfurl-exiftool image parity (unfurl-exiftool/src/index.ts:42-67)."""
-    kind, tags, width, height, _xmp = _read_image(data)
+    kind, tags, width, height, _xmp = _read_image(data, _sniff(data))
     if kind is None:
         return {"type": "image", "url": url}
     orientation = tags.get("Orientation")
@@ -848,13 +838,6 @@ def _mp3_frame_header(data: bytes, pos: int):
     return frame, bitrate, rate, channels, spf, version, layer
 
 
-def _syncsafe(raw: bytes) -> int:
-    v = 0
-    for b in raw:
-        v = (v << 7) | (b & 0x7F)
-    return v
-
-
 def _id3_text(body: bytes) -> str | None:
     """Decode one ID3v2 text frame body (leading encoding byte)."""
     if not body:
@@ -886,45 +869,16 @@ def _parse_id3v2(data: bytes) -> tuple[dict, int]:
     """Returns (tags, total_id3_size incl. header).  Supports v2.2-v2.4."""
     if data[:3] != b"ID3" or len(data) < 10:
         return {}, 0
-    major = data[3]
-    size = _syncsafe(data[6:10]) + 10
-    if data[5] & 0x10:  # footer present (v2.4)
-        size += 10
     tags: dict = {}
-    if data[5] & 0x80:
-        # unsynchronisation: FF 00 byte-stuffing applied to the whole
-        # tag (v2.2/2.3 semantics; v2.4 per-frame flags collapse to the
-        # same reversal on the frames we read)
-        body = data[10:size].replace(b"\xff\x00", b"\xff")
-        data = data[:10] + body
-        size = 10 + len(body)
-    pos = 10
-    if data[5] & 0x40 and major >= 3:  # extended header
-        if pos + 4 > len(data):
-            return tags, size
-        ext = (_syncsafe(data[pos:pos + 4]) if major == 4
-               else int.from_bytes(data[pos:pos + 4], "big") + 4)
-        pos += ext
-    end = min(size, len(data))
-    idw, szw = (3, 3) if major == 2 else (4, 4)
-    while pos + idw + szw <= end:
-        fid = data[pos:pos + idw]
-        if fid.strip(b"\x00") == b"":
-            break  # padding
-        raw_sz = data[pos + idw:pos + idw + szw]
-        if major == 4:
-            fsz = _syncsafe(raw_sz)
-        else:
-            fsz = int.from_bytes(raw_sz, "big")
-        pos += idw + szw + (0 if major == 2 else 2)  # v2.3+: 2 flag bytes
-        if fsz <= 0 or pos + fsz > end:
-            break
+    for fid, body in id3_frames(data):
         key = _ID3_FRAMES.get(fid)
         if key and key not in tags:
-            val = _id3_text(data[pos:pos + fsz])
+            val = _id3_text(body)
             if val:
                 tags[key] = val
-        pos += fsz
+    size = id3_size(data)
+    if data[5] & 0x80:  # the tag after unsync reversal, as far as it reaches
+        size = min(size, len(data)) - data[10:size].count(b"\xff\x00")
     return tags, size
 
 
@@ -1002,34 +956,11 @@ def _id3_apic(data: bytes) -> bytes | None:
     PIC (v2.2).  Body layout: encoding byte, MIME (nul-terminated; v2.2
     uses a fixed 3-byte format id instead), picture-type byte,
     description (terminator width follows the encoding), image bytes."""
-    if data[:3] != b"ID3" or len(data) < 10:
-        return None
-    major = data[3]
-    size = min(_syncsafe(data[6:10]) + 10, len(data))
-    if data[5] & 0x80:
-        body = data[10:size].replace(b"\xff\x00", b"\xff")
-        data = data[:10] + body
-        size = 10 + len(body)
-    pos = 10
-    idw, szw = (3, 3) if major == 2 else (4, 4)
-    want = b"PIC" if major == 2 else b"APIC"
-    while pos + idw + szw <= size:
-        fid = data[pos:pos + idw]
-        if fid.strip(b"\x00") == b"":
-            return None  # padding
-        raw_sz = data[pos + idw:pos + idw + szw]
-        fsz = _syncsafe(raw_sz) if major == 4 \
-            else int.from_bytes(raw_sz, "big")
-        pos += idw + szw + (0 if major == 2 else 2)
-        if fsz <= 0 or pos + fsz > size:
-            return None
-        if fid == want:
-            body, p = data[pos:pos + fsz], 0
-            if not body:
-                return None
+    for fid, body in id3_frames(data):
+        if fid in (b"APIC", b"PIC"):        # v2.2 ids are 3 bytes
             enc = body[0]
             p = 1
-            if major == 2:
+            if fid == b"PIC":
                 p += 3                      # 3-byte image format id
             else:
                 mend = body.find(b"\x00", p)
@@ -1048,7 +979,6 @@ def _id3_apic(data: bytes) -> bytes | None:
                     return None
                 p = dend + 1
             return bytes(body[p:]) or None
-        pos += fsz
     return None
 
 
@@ -1209,12 +1139,9 @@ def embedded_cover(data: bytes) -> tuple[bytes, str] | None:
     if data[:4] == b"fLaC":
         # FLAC PICTURE metadata block (type 6): typed fields then the
         # raw image bytes, all big-endian length-prefixed
-        pos = 4
-        while pos + 4 <= len(data):
-            hdr = data[pos]
-            blen = int.from_bytes(data[pos + 1:pos + 4], "big")
-            body = data[pos + 4:pos + 4 + blen]
-            if hdr & 0x7F == 6 and len(body) >= 8:
+        for btype, start, end in flac_blocks(data):
+            body = data[start:end]
+            if btype == 6 and len(body) >= 8:
                 p = 4                                   # picture type
                 mlen = int.from_bytes(body[p:p + 4], "big")
                 p += 4 + mlen                           # MIME
@@ -1227,9 +1154,6 @@ def embedded_cover(data: bytes) -> tuple[bytes, str] | None:
                         blob = body[p + 4:p + 4 + plen]
                         if blob:
                             return bytes(blob), "flac:picture"
-            if hdr & 0x80:
-                break
-            pos += 4 + blen
     if data[:4] == b"\x1aE\xdf\xa3":
         # Matroska/WebM Attachments → AttachedFile: cover art ships as a
         # FileData blob whose FileMimeType is an image type (the
@@ -1353,32 +1277,25 @@ def pcm_metadata(data: bytes) -> dict:
     header prefix)."""
     out: dict = {}
     if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        pos, rate, nch, bits = 12, None, None, None
-        while pos + 8 <= len(data):
-            tag = data[pos:pos + 4]
-            clen = int.from_bytes(data[pos + 4:pos + 8], "little")
-            if tag == b"fmt " and pos + 16 <= len(data):
-                body = data[pos + 8:pos + 8 + clen]
+        rate, nch, bits = None, None, None
+        for tag, start, end in riff_chunks(data, 12):
+            if tag == b"fmt ":
+                body = data[start:end]
                 if len(body) >= 16:
                     nch = int.from_bytes(body[2:4], "little")
                     rate = int.from_bytes(body[4:8], "little")
                     bits = int.from_bytes(body[14:16], "little")
             elif tag == b"data" and rate and nch and bits:
-                frames = clen // max(1, nch * (bits // 8))
+                frames = (end - start) // max(1, nch * (bits // 8))
                 out.update({"sample_rate": rate, "channels": nch,
                             "duration_s": round(frames / rate, 3)})
                 return out
-            pos += 8 + clen + (clen & 1)
         if rate and nch:
             out.update({"sample_rate": rate, "channels": nch})
         return out
     if data[:4] == b"fLaC":
-        pos = 4
-        while pos + 4 <= len(data):
-            hdr = data[pos]
-            last, btype = hdr & 0x80, hdr & 0x7F
-            blen = int.from_bytes(data[pos + 1:pos + 4], "big")
-            body = data[pos + 4:pos + 4 + blen]
+        for btype, start, end in flac_blocks(data):
+            body = data[start:end]
             if btype == 0 and len(body) >= 18:   # STREAMINFO
                 rate = int.from_bytes(body[10:13], "big") >> 4
                 nch = ((body[12] >> 1) & 0x7) + 1
@@ -1389,29 +1306,20 @@ def pcm_metadata(data: bytes) -> dict:
                     out["duration_s"] = round(total / rate, 3)
             elif btype == 4:                     # VorbisComment tags
                 out.update(_vorbis_comments(body))
-            if last:
-                break
-            pos += 4 + blen
         return out
     if data[:4] == b"FORM" and data[8:12] in (b"AIFF", b"AIFC"):
-        pos = 12
-        while pos + 8 <= len(data):
-            tag = data[pos:pos + 4]
-            clen = int.from_bytes(data[pos + 4:pos + 8], "big")
-            body = data[pos + 8:pos + 8 + clen]
+        for tag, start, end in riff_chunks(data, 12, "big"):
+            body = data[start:end]
             if tag == b"COMM" and len(body) >= 18:
-                nch = int.from_bytes(body[0:2], "big")
+                try:
+                    rate = _read_f80(body[8:18])
+                except CodecError:  # no usable rate: err:bad-header
+                    return out
                 nframes = int.from_bytes(body[2:6], "big")
-                # 80-bit IEEE-754 extended sample rate
-                exp = int.from_bytes(body[8:10], "big")
-                mant = int.from_bytes(body[10:18], "big")
-                if exp and mant:
-                    rate = int(round(mant * 2.0 ** ((exp & 0x7FFF)
-                                                    - 16383 - 63)))
-                    out.update({"sample_rate": rate, "channels": nch,
-                                "duration_s": round(nframes / rate, 3)})
+                out.update({"sample_rate": rate,
+                            "channels": int.from_bytes(body[0:2], "big"),
+                            "duration_s": round(nframes / rate, 3)})
                 return out
-            pos += 8 + clen + (clen & 1)
     return out
 
 

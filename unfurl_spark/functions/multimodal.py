@@ -18,7 +18,9 @@ from scratch, bit-exact vs libwebp) with ALPH alpha and ANMF animation
 frames — ICO favicons, baseline TIFF images, and PCM WAV + FLAC + AIFF
 audio decode to real pixels/samples, feed a real box-filter resize and
 real feature statistics; SVG yields real intrinsic dimensions
-(rasterization out of scope).  Motion-JPEG MP4 tracks decode REAL
+(rasterization out of scope).  Header dimensions come from the same
+readers as the exif/exiftool paths (``media._read_image``), so a row's
+width and height agree with its metadata.  Motion-JPEG MP4 tracks decode REAL
 frames at REAL timestamps (every sample is a baseline JPEG), and
 MP4/MP3/WebM embedded cover art (covr / APIC / Matroska attachment)
 decodes to real thumbnail pixels.  Formats whose essence needs an
@@ -61,6 +63,7 @@ from .codecs import (
     decode_png,
     decode_ppm,
     decode_wav,
+    ico_entries,
     resize_area,
 )
 from .codecs_ext import (
@@ -71,9 +74,8 @@ from .codecs_ext import (
 )
 from .jpegc import decode_jpeg
 from .media import (
-    _png_info,
+    _read_image,
     _sniff,
-    _webp_info,
     aac_metadata,
     embedded_cover,
     mjpeg_samples,
@@ -147,25 +149,31 @@ def decode_pixels(payload: bytes, container: str):
         from .svgraster import rasterize_svg
         return rasterize_svg(payload)
     if container in ("mp4", "mp3", "m4a", "mov", "webm"):
-        if container == "mp4":
-            # Motion-JPEG track: first sample is a whole baseline JPEG
-            table = mjpeg_samples(payload)
-            if table:
-                ts, off, sz = table[0]
-                if off + sz <= len(payload):
-                    return decode_jpeg(payload[off:off + sz])
-        # the ffmpeg attached_pic path: MP4 covr / ID3 APIC / Matroska
-        # attachment cover art is a plain JPEG/PNG we CAN decode — real
-        # pixels even though the motion essence needs an external codec
-        cover = embedded_cover(payload)
-        if cover is not None:
-            img, _src = cover
-            cdec = _DECODERS.get(_sniff(img) or "")
-            if cdec is not None:
-                return cdec(img)
+        px = _still(payload)
+        if px is not None:
+            return px
     raise CodecUnavailable(
         f"container {container!r} needs an external codec "
         "(not installed in this environment)")
+
+
+def _still(payload: bytes):
+    """The picture an A/V payload carries, or None: the first sample of an
+    MP4 Motion-JPEG track (a whole baseline JPEG), else its embedded cover
+    art (MP4 covr / ID3 APIC / Matroska attachment, ffmpeg's
+    attached_pic) — a plain JPEG/PNG the image decoders read although the
+    motion essence needs an external codec."""
+    table = mjpeg_samples(payload)
+    if table:
+        _ts, off, sz = table[0]
+        if off + sz <= len(payload):
+            return decode_jpeg(payload[off:off + sz])
+    cover = embedded_cover(payload)
+    if cover is not None:
+        cdec = _DECODERS.get(_sniff(cover[0]) or "")
+        if cdec is not None:
+            return cdec(cover[0])
+    return None
 
 
 def _fake_pixels(media_ref: str, payload: bytes, n: int) -> bytes:
@@ -198,52 +206,19 @@ def _dims(container: str | None, data: bytes):
 
 
 def _dims_raw(container: str | None, data: bytes):
-    if container == "png":
-        w, h, _, _ = _png_info(data)
+    if container in ("jpeg", "png", "webp", "tiff", "heif", "avif"):
+        _kind, _tags, w, h, _xmp = _read_image(data, container)
         return w, h
-    if container == "webp":
-        w, h, _, _ = _webp_info(data)
-        return w, h
-    if container == "jpeg":
-        # SOFn scan (real header walk, no codec needed)
-        i = 2
-        while i + 9 < len(data):
-            if data[i] != 0xFF:
-                i += 1
-                continue
-            marker = data[i + 1]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                return (struct.unpack(">H", data[i + 7:i + 9])[0],
-                        struct.unpack(">H", data[i + 5:i + 7])[0])
-            seg_len = struct.unpack(">H", data[i + 2:i + 4])[0]
-            i += 2 + seg_len
-        return None, None
     if container == "mp4":
         meta = mp4_metadata(data)
-        return meta.get("width"), meta.get("height")
-    if container in ("heif", "avif"):
-        from .media import heif_info
-        meta = heif_info(data)
         return meta.get("width"), meta.get("height")
     if container == "webm":
         meta = mkv_metadata(data)
         return meta.get("width"), meta.get("height")
-    if container == "ico" and len(data) >= 22:
-        # largest ICONDIR entry (0 encodes 256)
-        n = data[4] | (data[5] << 8)
-        best = (0, None, None)
-        for i in range(min(n, 64)):
-            e = data[6 + 16 * i: 6 + 16 * i + 2]
-            if len(e) < 2:
-                break
-            w, h = e[0] or 256, e[1] or 256
-            if w * h > best[0]:
-                best = (w * h, w, h)
-        return best[1], best[2]
-    if container == "tiff":
-        from .codecs_ext import _tiff_ifd
-        t = _tiff_ifd(data)
-        return (t.get(256, (None,))[0], t.get(257, (None,))[0])
+    if container == "ico":  # the largest entry
+        w, h, _off, _size = max(ico_entries(data), default=(None, None, 0, 0),
+                                key=lambda e: e[0] * e[1])
+        return w, h
     if container == "svg":
         from .codecs_ext import svg_info
         return svg_info(data)
@@ -564,23 +539,18 @@ def sample_frames(df: DataFrame, n_frames: int = 4,
         # either way
         step_ms = (max(1, int(duration_s * 1000 / n_frames)) if duration_s
                    else frame_interval_ms)
-        # ffmpeg exposes MP4 covr / ID3 APIC cover art as an attached_pic
-        # stream — when it decodes, frame 0 is that REAL thumbnail;
-        # motion frames keep the flagged stub
-        cover_px = None
+        # the payload's still picture (decode_pixels' own), when it
+        # decodes, is a REAL frame 0; motion frames keep the flagged stub
+        still = None
         if kind in ("mp4", "mp3", "webm"):
             try:
-                cover = embedded_cover(data)
-                if cover is not None:
-                    cdec = _DECODERS.get(_sniff(cover[0]) or "")
-                    if cdec is not None:
-                        cover_px = cdec(cover[0]).tobytes()
-            except Exception:   # malformed cover → stub frame 0
-                cover_px = None
+                still = _still(data)
+            except Exception:   # malformed picture → stub frame 0
+                still = None
         frames = [(ref, i, i * step_ms, _fake_pixels(f"{ref}#{i}", data, 256),
                    "codec:unavailable") for i in range(n_frames)]
-        if frames and cover_px is not None:
-            frames[0] = (ref, 0, 0, cover_px, "ok")
+        if frames and still is not None:
+            frames[0] = (ref, 0, 0, still.tobytes(), "ok")
         return frames
 
     return map_rows(_salted(df.select("media_ref", "payload"),

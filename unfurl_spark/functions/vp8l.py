@@ -26,11 +26,9 @@ exists for the training-data side (features/thumbnails at scale).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from .codecs import CodecError, _check_dims
+from .codecs import CodecError, _check_dims, riff_chunks
 
 # RFC 9649: code-length-code read order
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13,
@@ -494,12 +492,9 @@ def decode_webp(data: bytes) -> np.ndarray:
     raises its ``CodecUnavailable`` boundary."""
     if len(data) < 16 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise CodecError("webp: bad container")
-    i, n = 12, len(data)
     alpha_chunk = None
-    while i + 8 <= n:
-        fourcc = data[i:i + 4]
-        size = struct.unpack_from("<I", data, i + 4)[0]
-        chunk = data[i + 8:i + 8 + size]
+    for fourcc, start, end in riff_chunks(data, 12):
+        chunk = data[start:end]
         if fourcc == b"ALPH":
             alpha_chunk = chunk
         elif fourcc == b"VP8L":
@@ -512,7 +507,6 @@ def decode_webp(data: bytes) -> np.ndarray:
                 a = decode_alpha(alpha_chunk, wid, hgt)
                 return np.dstack([px, a])
             return px
-        i += 8 + size + (size & 1)
     raise CodecError("webp: no image chunk")
 
 
@@ -527,12 +521,9 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None
         raise CodecError("webp: bad container")
     canvas_w = canvas_h = None
     frames = []       # (x, y, dur_ms, blend, dispose, essence bytes)
-    i, n = 12, len(data)
     still = None
-    while i + 8 <= n:
-        fourcc = data[i:i + 4]
-        size = struct.unpack_from("<I", data, i + 4)[0]
-        chunk = data[i + 8:i + 8 + size]
+    for fourcc, start, end in riff_chunks(data, 12):
+        chunk = data[start:end]
         if fourcc == b"VP8X" and len(chunk) >= 10:
             canvas_w = 1 + int.from_bytes(chunk[4:7], "little")
             canvas_h = 1 + int.from_bytes(chunk[7:10], "little")
@@ -549,16 +540,12 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None
                 still = ("vp8", chunk)
             else:
                 still = ("vp8l", chunk)
-        i += 8 + size + (size & 1)
 
     def essence_rgba(payload: bytes) -> np.ndarray:
         """Image (+ optional ALPH) chunks inside an ANMF body."""
-        j = 0
         alpha = None
-        while j + 8 <= len(payload):
-            tag = payload[j:j + 4]
-            sz = struct.unpack_from("<I", payload, j + 4)[0]
-            body = payload[j + 8:j + 8 + sz]
+        for tag, start, end in riff_chunks(payload, 0):
+            body = payload[start:end]
             if tag == b"ALPH":
                 alpha = body
             elif tag == b"VP8L":
@@ -570,7 +557,6 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None
                     a = decode_alpha(alpha, px.shape[1], px.shape[0])
                     return np.dstack([px, a])
                 return _rgba(px)
-            j += 8 + sz + (sz & 1)
         raise CodecError("webp: ANMF without image chunk")
 
     if not frames:
