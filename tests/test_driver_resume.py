@@ -6,6 +6,7 @@ import os
 import shutil
 import time
 import urllib.request
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -13,8 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import unfurl_spark.operators.pipeline as pipeline_mod
-from unfurl_spark.plans.driver import run_job
+from unfurl_spark.plans.driver import _done_buckets, _metrics_table, run_job
 from unfurl_spark.sources.synthetic import write_corpus
+from unfurl_spark.sources.tables import append_metrics
 
 
 @pytest.fixture(scope="module")
@@ -309,10 +311,9 @@ def test_metrics_equal_committed_spans(spark, corpus, tmp_path, side_mode):
     assert s["n_failures"] == sum(v[2] for v in want.values())
 
 
-def test_every_driver_job_is_named(spark, corpus, tmp_path):
-    """Every Spark job ``run_job`` starts carries a job description naming
-    its phase (read through the status REST API), and the caller's own
-    description is restored afterwards."""
+def _jobs_of(spark, run):
+    """The Spark jobs started while ``run()`` ran, read through the status
+    REST API between two marker jobs."""
     sc = spark.sparkContext
     base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
 
@@ -335,18 +336,30 @@ def test_every_driver_job_is_named(spark, corpus, tmp_path):
             time.sleep(0.1)
         raise AssertionError(f"marker job {text!r} never listed")
 
-    start = marker("named-jobs-start")
-    sc.setJobDescription("caller's description")
-    run_job(spark, corpus["documents_raw"], str(tmp_path / "out"),
-            oembed_path=corpus["oembed_docs"],
-            media_path=corpus["media_payloads"],
-            n_buckets=4, buckets_per_job=2, run_id="named")
-    assert sc.getLocalProperty("spark.job.description") \
-        == "caller's description"
-    sc.setJobDescription(None)
-    end = marker("named-jobs-end")
+    tag = uuid.uuid4().hex
+    start = marker(f"jobs-start-{tag}")
+    run()
+    end = marker(f"jobs-end-{tag}")
+    return [j for j in jobs() if start < j["jobId"] < end]
 
-    started = [j for j in jobs() if start < j["jobId"] < end]
+
+def test_every_driver_job_is_named(spark, corpus, tmp_path):
+    """Every Spark job ``run_job`` starts carries a job description naming
+    its phase (read through the status REST API), and the caller's own
+    description is restored afterwards."""
+    sc = spark.sparkContext
+
+    def run():
+        sc.setJobDescription("caller's description")
+        run_job(spark, corpus["documents_raw"], str(tmp_path / "out"),
+                oembed_path=corpus["oembed_docs"],
+                media_path=corpus["media_payloads"],
+                n_buckets=4, buckets_per_job=2, run_id="named")
+        assert sc.getLocalProperty("spark.job.description") \
+            == "caller's description"
+        sc.setJobDescription(None)
+
+    started = _jobs_of(spark, run)
     assert started
     unnamed = [j["name"] for j in started
                if not (j.get("description") or "").startswith("unfurl named:")]
@@ -354,3 +367,94 @@ def test_every_driver_job_is_named(spark, corpus, tmp_path):
     descs = {j["description"] for j in started}
     assert "unfurl named: side tables" in descs
     assert "unfurl named: data commit [0, 1]" in descs
+
+
+def test_parquet_metrics_marker_starts_no_spark_job(spark, corpus, tmp_path):
+    """Under parquet the driver writes each chunk's metrics file itself:
+    ``run_job`` starts no metrics job, its data commits are still named,
+    and each chunk's marker is one committed file."""
+    out = str(tmp_path / "out")
+    started = _jobs_of(spark, lambda: run_job(
+        spark, corpus["documents_raw"], out, n_buckets=4, buckets_per_job=2,
+        run_id="marker"))
+    descs = [j.get("description") or "" for j in started]
+    assert [d for d in descs if ": metrics" in d] == []
+    assert "unfurl marker: data commit [0, 1]" in descs
+    assert "unfurl marker: data commit [2, 3]" in descs
+    assert len(_data_files(out + "/metrics")) == 2
+    assert glob.glob(out + "/metrics/_tmp-*") == []
+    assert spark.read.parquet(out + "/metrics").count() == 4
+
+
+def test_hidden_metrics_file_is_not_a_marker(spark, corpus, tmp_path):
+    """A metrics file still under its hidden ``_tmp-`` name (a driver that
+    died before the rename) holds committed rows, yet neither marks its
+    buckets done nor shows in a read of the metrics table: the resumed
+    run reprocesses exactly those buckets."""
+    out = str(tmp_path / "out")
+    run_job(spark, corpus["documents_raw"], out, n_buckets=4,
+            buckets_per_job=2, run_id="h1")
+    metrics = out + "/metrics"
+    part = sorted(_data_files(metrics))[0]
+    lost = sorted(r["bucket"] for r in pq.read_table(part).to_pylist())
+    os.rename(part, os.path.join(metrics, "_tmp-" + os.path.basename(part)))
+    kept = set(range(4)) - set(lost)
+    assert len(lost) == 2
+
+    assert {r["bucket"] for r in spark.read.parquet(metrics).collect()} \
+        == kept
+    assert _done_buckets(spark, metrics, 4, (), ()) == kept
+    s = run_job(spark, corpus["documents_raw"], out, n_buckets=4,
+                buckets_per_job=2, run_id="h2")
+    assert sorted(s["processed_buckets"]) == lost
+    assert spark.read.parquet(out + "/spans").count() == 200
+
+
+def _spark_written_metrics(spark, chunk, per_stat, const, wall, rates):
+    """A chunk's metrics rows as the driver wrote them through a Spark job
+    before it wrote the marker file itself."""
+    out = spark.createDataFrame(pa.table({
+        "bucket": pa.array(chunk, pa.int32()),
+        **{n: pa.array(v, pa.int64()) for n, v in per_stat.items()}})
+    ).coalesce(1)
+    for name, value in const.items():
+        out = out.withColumn(name, F.lit(value))
+    out = out.withColumn("wall_sec", F.lit(round(wall, 3)))
+    for name, stat in rates.items():
+        out = out.withColumn(name, F.round(F.col(stat) / F.lit(wall), 1))
+    return out
+
+
+def test_spark_and_driver_written_metrics_read_as_one(spark, tmp_path):
+    """A metrics table holding one Spark-written and one driver-written
+    file reads under one schema, with the same values for the same chunk
+    (the rates rounded HALF_UP, as Spark's ``round`` does: 2.25 → 2.3,
+    0.15 → 0.2), and ``_done_buckets`` honours both files."""
+    metrics = str(tmp_path / "metrics")
+    per_stat = {"n_docs": [45, 3, 7, 0], "n_bytes": [10, 20, 30, 0],
+                "n_failures": [1, 0, 0, 0]}
+    const = {"run_id": "mixed", "status": "committed", "n_buckets": 8,
+             "ops": "decode"}
+    rates = {"docs_per_sec": "n_docs"}
+    _spark_written_metrics(spark, [0, 1, 2, 3], per_stat, const, 20.0,
+                           rates).write.mode("append").parquet(metrics)
+    append_metrics(_metrics_table([4, 5, 6, 7], per_stat, const, 20.0,
+                                  rates), metrics)
+
+    files = sorted(_data_files(metrics))
+    assert len(files) == 2
+    schemas = {spark.read.parquet(f).schema.simpleString() for f in files}
+    assert schemas == {
+        "struct<bucket:int,n_docs:bigint,n_bytes:bigint,n_failures:bigint,"
+        "run_id:string,status:string,n_buckets:int,ops:string,"
+        "wall_sec:double,docs_per_sec:double>"}
+    both = spark.read.option("mergeSchema", "true").parquet(metrics)
+    assert {both.schema.simpleString()} == schemas
+    assert {spark.read.parquet(metrics).schema.simpleString()} == schemas
+
+    rows = {r["bucket"]: r.asDict() for r in both.collect()}
+    for b in range(4):
+        assert {**rows[b], "bucket": None} == {**rows[b + 4], "bucket": None}
+    assert [rows[b]["docs_per_sec"] for b in range(4)] == [2.3, 0.2, 0.4, 0.0]
+    assert _done_buckets(spark, metrics, 8, ("decode",), ("decode",)) \
+        == set(range(8))

@@ -25,6 +25,8 @@ from unfurl_spark.functions.content import classify_blocks
 from unfurl_spark.functions.engine import flat_document_spans, scrape_document
 from unfurl_spark.functions.htmlmeta import parse_html_full
 from unfurl_spark.functions.media import (
+    _walk_ebml,
+    _walk_mp4_boxes,
     exif_image,
     exiftool_image,
     exiftool_pdf,
@@ -184,7 +186,8 @@ def test_svg_rasterizer_only_typed_errors(data):
 
 
 # container framing (ROADMAP item 4): each of the six walkers in
-# codecs.py must end on any input.  The inputs are a valid signature,
+# codecs.py, and media's ISO-BMFF box and EBML element walks, must end on
+# any input.  The inputs are a valid signature,
 # then units whose size field holds 0, an odd value, all-ones or the
 # body's true length, then arbitrary bytes.
 _SIZES = st.one_of(st.sampled_from([0, 1, 3, 0xFFFFFFFF]),
@@ -279,3 +282,42 @@ def test_ico_entries_advance(count, tail):
     entries = _take(ico_entries(data), data)
     assert len(entries) <= min(count, 64, len(tail) // 16)
     assert all(1 <= w <= 256 and 1 <= h <= 256 for w, h, _o, _s in entries)
+
+
+def _nested_spans_advance(walk, data, start, end, depth=3):
+    """``walk(data, start, end)`` yields (tag, payload_start, payload_end)
+    spans inside [start, end], each behind its own header and starting
+    after the previous one, within one step per byte; and so does each
+    payload walked as a nested span, as the metadata readers recurse."""
+    spans = list(islice(walk(data, start, end), end - start + 1))
+    assert len(spans) <= end - start
+    last = start
+    for _tag, s, e in spans:
+        assert last < s <= e <= end
+        last = s
+        if depth:
+            _nested_spans_advance(walk, data, s, e, depth - 1)
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(_framed(b"", lambda size, body: (
+    (size & 0xFFFFFFFF).to_bytes(4, "big") + b"moov" + body)))
+def test_mp4_boxes_advance(data):
+    _nested_spans_advance(_walk_mp4_boxes, data, 0, len(data))
+
+
+def _ebml_unit(size, body):
+    """A Cluster element: 4-byte id, then a 4-byte size vint, or the
+    8-byte unknown size (all value bits set: the span runs to its
+    parent's end) for the all-ones size."""
+    vint = (b"\x01" + b"\xff" * 7 if size == 0xFFFFFFFF
+            else (0x10000000 | size).to_bytes(4, "big"))
+    return b"\x1f\x43\xb6\x75" + vint + body
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(st.sampled_from([b"", b"\x1a\x45\xdf\xa3\xff",
+                        b"\x18\x53\x80\x67\x88"]), st.data())
+def test_ebml_elements_advance(head, draw):
+    data = draw.draw(_framed(head, _ebml_unit))
+    _nested_spans_advance(_walk_ebml, data, 0, len(data))

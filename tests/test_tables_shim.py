@@ -3,8 +3,12 @@ catalog-style identifiers and must not leak session-wide config."""
 
 import os
 
+import pyarrow as pa
+
 from unfurl_spark.sources.tables import (append_metrics, read_table,
                                          write_bucketed)
+
+_METRICS = pa.table({"id": pa.array([1, 2], pa.int32()), "v": ["a", "b"]})
 
 
 def test_catalog_identifier_roundtrips_without_iceberg(spark):
@@ -25,8 +29,8 @@ def test_catalog_identifier_roundtrips_without_iceberg(spark):
             .removeprefix("file:")
         assert os.path.isdir(local)
 
-        append_metrics(df.drop("bucket"), "shimtest.metrics")
-        append_metrics(df.drop("bucket"), "shimtest.metrics")
+        append_metrics(_METRICS, "shimtest.metrics")
+        append_metrics(_METRICS, "shimtest.metrics")
         assert read_table(spark, "shimtest.metrics").count() == 4
     finally:
         root = _fallback_path(spark, "shimtest").removeprefix("file:")
@@ -49,3 +53,18 @@ def test_write_bucketed_does_not_mutate_session_overwrite_mode(spark,
     got = sorted(r.id for r in
                  spark.read.parquet(str(tmp_path / "t")).collect())
     assert got == [2, 9]
+
+
+def test_append_metrics_commits_one_file_per_call(spark, tmp_path):
+    """On a path, each append is one ``part-*.parquet`` file renamed into
+    place; no hidden ``_tmp-*`` file stays behind."""
+    path = str(tmp_path / "metrics")
+    append_metrics(_METRICS, path)
+    append_metrics(_METRICS, path)
+    names = os.listdir(path)
+    parts = [n for n in names if n.startswith("part-")]
+    assert len(parts) == 2 and all(n.endswith(".parquet") for n in parts)
+    assert [n for n in names if "_tmp-" in n] == []
+    got = read_table(spark, path)
+    assert got.count() == 4
+    assert got.schema.simpleString() == "struct<id:int,v:string>"

@@ -1244,15 +1244,16 @@ def _ebml_vint(data: bytes, pos: int, strip_marker: bool):
 def _walk_ebml(data: bytes, start: int, end: int):
     """Yield (element_id, payload_start, payload_end) for the EBML
     elements of one span.  Unknown-size elements (all size bits set)
-    extend to the span end; malformed vints terminate the walk (per-doc
-    isolation contract, mirroring ``_walk_mp4_boxes``)."""
+    extend to the span end; malformed vints and a header that runs past
+    the span end terminate the walk (per-doc isolation contract,
+    mirroring ``_walk_mp4_boxes``)."""
     pos = start
     while pos < end:
         eid, p1, _ = _ebml_vint(data, pos, strip_marker=False)
         if eid is None:
             return
         size, p2, slen = _ebml_vint(data, p1, strip_marker=True)
-        if size is None:
+        if size is None or p2 > end:
             return
         if size == (1 << (7 * slen)) - 1:  # unknown size → to span end
             pend = end

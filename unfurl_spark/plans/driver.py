@@ -15,15 +15,17 @@ idempotently:
   so they cost no Spark job and the committed data is never read back;
 * after each chunk of buckets commits, its metrics rows (those stats plus
   wall sec) are appended to the metrics table as one file, which is the
-  chunk's done-marker; a restarted run anti-joins the done set and only
-  processes the remainder;
+  chunk's done-marker; on parquet the driver writes that file itself and
+  commits it by a rename, so the marker costs no Spark job (Iceberg
+  appends); a restarted run anti-joins the done set and only processes
+  the remainder;
 * broadcast side tables are built once per job, at the first chunk that
   has work, so a fully resumed run builds none.
 
 Every Spark job the driver starts carries a job description naming its
 phase (inputs, done set, side tables, data commit with its buckets,
-metrics), so the Spark UI and status API attribute stages without
-wrappers.
+and the Iceberg metrics append), so the Spark UI and status API
+attribute stages without wrappers.
 
 Table format goes through ``sources/tables.py``: Iceberg
 (`overwritePartitions` / `append`) when the catalog jars are present,
@@ -38,6 +40,7 @@ import json
 import os
 import time
 from contextlib import contextmanager
+from decimal import ROUND_HALF_UP, Decimal
 from functools import cache, partial
 
 from pyspark.sql import Observation, SparkSession
@@ -120,8 +123,34 @@ def run_context_prepass(spark: SparkSession, input_path: str,
     return spark.read.parquet(path).count()
 
 
-def _one_if(cond):
-    return F.when(cond, 1).otherwise(0)
+def _round_half_up(x: float) -> float:
+    """``x`` to one decimal as Spark's ``round(x, 1)`` gives it: HALF_UP
+    on the shortest decimal form of the double (2.25 → 2.3, 0.15 → 0.2),
+    where Python's ``round`` rounds the binary value half-even."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.1"), ROUND_HALF_UP))
+
+
+def _metrics_table(chunk: list, per_stat: dict, const: dict, wall: float,
+                   rates: dict):
+    """One chunk's metrics rows as Spark wrote them from literals: bucket
+    int, the stats bigint, then ``const`` (int or string, NOT NULL), NOT
+    NULL ``wall_sec`` and the ``rates`` ({column: stat} → stat per wall
+    second, rounded to one decimal)."""
+    import pyarrow as pa
+
+    n = len(chunk)
+    cols = [("bucket", pa.array(chunk, pa.int32()), True),
+            *((s, pa.array(v, pa.int64()), True) for s, v in per_stat.items()),
+            *((c, pa.array([v] * n, pa.int32() if isinstance(v, int)
+                           else pa.string()), False)
+              for c, v in const.items()),
+            ("wall_sec", pa.array([round(wall, 3)] * n, pa.float64()), False),
+            *((c, pa.array([_round_half_up(v / wall) for v in per_stat[s]],
+                           pa.float64()), True) for c, s in rates.items())]
+    return pa.Table.from_arrays(
+        [a for _, a, _ in cols],
+        schema=pa.schema([pa.field(c, a.type, nullable)
+                          for c, a, nullable in cols]))
 
 
 def _run_bucketed(spark: SparkSession, rows, key: str, stage,
@@ -136,16 +165,18 @@ def _run_bucketed(spark: SparkSession, rows, key: str, stage,
     buckets in the done set are skipped.  For each chunk of buckets,
     ``stage(part, bucket_of, observe)`` writes its tables, passing the
     one the stats describe through ``observe`` right before its write.
-    ``stats`` ({column: per-row value}) are summed per bucket by that
-    observation, so they come from the commit's own pass: no readback,
-    no extra Spark job, and an empty bucket observes 0.  Once the stage
-    returns, one committed metrics row per bucket is appended, the
-    chunk's rows as one file: the stats (``long``), run_id, status,
-    n_buckets, ``const_cols``, wall_sec and ``rates`` ({column: stat} →
-    stat per wall second).  The ``summed`` stats add up into the summary.
+    ``stats`` ({column: SQL of the per-row value}) are summed per bucket
+    by that observation, one ``F.expr`` aggregate per (stat, bucket), so
+    they come from the commit's own pass: no readback, no extra Spark
+    job, and an empty bucket observes 0.  Once the stage returns, the
+    driver builds one committed metrics row per bucket as an Arrow table
+    and ``tables.append_metrics`` adds the chunk's rows as one file, the
+    chunk's done-marker: on parquet the driver writes it and commits it
+    by a rename, with no Spark job; Iceberg appends.  The row holds the
+    stats (``long``), run_id, status, n_buckets, ``const_cols``,
+    wall_sec and ``rates`` ({column: stat} → stat per wall second).  The
+    ``summed`` stats add up into the summary.
     """
-    import pyarrow as pa
-
     from unfurl_spark.sources import tables
 
     bucket_of = F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
@@ -161,8 +192,8 @@ def _run_bucketed(spark: SparkSession, rows, key: str, stage,
         # one aggregate per (stat, bucket): Observation has no group-by
         obs = Observation()
         per_bucket = [
-            F.coalesce(F.sum(F.when(F.col("bucket") == b, value)),
-                       F.lit(0)).cast("long").alias(f"{name}_{b}")
+            F.expr(f"cast(coalesce(sum(case when bucket = {b} then {value} "
+                   f"end), 0) as bigint) as {name}_{b}")
             for name, value in stats.items() for b in chunk]
         t0 = time.time()
         with _job_description(spark,
@@ -173,21 +204,11 @@ def _run_bucketed(spark: SparkSession, rows, key: str, stage,
         seen = obs.get
         per_stat = {n: [seen[f"{n}_{b}"] for b in chunk] for n in stats}
 
-        # lineage metrics, one row per bucket (appended after data commit)
-        # from Arrow: a local relation, so the append starts no Python
-        # worker; one partition, so the chunk's rows land in one file
-        out = spark.createDataFrame(pa.table({
-            "bucket": pa.array(chunk, pa.int32()),
-            **{n: pa.array(v, pa.int64()) for n, v in per_stat.items()}})
-        ).coalesce(1)
-        out = (out.withColumn("run_id", F.lit(run_id))
-               .withColumn("status", F.lit("committed"))
-               .withColumn("n_buckets", F.lit(n_buckets)))
-        for name, value in const_cols.items():
-            out = out.withColumn(name, F.lit(value))
-        out = out.withColumn("wall_sec", F.lit(round(wall, 3)))
-        for name, stat in rates.items():
-            out = out.withColumn(name, F.round(F.col(stat) / F.lit(wall), 1))
+        # lineage metrics, one row per bucket, appended after the data
+        # commit as the chunk's done-marker
+        out = _metrics_table(chunk, per_stat, {
+            "run_id": run_id, "status": "committed",
+            "n_buckets": n_buckets, **const_cols}, wall, rates)
         with _job_description(spark, f"unfurl {run_id}: metrics {chunk}"):
             tables.append_metrics(out, metrics_dir)
         summary["processed_buckets"].extend(chunk)
@@ -245,11 +266,10 @@ def run_media_job(spark: SparkSession, media_path: str, output_dir: str,
             res.unpersist()  # a no-op when nothing was persisted
 
     always = ("decode",)
-    stats = {"n_media": F.lit(1),
-             "n_decoded": _one_if(F.col("ok") == "ok"),
-             "n_codec_unavailable":
-                 _one_if(F.col("ok") == "codec:unavailable"),
-             "n_errors": _one_if(F.col("ok").startswith("err:"))}
+    stats = {"n_media": "1",
+             "n_decoded": "if(ok = 'ok', 1, 0)",
+             "n_codec_unavailable": "if(ok = 'codec:unavailable', 1, 0)",
+             "n_errors": "if(startswith(ok, 'err:'), 1, 0)"}
     with _job_description(spark, f"unfurl {run_id}: inputs"):
         media = tables.read_table(spark, media_path)
     return _run_bucketed(
@@ -317,8 +337,8 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
 
     return _run_bucketed(
         spark, docs, "doc_id", stage, os.path.join(output_dir, "metrics"),
-        {"n_docs": F.lit(1), "n_bytes": F.col("n_input_bytes"),
-         "n_failures": _one_if(F.col("ok") != "ok")},
+        {"n_docs": "1", "n_bytes": "n_input_bytes",
+         "n_failures": "if(ok != 'ok', 1, 0)"},
         summed=("n_docs", "n_failures"), const_cols={},
         rates={"docs_per_sec": "n_docs"}, n_buckets=n_buckets,
         buckets_per_job=buckets_per_job, run_id=run_id)

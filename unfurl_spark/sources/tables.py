@@ -16,6 +16,10 @@ other values are catalog table identifiers (Iceberg).
 
 from __future__ import annotations
 
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 # Per-application probe cache, keyed by the applicationId of the SESSION the
@@ -79,12 +83,36 @@ def write_bucketed(df: DataFrame, identifier: str,
         .parquet(identifier)
 
 
-def append_metrics(df: DataFrame, identifier: str) -> None:
-    """Append-only lineage/metrics table."""
-    spark = df.sparkSession
+def append_metrics(table: pa.Table, identifier: str) -> None:
+    """Append one chunk's metrics rows (an Arrow table built on the
+    driver) to the append-only lineage/metrics table.
+
+    Iceberg appends through the session.  A parquet path gets the rows as
+    one file written by the driver itself, with no Spark job: pyarrow
+    serializes the table, which goes through the Hadoop ``FileSystem``
+    that ``driver._done_buckets`` reads (same schemes, same credentials)
+    under a hidden ``_tmp-`` name that Spark's reader skips, and a rename
+    to ``part-<uuid>.parquet`` commits it.  A crash before the rename
+    leaves only the hidden file, so a reader sees the whole marker or
+    none of it."""
+    spark = SparkSession.active()
     if not _is_path(identifier):
         if iceberg_available(spark):
-            df.writeTo(identifier).append()
+            spark.createDataFrame(table).writeTo(identifier).append()
             return
         identifier = _fallback_path(spark, identifier)
-    df.write.mode("append").parquet(identifier)
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    name = uuid.uuid4().hex
+    tmp = path(identifier, f"_tmp-{name}.parquet")
+    dst = path(identifier, f"part-{name}.parquet")
+    fs = tmp.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, dst):
+        raise OSError(f"metrics commit failed: cannot rename {tmp.toString()}"
+                      f" to {dst.toString()}")
