@@ -1,5 +1,7 @@
 """ICO / SVG / APNG / FLAC / TIFF — round-trips, dispatch, fuzz."""
 
+import time
+
 import numpy as np
 import pytest
 from encoders import encode_apng, encode_flac, encode_ico, encode_png, encode_tiff
@@ -243,6 +245,19 @@ def test_tiff_roundtrip_rgb(compression, predictor):
     img = RNG.integers(0, 256, (70, 33, 3), dtype=np.uint8)
     out = decode_tiff(encode_tiff(img, compression=compression,
                                   predictor=predictor))
+    assert np.array_equal(out, img)
+
+
+def test_tiff_lzw_decode_is_linear():
+    """512x512 RGB noise in LZW (about 1 MB of codes: noise expands)
+    decodes in well under a second; a bit reader that shifts the whole
+    strip at every byte took about 29 s."""
+    img = np.random.default_rng(7).integers(0, 256, (512, 512, 3),
+                                            dtype=np.uint8)
+    data = encode_tiff(img, compression="lzw")
+    t0 = time.perf_counter()
+    out = decode_tiff(data)
+    assert time.perf_counter() - t0 < 5
     assert np.array_equal(out, img)
 
 

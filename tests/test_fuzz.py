@@ -7,19 +7,26 @@ test strategy on purpose: task-killing exceptions are the one failure
 mode a 1000-executor run cannot tolerate.)
 """
 
+import struct
 from datetime import timedelta
 from itertools import islice
 
+import encoders as E
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from unfurl_spark.functions.codecs import (
+    CodecError,
+    CodecUnavailable,
     flac_blocks,
     ico_entries,
     id3_frames,
     jpeg_segments,
     png_chunks,
     riff_chunks,
+    tiff_entries,
+    tiff_header,
 )
 from unfurl_spark.functions.content import classify_blocks
 from unfurl_spark.functions.engine import flat_document_spans, scrape_document
@@ -32,6 +39,7 @@ from unfurl_spark.functions.media import (
     exiftool_pdf,
     parse_pdf_info,
 )
+from unfurl_spark.functions.multimodal import decode_pixels
 
 # text with a bias toward markup-ish characters
 markupish = st.text(
@@ -321,3 +329,104 @@ def _ebml_unit(size, body):
 def test_ebml_elements_advance(head, draw):
     data = draw.draw(_framed(head, _ebml_unit))
     _nested_spans_advance(_walk_ebml, data, 0, len(data))
+
+
+@settings(max_examples=150, deadline=timedelta(seconds=1))
+@given(st.sampled_from(["<", ">"]),
+       st.one_of(st.sampled_from([8, 0, 1, 0xFFFFFFFF]), st.integers(0, 120)),
+       st.one_of(st.sampled_from([0, 1, 0xFFFF]), st.integers(0, 10)),
+       st.lists(st.tuples(st.integers(0, 0xFFFF), st.integers(0, 13),
+                          _SIZES, _SIZES), max_size=8),
+       st.binary(max_size=60))
+def test_tiff_entries_advance(order, first, n, entries, tail):
+    """Each entry the IFD walk yields is the 12-byte header at its own
+    slot inside the input, one slot per step, and the walk ends (by
+    running out of entries or with ``CodecError``)."""
+    data = ((b"II" if order == "<" else b"MM")
+            + struct.pack(order + "HIH", 42, first, n)
+            + b"".join(struct.pack(order + "HHII", *e) for e in entries)
+            + tail)
+    _order, off = tiff_header(data)
+    walked = []
+    try:
+        for entry in islice(tiff_entries(data, order, off), len(data) + 1):
+            walked.append(entry)
+    except CodecError:
+        pass
+    declared = (struct.unpack_from(order + "H", data, off)[0]
+                if off + 2 <= len(data) else 0)
+    assert len(walked) <= min(declared, len(data) // 12)
+    for i, (tag, typ, count, start, end) in enumerate(walked):
+        pos = off + 2 + 12 * i
+        assert pos + 12 <= len(data)
+        assert (tag, typ, count) == struct.unpack_from(order + "HHI", data,
+                                                        pos)
+        assert start == pos + 8 or end - start > 4
+        assert end >= start
+
+
+def _pixel_seeds():
+    """TIFF (every compression, with and without the predictor, gray and
+    RGB) and WebP (lossless still, lossy still with ALPH, lossless and
+    lossy-with-ALPH animations) payloads to mutate."""
+    rng = np.random.default_rng(21)
+    img = rng.integers(0, 256, (9, 7, 3), dtype=np.uint8)
+    seeds = [("tiff", E.encode_tiff(img, compression=c, predictor=p))
+             for c in ("none", "lzw", "packbits", "deflate")
+             for p in (False, True)]
+    seeds.append(("tiff", E.encode_tiff(img[:, :, :1], compression="lzw")))
+
+    def chunk(tag, body):
+        return (tag + struct.pack("<I", len(body)) + body
+                + b"\x00" * (len(body) & 1))
+
+    def riff(body):
+        return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
+
+    mb = {"ymode": 0, "uvmode": 0, "bmodes": [0] * 16, "y2": [0] * 16,
+          "y": [[0] * 16 for _ in range(16)],
+          "u": [[0] * 16 for _ in range(4)],
+          "v": [[0] * 16 for _ in range(4)]}
+    vp8x = chunk(b"VP8X", bytes([0x12]) + b"\x00" * 3
+                 + (15).to_bytes(3, "little") + (15).to_bytes(3, "little"))
+    lossy = (chunk(b"ALPH", bytes([4]) + bytes(range(256)))  # horizontal
+             + chunk(b"VP8 ", E.encode_vp8(1, 1, [mb], qi=40)))
+    frame = (b"\x00" * 6 + (15).to_bytes(3, "little") * 2
+             + (40).to_bytes(3, "little") + b"\x00" + lossy)
+    rgba = rng.integers(0, 256, (8, 8, 4), dtype=np.uint8)
+    seeds += [("webp", E.encode_vp8l(rgba)),
+              ("webp", riff(vp8x + lossy)),
+              ("webp", E.encode_webp_anim([rgba, rgba[::-1]], [40, 40])),
+              ("webp", riff(vp8x + chunk(b"ANIM", bytes(6))
+                            + chunk(b"ANMF", frame) * 2))]
+    return seeds
+
+
+@st.composite
+def _mutated(draw, seeds):
+    """A seed with 1-5 byte flips, truncations or 1-4 byte splices."""
+    kind, data = draw(st.sampled_from(seeds))
+    buf = bytearray(data)
+    for op, at, val in draw(st.lists(
+            st.tuples(st.integers(0, 2), st.integers(0, 1 << 16),
+                      st.binary(min_size=1, max_size=4)),
+            min_size=1, max_size=5)):
+        at %= len(buf) + 1
+        if op == 0 and at < len(buf):
+            buf[at] = val[0]
+        elif op == 1:
+            del buf[max(at, 4):]
+        else:
+            buf[at:at] = val
+    return kind, bytes(buf)
+
+
+@settings(max_examples=300, deadline=timedelta(seconds=2))
+@given(_mutated(_pixel_seeds()))
+def test_decode_pixels_tiff_webp_only_typed_errors(case):
+    kind, data = case
+    try:
+        px = decode_pixels(data, kind)
+    except (CodecError, CodecUnavailable):
+        return
+    assert px.dtype == np.uint8 and px.ndim in (2, 3)

@@ -217,6 +217,29 @@ def test_alpha_plane_bit_exact():
         assert np.array_equal(px[:, :, 3], gold[:, :, 3]), t
 
 
+def test_webp_frames_of_a_lossy_still_keep_its_alpha():
+    """The ALPH plane of a still lossy WebP reaches decode_webp_frames as
+    it reaches decode_webp (the frames path painted alpha 255)."""
+    import struct
+
+    from unfurl_spark.functions.vp8l import decode_webp, decode_webp_frames
+
+    def chunk(tag, body):
+        return (tag + struct.pack("<I", len(body)) + body
+                + b"\x00" * (len(body) & 1))
+
+    alpha = np.arange(0, 256, dtype=np.uint8).reshape(16, 16)
+    body = (chunk(b"VP8X", bytes([0x10]) + b"\x00" * 3
+                  + (15).to_bytes(3, "little") + (15).to_bytes(3, "little"))
+            + chunk(b"ALPH", b"\x00" + alpha.tobytes())  # raw, unfiltered
+            + chunk(b"VP8 ", E.encode_vp8(1, 1, [_empty_mb()], qi=40)))
+    data = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
+    still = decode_webp(data)
+    assert np.array_equal(still[:, :, 3], alpha)
+    (frame, ts), = decode_webp_frames(data)
+    assert ts == 0 and np.array_equal(frame, still)
+
+
 def test_decode_alpha_filters_raw():
     """Raw (uncompressed) alpha with each reverse filter, self-built."""
     from unfurl_spark.functions.vp8l import decode_alpha

@@ -364,6 +364,22 @@ def test_webp_animation_roundtrip():
     assert len(decode_webp_frames(data, max_frames=2)) == 2
 
 
+def test_animated_webp_decodes_to_its_first_frame():
+    """A WebP whose only images are ANMF frames decodes to its first
+    composited frame, as the frames path gives it (it raised 'no image
+    chunk', so its media row fell back to hash pixels)."""
+    from encoders import encode_webp_anim
+
+    from unfurl_spark.functions.vp8l import decode_webp_frames
+    rng = np.random.default_rng(8)
+    frames = [rng.integers(0, 256, (8, 8, 4), dtype=np.uint8)
+              for _ in range(3)]
+    data = encode_webp_anim(frames, [40] * 3)
+    px = decode_pixels(data, "webp")
+    assert np.array_equal(px, frames[0])
+    assert np.array_equal(px, decode_webp_frames(data, 1)[0][0])
+
+
 def test_webp_anim_sample_frames(spark):
     from pyspark.sql import Row
     from unfurl_spark.functions.multimodal import sample_frames

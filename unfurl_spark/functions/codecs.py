@@ -17,8 +17,9 @@ formats are decodable with nothing beyond the standard library:
 All decoders return ``numpy.ndarray`` of shape (H, W, C) uint8 for
 images (C in {1,3,4}) and (n_samples, n_channels) int16 for audio.
 The container framing walks (RIFF/IFF chunks, PNG chunks, FLAC blocks,
-ID3v2 frames, JPEG header segments, ICO entries) live here too, one per
-family, shared by every decoder and by ``media``'s header readers.
+ID3v2 frames, JPEG header segments, ICO entries, TIFF directory
+entries) live here too, one per family, shared by every decoder and by
+``media``'s header readers.
 The package only decodes.  The round-trip tests write their fixtures
 with the encoders in ``tests/encoders.py``, without any external library.
 
@@ -85,13 +86,30 @@ def _check_dims(w: int, h: int, what: str) -> None:
         raise CodecError(f"{what}: implausible dimensions {w}x{h}")
 
 
+def _to_rgba(img: np.ndarray) -> np.ndarray:
+    """Gray, gray+alpha, RGB or RGBA pixels → RGBA; an opaque image gets
+    alpha 255."""
+    img = np.atleast_3d(img)
+    if img.shape[2] == 1:
+        img = np.repeat(img, 3, axis=2)
+    elif img.shape[2] == 2:  # gray+alpha
+        img = np.concatenate([np.repeat(img[:, :, :1], 3, axis=2),
+                              img[:, :, 1:]], axis=2)
+    if img.shape[2] == 3:
+        img = np.concatenate(
+            [img, np.full(img.shape[:2] + (1,), 255, np.uint8)], axis=2)
+    return img
+
+
 # ---------------------------------------------------------------------------
 # container framing: one walk per family, shared by the decoders here and
 # in codecs_ext/vp8l and by the header readers in media.  A walker only
 # frames; each caller keeps its own tag handling and decides whether a
 # short or missing part is an error (decoders) or a capped prefix
 # (header readers).  Spans are (start, end) as the header declares them:
-# ``end`` may pass the end of ``data``, and slicing clips it.  Every walk
+# ``end`` may pass the end of ``data``, and slicing clips it.  The TIFF
+# walk alone raises ``CodecError``, on a header or directory cut short:
+# a directory has no length a caller could clip it to.  Every walk
 # advances at least one byte per step, so it ends on any input.
 
 
@@ -229,6 +247,41 @@ def ico_entries(data: bytes):
             return
         yield (e[0] or 256, e[1] or 256, int.from_bytes(e[12:16], "little"),
                int.from_bytes(e[8:12], "little"))
+
+
+# bytes per value by TIFF field type.  The signed and float types (6, 8,
+# 9, 11, 12) count one byte per value like any unlisted type: no reader
+# decodes them, and sizing them per TIFF 6.0 would change which entries
+# the EXIF reader skips as out of range, and so its output.
+_TIFF_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 10: 8}
+
+
+def tiff_header(data: bytes) -> tuple[str, int]:
+    """(struct byte order, first IFD offset) of a TIFF header: ``<`` for
+    ``II``, ``>`` for ``MM``.  Any other mark, or a header shorter than
+    8 bytes, is a ``CodecError``.  The magic 42 is not checked."""
+    if len(data) < 8 or data[:2] not in (b"II", b"MM"):
+        raise CodecError("tiff: bad header")
+    order = "<" if data[:2] == b"II" else ">"
+    return order, struct.unpack_from(order + "I", data, 4)[0]
+
+
+def tiff_entries(data: bytes, order: str, off: int):
+    """Yield (tag, type, count, start, end) for the 12-byte entries of the
+    TIFF directory (IFD) at ``off``.  The value span is the entry's own
+    4-byte field when the value fits it, else where that field points.
+    A directory whose count or entries run past ``data`` raises
+    ``CodecError`` after the entries that fit."""
+    if off + 2 > len(data):
+        raise CodecError("tiff: IFD offset out of range")
+    (n,) = struct.unpack_from(order + "H", data, off)
+    for pos in range(off + 2, off + 2 + 12 * n, 12):
+        if pos + 12 > len(data):
+            raise CodecError("tiff: truncated IFD")
+        tag, typ, count, field = struct.unpack_from(order + "HHII", data, pos)
+        size = _TIFF_SIZES.get(typ, 1) * count
+        start = pos + 8 if size <= 4 else field
+        yield tag, typ, count, start, start + size
 
 
 def _read_f80(b: bytes) -> int:

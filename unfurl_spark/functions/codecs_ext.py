@@ -14,8 +14,8 @@ icon results (packages/unfurl-html/src/index.ts:498 maps
 dimensions/pixels for the most common icon container on the web.  APNG
 extends the frame-sampling operator beyond GIF; FLAC extends the audio
 feature path beyond PCM WAV; TIFF covers the remaining common legacy
-image container (its IFD structure is already walked for EXIF in
-``media.py::_parse_tiff``).
+image container (its directory entries come from the same walk,
+``codecs.tiff_entries``, that the EXIF reader in ``media.py`` uses).
 
 Formats implemented from their public specifications: ICO/DIB (MS BMP
 file format docs), APNG (W3C PNG 3rd ed. / Mozilla APNG spec), FLAC
@@ -35,11 +35,14 @@ from .codecs import (
     CodecError,
     _check_dims,
     _read_f80,
+    _to_rgba,
     decode_png,
     flac_blocks,
     ico_entries,
     png_chunks,
     riff_chunks,
+    tiff_entries,
+    tiff_header,
     total,
 )
 
@@ -203,19 +206,6 @@ def svg_info(data: bytes) -> tuple[int | None, int | None]:
 def _chunk(tag: bytes, body: bytes) -> bytes:
     return (struct.pack(">I", len(body)) + tag + body
             + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
-
-
-def _to_rgba(img: np.ndarray) -> np.ndarray:
-    img = np.atleast_3d(img)
-    if img.shape[2] == 1:
-        img = np.repeat(img, 3, axis=2)
-    elif img.shape[2] == 2:  # gray+alpha
-        img = np.concatenate([np.repeat(img[:, :, :1], 3, axis=2),
-                              img[:, :, 1:]], axis=2)
-    if img.shape[2] == 3:
-        img = np.concatenate(
-            [img, np.full(img.shape[:2] + (1,), 255, np.uint8)], axis=2)
-    return img
 
 
 @total
@@ -591,8 +581,6 @@ def decode_flac(data: bytes) -> tuple[int, np.ndarray]:
 # =========================================================================
 # TIFF 6.0 — strip-based baseline images (uncompressed / PackBits /
 # TIFF-variant LZW, optional horizontal predictor, palette or RGB/gray).
-# The IFD walk mirrors media.py::_parse_tiff (EXIF reuses the same
-# structure); this adds the pixel path.
 # =========================================================================
 
 def _packbits_decode(data: bytes, expected: int) -> bytes:
@@ -629,7 +617,10 @@ def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
         nbits += 8
         while nbits >= width:
             nbits -= width
-            code = (acc >> nbits) & ((1 << width) - 1)
+            code = acc >> nbits
+            # keep only the unread bits: an accumulator holding the
+            # whole strip makes every shift, and the decode, quadratic
+            acc &= (1 << nbits) - 1
             if code == CLEAR:
                 table = table[:258]
                 width = 9
@@ -661,39 +652,19 @@ def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
 
 
 def _tiff_ifd(data: bytes) -> dict[int, tuple]:
-    if data[:2] == b"II":
-        e = "<"
-    elif data[:2] == b"MM":
-        e = ">"
-    else:
-        raise CodecError("tiff: bad byte order mark")
+    e, ifd_off = tiff_header(data)
     (magic,) = struct.unpack(e + "H", data[2:4])
     if magic != 42:
         raise CodecError("tiff: bad magic")
-    (ifd_off,) = struct.unpack(e + "I", data[4:8])
-    if ifd_off + 2 > len(data):
-        raise CodecError("tiff: IFD offset out of range")
-    (n,) = struct.unpack(e + "H", data[ifd_off:ifd_off + 2])
-    sizes = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}
     fmt = {1: "B", 3: "H", 4: "I"}
     tags: dict[int, tuple] = {}
-    for i in range(n):
-        ent = data[ifd_off + 2 + 12 * i: ifd_off + 2 + 12 * (i + 1)]
-        if len(ent) < 12:
-            raise CodecError("tiff: truncated IFD")
-        tag, typ, cnt = struct.unpack(e + "HHI", ent[:8])
-        if typ not in sizes:
+    for tag, typ, cnt, start, end in tiff_entries(data, e, ifd_off):
+        if not 1 <= typ <= 5:
             continue
-        total_sz = sizes[typ] * cnt
-        raw = ent[8:12] if total_sz <= 4 else None
-        if raw is None:
-            (off,) = struct.unpack(e + "I", ent[8:12])
-            raw = data[off:off + total_sz]
-            if len(raw) < total_sz:
-                raise CodecError("tiff: tag value out of range")
+        if end > len(data):
+            raise CodecError("tiff: tag value out of range")
         if typ in fmt:
-            tags[tag] = struct.unpack(e + fmt[typ] * cnt,
-                                      raw[:total_sz])
+            tags[tag] = struct.unpack_from(e + fmt[typ] * cnt, data, start)
     return tags
 
 

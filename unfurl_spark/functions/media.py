@@ -13,10 +13,10 @@ Pure-Python (stdlib ``struct``) readers over capped byte prefixes:
 The container libraries (PIL etc.) are not available; these parse JPEG /
 PNG / WebP headers, embedded EXIF TIFF directories, XMP packets and PDF
 Info dictionaries directly.  The container framing (RIFF/IFF chunks,
-PNG chunks, FLAC blocks, ID3v2 frames, JPEG header segments) is the
-one walk per family in ``codecs.py`` that the decoders share; the
-readers here keep their own tag handling and stay tolerant of a capped
-prefix where a decoder raises.
+PNG chunks, FLAC blocks, ID3v2 frames, JPEG header segments, TIFF
+directory entries) is the one walk per family in ``codecs.py`` that the
+decoders share; the readers here keep their own tag handling and stay
+tolerant of a capped prefix where a decoder raises.
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ from .codecs import (
     jpeg_segments,
     png_chunks,
     riff_chunks,
+    tiff_entries,
+    tiff_header,
 )
 from .coerce import exif_date, parse_exif_date
 
@@ -70,13 +72,9 @@ _ORIENTATIONS = {
 def _parse_tiff(data: bytes) -> dict:
     """Parse the EXIF TIFF structure → {tag_name: value}."""
     out: dict = {}
-    if len(data) < 8:
-        return out
-    if data[:2] == b"II":
-        endian = "<"
-    elif data[:2] == b"MM":
-        endian = ">"
-    else:
+    try:
+        endian, first_ifd = tiff_header(data)
+    except CodecError:
         return out
 
     def u16(off):
@@ -93,39 +91,28 @@ def _parse_tiff(data: bytes) -> dict:
         if off in seen_ifds or len(seen_ifds) > 32:
             return
         seen_ifds.add(off)
-        if off + 2 > len(data):
-            return
-        n = u16(off)
-        for i in range(n):
-            base = off + 2 + i * 12
-            if base + 12 > len(data):
-                return
-            tag = u16(base)
-            typ = u16(base + 2)
-            count = u32(base + 4)
-            name = _EXIF_TAGS.get(tag)
-            size = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 10: 8}.get(typ, 1) * count
-            voff = base + 8 if size <= 4 else u32(base + 8)
-            if voff + size > len(data):
-                continue
-            if name == "ExifIFDPointer":
-                read_ifd(u32(base + 8))
-                continue
-            if name is None:
-                continue
-            if typ == 2:  # ASCII
-                raw = data[voff: voff + count]
-                out[name] = raw.split(b"\x00", 1)[0].decode(
-                    "latin-1", "replace")
-            elif typ == 3:
-                out[name] = u16(voff)
-            elif typ == 4:
-                out[name] = u32(voff)
+        try:
+            for tag, typ, count, voff, vend in tiff_entries(data, endian,
+                                                            off):
+                name = _EXIF_TAGS.get(tag)
+                if name is None or vend > len(data):
+                    continue
+                if name == "ExifIFDPointer":
+                    # the entry's offset field: the value itself when it
+                    # fits the field, else where the field points
+                    read_ifd(u32(voff) if vend - voff <= 4 else voff)
+                elif typ == 2:  # ASCII
+                    raw = data[voff:vend]
+                    out[name] = raw.split(b"\x00", 1)[0].decode(
+                        "latin-1", "replace")
+                elif typ == 3:
+                    out[name] = u16(voff)
+                elif typ == 4:
+                    out[name] = u32(voff)
+        except CodecError:
+            pass  # a directory cut short keeps the entries before the cut
 
-    try:
-        read_ifd(u32(4))
-    except struct.error:
-        pass
+    read_ifd(first_ifd)
     return out
 
 

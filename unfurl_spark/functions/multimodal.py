@@ -14,10 +14,11 @@ formats the pure-stdlib codecs in ``codecs.py``/``jpegc.py``/
 (every DCT process — sequential and progressive, Huffman and arithmetic
 — through one coefficient path, plus lossless SOF3), GIF, BMP, PPM,
 WebP both flavors — VP8L lossless AND VP8 lossy key frames (RFC 6386
-from scratch, bit-exact vs libwebp) with ALPH alpha and ANMF animation
-frames — ICO favicons, baseline TIFF images, and PCM WAV + FLAC + AIFF
-audio decode to real pixels/samples, feed a real box-filter resize and
-real feature statistics; SVG yields real intrinsic dimensions
+from scratch, bit-exact vs libwebp) with ALPH alpha, in a still and in
+every ANMF animation frame (an animated WebP's pixels are its first
+composited frame) — ICO favicons, baseline TIFF images, and PCM WAV +
+FLAC + AIFF audio decode to real pixels/samples, feed a real box-filter
+resize and real feature statistics; SVG yields real intrinsic dimensions
 (rasterization out of scope).  Header dimensions come from the same
 readers as the exif/exiftool paths (``media._read_image``), so a row's
 width and height agree with its metadata.  Motion-JPEG MP4 tracks decode REAL
@@ -124,9 +125,10 @@ def decode_pixels(payload: bytes, container: str):
     """Decode a payload to pixels (images → HxWxC uint8 ndarray) or
     samples (wav → (rate, int16[n, ch])).  Pure stdlib+numpy codecs,
     including BOTH WebP flavors (VP8L lossless and the RFC 6386 VP8
-    intra decoder for lossy); MP4/MP3/WebM containers carrying embedded
-    cover art (iTunes ``covr`` atom / ID3 APIC / Matroska attachment —
-    ffmpeg's attached_pic) decode that picture to real pixels, and a
+    intra decoder for lossy; an animated WebP gives its first frame);
+    MP4/MP3/WebM containers carrying embedded cover art (iTunes
+    ``covr`` atom / ID3 APIC / Matroska attachment — ffmpeg's
+    attached_pic) decode that picture to real pixels, and a
     Motion-JPEG MP4 track decodes its first sample as a real frame.
     Containers needing an external MOTION/AUDIO essence codec with no
     attached picture and no MJPEG track (MP4/H.264,

@@ -17,7 +17,9 @@ definitions independently.
 
 VP8 (lossy) essence decodes for real too, via the from-scratch
 RFC 6386 intra-frame decoder in ``vp8.py`` (bit-exact against libwebp's
-own reconstruction in tests/test_vp8.py).
+own reconstruction in tests/test_vp8.py).  A still and every ANMF
+animation frame decode through one image-chunk reader: VP8L, or VP8
+with the ALPH chunk before it as its alpha plane.
 
 The reference reads only WebP container headers
 (packages/unfurl-exif/src/index.ts:16-47 via ExifReader); pixel decode
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .codecs import CodecError, _check_dims, riff_chunks
+from .codecs import CodecError, _check_dims, _to_rgba, riff_chunks
 
 # RFC 9649: code-length-code read order
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13,
@@ -481,10 +483,33 @@ def decode_alpha(chunk: bytes, w: int, h: int) -> np.ndarray:
     return out
 
 
+def _image_chunks(data: bytes, pos: int):
+    """Pixels of the first image chunk from ``pos`` on — VP8L, or VP8
+    with the ALPH chunk before it as its alpha plane — or None when there
+    is none.  A still WebP and every ANMF frame body decode here."""
+    alpha = None
+    for fourcc, start, end in riff_chunks(data, pos):
+        chunk = data[start:end]
+        if fourcc == b"ALPH":
+            alpha = chunk
+        elif fourcc == b"VP8L":
+            return decode_vp8l(chunk)
+        elif fourcc == b"VP8 ":
+            from .vp8 import decode_vp8
+            px = decode_vp8(chunk)
+            if alpha is None:
+                return px
+            return np.dstack([px, decode_alpha(alpha, px.shape[1],
+                                               px.shape[0])])
+    return None
+
+
 def decode_webp(data: bytes) -> np.ndarray:
     """RIFF WebP container → pixels.  Both flavors decode for real:
     lossless (VP8L, RFC 9649) here, lossy key frames (VP8, RFC 6386)
-    via ``vp8.decode_vp8`` — bit-exact vs libwebp in test_vp8.py.
+    via ``vp8.decode_vp8`` — bit-exact vs libwebp in test_vp8.py — with
+    an ALPH chunk as the alpha plane of a lossy image.  A file whose
+    only images are ANMF frames gives its first composited frame.
     That covers the ENTIRE WebP format: the container spec requires
     every still and every ANMF animation frame to be a complete
     independently-decodable image, so VP8 inter frames never occur in
@@ -492,22 +517,8 @@ def decode_webp(data: bytes) -> np.ndarray:
     raises its ``CodecUnavailable`` boundary."""
     if len(data) < 16 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise CodecError("webp: bad container")
-    alpha_chunk = None
-    for fourcc, start, end in riff_chunks(data, 12):
-        chunk = data[start:end]
-        if fourcc == b"ALPH":
-            alpha_chunk = chunk
-        elif fourcc == b"VP8L":
-            return decode_vp8l(chunk)
-        elif fourcc == b"VP8 ":
-            from .vp8 import decode_vp8
-            px = decode_vp8(chunk)
-            if alpha_chunk is not None:
-                hgt, wid = px.shape[:2]
-                a = decode_alpha(alpha_chunk, wid, hgt)
-                return np.dstack([px, a])
-            return px
-    raise CodecError("webp: no image chunk")
+    px = _image_chunks(data, 12)
+    return px if px is not None else decode_webp_frames(data, 1)[0][0]
 
 
 def decode_webp_frames(data: bytes, max_frames: int | None = None
@@ -515,13 +526,12 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None
     """Animated WebP (VP8X + ANIM/ANMF) → [(RGBA canvas snapshot,
     ts_ms)].  Frame compositing follows the container spec: sub-frames
     placed at (2*x, 2*y), blend none/alpha-over, dispose none/background.
-    A still WebP yields its single frame at ts 0.  Both essence flavors
-    decode for real (VP8L here, VP8 via the RFC 6386 decoder)."""
+    A WebP without ANMF frames yields its still, as ``decode_webp``
+    decodes it, at ts 0."""
     if len(data) < 16 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise CodecError("webp: bad container")
     canvas_w = canvas_h = None
-    frames = []       # (x, y, dur_ms, blend, dispose, essence bytes)
-    still = None
+    frames = []       # (x, y, dur_ms, blend, dispose, frame body)
     for fourcc, start, end in riff_chunks(data, 12):
         chunk = data[start:end]
         if fourcc == b"VP8X" and len(chunk) >= 10:
@@ -533,41 +543,12 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None
             dur = int.from_bytes(chunk[12:15], "little")
             flags = chunk[15]
             frames.append((fx, fy, dur, flags & 2, flags & 1, chunk[16:]))
-        elif fourcc in (b"VP8 ", b"VP8L") and still is None:
-            still = chunk if fourcc == b"VP8L" else None
-            if fourcc == b"VP8 ":
-                from .vp8 import decode_vp8
-                still = ("vp8", chunk)
-            else:
-                still = ("vp8l", chunk)
-
-    def essence_rgba(payload: bytes) -> np.ndarray:
-        """Image (+ optional ALPH) chunks inside an ANMF body."""
-        alpha = None
-        for tag, start, end in riff_chunks(payload, 0):
-            body = payload[start:end]
-            if tag == b"ALPH":
-                alpha = body
-            elif tag == b"VP8L":
-                return _rgba(decode_vp8l(body))
-            elif tag == b"VP8 ":
-                from .vp8 import decode_vp8
-                px = decode_vp8(body)
-                if alpha is not None:
-                    a = decode_alpha(alpha, px.shape[1], px.shape[0])
-                    return np.dstack([px, a])
-                return _rgba(px)
-        raise CodecError("webp: ANMF without image chunk")
 
     if not frames:
-        if still is None:
-            raise CodecError("webp: no image chunk")
-        kind, chunk = still
-        px = decode_vp8l(chunk) if kind == "vp8l" else None
+        px = _image_chunks(data, 12)
         if px is None:
-            from .vp8 import decode_vp8
-            px = decode_vp8(chunk)
-        return [(_rgba(px), 0)]
+            raise CodecError("webp: no image chunk")
+        return [(_to_rgba(px), 0)]
 
     if canvas_w is None:
         raise CodecError("webp: ANMF without VP8X canvas")
@@ -576,7 +557,10 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None
     out: list[tuple[np.ndarray, int]] = []
     ts = 0
     for fx, fy, dur, no_blend, dispose_bg, payload in frames:
-        region = essence_rgba(payload)
+        region = _image_chunks(payload, 0)
+        if region is None:
+            raise CodecError("webp: ANMF without image chunk")
+        region = _to_rgba(region)
         fh, fw = region.shape[:2]
         if fx + fw > canvas_w or fy + fh > canvas_h:
             raise CodecError("webp: frame outside canvas")
@@ -606,10 +590,3 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None
         if max_frames is not None and len(out) >= max_frames:
             break
     return out
-
-
-def _rgba(px: np.ndarray) -> np.ndarray:
-    if px.shape[2] == 4:
-        return px
-    return np.concatenate(
-        [px, np.full(px.shape[:2] + (1,), 255, np.uint8)], axis=2)

@@ -250,33 +250,25 @@ class SideTables:
         self.contexts = contexts
 
 
+def _store(df: DataFrame | None, key: str, *cols: str) -> dict | None:
+    """``{key: (cols…)}`` over ``df`` deduplicated on ``key``; None for no
+    table."""
+    if df is None:
+        return None
+    t = dedup_on_key(df.select(key, *cols), key).toArrow()
+    return dict(zip(t.column(key).to_pylist(),
+                    zip(*(t.column(c).to_pylist() for c in cols))))
+
+
 def broadcast_side_tables(spark: SparkSession,
                           oembed_df: DataFrame | None = None,
                           media_df: DataFrame | None = None,
                           context_store: dict | None = None) -> SideTables:
     sc = spark.sparkContext
-    oembed_store = None
-    if oembed_df is not None:
-        oembed_df = dedup_on_key(
-            oembed_df.select("ref", "status", "ctype", "body"), "ref")
-        t = oembed_df.select("ref", "status", "ctype", "body").toArrow()
-        oembed_store = dict(zip(
-            t.column("ref").to_pylist(),
-            zip(t.column("status").to_pylist(), t.column("ctype").to_pylist(),
-                t.column("body").to_pylist()),
-        ))
-    media_store = None
-    if media_df is not None:
-        media_df = dedup_on_key(
-            media_df.select("media_ref", "ctype", "payload"), "media_ref")
-        t = media_df.select("media_ref", "ctype", "payload").toArrow()
-        media_store = dict(zip(
-            t.column("media_ref").to_pylist(),
-            zip(t.column("ctype").to_pylist(),
-                t.column("payload").to_pylist()),
-        ))
-    return SideTables(sc.broadcast(oembed_store), sc.broadcast(media_store),
-                      sc.broadcast(context_store))
+    return SideTables(
+        sc.broadcast(_store(oembed_df, "ref", "status", "ctype", "body")),
+        sc.broadcast(_store(media_df, "media_ref", "ctype", "payload")),
+        sc.broadcast(context_store))
 
 
 def narrow_columns(df: DataFrame) -> DataFrame:
