@@ -50,20 +50,26 @@ from unfurl_spark.functions.vp8l import _CL_ORDER, _predict, _sub_size
 # PNG / GIF / BMP / PPM / WAV
 
 
-def encode_png(img: np.ndarray) -> bytes:
-    """Minimal encoder: 8-bit, filter 0, non-interlaced."""
+def encode_png(img: np.ndarray, extra: tuple = ()) -> bytes:
+    """Minimal encoder: 8-bit, filter 0, non-interlaced.  ``extra``
+    holds (type, body) chunks to write between IHDR and IDAT."""
     img = np.ascontiguousarray(np.atleast_3d(img).astype(np.uint8))
     h, w, c = img.shape
     ctype = {1: 0, 2: 4, 3: 2, 4: 6}[c]
     ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
     raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
+    return (b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", ihdr)
+            + b"".join(_chunk(tag, body) for tag, body in extra)
+            + _chunk(b"IDAT", zlib.compress(raw, 6)) + _chunk(b"IEND", b""))
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (struct.pack(">I", len(body)) + tag + body
-                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
 
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b""))
+def deflate_zeros(n: int) -> bytes:
+    """A zlib stream of ``n`` zero bytes (about 1 KiB of stream per MiB),
+    compressed 1 MiB at a time at the default level (header 78 9C)."""
+    z = zlib.compressobj()
+    out = [z.compress(bytes(min(1 << 20, n - i)))
+           for i in range(0, n, 1 << 20)]
+    return b"".join(out) + z.flush()
 
 
 def _lzw_encode(min_code_size: int, pixels: bytes) -> bytes:
@@ -433,9 +439,10 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
 
 
 def encode_tiff(img: np.ndarray, compression: str = "none",
-                predictor: bool = False) -> bytes:
+                predictor: bool = False, deflate=zlib.compress) -> bytes:
     """Fixture writer: little-endian, single strip per 64 rows,
-    compression in {none, packbits, lzw, deflate}."""
+    compression in {none, packbits, lzw, deflate}.  ``deflate`` maps a
+    strip's raw bytes to its deflate stream."""
     img = np.atleast_3d(np.asarray(img, np.uint8))
     h, w, spp = img.shape
     comp_tag = {"none": 1, "lzw": 5, "packbits": 32773,
@@ -452,8 +459,7 @@ def encode_tiff(img: np.ndarray, compression: str = "none",
         if compression == "none":
             strips.append(chunk)
         elif compression == "deflate":
-            import zlib
-            strips.append(zlib.compress(chunk))
+            strips.append(deflate(chunk))
         elif compression == "lzw":
             strips.append(_tiff_lzw_encode(chunk))
         else:  # packbits: literal-only runs (valid, not minimal)

@@ -1,10 +1,20 @@
 """ICO / SVG / APNG / FLAC / TIFF — round-trips, dispatch, fuzz."""
 
+import struct
 import time
+import tracemalloc
+import zlib
 
 import numpy as np
 import pytest
-from encoders import encode_apng, encode_flac, encode_ico, encode_png, encode_tiff
+from encoders import (
+    deflate_zeros,
+    encode_apng,
+    encode_flac,
+    encode_ico,
+    encode_png,
+    encode_tiff,
+)
 
 from unfurl_spark.functions.codecs import CodecError
 from unfurl_spark.functions.codecs_ext import (
@@ -14,7 +24,13 @@ from unfurl_spark.functions.codecs_ext import (
     decode_tiff,
     svg_info,
 )
-from unfurl_spark.functions.media import _sniff
+from unfurl_spark.functions.media import (
+    XMP_INFLATE_CAP,
+    _png_info,
+    _sniff,
+    exif_image,
+    exiftool_image,
+)
 
 RNG = np.random.default_rng(42)
 
@@ -73,6 +89,26 @@ def test_ico_picks_largest_entry():
                      38 + len(b_small))
     ico = b"\x00\x00\x01\x00\x02\x00" + e1 + e2 + b_small + b_big
     assert np.array_equal(decode_ico(ico), big_img)
+
+
+def test_ico_gray_png_entries_decode_to_rgba():
+    """A gray or gray+alpha PNG entry decodes to RGBA like any other
+    entry: gray repeated into RGB, its alpha kept or 255.  (encode_ico
+    promotes its input to RGBA, so the ICO is built around the PNG.)"""
+    def ico(png):
+        return (b"\x00\x00\x01\x00\x01\x00"
+                + struct.pack("<BBBBHHII", 4, 4, 0, 0, 1, 32, len(png), 22)
+                + png)
+
+    gray = RNG.integers(0, 256, (4, 4), dtype=np.uint8)
+    alpha = RNG.integers(0, 256, (4, 4), dtype=np.uint8)
+    out = decode_ico(ico(encode_png(gray)))
+    assert out.shape == (4, 4, 4)
+    assert np.array_equal(
+        out, np.dstack([gray, gray, gray, np.full_like(gray, 255)]))
+    out = decode_ico(ico(encode_png(np.dstack([gray, alpha]))))
+    assert out.shape == (4, 4, 4)
+    assert np.array_equal(out, np.dstack([gray, gray, gray, alpha]))
 
 
 def test_ico_rejects_garbage():
@@ -261,6 +297,31 @@ def test_tiff_lzw_decode_is_linear():
     assert np.array_equal(out, img)
 
 
+def _peak(fn, *args):
+    """``fn(*args)`` and the peak bytes Python allocated while it ran."""
+    tracemalloc.start()
+    try:
+        return fn(*args), tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def test_tiff_deflate_strip_inflates_only_its_rows():
+    """A 1x1 RGB TIFF whose 64 KiB deflate strip inflates to 64 MiB
+    decodes its pixel without inflating the rest of the stream; a strip
+    that inflates to fewer bytes than its rows still raises."""
+    bomb = encode_tiff(np.zeros((1, 1, 3), np.uint8), "deflate",
+                       deflate=lambda raw: deflate_zeros(64 << 20))
+    px, peak = _peak(decode_tiff, bomb)
+    assert px.shape == (1, 1, 3) and not px.any()
+    assert peak < 4 << 20
+    img = RNG.integers(0, 256, (8, 8, 3), dtype=np.uint8)
+    for short in (lambda raw: zlib.compress(raw[:-3]),     # ends early
+                  lambda raw: zlib.compress(raw)[:-40]):   # cut short
+        with pytest.raises(CodecError):
+            decode_tiff(encode_tiff(img, "deflate", deflate=short))
+
+
 def test_tiff_gray_and_multistrip():
     img = RNG.integers(0, 256, (130, 20, 1), dtype=np.uint8)  # 3 strips
     out = decode_tiff(encode_tiff(img))
@@ -375,6 +436,38 @@ def test_exif_entry_points_read_tiff():
     assert out["encodingFormat"] == "image/tiff"
     out2 = exif_image("u", t, "image/tiff")
     assert (out2["width"], out2["height"]) == (32, 24)
+
+
+_XMP = (b'<x:xmpmeta xmlns:x="adobe:ns:meta/"><rdf:RDF><rdf:Description '
+        b'xmp:CreateDate="2021-03-04T05:06:07Z" '
+        b'xmp:ModifyDate="2022-01-02T03:04:05Z"><dc:format>image/png'
+        b'</dc:format></rdf:Description></rdf:RDF></x:xmpmeta>')
+
+
+def _png_with_xmp(text: bytes) -> bytes:
+    """A PNG whose iTXt XMP chunk (compression flag 0) holds ``text``."""
+    itxt = b"XML:com.adobe.xmp" + bytes(5) + text
+    return encode_png(np.zeros((2, 2, 3), np.uint8),
+                      extra=((b"iTXt", itxt),))
+
+
+def test_png_xmp_inflate_stops_at_its_cap():
+    """A zlib stream in a PNG's XMP iTXt text inflates to at most
+    XMP_INFLATE_CAP bytes: a packet up to the cap parses to the
+    properties the plain packet gives, a cut-short stream is read as
+    the raw text, and a 64 KiB stream that inflates to 64 MiB costs each
+    EXIF entry point about the cap."""
+    want = {"CreateDate": "2021-03-04T05:06:07Z",
+            "ModifyDate": "2022-01-02T03:04:05Z", "format": "image/png"}
+    assert _png_info(_png_with_xmp(_XMP))[2] == want
+    padded = _XMP.ljust(XMP_INFLATE_CAP)
+    assert _png_info(_png_with_xmp(zlib.compress(padded)))[2] == want
+    assert _png_info(_png_with_xmp(zlib.compress(_XMP)[:-4]))[2] == {}
+    bomb = _png_with_xmp(deflate_zeros(64 << 20))
+    for read in (_png_info, lambda d: exiftool_image("u", d),
+                 lambda d: exif_image("u", d, "image/png")):
+        _out, peak = _peak(read, bomb)
+        assert peak < 4 * XMP_INFLATE_CAP
 
 
 # --- property-based round-trips ---------------------------------------------

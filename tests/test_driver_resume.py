@@ -259,30 +259,66 @@ def test_reused_worker_loads_each_side_table_once(spark):
     assert [r["loads"] for r in later] == [0] * len(later)
 
 
+_BAD_URL = "http://bad.example/"
+
+
 def _with_failing_doc(spark, corpus, tmp_path, n_docs):
-    """``n_docs`` corpus documents plus one the kernel fails on: an
-    og:image whose netloc is an unterminated IPv6 literal makes URL
-    resolution raise, so that document reads ok='ValueError'."""
+    """``n_docs`` corpus documents plus one at ``_BAD_URL``, which
+    ``_fail_kernel_on_bad_url`` makes the kernel fail on."""
     t = pq.read_table(corpus["documents_raw"]).slice(0, n_docs)
     bad = pa.Table.from_pylist([{
-        "doc_id": "bad-og-image",
-        "spans": [{"kind": "html", "media_ref": "http://bad.example/",
-                   "offset": 0,
-                   "text": '<html><head><meta property="og:image" '
-                           'content="//[::1"></head><body><p>text</p>'
-                           '</body></html>'}],
+        "doc_id": "bad-doc",
+        "spans": [{"kind": "html", "media_ref": _BAD_URL, "offset": 0,
+                   "text": "<html><head><title>T</title></head><body>"
+                           "<p>text</p></body></html>"}],
         "status": 200}], schema=t.schema)
     path = str(tmp_path / "docs.parquet")
     pq.write_table(pa.concat_tables([t, bad]), path)
     return path
 
 
+def _fail_kernel_on_bad_url(monkeypatch):
+    """Make ``flat_document_spans`` raise ``ValueError`` on ``_BAD_URL``
+    inside the extract stage's workers, so that document reads
+    ok='ValueError' through the kernel's own per-document isolation.
+    The workers import the package afresh, so the patch rides in the
+    stage's ``open_rows``, which binds the kernel function when a task
+    opens."""
+    real_map_rows = pipeline_mod.map_rows
+
+    def map_rows(df, schema, open_rows):
+        if schema is not pipeline_mod.EXTRACTED:
+            return real_map_rows(df, schema, open_rows)
+
+        def failing_open_rows():
+            from unfurl_spark.functions import engine
+
+            real = engine.flat_document_spans
+
+            def flat_document_spans(url, *args, **kwargs):
+                if url == _BAD_URL:
+                    raise ValueError("simulated kernel failure")
+                return real(url, *args, **kwargs)
+
+            engine.flat_document_spans = flat_document_spans
+            try:
+                return open_rows()
+            finally:
+                engine.flat_document_spans = real
+
+        return real_map_rows(df, schema, failing_open_rows)
+
+    monkeypatch.setattr(pipeline_mod, "map_rows", map_rows)
+
+
 @pytest.mark.parametrize("side_mode", ["broadcast", "join"])
-def test_metrics_equal_committed_spans(spark, corpus, tmp_path, side_mode):
+def test_metrics_equal_committed_spans(spark, corpus, tmp_path, side_mode,
+                                       monkeypatch):
     """Every committed metrics row equals the per-bucket count, byte sum
     and failure count of the committed spans table — empty buckets (more
     buckets than documents) read 0, and a failing document counts."""
     docs = _with_failing_doc(spark, corpus, tmp_path, 8)
+    _fail_kernel_on_bad_url(monkeypatch)
     out = str(tmp_path / "out")
     n_buckets = 16
     s = run_job(spark, docs, out, oembed_path=corpus["oembed_docs"],

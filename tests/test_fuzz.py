@@ -8,6 +8,7 @@ mode a 1000-executor run cannot tolerate.)
 """
 
 import struct
+import tracemalloc
 from datetime import timedelta
 from itertools import islice
 
@@ -32,6 +33,8 @@ from unfurl_spark.functions.content import classify_blocks
 from unfurl_spark.functions.engine import flat_document_spans, scrape_document
 from unfurl_spark.functions.htmlmeta import parse_html_full
 from unfurl_spark.functions.media import (
+    XMP_INFLATE_CAP,
+    _png_info,
     _walk_ebml,
     _walk_mp4_boxes,
     exif_image,
@@ -430,3 +433,55 @@ def test_decode_pixels_tiff_webp_only_typed_errors(case):
     except (CodecError, CodecUnavailable):
         return
     assert px.dtype == np.uint8 and px.ndim in (2, 3)
+
+
+_BOMB = E.deflate_zeros(64 << 20)
+
+
+@st.composite
+def _deflate_swapped(draw):
+    """A deflate TIFF or a PNG with a zlib-compressed XMP iTXt text,
+    whose zlib stream is swapped for a high-ratio one: zeros one byte
+    short of, at or past what the reader keeps, or 64 MiB of them, whole
+    or cut short."""
+    kind = draw(st.sampled_from(["tiff", "png"]))
+    cut = draw(st.sampled_from([None, 3, 60]))
+
+    def stream(need):
+        n = draw(st.sampled_from([need - 1, need, need + 1, None]))
+        z = _BOMB if n is None else E.deflate_zeros(n)
+        return z if cut is None else z[:-cut]
+
+    if kind == "png":
+        itxt = b"XML:com.adobe.xmp" + bytes(5) + stream(XMP_INFLATE_CAP)
+        return kind, E.encode_png(np.zeros((2, 2, 3), np.uint8),
+                                  extra=((b"iTXt", itxt),))
+    shape = draw(st.sampled_from([(1, 1, 3), (9, 7, 3), (70, 5, 1)]))
+    return kind, E.encode_tiff(np.zeros(shape, np.uint8), "deflate",
+                               deflate=lambda raw: stream(len(raw)))
+
+
+@settings(max_examples=100, deadline=timedelta(seconds=2))
+@given(_deflate_swapped())
+def test_inflates_stay_bounded_on_high_ratio_streams(case):
+    """Each inflate stops at what its reader keeps: a TIFF strip at its
+    rows, an XMP text at XMP_INFLATE_CAP.  Decoding gives pixels or a
+    typed error, the EXIF readers never raise, and no read allocates
+    more than a few MiB, however far the stream would inflate."""
+    kind, data = case
+    tracemalloc.start()
+    try:
+        if kind == "tiff":
+            try:
+                px = decode_pixels(data, kind)
+                assert px.dtype == np.uint8
+            except (CodecError, CodecUnavailable):
+                pass
+        else:
+            _png_info(data)
+            exiftool_image("u", data)
+            exif_image("u", data, "image/png")
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 * XMP_INFLATE_CAP

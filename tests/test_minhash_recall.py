@@ -68,3 +68,24 @@ def test_unrelated_docs_rarely_collide(spark, planted_docs):
     # sf0.01's synthetic corpus has genuine duplicate texts (the dedup
     # family's fixtures) — allow those, but no explosion
     assert len(rows) < 30
+
+
+@pytest.mark.parametrize("name", ["dedup_minhash_signature",
+                                  "dedup_minhash_lsh_buckets",
+                                  "dedup_apply_keep"])
+def test_minhash_queries_equal_their_duckdb_twins(spark, name):
+    """On sf0.01 each minhash dedup query returns exactly the rows of
+    its DuckDB oracle twin: the signatures, the LSH buckets with their
+    sizes and keepers, and the documents the keeper step keeps."""
+    import duckdb
+    from test_ann_recall import SF_DIR as sf
+
+    from unfurl_spark.operators.queries import QUERIES
+
+    build, oracle = QUERIES[name]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf}/documents.parquet')")
+    want = sorted(con.execute(oracle).fetchall())
+    assert want
+    assert sorted(map(tuple, build(spark, sf).collect())) == want

@@ -198,6 +198,48 @@ def test_sample_frames_real_gif_animation(spark):
     assert all(r["ok"] == "codec:unavailable" for r in stub)
 
 
+def _metadata_ahead_of_animation(kind, data):
+    """``data`` with a 9,000-byte metadata chunk ahead of its animation
+    chunk: an ``XMP `` chunk after a WebP's ANIM, a ``tEXt`` after a
+    PNG's IHDR (so acTL starts past the first 8 KiB)."""
+    import struct
+
+    from unfurl_spark.functions.codecs_ext import _chunk
+
+    meta = b"k\x00" + b"x" * 8998
+    if kind == "png":
+        return data[:33] + _chunk(b"tEXt", meta) + data[33:]
+    at = data.index(b"ANIM") + 8 + 6                   # after ANIM's body
+    body = data[12:at] + b"XMP " + struct.pack("<I", len(meta)) + meta \
+        + data[at:]
+    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
+
+
+@pytest.mark.parametrize("kind", ["webp", "png"])
+def test_sample_frames_finds_animation_past_a_large_chunk(spark, kind):
+    """Whether a WebP or PNG is animated is read from its chunks, not
+    from its first bytes: with a large metadata chunk ahead of the first
+    ANMF / acTL it still samples its real frames, the same as without."""
+    from encoders import encode_apng, encode_webp_anim
+
+    frames = [np.full((8, 8, 4), v, np.uint8) for v in (30, 120, 210)]
+    plain = (encode_webp_anim(frames, [500] * 3) if kind == "webp"
+             else encode_apng(frames, [500] * 3))
+    padded = _metadata_ahead_of_animation(kind, plain)
+    df = spark.createDataFrame([Row(media_ref="plain", payload=plain),
+                                Row(media_ref="padded", payload=padded)])
+    rows = {}
+    for r in sample_frames(df, n_frames=3).collect():
+        rows.setdefault(r["media_ref"], []).append(
+            (r["frame_index"], r["frame_ts_ms"], bytes(r["payload"]),
+             r["ok"]))
+    got = sorted(rows["padded"])
+    assert got == sorted(rows["plain"])
+    assert [(i, ts, ok) for i, ts, _px, ok in got] == [
+        (0, 0, "ok"), (1, 500, "ok"), (2, 1000, "ok")]
+    assert [px[0] for _i, _ts, px, _ok in got] == [30, 120, 210]
+
+
 def test_decode_media_null_payload_records_err(spark):
     """A NULL payload row (failed fetch) yields an err lineage row — it
     must not TypeError the whole Arrow batch (F.length of NULL is NULL)."""

@@ -33,6 +33,27 @@ def test_null_status_defaults_to_200_not_typeerror(spark):
     assert any(s.kind == "title" and s.text == "T" for s in out[0].spans)
 
 
+def test_unterminated_ipv6_image_url_is_no_image(spark):
+    """An og:image or twitter:image of ``//[::1`` (an unterminated IPv6
+    host) resolves to no URL, as ``new URL()`` would throw: the document
+    reads ok='ok' with no image span, not ok='ValueError'."""
+    def page(meta):
+        return ("<html><head><title>T</title>"
+                f'<meta {meta} content="//[::1"></head>'
+                "<body><p>text</p></body></html>")
+
+    df = spark.createDataFrame([
+        _doc(d, [("html", page(meta), "http://x.example/", 0)], status=200)
+        for d, meta in (("og", 'property="og:image"'),
+                        ("tw", 'name="twitter:image"'))])
+    out = {r.doc_id: r for r in extract_spans(df, salt=False).collect()}
+    assert sorted(out) == ["og", "tw"]
+    for r in out.values():
+        assert r.ok == "ok"
+        assert [s.text for s in r.spans if s.kind == "title"] == ["T"]
+        assert not [s for s in r.spans if s.kind == "og_image"]
+
+
 def test_tied_and_null_offsets_match_kernel_order(spark):
     """engine.document_spans sorts stably by `offset or 0`. The Spark
     sort_array struct must not tie-break on kind/text (input order wins)

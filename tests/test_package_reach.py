@@ -35,8 +35,6 @@ PKG = "unfurl_spark"
 # whole package.  ``oembed_providers`` is here for ``load_registry``, the
 # documented way to swap in a full providers.json dump.
 LIBRARY = (
-    "operators/corpus.py",
-    "streaming/",
     "sources/fixtures.py",
     "sources/synthetic.py",
     "functions/charset.py",

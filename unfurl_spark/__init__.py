@@ -14,13 +14,12 @@ Layout:
                  without Spark, run as row functions by the one Arrow
                  runner, operators/pipeline.py ``map_rows``.
     operators/   Spark DataFrame pipelines (the fused extract stage, the
-                 Arrow row runner, span emission, relational building
-                 blocks).
+                 Arrow row runner, span emission), the remote-context
+                 pre-pass and the query registry with its DuckDB oracles.
     sources/     fixture importer (reference test corpus -> span table),
                  deterministic synthetic corpus generator.
     plans/       job driver: salted repartition, checkpointed per-partition
                  lineage + metrics, idempotent resume.
-    streaming/   Structured Streaming wrapper over the same extract stage.
 """
 
 __version__ = "0.1.0"

@@ -145,13 +145,7 @@ def decode_ico(data: bytes) -> np.ndarray:
     if len(body) < size:
         raise CodecError("ico: truncated entry payload")
     if body.startswith(b"\x89PNG\r\n\x1a\n"):
-        img = decode_png(body)
-        if img.ndim == 2:
-            img = np.repeat(img[:, :, None], 3, axis=2)
-        if img.shape[2] == 3:
-            img = np.concatenate(
-                [img, np.full(img.shape[:2] + (1,), 255, np.uint8)], axis=2)
-        return img
+        return _to_rgba(decode_png(body))
     return _decode_dib(body)
 
 
@@ -712,9 +706,11 @@ def decode_tiff(data: bytes) -> np.ndarray:
             raw += _packbits_decode(chunk, expected)
         elif comp in (8, 32946):
             # Deflate (8 = Adobe/TIFF-EP standard, 32946 = legacy tag)
-            import zlib
+            # inflate no more than the strip's declared rows (+1: a
+            # max_length of 0 means no limit): a 1-pixel image's strip
+            # can hold a stream that inflates to gigabytes
             try:
-                d = zlib.decompress(chunk)
+                d = zlib.decompressobj().decompress(chunk, expected + 1)
             except zlib.error as exc:
                 raise CodecError(f"tiff: bad deflate strip ({exc})")
             if len(d) < expected:

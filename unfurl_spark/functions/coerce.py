@@ -245,14 +245,13 @@ def whatwg_url(value: str, base: str | None = None) -> str | None:
     Returns None where the constructor would throw.
     """
     value = value.strip().strip("\t\n\r")
-    has_scheme = bool(_SCHEME_RE.match(value))
-    if base and not has_scheme:
-        resolved = urljoin(base, value)
-    else:
-        resolved = value
-    if not _SCHEME_RE.match(resolved):
-        return None
     try:
+        if base and not _SCHEME_RE.match(value):
+            resolved = urljoin(base, value)
+        else:
+            resolved = value
+        if not _SCHEME_RE.match(resolved):
+            return None
         parts = urlsplit(resolved)
         scheme = parts.scheme.lower()
         if scheme in _SPECIAL_SCHEMES:
@@ -291,8 +290,9 @@ def whatwg_url(value: str, base: str | None = None) -> str | None:
         return out
     except ValueError:
         # the WHATWG constructor throws here too: out-of-range or
-        # non-numeric port, malformed IPv6 host — urlsplit/.port raise
-        # ValueError, which must surface as None, not crash the batch
+        # non-numeric port, malformed IPv6 host — urljoin, urlsplit and
+        # .port raise ValueError, which must surface as None, not crash
+        # the batch
         return None
 
 

@@ -40,6 +40,10 @@ from .codecs import (
 from .coerce import exif_date, parse_exif_date
 
 EXIF_BYTE_CAP = 131072  # unfurl-exif/src/index.ts:21
+# a PNG iTXt XMP packet inflates to at most this many bytes: 16x the
+# largest packet a JPEG APP1 segment holds, and the parse reads only a
+# few short properties, while the stream could inflate to gigabytes
+XMP_INFLATE_CAP = 1 << 20
 
 
 # --- EXIF TIFF directory ------------------------------------------------------
@@ -171,10 +175,14 @@ def _png_info(data: bytes) -> tuple[int | None, int | None, dict, dict]:
         elif ctype == b"iTXt" and chunk.startswith(b"XML:com.adobe.xmp"):
             payload = chunk.split(b"\x00", 5)[-1]
             if payload[:2] == b"\x78\x9c" or payload[:2] == b"\x78\x01":
+                # a corrupt or cut-short stream keeps the raw payload
+                z = zlib.decompressobj()
                 try:
-                    payload = zlib.decompress(payload)
+                    text = z.decompress(payload, XMP_INFLATE_CAP)
                 except zlib.error:
-                    pass
+                    text = b""
+                if z.eof or len(text) == XMP_INFLATE_CAP:
+                    payload = text
             xmp.update(_parse_xmp(payload))
         elif ctype == b"IDAT":
             break

@@ -65,7 +65,9 @@ from .codecs import (
     decode_ppm,
     decode_wav,
     ico_entries,
+    png_chunks,
     resize_area,
+    riff_chunks,
 )
 from .codecs_ext import (
     decode_apng_frames,
@@ -472,6 +474,18 @@ def _picks(n: int, n_frames: int) -> list[int]:
     return [min(n - 1, i * n // n_frames) for i in range(n_frames)]
 
 
+def _animated(kind: str, data: bytes) -> bool:
+    """Whether the container declares an animation: a top-level ANMF
+    chunk (WebP) or an acTL chunk ahead of the first IDAT (APNG)."""
+    if kind == "webp":
+        return any(tag == b"ANMF" for tag, _s, _e in riff_chunks(data, 12))
+    if kind == "png":
+        for tag, _s, _e in png_chunks(data):
+            if tag in (b"acTL", b"IDAT"):
+                return tag == b"acTL"
+    return False
+
+
 def sample_frames(df: DataFrame, n_frames: int = 4,
                   frame_interval_ms: int = 1000,
                   num_partitions: int | None = None) -> DataFrame:
@@ -499,12 +513,12 @@ def sample_frames(df: DataFrame, n_frames: int = 4,
                 for delay, f in decode_gif_frames(data, max_frames=256):
                     real.append((f, acc))
                     acc += delay or frame_interval_ms
-            elif kind == "webp" and b"ANMF" in data[:8192]:
+            elif _animated(kind, data):
+                # animated WebP / APNG: frames carry their own timestamps
                 from .vp8l import decode_webp_frames
-                real = decode_webp_frames(data, max_frames=256)
-            elif kind == "png" and b"acTL" in data[:8192]:
-                # APNG: frames carry their own timestamps
-                real = decode_apng_frames(data, max_frames=256)
+                frames_of = (decode_webp_frames if kind == "webp"
+                             else decode_apng_frames)
+                real = frames_of(data, max_frames=256)
             if real is not None:
                 # n_frames picks spread evenly over the clip
                 real = [(real[j][1], real[j][0].tobytes())

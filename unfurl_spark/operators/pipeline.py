@@ -144,10 +144,11 @@ def session_configs(profile: str = "local", master: str | None = None,
         # comfortably holds 32 concurrent document-batch tasks
         "spark.driver.memory": "16g",
         "spark.driver.maxResultSize": "8g",
-        # pin the SQL timezone: pandas-side kernels (the stateful
-        # sessionizer) read tz-naive timestamps rendered in the SESSION
-        # zone and re-emit them as UTC instants — on a non-UTC host the
-        # default (JVM local zone) would shift every emitted timestamp
+        # pin the SQL timezone: a CAST of a tz-naive timestamp to
+        # TIMESTAMP reads it in the session zone (the registry's
+        # sessionize_gaps_islands does this for its gap test).  Under the
+        # default (JVM local zone) a 2.5 h gap across a daylight-saving
+        # switch measures 1.5 h, and the DuckDB oracle reads it as UTC
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -283,9 +284,9 @@ def narrow_columns(df: DataFrame) -> DataFrame:
     has_status = "status" in df.columns
     pre = df.select(
         "doc_id",
-        # coalesce, not just cast: a schema-mandated-but-absent status
-        # column (streaming read schema over status-less files) arrives
-        # as NULL, and int(None) downstream would fail EVERY doc
+        # coalesce, not just cast: a read schema that names ``status``
+        # over files that lack it yields a NULL status column, and
+        # int(None) downstream would fail EVERY doc
         (F.coalesce(F.col("status").cast("int"), F.lit(200))
          if has_status else F.lit(200))
         .alias("status"),

@@ -18,13 +18,7 @@ SPAN = StructType([
     StructField("offset", IntegerType()),
 ])
 
-# input: one row per document, ordered span sequence
-DOCUMENTS_RAW = StructType([
-    StructField("doc_id", StringType(), nullable=False),
-    StructField("spans", ArrayType(SPAN), nullable=False),
-])
-
-# output of the extract stage: same shape + per-doc lineage metrics
+# output of the extract stage: the ordered spans + per-doc lineage metrics
 EXTRACTED = StructType([
     # nullable: a NULL-id input document is one more lineage row
     StructField("doc_id", StringType()),
